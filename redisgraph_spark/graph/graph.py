@@ -47,9 +47,26 @@ _INTERNAL_EDGE = {EDGE_ID, EDGE_SRC, EDGE_DST}
 # at 1 so a fresh instance's epoch 0 is never produced by a bump.
 import itertools as _itertools
 import threading
+from collections import OrderedDict
 from contextlib import contextmanager
 
 _EPOCH_COUNTER = _itertools.count(1)
+
+
+class PlanCache(OrderedDict):
+    """The exact-value plan LRU ((text, params, version, epoch) →
+    DataFrame) and, beside it, the plan templates (graph/templates.py):
+    (text, parameter shape, version, epoch) → PlanTemplate, or None for
+    a shape that plans per request. Each is bounded by PLAN_CACHE_SIZE
+    on its own, so a template's rebinds never evict it."""
+
+    def __init__(self) -> None:
+        super().__init__()
+        self.templates: OrderedDict = OrderedDict()
+
+    def clear(self) -> None:
+        super().clear()
+        self.templates.clear()
 
 
 class _RWLock:
@@ -216,9 +233,8 @@ class Graph:
                  name: str = "g",
                  rel_endpoints: Mapping[str, tuple] | None = None,
                  count_hints: Mapping[tuple[str, str], int] | None = None,
-                 plan_cache: "OrderedDict[tuple, DataFrame] | None" = None,
+                 plan_cache: PlanCache | None = None,
                  input_bytes: int | None = None) -> None:
-        from collections import OrderedDict
         self.spark = spark
         self.name = name
         self.node_tables: dict[str, DataFrame] = dict(node_tables)
@@ -245,8 +261,8 @@ class Graph:
         # invalidation bumps this instance's epoch to a process-unique
         # nonce instead of clearing the dict, so one instance's
         # mutation never evicts another's still-valid version-0 plans.
-        self._plan_cache: "OrderedDict[tuple, DataFrame]" = (
-            plan_cache if plan_cache is not None else OrderedDict())
+        self._plan_cache = plan_cache if plan_cache is not None \
+            else PlanCache()
         self._epoch = 0
         self._version = 0
         self._count_cache: dict[tuple, int] = {}
@@ -613,30 +629,39 @@ class Graph:
         parse → AST → algebraic expression → Volcano ops
         (``src/commands/execution_ctx.c:64-119``).
 
-        Read-only plans are cached per (query, params) — the reference's
-        per-graph LRU plan cache of 25 (``src/commands/execution_ctx.c:
-        79-88``, ``CACHE_SIZE_DEFAULT`` ``src/configuration/config.c:53``);
-        any mutation bumps ``_version`` and invalidates.
+        Read-only plans are cached per (query, parameter values) — the
+        reference's per-graph LRU plan cache of 25
+        (``src/commands/execution_ctx.c:79-88``, ``CACHE_SIZE_DEFAULT``
+        ``src/configuration/config.c:53``). A read that misses it is
+        planned once per (query, parameter shape) into a plan template
+        whose literals each request rebinds (graph/templates.py); a
+        read whose plan depends on a parameter's value plans per
+        request. Any mutation bumps ``_version`` and invalidates both.
         """
+        return self._query(cypher, params)[0]
+
+    def _query(self, cypher: str, params: Mapping[str, object] | None
+               ) -> tuple[DataFrame, str]:
+        """``query`` plus what the plan cache did: ``"hit"`` (the
+        exact-value cache), ``"rebind"`` (a plan template) or
+        ``"plan"`` (the planner ran, maybe to build a template)."""
         import time as _time
         from redisgraph_spark.planner.planner import CypherPlanner
         from redisgraph_spark.cypher.parser import parse
 
         t0 = _time.time()
         cypher, inline = _parse_cypher_prefix(cypher)
-        if inline:
-            params = {**inline, **(params or {})}
-        key = (cypher, repr(sorted((params or {}).items())),
+        params = {**inline, **(params or {})}
+        key = (cypher, repr(sorted(params.items())),
                self._version, self._epoch)
         cached = self._plan_cache.get(key)
         if cached is not None:
             with self._cache_mu:
                 if key in self._plan_cache:
                     self._plan_cache.move_to_end(key)
-            self._log_query(cypher, _time.time() - t0, cache_hit=True)
-            return cached
+            self._log_query(cypher, _time.time() - t0, "hit")
+            return cached, "hit"
         ast = parse(cypher)
-        planner = CypherPlanner(self, params or {})
         # write CALLs (fulltext DDL) count as writes: they must bump the
         # version so cached queryNodes plans on the old index invalidate
         is_write = is_write_ast(ast)
@@ -647,28 +672,19 @@ class Graph:
         # plan concurrently under the shared lock
         lock = self._rw.write() if is_write else self._rw.read()
         with lock:
-            # TIMEOUT (reference Config_TIMEOUT, src/configuration/
-            # config.h:14-18; drain cmd_query.c:100-118): bound the
-            # engine-side work that runs INSIDE query() — planning plus
-            # every eager materialization (var-len frontier loops,
-            # mutation rewrites, iterative algorithms). A runaway [*]
-            # traversal otherwise has no kill switch. Jobs the USER
-            # later triggers on the returned (lazy) DataFrame are
-            # outside this bound, like any Spark job.
-            timeout_ms = self.config_get("TIMEOUT")
-            if isinstance(timeout_ms, int) and timeout_ms > 0:
-                df = self._plan_with_timeout(planner, ast, cypher,
-                                             timeout_ms)
+            template, built = (None, False) if is_write else \
+                self._template(ast, cypher, params)
+            if template is not None:
+                df, stats = template.bind(self.spark, params), \
+                    template.stats
             else:
-                df = planner.plan(ast)
-            # RESULTSET_MAX_SIZE: truncate emitted rows when configured
-            # ≥ 0 (reference enforces in ops/op_results.c:32-47)
-            max_rows = self.config_get("RESULTSET_MAX_SIZE")
-            if isinstance(max_rows, int) and max_rows >= 0:
-                df = df.limit(max_rows)
+                planner = CypherPlanner(self, params)
+                df, stats = self._plan(planner, ast, cypher), planner.stats
+            outcome = "rebind" if template is not None and not built \
+                else "plan"
             # mutation statistics for the last executed query
             # (≈ resultset_statistics.h:12-20, returned out-of-band)
-            self.last_stats = dict(planner.stats)
+            self.last_stats = dict(stats)
             if is_write:
                 self._version += 1
                 self._invalidate_plans()
@@ -677,8 +693,59 @@ class Graph:
                 self._plan_cache[key] = df
                 if len(self._plan_cache) > self.PLAN_CACHE_SIZE:
                     self._plan_cache.popitem(last=False)
-        self._log_query(cypher, _time.time() - t0, cache_hit=False)
+        self._log_query(cypher, _time.time() - t0, outcome)
+        return df, outcome
+
+    def _plan(self, planner, ast, cypher: str) -> DataFrame:
+        """Run the planner under the TIMEOUT and RESULTSET_MAX_SIZE
+        configs."""
+        # TIMEOUT (reference Config_TIMEOUT, src/configuration/
+        # config.h:14-18; drain cmd_query.c:100-118): bound the
+        # engine-side work that runs INSIDE query() — planning plus
+        # every eager materialization (var-len frontier loops,
+        # mutation rewrites, iterative algorithms). A runaway [*]
+        # traversal otherwise has no kill switch. Jobs the USER
+        # later triggers on the returned (lazy) DataFrame are
+        # outside this bound, like any Spark job.
+        timeout_ms = self.config_get("TIMEOUT")
+        if isinstance(timeout_ms, int) and timeout_ms > 0:
+            df = self._plan_with_timeout(planner, ast, cypher, timeout_ms)
+        else:
+            df = planner.plan(ast)
+        # RESULTSET_MAX_SIZE: truncate emitted rows when configured
+        # ≥ 0 (reference enforces in ops/op_results.c:32-47)
+        max_rows = self.config_get("RESULTSET_MAX_SIZE")
+        if isinstance(max_rows, int) and max_rows >= 0:
+            df = df.limit(max_rows)
         return df
+
+    def _template(self, ast, cypher: str, params: dict) -> tuple:
+        """(template, built): the plan template for this read's
+        parameter shape, built on first use (built True); None when
+        the shape plans per request."""
+        from redisgraph_spark.graph import templates as TPL
+        from redisgraph_spark.planner.planner import CypherPlanner
+        shape = TPL.param_shape(params)
+        if shape is None:
+            return None, False
+        key = (cypher, shape, self._version, self._epoch)
+        templates = self._plan_cache.templates
+        with self._cache_mu:
+            if key in templates:
+                templates.move_to_end(key)
+                return templates[key], False
+
+        def plan(sentinels):
+            planner = CypherPlanner(self, sentinels)
+            return self._plan(planner, ast, cypher), planner.stats
+
+        template, keep = TPL.build(self.spark, ast, params, plan)
+        if keep:
+            with self._cache_mu:
+                templates[key] = template
+                if len(templates) > self.PLAN_CACHE_SIZE:
+                    templates.popitem(last=False)
+        return template, True
 
     def _plan_with_timeout(self, planner, ast, cypher: str,
                            timeout_ms: int):
@@ -773,12 +840,13 @@ class Graph:
     PLAN_CACHE_SIZE = 25
 
     def _log_query(self, cypher: str, plan_sec: float,
-                   cache_hit: bool) -> None:
+                   outcome: str) -> None:
         """≈ GRAPH.SLOWLOG (``src/slow_log/slow_log.h:18-37``) — keeps the
-        most recent queries with planning wall time."""
+        most recent queries with planning wall time and what the plan
+        cache did (``Graph._query``)."""
         self._slow_log.append(
             {"query": cypher, "plan_sec": round(plan_sec, 4),
-             "cache_hit": cache_hit})
+             "cache_hit": outcome == "hit", "plan_cache": outcome})
         if len(self._slow_log) > 128:
             self._slow_log = self._slow_log[-128:]
 
@@ -849,21 +917,18 @@ class Graph:
         ``Records produced / Execution time`` per op (``ops/op.h:
         75-78``) read out of Spark's SQLMetrics on the executed plan.
 
-        Returns ``{rows, wall_sec, planning_ms, plan_cached,
+        Returns ``{rows, wall_sec, planning_ms, plan_cache,
         ops: [{op, depth, rows, time_ms, metrics}], plan}`` — ``ops``
         in pre-order (parents first), so indentation by depth
         reproduces the reference's profile tree.  ``planning_ms`` is
         the driver-side plan-construction wall (parse + Cypher planner
         + Catalyst analysis); the round-9 temporal blowup hid exactly
-        there, invisible to executor-side metrics."""
+        there, invisible to executor-side metrics. ``plan_cache`` is
+        what the plan cache did: ``"hit"``, ``"rebind"`` or
+        ``"plan"``."""
         import time as _time
-        c_key, inline = _parse_cypher_prefix(cypher)
-        merged = {**(inline or {}), **(params or {})}
-        key = (c_key, repr(sorted(merged.items())),
-               self._version, self._epoch)
-        was_cached = key in self._plan_cache
         t0 = _time.time()
-        built = self.query(cypher, params)
+        built, outcome = self._query(cypher, params)
         planning_ms = (_time.time() - t0) * 1000.0
         # .select("*") forces a FRESH physical plan: SQLMetrics are
         # accumulators per plan instance, so profiling a plan-cached
@@ -877,7 +942,7 @@ class Graph:
         wall = _time.time() - t0
         return {"rows": n, "wall_sec": round(wall, 4),
                 "planning_ms": round(planning_ms, 1),
-                "plan_cached": was_cached,
+                "plan_cache": outcome,
                 "ops": self._executed_plan_metrics(df),
                 "plan": self.explain(cypher, params)}
 

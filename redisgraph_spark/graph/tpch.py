@@ -239,8 +239,8 @@ def tpch_graph(spark: SparkSession, sf_dir: str):
                 # InMemoryRelation and break the LocalTableScan fold
                 if (kind, nm) not in inlined:
                     df.persist()
-    from collections import OrderedDict
-    plans: OrderedDict = OrderedDict()
+    from redisgraph_spark.graph.graph import PlanCache
+    plans = PlanCache()
     _BUILD_CACHE[key] = (nodes, edges, count_hints, plans, total)
     return Graph(spark, nodes, edges, name="tpch",
                  rel_endpoints=_REL_ENDPOINTS, count_hints=count_hints,

@@ -71,6 +71,65 @@ class _NotConst(Exception):
     """Expression is not a plan-time constant (const_eval)."""
 
 
+class ValueDependent(Exception):
+    """Template planning read the value of a rebindable parameter."""
+
+
+class Params(dict):
+    """Query parameters as the planner sees them. ``params[name]`` and
+    ``params.get(name)`` read a value. The two reads a plan template
+    can rebind (graph/templates.py) have their own accessors:
+    ``type_of`` (the Python type alone) and ``literal`` (the value,
+    embedded as a Spark literal)."""
+
+    def type_of(self, name: str) -> type:
+        return type(dict.get(self, name))
+
+    def literal(self, name: str):
+        return dict.__getitem__(self, name)
+
+
+class SentinelParams(Params):
+    """Parameters while a plan template is built: each rebindable
+    parameter holds a sentinel, and reading its value raises
+    ValueDependent. ``value_read`` stays set even when a planner
+    ``except`` swallows the raise, so the template is refused."""
+
+    def __init__(self, values: dict, rebindable) -> None:
+        super().__init__(values)
+        self.rebindable = frozenset(rebindable)
+        self.value_read = False
+
+    def _read(self, names) -> None:
+        if self.rebindable.intersection(names):
+            self.value_read = True
+            raise ValueDependent(", ".join(sorted(names)))
+
+    def __getitem__(self, name):
+        self._read((name,))
+        return dict.__getitem__(self, name)
+
+    def get(self, name, default=None):
+        self._read((name,))
+        return dict.get(self, name, default)
+
+    def __iter__(self):
+        # overriding it sends dict(p) / {**p} through __getitem__
+        return dict.__iter__(self)
+
+    def items(self):
+        self._read(self.keys())
+        return dict.items(self)
+
+    def values(self):
+        self._read(self.keys())
+        return dict.values(self)
+
+    def copy(self):
+        self._read(self.keys())
+        return dict.copy(self)
+
+
 # the openCypher temporal function surface (beyond-reference: the
 # reference declares the types but never implements them,
 # src/value.h:28-33, docs/cypher_support.md:20-22)
@@ -116,6 +175,22 @@ def _could_be_temporal(e: A.Expr) -> bool:
 
 _PY_SQL_TYPES = {bool: "boolean", int: "bigint", float: "double",
                  str: "string"}
+
+
+def _py_dtype(t: type) -> "T.DataType | object":
+    """Plan-time DataType of a scalar constant of Python type ``t``;
+    ``_UNSET`` for anything else."""
+    if t is type(None):
+        return T.NullType()
+    if issubclass(t, bool):
+        return T.BooleanType()
+    if issubclass(t, int):
+        return T.LongType()
+    if issubclass(t, float):
+        return T.DoubleType()
+    if issubclass(t, str):
+        return T.StringType()
+    return _UNSET
 
 
 def param_literal(v) -> Column:
@@ -271,23 +346,9 @@ class ExprCompiler:
         """Plan-time type of a literal/parameter AST node without a JVM
         probe; ``_UNSET`` = unknown (caller falls back to probing)."""
         if isinstance(e, A.Literal):
-            v = e.value
-        elif isinstance(e, A.Parameter):
-            if e.name not in self.params:
-                return _UNSET
-            v = self.params[e.name]
-        else:
-            return _UNSET
-        if v is None:
-            return T.NullType()
-        if isinstance(v, bool):
-            return T.BooleanType()
-        if isinstance(v, int):
-            return T.LongType()
-        if isinstance(v, float):
-            return T.DoubleType()
-        if isinstance(v, str):
-            return T.StringType()
+            return _py_dtype(type(e.value))
+        if isinstance(e, A.Parameter) and e.name in self.params:
+            return _py_dtype(self.params.type_of(e.name))
         return _UNSET
 
     def _static_is_string(self, e) -> bool:
@@ -296,7 +357,7 @@ class ExprCompiler:
         if isinstance(e, A.Literal):
             return isinstance(e.value, str)
         if isinstance(e, A.Parameter):
-            return isinstance(self.params.get(e.name), str)
+            return issubclass(self.params.type_of(e.name), str)
         if isinstance(e, A.Binary) and e.op == "+":
             return self._static_is_string(e.left) \
                 or self._static_is_string(e.right)
@@ -316,8 +377,8 @@ class ExprCompiler:
             return isinstance(e.value, (int, float)) \
                 and not isinstance(e.value, bool)
         if isinstance(e, A.Parameter):
-            v = self.params.get(e.name)
-            return isinstance(v, (int, float)) and not isinstance(v, bool)
+            t = self.params.type_of(e.name)
+            return issubclass(t, (int, float)) and t is not bool
         if isinstance(e, A.FuncCall) and e.name in (
                 "round", "floor", "ceil", "abs", "sign",
                 "tofloat", "tointeger", "size", "length", "id",
@@ -374,23 +435,22 @@ class ExprCompiler:
                 f"Type mismatch: expected Integer or Float as "
                 f"operand of '{op}'")
 
-        got = False
-        try:
-            v = self.const_eval(node)
-            got = True
-        except Exception:
-            v = None
-        if got:
-            if v is None:
+        if isinstance(node, A.Parameter) and node.name in self.params:
+            t = self.params.type_of(node.name)
+        else:
+            try:
+                t = type(self.const_eval(node))
+            except Exception:
+                t = None
+        if t is not None:
+            if t is type(None):
                 return T.NullType(), False
-            if isinstance(v, bool) or isinstance(v, str) \
-                    or isinstance(v, (list, tuple)) \
-                    or isinstance(v, dict) \
-                    or isinstance(v, TK.TEMPORAL_CLASSES):
+            if issubclass(t, (bool, str, list, tuple, dict)
+                          + TK.TEMPORAL_CLASSES):
                 _mismatch()
-            if isinstance(v, int):
+            if issubclass(t, int):
                 return T.LongType(), False
-            if isinstance(v, float):
+            if issubclass(t, float):
                 return T.DoubleType(), False
             # unexpected constant type — fall through to the probe
         elif self._static_is_numeric(node) and not need_width:
@@ -414,21 +474,13 @@ class ExprCompiler:
         (null literal → NullType); ``_UNSET`` when unknown — non-scalar
         constants (lists/maps/temporals) keep the probe, whose
         element/struct types the typed-equality paths need."""
+        if isinstance(node, A.Parameter):
+            return self.static_dtype(node)
         try:
             v = self.const_eval(node)
         except Exception:
             return _UNSET
-        if v is None:
-            return T.NullType()
-        if isinstance(v, bool):
-            return T.BooleanType()
-        if isinstance(v, int):
-            return T.LongType()
-        if isinstance(v, float):
-            return T.DoubleType()
-        if isinstance(v, str):
-            return T.StringType()
-        return _UNSET
+        return _py_dtype(type(v))
 
     @staticmethod
     def _variant_of_dt(dt) -> bool:
@@ -993,7 +1045,7 @@ class ExprCompiler:
     def _c_Parameter(self, e: A.Parameter) -> Column:
         if e.name not in self.params:
             raise CompileError(f"Missing parameter ${e.name}")
-        return param_literal(self.params[e.name])
+        return param_literal(self.params.literal(e.name))
 
     def _c_Variable(self, e: A.Variable) -> Column:
         if e.name not in self.vars:

@@ -36,7 +36,8 @@ from pyspark.sql import functions as F
 
 from redisgraph_spark.cypher import ast as A
 from redisgraph_spark.planner.expressions import (_UNSET, CompileError,
-                                                  ExprCompiler, VarInfo)
+                                                  ExprCompiler, Params,
+                                                  VarInfo)
 
 
 def _field_dt(frame, field):
@@ -229,7 +230,10 @@ def _colref(name: str) -> Column:
 class CypherPlanner:
     def __init__(self, graph, params: dict | None = None) -> None:
         self.graph = graph
-        self.params = dict(params or {})
+        # a Params instance (the template planner's SentinelParams)
+        # is kept as given: its value reads must stay observable
+        self.params = params if isinstance(params, Params) \
+            else Params(params or {})
         self._gensym = itertools.count()
         # ONE statement clock per query: every compiler this planner
         # creates shares it, so datetime.statement()/date() evaluated
@@ -760,9 +764,14 @@ class CypherPlanner:
                             raise PlanError(
                                 f"Variable `{var}` is not an edge")
                     else:
-                        # var-len var binds a hop list: the binder
-                        # (`_var_len_hop`) overwrites the kind to
-                        # "scalar" without a check — mirror exactly
+                        # var-len var binds a hop list, which later
+                        # clauses see as a scalar. `_var_len_hop` has
+                        # its own reuse checks (same-clause reuse is
+                        # "already declared"; a list bound by an
+                        # earlier clause is matched through a fresh
+                        # symbol), so an invalid reuse may raise a
+                        # different error here than there — but it
+                        # raises either way
                         kinds[var] = "scalar"
 
     def _clause_match(self, ctx: Ctx, clause: A.MatchClause) -> None:

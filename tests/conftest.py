@@ -8,6 +8,19 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 
+def pytest_collection_modifyitems(config, items):
+    """Leave slow tests out of a default run (see pytest.ini). A run
+    with -m, or one that names a test by node id, gets what it asked
+    for."""
+    if config.getoption("markexpr") or \
+            any("::" in arg for arg in config.args):
+        return
+    slow = [it for it in items if it.get_closest_marker("slow")]
+    if slow:
+        config.hook.pytest_deselected(items=slow)
+        items[:] = [it for it in items if not it.get_closest_marker("slow")]
+
+
 @pytest.fixture(scope="session")
 def spark():
     from redisgraph_spark import get_spark

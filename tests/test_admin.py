@@ -12,6 +12,15 @@ def test_plan_cache_hits(social):
     social.query(q)
     hits = [r for r in social._slow_log if r["query"] == q]
     assert len(hits) == 2 and hits[1]["cache_hit"]
+    assert [r["plan_cache"] for r in hits] == ["plan", "hit"]
+    # the first value plans the shape's template, a new value rebinds
+    # it, and the same value again is an exact-value hit
+    q = "MATCH (p:person {age: $a}) RETURN count(*) AS c"
+    assert [social.query(q, {"a": a}).collect()[0]["c"]
+            for a in (32, 33, 33)] == [4, 1, 1]
+    log = [r for r in social._slow_log if r["query"] == q]
+    assert [r["plan_cache"] for r in log] == ["plan", "rebind", "hit"]
+    assert [r["cache_hit"] for r in log] == [False, False, True]
 
 
 def test_mutation_invalidates_cache(social):
@@ -59,9 +68,14 @@ def test_profile(social):
     # (the round-9 temporal blowup lived there, invisible to
     # executor-side metrics); second profile of the same text rides
     # the plan cache and reports it
-    assert prof["planning_ms"] >= 0 and prof["plan_cached"] is False
+    assert prof["planning_ms"] >= 0 and prof["plan_cache"] == "plan"
     prof2 = social.profile("MATCH (p:person) RETURN p.name AS n")
-    assert prof2["plan_cached"] is True
+    assert prof2["plan_cache"] == "hit"
+    # a parameterised read plans its template once, then rebinds it
+    q = "MATCH (p:person) WHERE p.age > $a RETURN p.name AS n"
+    assert social.profile(q, {"a": 32})["plan_cache"] == "plan"
+    prof3 = social.profile(q, {"a": 30})
+    assert prof3["plan_cache"] == "rebind" and prof3["rows"] == 7
 
 
 def test_profile_per_op_stats(social):

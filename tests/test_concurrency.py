@@ -114,3 +114,75 @@ def test_aborted_write_under_readers(spark):
         g.query("MATCH (n:N) CREATE (:N {k: 3})-[:R*2]->()")
     after = g.query("MATCH (n:N) RETURN count(n) AS c").collect()[0].c
     assert before == after == 2
+
+
+def test_template_binds_concurrently(graph):
+    """More threads than cores rebind one plan template, each with its
+    own keys; each must get its own answer (the template's JVM plan is
+    shared)."""
+    import sys
+
+    from conftest import rows
+    from redisgraph_spark.cypher.parser import parse
+    from redisgraph_spark.planner.planner import CypherPlanner
+    q = ("MATCH (c:Customer {c_custkey: $k})-[:PLACED]->(o:Order) "
+         "RETURN o.o_orderkey AS ok")
+    graph.query(q, {"k": 100})               # builds the template
+    keys = [[1 + t + 6 * i for i in range(2)] for t in range(6)]
+    want = {k: rows(CypherPlanner(graph, {"k": k}).plan(parse(q)))
+            for ks in keys for k in ks}
+    got: dict = {}
+    errors: list[str] = []
+
+    def client(ks):
+        try:
+            for k in ks:
+                df, outcome = graph._query(q, {"k": k})
+                got[k] = (outcome, rows(df))
+        except Exception as ex:  # pragma: no cover
+            errors.append(repr(ex))
+
+    threads = [threading.Thread(target=client, args=(ks,)) for ks in keys]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[:3]
+    assert got == {k: ("rebind", r) for k, r in want.items()}
+    assert any(want.values())
+
+
+def test_write_drops_templates(spark):
+    """A SET between two binds of one shape shows in the second: the
+    version bump retires the template, so the read after it plans
+    against the new tables."""
+    g = Graph(spark, {}, {})
+    g.query("CREATE (:N {k: 1, v: 10}), (:N {k: 2, v: 20})")
+    q = "MATCH (n:N {k: $k}) RETURN n.v AS v"
+    assert g.query(q, {"k": 1}).collect()[0].v == 10
+    assert g._query(q, {"k": 2})[1] == "rebind"
+    g.query("MATCH (n:N) SET n.v = n.v + 1")
+    df, outcome = g._query(q, {"k": 2})
+    assert outcome == "plan" and df.collect()[0].v == 21
+    assert g._query(q, {"k": 1})[0].collect()[0].v == 11
+
+
+def test_timeout_in_template_build_stores_nothing(social):
+    """A TIMEOUT while the template is planned fails the query as a
+    TIMEOUT does without templates, and leaves no template behind."""
+    from redisgraph_spark.graph.graph import QueryTimeoutError
+    q = "MATCH (p:person {name: $n})-[*1..8]->(q) RETURN count(*) AS c"
+    social.config_set("TIMEOUT", 1)
+    try:
+        with pytest.raises(QueryTimeoutError):
+            social.query(q, {"n": "Roi"})
+        assert not [k for k in social._plan_cache.templates
+                    if k[0] == q]
+    finally:
+        social.config_set("TIMEOUT", 0)
