@@ -271,17 +271,9 @@ class Graph:
         # analog of the reference's running counters
         # (src/graph/graph_statistics.h:14-37). Any mutation bumps
         # _version, which invalidates these keys automatically.
-        # tables statistics call tiny (≤512 rows) take the literal
-        # rewrite fast path under mutations (planner/mutations.py
-        # _defer_pin) — the in-memory row-store analog; _defer_pin
-        # re-verifies the bound at each rewrite and evicts growers
-        self._tiny_tables: set[tuple[str, str]] = set()
         if count_hints:
             for (kind, nm), cnt in count_hints.items():
                 self._count_cache[(kind, nm, 0)] = int(cnt)
-                if int(cnt) <= 512:
-                    self._tiny_tables.add(
-                        ("node" if kind == "n" else "edge", nm))
         self._slow_log: list[dict] = []
         self._fulltext = None
         # user-registered table-valued procedures (register_procedure)

@@ -199,7 +199,7 @@ def tpch_graph(spark: SparkSession, sf_dir: str):
     # CacheManager — the reference keeps its matrices RAM-resident
     # unconditionally (graph.h:72-77); at cluster scale the gate stays
     # open and parquet scans + executor block cache take over.
-    # Lazy persist: the first action materializes (bench bills it to
+    # Lazy persist: the first action materializes (perfbench bills it to
     # the load phase via warm_traversal/node_count).
     from redisgraph_spark.session import (_ADAPTIVE_MIN_BYTES,
                                           plan_input_bytes)
@@ -207,13 +207,11 @@ def tpch_graph(spark: SparkSession, sf_dir: str):
                 for df in list(nodes.values()) + list(edges.values()))
     if total < _ADAPTIVE_MIN_BYTES:
         # tiny dimension tables (footer-known ≤512 plain-scalar rows)
-        # become inline VALUES relations at build time — the driver
-        # row-store analog of the reference's DataBlocks. Every scan
-        # and every mutation fast path over them then folds to a
-        # LocalTableScan (zero scheduled jobs); one capped collect per
-        # table per PROCESS (the build cache shares the result across
-        # Graph instances). At cluster scale the gate is open and this
-        # block never runs.
+        # become inline VALUES relations at build time, so every scan
+        # of them folds to a LocalTableScan (zero scheduled jobs); one
+        # capped collect per table per PROCESS (the build cache shares
+        # the result across Graph instances). At cluster scale the gate
+        # is open and this block never runs.
         from redisgraph_spark.session import INLINE_TYPES, inline_df
         inlined: set = set()
         for tabs, kind in ((nodes, "n"), (edges, "e")):

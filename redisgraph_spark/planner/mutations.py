@@ -72,92 +72,6 @@ def _materialize_small(spark, df: DataFrame, cap: int = 1024
     return ck, ck.count()
 
 
-def _tiny_rows(g, kind: str, name: str, tbl: DataFrame,
-               swap: bool = True) -> list | None:
-    """Rows of a tiny-tracked table with plain-scalar columns, or None.
-
-    When the table is already an inline VALUES relation (every tiny
-    table is, after its first rewrite), Catalyst folds the capped
-    collect to a LocalTableScan — ``executeCollect`` runs driver-side
-    with NO scheduled job. A still-parquet tiny table pays one capped
-    collect; the caller's rewrite swaps it to an inline relation so
-    later touches are jobless. This is the in-memory row-store analog
-    of the reference's DataBlock entity store (src/util/datablock/)."""
-    if (kind, name) not in getattr(g, "_tiny_tables", set()):
-        return None
-    for f in tbl.schema.fields:
-        s = f.dataType.simpleString()
-        if s not in _INLINE_TYPES or s in ("date", "timestamp"):
-            return None
-    cached = getattr(tbl, "_rg_inline_rows", None)
-    if cached is not None and len(cached[0]) <= 512:
-        # driver-side row store (session._attach_inline_rows): the
-        # relation IS an inline VALUES literal built from exactly these
-        # rows — serve them without a py4j round trip. No swap needed:
-        # the table is already an inline relation.
-        vals, names = cached
-        from pyspark.sql import Row
-        factory = Row(*names)
-        return [factory(*r) for r in vals]
-    rows = tbl.limit(513).collect()
-    if len(rows) > 512:
-        g._tiny_tables.discard((kind, name))
-        return None
-    # swap the collected rows back in as an inline VALUES relation so
-    # every LATER touch of this table (scans, the next mutation's
-    # collects) folds to a LocalTableScan; callers that ALWAYS swap a
-    # mutated copy right after pass swap=False to skip the double
-    # rebuild
-    if swap:
-        from redisgraph_spark.session import inline_df
-        tables = g.node_tables if kind == "node" else g.edge_tables
-        schema = [(f.name, f.dataType.simpleString())
-                  for f in tbl.schema.fields]
-        tables[name] = inline_df(g.spark, [tuple(r) for r in rows],
-                                 schema)
-        g._rewrite_depth[(kind, name)] = 0
-    return rows
-
-
-def _py_scalar_type(v) -> str | None:
-    """SQL type of a collected scalar for the driver-side rewrite; None
-    = not a plain scalar (caller falls back to the distributed path)."""
-    if v is None:
-        return None
-    if isinstance(v, bool):
-        return "boolean"
-    if isinstance(v, int):
-        return "bigint"
-    if isinstance(v, float):
-        return "double"
-    if isinstance(v, str):
-        return "string"
-    return "unsupported"
-
-
-_INT_SQL = {"bigint", "int", "smallint", "tinyint"}
-
-
-def _widen_sql(col_t: str, val_types: set[str]) -> str | None:
-    """Final SQL type of a column after driver-side updates mixing
-    ``col_t`` with values of ``val_types``; None = not representable
-    as one plain column (variant semantics — distributed path)."""
-    kinds = set(val_types)
-    if col_t:
-        kinds.add(col_t)
-    kinds = {("bigint" if k in _INT_SQL else
-              "double" if k == "float" else k) for k in kinds}
-    if not kinds:
-        return col_t or "string"
-    if kinds <= {"bigint"}:
-        return col_t if col_t in _INT_SQL else "bigint"
-    if kinds <= {"bigint", "double"}:
-        return "double"
-    if len(kinds) == 1:
-        return kinds.pop()
-    return None
-
-
 def _defer_pin(g, kind: str, name: str, df: DataFrame) -> DataFrame:
     """Swap a rewritten table in WITHOUT checkpointing it.
 
@@ -169,30 +83,8 @@ def _defer_pin(g, kind: str, name: str, df: DataFrame) -> DataFrame:
     the next action that reads the table fuse the rewrite into its own
     job.  To bound lineage growth under long mutation scripts, every
     4th chained rewrite of the same table gets a (lazy) checkpoint,
-    which resets the chain.
-
-    Tiny-table fast path: a table whose statistics say it holds ≤512
-    rows of plain scalars (Region-sized dims under a mutation script)
-    is collected ONCE into a literal VALUES relation instead — the
-    analog of the reference mutating its in-memory row store in place.
-    Every later bind/analysis against it is then a LocalRelation
-    (no lineage, trivial Catalyst work), which is where a 5-query
-    mutation script actually spends its wall time. The collect is
-    capped: a table that grew past the cap falls back to the lazy
-    plan and stops being tracked as tiny."""
+    which resets the chain."""
     key = (kind, name)
-    if key in getattr(g, "_tiny_tables", set()) and \
-            all(f.dataType.simpleString() in _INLINE_TYPES
-                and f.dataType.simpleString() not in ("date", "timestamp")
-                for f in df.schema.fields):
-        rows = df.limit(513).collect()
-        if len(rows) <= 512:
-            from redisgraph_spark.session import inline_df
-            schema = [(f.name, f.dataType.simpleString())
-                      for f in df.schema.fields]
-            g._rewrite_depth[key] = 0
-            return inline_df(g.spark, [tuple(r) for r in rows], schema)
-        g._tiny_tables.discard(key)
     depth = g._rewrite_depth.get(key, 0) + 1
     if depth >= 4:
         g._rewrite_depth[key] = 0
@@ -274,57 +166,6 @@ def _widen_numeric(a, b) -> str:
     integral = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
     return "bigint" if isinstance(a, integral) \
         and isinstance(b, integral) else "double"
-
-
-def _append_tiny(g, kind: str, name: str, row_dicts: list[dict]) -> bool:
-    """CREATE-append for a tiny-tracked table, done driver-side: old
-    rows + pending rows merge in Python and an inline VALUES relation
-    swaps in, so the committed table stays a LocalRelation (a lazy
-    Union would break the LocalTableScan fold every later touch relies
-    on). Returns False for anything outside the plain-scalar envelope
-    or when the merged table outgrows the tiny cap — caller keeps the
-    distributed _union_into path."""
-    tables = g.node_tables if kind == "node" else g.edge_tables
-    tbl = tables.get(name)
-    if tbl is None or (kind, name) not in getattr(g, "_tiny_tables",
-                                                  set()):
-        return False
-    # per-column types of the pending values
-    new_types: dict[str, set] = {}
-    for d in row_dicts:
-        for k, v in d.items():
-            t = _py_scalar_type(v)
-            if t == "unsupported":
-                return False
-            if t is not None:
-                new_types.setdefault(k, set()).add(t)
-    old = _tiny_rows(g, kind, name, tbl, swap=False)
-    if old is None:
-        return False
-    if len(old) + len(row_dicts) > 512:
-        g._tiny_tables.discard((kind, name))
-        return False
-    schema = [(f.name, f.dataType.simpleString())
-              for f in tbl.schema.fields]
-    names = [n for n, _ in schema]
-    for d in row_dicts:
-        for k in d:
-            if k not in names:
-                names.append(k)
-                schema.append((k, None))
-    final_schema = []
-    for n, t in schema:
-        ft = _widen_sql(t, new_types.get(n, set()))
-        if ft is None:
-            return False           # str/num conflict → variant path
-        final_schema.append((n, ft))
-    merged = [tuple(r[n] if n in r.__fields__ else None for n in names)
-              for r in old]
-    merged += [tuple(d.get(n) for n in names) for d in row_dicts]
-    from redisgraph_spark.session import inline_df
-    tables[name] = inline_df(g.spark, merged, final_schema)
-    g._rewrite_depth[(kind, name)] = 0
-    return True
 
 
 def _union_into(tbl: DataFrame | None, rows: DataFrame) -> DataFrame:
@@ -512,8 +353,6 @@ def _create(planner, ctx, clause: A.CreateClause) -> DataFrame | None:
             g._multilabel = True
     for label, rows in by_label.items():
         for group in _type_groups(rows):
-            if _append_tiny(g, "node", label, group):
-                continue
             df = inline_rows_df(spark, group)
             if df is None:
                 df = spark.createDataFrame(group)
@@ -542,8 +381,6 @@ def _create(planner, ctx, clause: A.CreateClause) -> DataFrame | None:
             i += 2
     for rtype, rows in edge_rows.items():
         for group in _type_groups(rows):
-            if _append_tiny(g, "edge", rtype, group):
-                continue
             df = inline_rows_df(spark, group)
             if df is None:
                 df = spark.createDataFrame(group)
@@ -771,75 +608,6 @@ def _candidate_tables(g, info, tables) -> list:
     return [(n, tables[n]) for n in cand if n in tables]
 
 
-def _set_tiny_fast(g, info, upd_plan: DataFrame, key: str,
-                   tables: dict) -> int | None:
-    """Driver-side SET over tiny-tracked tables (the reference mutates
-    its in-memory row store in place, ops/op_update.c:66-100 — on a
-    dimension-sized table a distributed rewrite is pure scheduling
-    overhead: the r7 bench showed ~0.2s/action floors on 5-row
-    LocalRelations). Collects the matched (id, value) pairs and every
-    candidate table (all LocalTableScan folds when the tables are
-    already inline — no scheduled jobs), applies the update in Python,
-    and swaps in fresh inline relations. Returns the properties-set
-    count, or None when anything falls outside the plain-scalar tiny
-    envelope (caller runs the distributed path unchanged)."""
-    kind = "node" if tables is g.node_tables else "edge"
-    cands = _candidate_tables(g, info, tables)
-    if any((kind, name) not in getattr(g, "_tiny_tables", set())
-           for name, _ in cands):
-        return None
-    upd_rows = upd_plan.limit(1025).collect()
-    if len(upd_rows) > 1024:
-        return None
-    updmap: dict = {}
-    for r in upd_rows:
-        uid = r["__uid"]
-        if uid not in updmap:       # first wins ≙ dropDuplicates
-            updmap[uid] = r["__uval"]
-    val_types = {_py_scalar_type(v) for v in updmap.values()}
-    val_types.discard(None)
-    if "unsupported" in val_types:
-        return None                 # arrays/maps → variant path
-    staged = []
-    for name, tbl in cands:
-        old = _tiny_rows(g, kind, name, tbl)
-        if old is None:
-            return None
-        schema = [(f.name, f.dataType.simpleString())
-                  for f in tbl.schema.fields]
-        names = [n for n, _ in schema]
-        had = key in names
-        if not had:
-            schema.append((key, None))
-            names.append(key)
-        ki = names.index(key)
-        new_rows = []
-        final_types = set(val_types)
-        hit_any = False
-        for r in old:
-            vals = [r[n] if had or n != key else None for n in names]
-            rid = r["_id"]
-            if rid in updmap:
-                vals[ki] = updmap[rid]
-                hit_any = True
-            new_rows.append(tuple(vals))
-        col_t = dict(schema)[key]
-        if had and not hit_any:
-            final_t = col_t
-        else:
-            final_t = _widen_sql(col_t, final_types)
-        if final_t is None:
-            return None              # str/num mixture → variant path
-        schema[ki] = (key, final_t)
-        if hit_any or not had:
-            staged.append((name, new_rows, schema))
-    from redisgraph_spark.session import inline_df
-    for name, new_rows, schema in staged:
-        tables[name] = inline_df(g.spark, new_rows, schema)
-        g._rewrite_depth[(kind, name)] = 0
-    return len(updmap)
-
-
 def _set(planner, ctx, clause: A.SetClause) -> DataFrame | None:
     """SET n.prop = expr — rewrite the affected label tables: matched rows
     get the new value, others keep theirs (reference buffers then commits
@@ -919,12 +687,6 @@ def _set(planner, ctx, clause: A.SetClause) -> DataFrame | None:
             tables = g.node_tables
         else:
             tables = g.edge_tables
-        # driver-side rewrite when every candidate table is tiny —
-        # zero scheduled jobs for dimension-table mutation scripts
-        fast_cnt = _set_tiny_fast(g, info, upd_plan, key, tables)
-        if fast_cnt is not None:
-            props_set += fast_cnt
-            continue
         upd = upd_plan.dropDuplicates(["__uid"])
         # materialize the (small) update set once: the count below and
         # every candidate-table rewrite join then reuse it instead of
@@ -1234,88 +996,6 @@ def _elem_kind(ctx, e) -> str | None:
     return None
 
 
-def _delete_edge_cands(g, info) -> list:
-    """Edge tables a deleted node's cascade can touch: rel-endpoint
-    hints prove most relations can't reach a label-bound variable."""
-    cand_labels = set(getattr(info, "labels", None) or ())
-    hints = g.rel_endpoints
-    cands = []
-    for name, tbl in list(g.edge_tables.items()):
-        if cand_labels and hints and not g._multilabel:
-            h = hints.get(name)
-            if h is not None and not ((h[0] | h[1]) & cand_labels):
-                continue
-        cands.append((name, tbl))
-    return cands
-
-
-def _delete_tiny_fast(planner, ctx, var: str,
-                      info) -> tuple[int, int] | None:
-    """Driver-side DELETE when every table the deletion can touch is
-    tiny-tracked (same rationale as _set_tiny_fast: the reference
-    deletes from its in-memory DataBlocks, Graph_BulkDelete
-    graph.h:172-181 — a dimension-sized cascade probe job is pure
-    scheduling floor). Returns (nodes_deleted, edges_deleted) or None
-    for the distributed path."""
-    g = planner.graph
-    tiny = getattr(g, "_tiny_tables", set())
-    if info.kind == "edge":
-        cands = _candidate_tables(g, info, g.edge_tables)
-        if any(("edge", n) not in tiny for n, _ in cands):
-            return None
-        rows = ctx.df.select(F.col(f"{var}._id").alias("__did")) \
-            .filter(F.col("__did").isNotNull()).limit(1025).collect()
-        if len(rows) > 1024:
-            return None
-        ids = {r["__did"] for r in rows}
-        from redisgraph_spark.session import inline_df
-        for name, tbl in cands:
-            old = _tiny_rows(g, "edge", name, tbl)
-            if old is None:
-                return None
-            kept = [tuple(r) for r in old if r["_id"] not in ids]
-            if len(kept) != len(old):
-                schema = [(f.name, f.dataType.simpleString())
-                          for f in tbl.schema.fields]
-                g.edge_tables[name] = inline_df(g.spark, kept, schema)
-                g._rewrite_depth[("edge", name)] = 0
-        return 0, len(ids)
-    node_cands = _candidate_tables(g, info, g.node_tables)
-    edge_cands = _delete_edge_cands(g, info)
-    if any(("node", n) not in tiny for n, _ in node_cands) or \
-            any(("edge", n) not in tiny for n, _ in edge_cands):
-        return None
-    rows = ctx.df.select(F.col(f"{var}._id").alias("__did")) \
-        .filter(F.col("__did").isNotNull()).limit(1025).collect()
-    if len(rows) > 1024:
-        return None
-    ids = {r["__did"] for r in rows}
-    staged = []
-    for kind, name, tbl, keep in (
-            [("node", n, t, lambda r: r["_id"] not in ids)
-             for n, t in node_cands]
-            + [("edge", n, t, lambda r: r["_src"] not in ids
-                and r["_dst"] not in ids) for n, t in edge_cands]):
-        old = _tiny_rows(g, kind, name, tbl)
-        if old is None:
-            return None
-        kept = [tuple(r) for r in old if keep(r)]
-        staged.append((kind, name, tbl, len(old) - len(kept), kept))
-    from redisgraph_spark.session import inline_df
-    edges_gone = 0
-    for kind, name, tbl, gone, kept in staged:
-        if kind == "edge":
-            edges_gone += gone
-        if not gone:
-            continue
-        schema = [(f.name, f.dataType.simpleString())
-                  for f in tbl.schema.fields]
-        tables = g.node_tables if kind == "node" else g.edge_tables
-        tables[name] = inline_df(g.spark, kept, schema)
-        g._rewrite_depth[(kind, name)] = 0
-    return len(ids), edges_gone
-
-
 def _delete(planner, ctx, clause: A.DeleteClause) -> DataFrame | None:
     """DETACH DELETE semantics: node deletion cascades to incident edges
     (reference ``ops/op_delete.c``, ``Graph_BulkDelete``
@@ -1422,11 +1102,6 @@ def _delete(planner, ctx, clause: A.DeleteClause) -> DataFrame | None:
             except Exception:
                 pass
             raise ValueError("DELETE expects a node, relationship or path")
-        fast = _delete_tiny_fast(planner, ctx, var, info)
-        if fast is not None:
-            nodes_deleted += fast[0]
-            edges_deleted += fast[1]
-            continue
         ids_plan = ctx.df.select(
             F.col(f"{var}._id").alias("__did")).dropDuplicates()
         if info.kind == "edge":

@@ -502,8 +502,6 @@ class CypherPlanner:
 
     def plan_single(self, q: A.SingleQuery) -> DataFrame:
         fast = self._try_reduce_count(q)
-        if fast is None:
-            fast = self._try_tiny_agg(q)
         if fast is not None:
             return fast
         ctx = Ctx()
@@ -559,110 +557,6 @@ class CypherPlanner:
             # (src/resultset/resultset_statistics.h:12-20)
             result = self.graph.spark.range(0, 0, 1, 1).select()
         return result
-
-    def _try_tiny_agg(self, q: A.SingleQuery) -> DataFrame | None:
-        """``MATCH (n:L) RETURN count(*)/count(n.p)/min/max/sum(n.p)``
-        over a TINY-tracked label: answered driver-side from the inline
-        row store (zero scheduled jobs — the reference aggregates its
-        in-memory DataBlocks directly). Applies only to the exact shape
-        above (single unfiltered single-label scan, aggregate-only
-        RETURN over direct properties); anything else keeps the
-        distributed plan. avg/collect/percentiles excluded (their
-        type/ordering semantics stay on one code path)."""
-        if len(q.clauses) != 2:
-            return None
-        m, r = q.clauses
-        if not (isinstance(m, A.MatchClause) and not m.optional
-                and m.where is None and len(m.paths) == 1
-                and isinstance(r, A.ReturnClause) and not r.star
-                and not r.distinct and not r.order_by
-                and r.skip is None and r.limit is None and r.items):
-            return None
-        if m.paths[0].var is not None:
-            return None
-        els = m.paths[0].elements
-        if len(els) != 1:
-            return None
-        n = els[0]
-        g = self.graph
-        if (n.props or not n.labels or len(n.labels) != 1
-                or g._multilabel or n.var is None):
-            return None
-        label = n.labels[0]
-        if ("node", label) not in getattr(g, "_tiny_tables", set()) \
-                or label not in g.node_tables:
-            return None
-        # validate every RETURN item first (no side effects on bail)
-        plan: list[tuple] = []   # (alias, kind, key|None, distinct)
-        for item in r.items:
-            e = item.expr
-            alias = item.alias or item.text or _deparse(e)
-            if isinstance(e, A.CountStar):
-                plan.append((alias, "count*", None, False))
-                continue
-            if not (isinstance(e, A.FuncCall)
-                    and e.name in ("count", "min", "max", "sum")
-                    and len(e.args) == 1):
-                return None
-            a = e.args[0]
-            if isinstance(a, A.Variable) and a.name == n.var \
-                    and e.name == "count":
-                plan.append((alias, "count*", None, e.distinct))
-                continue
-            if not (isinstance(a, A.Property)
-                    and isinstance(a.subject, A.Variable)
-                    and a.subject.name == n.var):
-                return None
-            if e.distinct and e.name != "count":
-                return None
-            plan.append((alias, e.name, a.key, e.distinct))
-        from redisgraph_spark.planner.mutations import _tiny_rows
-        rows = _tiny_rows(g, "node", label, g.node_tables[label])
-        if rows is None:
-            return None
-        cols = set(rows[0].__fields__) if rows else set()
-        out_vals: list = []
-        out_schema: list[tuple[str, str]] = []
-        tbl_types = {f.name: f.dataType.simpleString()
-                     for f in g.node_tables[label].schema.fields}
-        for alias, kind, key, distinct in plan:
-            if kind == "count*":
-                if distinct:
-                    out_vals.append(len({r["_id"] for r in rows}))
-                else:
-                    out_vals.append(len(rows))
-                out_schema.append((alias, "bigint"))
-                continue
-            vals = [r[key] for r in rows] if key in cols else []
-            vals = [v for v in vals if v is not None]
-            if any(isinstance(v, bool) for v in vals):
-                return None        # boolean agg semantics stay distributed
-            if any(isinstance(v, float) and v != v for v in vals):
-                return None        # NaN ordering (Spark: NaN > all)
-            if kind == "count":
-                out_vals.append(len(set(vals)) if distinct else len(vals))
-                out_schema.append((alias, "bigint"))
-            elif kind in ("min", "max"):
-                if vals and not (all(isinstance(v, (int, float))
-                                     for v in vals)
-                                 or all(isinstance(v, str)
-                                        for v in vals)):
-                    return None
-                out_vals.append((min if kind == "min" else max)(vals)
-                                if vals else None)
-                out_schema.append((alias, tbl_types.get(key, "string")))
-            else:  # sum
-                if not all(isinstance(v, (int, float)) for v in vals):
-                    return None
-                s = sum(vals) if vals else 0
-                if all(isinstance(v, int) for v in vals):
-                    out_schema.append((alias, "bigint"))
-                else:
-                    s = float(s)
-                    out_schema.append((alias, "double"))
-                out_vals.append(s)
-        from redisgraph_spark.session import inline_df
-        return inline_df(g.spark, [tuple(out_vals)], out_schema)
 
     def _try_reduce_count(self, q: A.SingleQuery) -> DataFrame | None:
         """``MATCH (n[:L]) RETURN count(n)`` / ``MATCH ()-[e[:R]]->()

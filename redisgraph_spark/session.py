@@ -14,29 +14,28 @@ from pyspark.sql import SparkSession
 
 def inline_df(spark: SparkSession, rows: list[tuple],
               schema: list[tuple[str, str]]):
-    """Tiny driver-side result as a ONE-task plan.
+    """Small driver-side rows (a mutation's pinned key set, a tiny
+    dimension table inlined at build time) as a plan with no shuffle.
 
     ``spark.createDataFrame(small_list)`` parallelizes into
     defaultParallelism (32) mostly-empty tasks — ~1-3 s of scheduling
-    per collect for a handful of rows. Building the rows as an exploded
-    array of struct literals over a single-partition range keeps the
-    whole thing one task (~0.1 s). ``schema`` is [(name, sql_type)].
+    per collect for a handful of rows. Rows whose cells render as SQL
+    literals become one VALUES relation (a LocalRelation); anything
+    else is an exploded array of struct literals over a single-partition
+    range, which keeps the whole thing one task (~0.1 s). ``schema`` is
+    [(name, sql_type)].
     """
     from pyspark.sql import functions as F
     ddl = ", ".join(f"`{n}` {t}" for n, t in schema)
     if not rows:
-        df = spark.createDataFrame([], ddl)
-        _attach_inline_rows(df, [], schema)
-        return df
+        return spark.createDataFrame([], ddl)
     sql = _values_sql(rows, schema, _escaped_literals(spark))
     if sql is not None:
         # one py4j round-trip and a LocalRelation (zero tasks on
         # collect) — the Column-builder below costs ~3 JVM calls per
         # CELL, which adds up in mutation scripts that inline several
         # small key sets per query
-        df = spark.sql(sql)
-        _attach_inline_rows(df, rows, schema)
-        return df
+        return spark.sql(sql)
     structs = [
         F.struct(*[_cell_lit(v, t).alias(n)
                    for v, (n, t) in zip(row, schema)])
@@ -46,57 +45,9 @@ def inline_df(spark: SparkSession, rows: list[tuple],
             .select("__r.*"))
 
 
-def _attach_inline_rows(df, rows: list[tuple],
-                        schema: list[tuple[str, str]]) -> None:
-    """Record the rendered rows on the inline relation as a driver-side
-    row store (`df._rg_inline_rows = (rows, names)`), so tiny-table
-    mutation reads (planner/mutations._tiny_rows) skip the JVM
-    round trip entirely — the collect they replace is a LocalTableScan
-    whose result is, by construction, exactly these rows.
-
-    Values are normalized to what ``.collect()`` of the CAST relation
-    would return (ints in a double column come back as floats); any
-    value outside its column's exact-round-trip envelope aborts the
-    attach and callers fall back to the real collect. 32-bit ``float``
-    columns are excluded outright: CAST(3.14 AS float) collects as
-    3.140000104904175 and a driver-side copy cannot reproduce that
-    without the JVM."""
-    exact = {"bigint", "long", "int", "integer", "smallint", "tinyint",
-             "double", "string", "boolean"}
-    if not all(t.lower() in exact for _, t in schema):
-        return
-    norm_rows: list[tuple] = []
-    for row in rows:
-        vals = []
-        for v, (_, t) in zip(row, schema):
-            tl = t.lower()
-            if v is None:
-                vals.append(None)
-            elif tl == "boolean":
-                if not isinstance(v, bool):
-                    return
-                vals.append(v)
-            elif tl == "double":
-                if isinstance(v, bool) or not isinstance(v, (int, float)):
-                    return
-                vals.append(float(v))
-            elif tl == "string":
-                if not isinstance(v, str):
-                    return
-                vals.append(v)
-            else:                     # integral types
-                if isinstance(v, bool) or not isinstance(v, int):
-                    return
-                vals.append(v)
-        norm_rows.append(tuple(vals))
-    try:
-        df._rg_inline_rows = (norm_rows, [n for n, _ in schema])
-    except Exception:
-        pass
-
-
-# column types the VALUES-literal fast paths can render; shared by the
-# mutation tiny-table row store and the tpch build-time inliner
+# column types the VALUES-literal renderer handles; shared by the
+# mutation key-set pinning (_materialize_small) and the tpch build-time
+# inliner
 INLINE_TYPES = {"bigint", "int", "smallint", "tinyint", "double",
                 "float", "string", "boolean", "date", "timestamp"}
 

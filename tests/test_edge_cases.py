@@ -485,6 +485,24 @@ def test_resultset_max_size(social):
         == 10
 
 
+@pytest.mark.parametrize("rows,schema,want", [
+    # an int in a double column collects as a float
+    ([(5,), (2.5,)], [("x", "double")], [(5.0,), (2.5,)]),
+    # an int in a string column renders through a CAST
+    ([(7,)], [("s", "string")], [("7",)]),
+    ([], [("k", "bigint")], []),
+    ([(1, "a", 2.5, True), (2, None, -0.0, None)],
+     [("k", "bigint"), ("s", "string"), ("d", "double"), ("b", "boolean")],
+     [(1, "a", 2.5, True), (2, None, -0.0, None)]),
+], ids=["int-in-double", "int-in-string", "empty", "scalars"])
+def test_inline_df_collect_round_trip(spark, rows, schema, want):
+    from redisgraph_spark.session import inline_df
+    got = [tuple(r) for r in inline_df(spark, rows, schema).collect()]
+    assert got == want
+    assert [type(v) for r in got for v in r] == \
+        [type(v) for r in want for v in r]
+
+
 def test_inline_df_escaped_string_literals_conf(spark):
     # round-7 advice (low): _values_sql must not backslash-escape when
     # spark.sql.parser.escapedStringLiterals=true (user sessions may

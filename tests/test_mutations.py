@@ -4,7 +4,7 @@ op_delete.c, op_merge.c)."""
 
 import pytest
 
-from tests.conftest import rows
+from tests.conftest import SF_DIR, rows
 
 
 @pytest.fixture()
@@ -471,11 +471,12 @@ def test_delete_map_literal_entity_value_still_works(g):
     assert got == [("b",)]
 
 
-# ------------------------------------------------------- r8: tiny fast paths
+# ------------------------------------------- tiny count-hinted tables
 @pytest.fixture()
 def gt(spark):
-    """Graph with count hints so tables are tiny-tracked — exercises the
-    driver-side SET/DELETE rewrites (_set_tiny_fast/_delete_tiny_fast)."""
+    """Graph whose tables all carry count hints of a few rows, the shape
+    of a TPC-H dimension table: SET/DELETE/aggregates over it take the
+    same DataFrame-rewrite path as any other table."""
     from redisgraph_spark import Graph
     nodes = {
         "L": spark.createDataFrame(
@@ -493,7 +494,6 @@ def gt(spark):
 
 
 def test_tiny_set_fast_path(gt):
-    assert ("node", "L") in gt._tiny_tables
     gt.query("MATCH (n:L {name: 'a'}) SET n.v = 99")
     assert gt.last_stats.get("properties_set") == 1
     got = dict(rows(gt.query("MATCH (n:L) RETURN n.name AS n, n.v AS v")))
@@ -513,9 +513,8 @@ def test_tiny_set_fast_path(gt):
 
 
 def test_tiny_set_variant_mixture_falls_back(gt, spark):
-    # str value into int column → heterogeneous-type semantics must go
-    # through the distributed path; behavior must match a graph with no
-    # tiny tracking at all
+    # str value into int column → heterogeneous-type semantics; behavior
+    # must match a graph with no count hints at all
     from redisgraph_spark import Graph
     plain = Graph(spark, {"L": spark.createDataFrame(
         [(1, "a", 10), (2, "b", 20), (3, "c", 30)],
@@ -550,8 +549,8 @@ def test_tiny_set_read_your_writes(gt):
 
 
 def test_tiny_agg_fast_path_parity(gt, spark):
-    # r8: aggregate-only RETURN over a tiny single-label scan answers
-    # driver-side; values must match a non-tiny graph exactly
+    # aggregate-only RETURN over a count-hinted single-label scan must
+    # match a graph with no count hints exactly
     from redisgraph_spark import Graph
     plain = Graph(spark, {"L": spark.createDataFrame(
         [(1, "a", 10), (2, "b", 20), (3, "c", 30)],
@@ -561,7 +560,7 @@ def test_tiny_agg_fast_path_parity(gt, spark):
     want = [tuple(r) for r in plain.query(q).collect()]
     got = [tuple(r) for r in gt.query(q).collect()]
     assert got == want == [(3, 3, 10, "c", 60)]
-    # stays correct through mutations (read-your-writes on the store)
+    # stays correct through mutations (read-your-writes)
     gt.query("MATCH (n:L {name: 'a'}) SET n.v = 99")
     got = gt.query("MATCH (n:L) RETURN max(n.v) AS m, count(*) AS c") \
         .collect()
@@ -570,3 +569,18 @@ def test_tiny_agg_fast_path_parity(gt, spark):
     got = gt.query("MATCH (n:L) RETURN count(*) AS c, sum(n.v) AS s") \
         .collect()
     assert tuple(got[0]) == (2, 119)
+
+
+def test_roundtrip_result_unchanged(spark):
+    # the Region CREATE/SET/CREATE/DELETE script of q_mutation_roundtrip
+    # on a fresh TPC-H graph (5 base regions)
+    from redisgraph_spark import Graph
+    g = Graph.from_tpch(spark, SF_DIR)
+    g.query("CREATE (:Region {r_regionkey: 990, r_name: 'ATLANTIS'})")
+    g.query("MATCH (r:Region {r_name: 'ATLANTIS'}) "
+            "SET r.r_regionkey = 991")
+    g.query("CREATE (:Region {r_regionkey: 992, r_name: 'LEMURIA'})")
+    g.query("MATCH (r:Region {r_name: 'LEMURIA'}) DELETE r")
+    out = g.query("MATCH (r:Region) RETURN count(*) AS n, "
+                  "max(r.r_regionkey) AS mk").collect()
+    assert (out[0]["n"], out[0]["mk"]) == (6, 991)

@@ -34,7 +34,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
     if not names:
-        names = [n for n in __import__("bench").HEADLINE]
+        sys.exit(__doc__)
 
     # warm the engine like the bench's load phase
     g = entrymod._graph(spark, sf_dir)

@@ -122,7 +122,7 @@ def main() -> None:
             best = min(best, time.time() - t0)
         return round(cold, 3), round(best, 3)
 
-    # load-phase analogs (same treatment as bench.py at both scales)
+    # load-phase analogs, outside the timed passes at both scales
     for d in (SRC, DST):
         spark.read.parquet(f"{d}/documents.parquet").count()
         em._minhash_sig(spark, d)
