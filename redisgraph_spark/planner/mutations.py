@@ -160,83 +160,85 @@ def _widen_numeric(a, b) -> str:
     """SQL type for a numeric-vs-numeric column conflict: two integral
     types widen to LONG (reference integers are int64 SIValues —
     widening 991 to 991.0 corrupts max()/sum() results); anything
-    fractional widens to double. Single source of truth for the
-    CREATE-union and SET paths."""
+    fractional widens to double. The numeric step of `_conform`."""
     import pyspark.sql.types as T
     integral = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
     return "bigint" if isinstance(a, integral) \
         and isinstance(b, integral) else "double"
 
 
+def _conform(cur, cur_t, new, new_t):
+    """The one rule for a property column whose stored type ``cur_t``
+    differs from an incoming value type ``new_t`` — SET onto a column
+    and created rows appended to a table both use it. Returns
+    ``(cur, new)`` re-typed to one shared type; a side that needs no
+    change comes back as the same object. Schemaless reference
+    semantics: one property key holds any SIValue type
+    (graph_entity.h:48-58). In order:
+
+    - a null side takes the other side's type (``SET p = NULL`` keeps
+      the column type);
+    - numerics widen (`_widen_numeric`);
+    - temporal structs and native DATE/TIMESTAMP columns all lift to
+      the canonical temporal struct (a string demotion would store the
+      struct's rendering and later temporal ops would error);
+    - a variant side, or two scalar / scalar-array types, become the
+      per-value variant encoding (variants pass through);
+    - anything else demotes both sides to string."""
+    import pyspark.sql.types as T
+    from .temporal_cols import TEMPORAL_TYPE, from_native, is_temporal_type
+    from .variant import is_variant_type, to_variant, variantable
+    numeric = (T.LongType, T.IntegerType, T.ShortType, T.ByteType,
+               T.DoubleType, T.FloatType, T.DecimalType)
+    native = (T.DateType, T.TimestampType, T.TimestampNTZType)
+    if cur_t == new_t:
+        return cur, new
+    if isinstance(new_t, T.NullType):
+        return cur, new.cast(cur_t)
+    if isinstance(cur_t, T.NullType):
+        return cur.cast(new_t), new
+    if isinstance(cur_t, numeric) and isinstance(new_t, numeric):
+        wide = _widen_numeric(cur_t, new_t)
+        return (cur if cur_t.simpleString() == wide else cur.cast(wide),
+                new.cast(wide))
+    if all(is_temporal_type(t) or isinstance(t, native)
+           for t in (cur_t, new_t)):
+        def lift(c, t):
+            return c.cast(TEMPORAL_TYPE) if is_temporal_type(t) \
+                else from_native(c, t)
+        return lift(cur, cur_t), lift(new, new_t)
+    if is_variant_type(cur_t) or is_variant_type(new_t) or \
+            (variantable(cur_t) and variantable(new_t)):
+        return to_variant(cur, cur_t), to_variant(new, new_t)
+    return cur.cast("string"), new.cast("string")
+
+
 def _union_into(tbl: DataFrame | None, rows: DataFrame) -> DataFrame:
-    """Append new rows to a table, reconciling per-column type
-    conflicts: plain columns conform to the table's variant unions, and
-    a plain-vs-plain conflict (CREATE (:L {p: 1}) after (:L {p: 'x'}))
-    widens mixed numerics or converts BOTH sides to the per-value
-    variant encoding (schemaless reference semantics — one property key
-    holds any SIValue type, graph_entity.h:48-58)."""
+    """Append created rows to a node or edge table — the one way new
+    rows reach a table. A column both sides carry with different types
+    is re-typed on both sides by `_conform` (CREATE (:L {p: 1}) after
+    (:L {p: 'x'}) builds a variant column; a date() into a native DATE
+    column lifts the column to the temporal struct); a column only one
+    side carries null-fills."""
     if tbl is None:
         return rows
-    import pyspark.sql.types as T
-    from .variant import is_variant_type, to_variant, variantable
-    numeric = (T.LongType, T.IntegerType, T.ShortType, T.DoubleType,
-               T.FloatType, T.DecimalType)
     tt = {f.name: f.dataType for f in tbl.schema.fields}
-    row_cols, tbl_cols = [], []
-    row_changed = tbl_changed = False
+    tbl_cols = {name: F.col(name) for name in tt}
+    row_cols = []
+    conflict = tbl_changed = False
     for f in rows.schema.fields:
         t, rc = tt.get(f.name), F.col(f.name)
-        if t is None or t == f.dataType:
-            row_cols.append(rc)
-            continue
-        if isinstance(f.dataType, T.NullType):
-            row_cols.append(rc.cast(t).alias(f.name))
-        elif is_variant_type(t) and not is_variant_type(f.dataType):
-            row_cols.append(to_variant(rc, f.dataType).alias(f.name))
-        elif is_variant_type(f.dataType) and not is_variant_type(t):
-            tt[f.name] = ("to_variant", t)
-            row_cols.append(rc)
-            tbl_changed = True
-            continue
-        elif isinstance(t, numeric) and isinstance(f.dataType, numeric):
-            if isinstance(t, (T.DoubleType, T.FloatType)):
-                # table already wide — conform the rows only
-                row_cols.append(rc.cast(t).alias(f.name))
-            else:
-                wide = _widen_numeric(t, f.dataType)
-                tt[f.name] = ("cast", wide)
-                row_cols.append(rc.cast(wide).alias(f.name))
+        if t is not None and t != f.dataType:
+            cur, rc = _conform(tbl_cols[f.name], t, rc, f.dataType)
+            if cur is not tbl_cols[f.name]:
+                tbl_cols[f.name] = cur.alias(f.name)
                 tbl_changed = True
-                continue
-        elif variantable(t) and variantable(f.dataType):
-            tt[f.name] = ("to_variant", t)
-            row_cols.append(to_variant(rc, f.dataType).alias(f.name))
-            tbl_changed = True
-            continue
-        else:
-            tt[f.name] = ("cast_str", t)
-            row_cols.append(rc.cast("string").alias(f.name))
-            tbl_changed = True
-            continue
-        row_changed = True
+            rc = rc.alias(f.name)
+            conflict = True
+        row_cols.append(rc)
     if tbl_changed:
-        for f in tbl.schema.fields:
-            action = tt.get(f.name)
-            if isinstance(action, tuple):
-                if action[0] == "to_variant":
-                    tbl_cols.append(
-                        to_variant(F.col(f.name), action[1]).alias(f.name))
-                elif action[0] == "cast":
-                    tbl_cols.append(
-                        F.col(f.name).cast(action[1]).alias(f.name))
-                else:
-                    tbl_cols.append(
-                        F.col(f.name).cast("string").alias(f.name))
-            else:
-                tbl_cols.append(F.col(f.name))
-        tbl = tbl.select(tbl_cols)
-        row_changed = True
-    if row_changed:
+        tbl = tbl.select(list(tbl_cols.values()))
+    if conflict:
         rows = rows.select(row_cols)
     return tbl.unionByName(rows, allowMissingColumns=True)
 
@@ -312,7 +314,9 @@ def _create(planner, ctx, clause: A.CreateClause) -> DataFrame | None:
                          for i in range(1, len(els), 2)})
     spark = g.spark
     if ctx.df is not None and not _driver_creatable(planner, ctx, clause):
-        return _create_bound(planner, ctx, clause)
+        for path in clause.paths:
+            _create_path_rows(planner, ctx, path, per_row=True)
+        return None
     nodes_created = 0
     edges_created = 0
     from redisgraph_spark.session import inline_rows_df
@@ -418,122 +422,6 @@ def _driver_creatable(planner, ctx, clause: A.CreateClause) -> bool:
         return len(ctx.df.take(2)) == 1
     except Exception:
         return False
-
-
-def _create_bound(planner, ctx, clause: A.CreateClause) -> DataFrame | None:
-    """CREATE after MATCH: new edges between matched nodes, or new nodes
-    per input row."""
-    g = planner.graph
-    _invalidate_rels(g, {(els[i].types[0] if els[i].types else "RELATED")
-                         for path in clause.paths
-                         for els in [path.elements]
-                         for i in range(1, len(els), 2)})
-    comp = planner.compiler(ctx)
-    edges_created = 0
-    for path in clause.paths:
-        els = path.elements
-        if len(els) == 1:
-            np = els[0]
-            label = np.labels[0] if np.labels else ""
-            comp = planner.compiler(ctx)
-            prop_cols = [comp.compile(v).alias(k) for k, v in np.props]
-            bind = np.var and np.var not in ctx.vars \
-                and not planner._unreferenced(np.var)
-            if bind:
-                # bind the created node per row so later clauses in
-                # this query (CREATE edges, SET, RETURN) can reference
-                # it — the checkpoint pins the mono ids shared by the
-                # table row and the binding
-                rk = planner.sym("cbrow")
-                base = ctx.df.withColumn(
-                    rk,
-                    F.monotonically_increasing_id() + F.lit(_alloc_block())
-                ).localCheckpoint(eager=True)
-                rows = base.select(F.col(rk).alias("_id"), *prop_cols) \
-                    .localCheckpoint(eager=True)
-                struct = F.struct(
-                    F.col(rk).alias("_id"),
-                    F.lit(label).alias("_label"),
-                    *prop_cols).alias(np.var)
-                ctx.df = base.select("*", struct).drop(rk)
-                ctx.vars[np.var] = VarInfo(
-                    "node", tuple(k for k, _ in np.props))
-            else:
-                rows = ctx.df.select(
-                    (F.monotonically_increasing_id()
-                     + F.lit(_alloc_block())).alias("_id"), *prop_cols) \
-                    .localCheckpoint(eager=True)
-            for lbl in (np.labels if len(np.labels or []) > 1
-                        else [label]):
-                g.node_tables[lbl] = _union_into(
-                    g.node_tables.get(lbl), rows)
-            if np.labels and len(np.labels) > 1:
-                g._multilabel = True
-            planner.stats["nodes_created"] = \
-                planner.stats.get("nodes_created", 0) + rows.count()
-            continue
-        unbound = any(
-            isinstance(el, A.NodePattern)
-            and (el.var is None or el.var not in ctx.vars)
-            for el in els)
-        if unbound:
-            # mixed bound/new path: per-row whole-pattern creation (no
-            # dedup — CREATE makes one instance per input row)
-            _create_path_rows(planner, ctx, path, per_row=True)
-            continue
-        i = 1
-        while i < len(els):
-            rel: A.RelPattern = els[i]
-            src_np, dst_np = els[i - 1], els[i + 1]
-            if src_np.var is None or src_np.var not in ctx.vars or \
-                    dst_np.var is None or dst_np.var not in ctx.vars:
-                raise ValueError(
-                    "CREATE edges require both endpoints bound by MATCH")
-            rtype = rel.types[0] if rel.types else "RELATED"
-            src_c = F.col(f"{src_np.var}._id")
-            dst_c = F.col(f"{dst_np.var}._id")
-            if rel.direction == "in":
-                src_c, dst_c = dst_c, src_c
-            comp = planner.compiler(ctx)
-            prop_cols = [comp.compile(v).alias(k) for k, v in rel.props]
-            bind = rel.var and rel.var not in ctx.vars \
-                and not planner._unreferenced(rel.var)
-            if bind:
-                # bind the created edge per row (CREATE ()-[r:T]->()
-                # ... RETURN r / SET r.p) — checkpoint pins the shared
-                # mono ids
-                rk = planner.sym("cberow")
-                base = ctx.df.withColumn(
-                    rk,
-                    F.monotonically_increasing_id() + F.lit(_alloc_block())
-                ).localCheckpoint(eager=True)
-                rows = base.select(
-                    F.col(rk).alias("_id"), src_c.alias("_src"),
-                    dst_c.alias("_dst"), *prop_cols) \
-                    .localCheckpoint(eager=True)
-                struct = F.struct(
-                    F.col(rk).alias("_id"), src_c.alias("_src"),
-                    dst_c.alias("_dst"), F.lit(rtype).alias("_rel"),
-                    *prop_cols).alias(rel.var)
-                ctx.df = base.select("*", struct).drop(rk)
-                ctx.vars[rel.var] = VarInfo(
-                    "edge", tuple(k for k, _ in rel.props))
-            else:
-                rows = ctx.df.select(
-                    (F.monotonically_increasing_id()
-                     + F.lit(_alloc_block())).alias("_id"),
-                    src_c.alias("_src"), dst_c.alias("_dst"),
-                    *prop_cols).localCheckpoint(eager=True)
-            cnt = rows.count()
-            g.edge_tables[rtype] = _union_into(
-                g.edge_tables.get(rtype), rows)
-            edges_created += cnt
-            i += 2
-    if edges_created:
-        planner.stats["relationships_created"] = \
-            planner.stats.get("relationships_created", 0) + edges_created
-    planner.graph._scan_cache.clear()
-    return None
 
 
 def _lit_col(v):
@@ -692,67 +580,15 @@ def _set(planner, ctx, clause: A.SetClause) -> DataFrame | None:
         # every candidate-table rewrite join then reuse it instead of
         # re-running the whole match pipeline per consumer
         upd, upd_cnt = _materialize_small(g.spark, upd)
-        from pyspark.sql import types as T
         val_t = upd.schema["__uval"].dataType
-        numeric = (T.LongType, T.IntegerType, T.ShortType, T.DoubleType,
-                   T.FloatType, T.DecimalType)
         for name, tbl in (_candidate_tables(g, info, tables)
                           if upd_cnt else []):
             joined = tbl.join(
                 F.broadcast(upd), tbl["_id"] == upd["__uid"], "left")
             if key in tbl.columns:
-                # heterogeneous-type SET: widen numerics, else demote the
-                # column to string (schemaless reference semantics,
-                # SURVEY §7.3)
-                col_t = tbl.schema[key].dataType
-                uval = F.col("__uval")
-                cur = F.col(key)
-                from .temporal_cols import (TEMPORAL_TYPE, from_native,
-                                            is_temporal_type)
-                native_temporal = (T.DateType, T.TimestampType,
-                                   T.TimestampNTZType)
-                if col_t != val_t:
-                    if isinstance(val_t, T.NullType):
-                        # SET p = NULL deletes the property
-                        # (docs/cypher_support.md:66-68) — keep column type
-                        uval = uval.cast(col_t)
-                    elif isinstance(col_t, numeric) and \
-                            isinstance(val_t, numeric):
-                        wide = _widen_numeric(col_t, val_t)
-                        uval = uval.cast(wide)
-                        cur = cur.cast(wide)
-                    elif is_temporal_type(col_t) and is_temporal_type(val_t):
-                        # same logical temporal type, differing only in
-                        # nested nullability — align both to the
-                        # canonical struct instead of demoting to string
-                        uval = uval.cast(TEMPORAL_TYPE)
-                        cur = cur.cast(TEMPORAL_TYPE)
-                    elif is_temporal_type(val_t) and \
-                            isinstance(col_t, native_temporal):
-                        # storing a temporal value into a native
-                        # date/timestamp column: lift the column to the
-                        # packed temporal struct (r10 latent bug — the
-                        # string demotion below stored the struct's
-                        # rendering and later temporal ops errored)
-                        cur = from_native(cur, col_t)
-                        uval = uval.cast(TEMPORAL_TYPE)
-                    elif is_temporal_type(col_t) and \
-                            isinstance(val_t, native_temporal):
-                        uval = from_native(uval, val_t)
-                        cur = cur.cast(TEMPORAL_TYPE)
-                    else:
-                        # heterogeneous scalar / array-of-scalar types →
-                        # per-value variant encoding (schemaless
-                        # reference semantics, SURVEY §7.3); passes
-                        # existing variants through; non-variantable
-                        # (nested/complex) conflicts demote to string
-                        from .variant import to_variant, variantable
-                        if variantable(col_t) and variantable(val_t):
-                            uval = to_variant(uval, val_t)
-                            cur = to_variant(cur, col_t)
-                        else:
-                            uval = uval.cast("string")
-                            cur = cur.cast("string")
+                # heterogeneous-type SET: the append rule (SURVEY §7.3)
+                cur, uval = _conform(F.col(key), tbl.schema[key].dataType,
+                                     F.col("__uval"), val_t)
                 newcol = F.when(F.col("__uid").isNotNull(), uval) \
                     .otherwise(cur)
             else:
@@ -1210,9 +1046,11 @@ def _merge(planner, ctx, clause: A.MergeClause) -> DataFrame | None:
 
     - standalone (no input rows): match the WHOLE pattern; if absent,
       create every element (standard Cypher whole-pattern semantics);
-    - after MATCH/WITH (per-row): single-node merge keyed on the
-      pattern's property expressions, with MergeCreate-style dedup of
-      identical pending creations (``ops/op_merge_create.c``).
+    - after MATCH/WITH/UNWIND (per-row), whatever the pattern's shape:
+      `_merge_path_per_row` matches the whole pattern per row and hands
+      the unmatched rows to the one per-row creator,
+      `_create_path_rows`, which dedups identical pending creations
+      like MergeCreate (``ops/op_merge_create.c``).
     """
     from redisgraph_spark.planner.planner import Ctx, PlanError
 
@@ -1273,25 +1111,16 @@ def _merge(planner, ctx, clause: A.MergeClause) -> DataFrame | None:
                 raise PlanError(f"Variable `{el.var}` already bound")
         elif el.var and el.var in ctx.vars:
             raise PlanError(f"Variable `{el.var}` already bound")
-    np = els[0]
-    if len(els) == 1 and np.labels and np.props and \
-            not (np.var and np.var in ctx.vars):
-        # keyed single-node fast path (the entity-resolution shape)
-        return _merge_per_row(planner, ctx, clause)
     return _merge_path_per_row(planner, ctx, clause)
 
 
 def _merge_path_per_row(planner, ctx, clause: A.MergeClause) -> None:
-    """Per-input-row MERGE of a multi-element pattern: match the WHOLE
-    pattern per row; rows without a match create every unbound element
-    (bound variables are reused, standard openCypher whole-pattern
-    semantics; identical pending creations dedup per
-    ``ops/op_merge_create.c``)."""
+    """Per-input-row MERGE of any pattern, one node or a path: match the
+    WHOLE pattern per row; rows without a match create every unbound
+    element through `_create_path_rows` (bound variables are reused,
+    standard openCypher whole-pattern semantics; identical pending
+    creations dedup per ``ops/op_merge_create.c``)."""
     from redisgraph_spark.planner.planner import Ctx
-
-    for el in clause.path.elements:
-        if isinstance(el, A.RelPattern) and el.min_hops is not None:
-            raise ValueError("MERGE cannot contain variable-length patterns")
 
     row = planner.sym("mrow")
     base = ctx.df.withColumn(row, F.monotonically_increasing_id()) \
@@ -1334,92 +1163,105 @@ def _merge_path_per_row(planner, ctx, clause: A.MergeClause) -> None:
 
 def _create_path_rows(planner, ctx, path: A.PatternPath,
                       per_row: bool = False) -> None:
-    """Create whole-pattern instances from ``ctx.df`` rows. With
-    ``per_row=False`` (MERGE semantics) one instance per DISTINCT
+    """Create whole-pattern instances from ``ctx.df`` rows — the one
+    per-row creator behind CREATE and MERGE (the reference's Create and
+    MergeCreate ops, ``op_create.c``, ``op_merge_create.c``). Bound
+    nodes are reused; every other node and edge of the pattern is
+    created, a node in each of its labels, and appended through
+    `_union_into`.
+
+    With ``per_row=False`` (MERGE semantics) one instance per DISTINCT
     creation content (bound endpoint ids + unbound property values);
-    with ``per_row=True`` (CREATE semantics) one instance per input row.
+    MERGE then binds the result by matching again. With
+    ``per_row=True`` (CREATE semantics) one instance per input row, and
+    each named new node and edge is bound in ``ctx`` per row so later
+    clauses (RETURN, SET, a later path of the same CREATE) can use it.
     Fresh ids are a driver-reserved block plus the pinned row index,
-    so separate batches never collide."""
+    which the table rows and the bound structs share; separate batches
+    never collide."""
     g = planner.graph
     _invalidate_rels(g, {(el.types[0] if el.types else "RELATED")
                          for el in path.elements
                          if isinstance(el, A.RelPattern)})
     els = path.elements
     comp = planner.compiler(ctx)
-
-    ded: list = []            # dedup-key columns (aliased)
-    node_ref: dict[int, str | None] = {}   # el idx -> bound alias | None
-    new_nodes: list[tuple[int, str, list]] = []  # (idx, label, [(k, alias)])
-    rels: list[tuple[int, A.RelPattern, list]] = []
+    row = planner.sym("crow")
+    ded: list = []                  # creation-content columns (aliased)
+    bound: dict[int, str] = {}      # el idx -> alias of a bound node's id
+    first: dict[str, int] = {}      # new node var -> idx declaring it
+    new: list[tuple[int, object, list]] = []   # (idx, el, [(key, alias)])
     for idx, el in enumerate(els):
-        if isinstance(el, A.NodePattern):
-            if el.var and el.var in ctx.vars:
-                a = f"__mb{idx}"
-                ded.append(F.col(f"{el.var}._id").alias(a))
-                node_ref[idx] = a
-            else:
-                props = []
-                for k, v in el.props:
-                    a = f"__mp{idx}_{k}"
-                    ded.append(comp.compile(v).alias(a))
-                    props.append((k, a))
-                node_ref[idx] = None
-                new_nodes.append((idx, el.labels[0] if el.labels else "",
-                                  props))
-        else:
-            props = []
-            for k, v in el.props:
-                a = f"__mp{idx}_{k}"
-                ded.append(comp.compile(v).alias(a))
-                props.append((k, a))
-            rels.append((idx, el, props))
-    if not ded:
-        ded = [F.lit(1).alias("__m_one")]
+        if isinstance(el, A.NodePattern) and el.var:
+            if el.var in ctx.vars:
+                if el.labels or el.props:
+                    from redisgraph_spark.planner.planner import PlanError
+                    raise PlanError(f"Variable `{el.var}` already bound")
+                bound[idx] = f"__mb{idx}"
+                ded.append(F.col(f"{el.var}._id").alias(bound[idx]))
+                continue
+            if el.var in first:
+                continue            # a later bare reference in the path
+            first[el.var] = idx
+        props = []
+        for k, v in el.props:
+            a = f"__mp{idx}_{k}"
+            ded.append(comp.compile(v).alias(a))
+            props.append((k, a))
+        new.append((idx, el, props))
+    mono = F.monotonically_increasing_id().alias(row)
     if per_row:
-        ded.append(F.monotonically_increasing_id().alias("__m_row"))
-        dd = ctx.df.select(ded).localCheckpoint(eager=True)
+        dd = ctx.df.select("*", *ded, mono)
     else:
-        dd = ctx.df.select(ded).dropDuplicates() \
-            .withColumn("__m_row", F.monotonically_increasing_id()) \
-            .localCheckpoint(eager=True)
+        dd = ctx.df.select(ded or [F.lit(1).alias("__m_one")]) \
+            .dropDuplicates().select("*", mono)
+    dd = dd.localCheckpoint(eager=True)
+    n_rows = dd.count()
+    ids = {idx: F.col(row) + F.lit(_alloc_block()) for idx, _, _ in new}
 
-    # block + pinned row index: collision-free ids per created element
-    # (content hashes repeat for identical rows; abs(hash)+offset
-    # overflows under ANSI)
-    _blocks: dict[int, int] = {}
+    def node_id(i: int):
+        if i in bound:
+            return F.col(bound[i])
+        return ids[first.get(els[i].var, i)]
 
-    def fresh(idx: int, ns: int):
-        if idx not in _blocks:
-            _blocks[idx] = _alloc_block()
-        return F.col("__m_row") + F.lit(_blocks[idx])
-
-    node_id_expr: dict[int, object] = {}
-    n_created = 0
-    for idx, label, props in new_nodes:
-        node_id_expr[idx] = fresh(idx, 23_000_000_000_000_000)
-        rows = dd.select(node_id_expr[idx].alias("_id"),
-                         *[F.col(a).alias(k) for k, a in props])
-        n_created += rows.count()
-        g.node_tables[label] = (
-            g.node_tables[label].unionByName(rows, allowMissingColumns=True)
-            if label in g.node_tables else rows).localCheckpoint(eager=True)
-    e_created = 0
-    for idx, rel, props in rels:
-        s_i, d_i = idx - 1, idx + 1
-        if rel.direction == "in":
-            s_i, d_i = d_i, s_i
-        def end(i):
-            a = node_ref.get(i)
-            return F.col(a) if a is not None else \
-                node_id_expr[i].cast("long")
-        rtype = rel.types[0] if rel.types else "RELATED"
-        rows = dd.select(fresh(idx, 24_000_000_000_000_000).alias("_id"),
-                         end(s_i).alias("_src"), end(d_i).alias("_dst"),
-                         *[F.col(a).alias(k) for k, a in props])
-        e_created += rows.count()
-        g.edge_tables[rtype] = (
-            g.edge_tables[rtype].unionByName(rows, allowMissingColumns=True)
-            if rtype in g.edge_tables else rows).localCheckpoint(eager=True)
+    structs = []
+    n_created = e_created = 0
+    for idx, el, props in new:
+        cols = [F.col(a).alias(k) for k, a in props]
+        if isinstance(el, A.NodePattern):
+            labels = el.labels or [""]
+            head = [ids[idx].alias("_id")]
+            rows = dd.select(*head, *cols)
+            for label in labels:
+                g.node_tables[label] = _union_into(
+                    g.node_tables.get(label), rows)
+            meta = [F.lit(labels[0]).alias("_label")]
+            if len(labels) > 1:
+                # one node, a row in every label table (Graph._multilabel)
+                g._multilabel = True
+                meta.append(F.array(*map(F.lit, labels)).alias("_labels"))
+            info = VarInfo("node", tuple(k for k, _ in props))
+            info.labels = tuple(el.labels) or None
+            n_created += n_rows
+        else:
+            s_i, d_i = idx - 1, idx + 1
+            if el.direction == "in":
+                s_i, d_i = d_i, s_i
+            rtype = el.types[0] if el.types else "RELATED"
+            head = [ids[idx].alias("_id"), node_id(s_i).alias("_src"),
+                    node_id(d_i).alias("_dst")]
+            rows = dd.select(*head, *cols)
+            g.edge_tables[rtype] = _union_into(
+                g.edge_tables.get(rtype), rows)
+            meta = [F.lit(rtype).alias("_rel")]
+            info = VarInfo("edge", tuple(k for k, _ in props))
+            info.labels = (rtype,)
+            e_created += n_rows
+        if per_row and el.var and not planner._unreferenced(el.var):
+            structs.append(F.struct(*head, *meta, *cols).alias(el.var))
+            ctx.vars[el.var] = info
+    if structs:
+        ctx.df = dd.select("*", *structs).drop(
+            row, *bound.values(), *(a for _, _, ps in new for _, a in ps))
     if n_created:
         planner.stats["nodes_created"] = \
             planner.stats.get("nodes_created", 0) + n_created
@@ -1427,74 +1269,3 @@ def _create_path_rows(planner, ctx, path: A.PatternPath,
         planner.stats["relationships_created"] = \
             planner.stats.get("relationships_created", 0) + e_created
     g._scan_cache.clear()
-
-
-def _merge_per_row(planner, ctx, clause: A.MergeClause) -> None:
-    """Per-input-row single-node MERGE (the entity-resolution shape:
-    ``MATCH ... MERGE (n:L {key: row.val})``)."""
-    g = planner.graph
-    np: A.NodePattern = clause.path.elements[0]
-    if not np.labels:
-        raise ValueError("per-row MERGE requires a label")
-    label = np.labels[0]
-    var = np.var or planner.sym("mg")
-    comp = planner.compiler(ctx)
-    keys = [(k, comp.compile(v)) for k, v in np.props]
-    if not keys:
-        raise ValueError("per-row MERGE requires key properties")
-
-    key_cols = [c.alias(f"__mk_{k}") for k, c in keys]
-    want = ctx.df.select(key_cols).dropDuplicates()
-
-    tbl = g.node_tables.get(label)
-    if tbl is None:
-        tbl = g.spark.createDataFrame(
-            [], "_id long, " + ", ".join(f"{k} string" for k, _ in keys))
-        g.node_tables[label] = tbl
-    cond = None
-    for k, _ in keys:
-        c = tbl[k] == F.col(f"__mk_{k}") if k in tbl.columns else F.lit(False)
-        cond = c if cond is None else (cond & c)
-    missing = want.join(tbl, cond, "left_anti")
-    # MergeCreate dedup (keys are distinct here) + block-unique ids
-    created = missing.select(
-        (F.monotonically_increasing_id()
-         + F.lit(_alloc_block())).alias("_id"),
-        *[F.col(f"__mk_{k}").alias(k) for k, _ in keys]
-    ).localCheckpoint(eager=True)
-    n_created = created.count()
-    if n_created:
-        g.node_tables[label] = tbl.unionByName(
-            created, allowMissingColumns=True).localCheckpoint(eager=True)
-        g._scan_cache.clear()
-        planner.stats["nodes_created"] = \
-            planner.stats.get("nodes_created", 0) + n_created
-    # bind: join the (now complete) table back per row
-    tbl2 = g.node_tables[label]
-    flat = tbl2.select(
-        F.struct(*[F.col(c) for c in tbl2.columns]).alias(var))
-    jcond = None
-    for k, c in keys:
-        cc = F.col(var).getField(k) == c
-        jcond = cc if jcond is None else (jcond & cc)
-    ctx.df = ctx.df.join(flat, jcond, "inner")
-    from redisgraph_spark.planner.expressions import VarInfo
-    ctx.vars[var] = VarInfo(
-        "node", tuple(c for c in tbl2.columns if c != "_id"))
-    created_ids = created.select(F.col("_id").alias("__cid"))
-    if clause.on_create and n_created:
-        sub = Ctx_like(ctx, ctx.df.join(
-            F.broadcast(created_ids),
-            F.col(var).getField("_id") == F.col("__cid"), "left_semi"))
-        _set(planner, sub, A.SetClause(clause.on_create))
-    if clause.on_match:
-        sub = Ctx_like(ctx, ctx.df.join(
-            F.broadcast(created_ids),
-            F.col(var).getField("_id") == F.col("__cid"), "left_anti"))
-        _set(planner, sub, A.SetClause(clause.on_match))
-
-
-def Ctx_like(ctx, df):
-    from redisgraph_spark.planner.planner import Ctx
-    out = Ctx(df=df, vars=dict(ctx.vars))
-    return out

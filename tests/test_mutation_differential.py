@@ -76,3 +76,41 @@ def test_mutation_scripts_match_duckdb(spark, seed):
             "SELECT k, v, s FROM items").fetchall()))
         assert got == want, f"seed {seed} diverged at step {step}"
     assert next_k[0] > 0 and len(_state_graph(g)) >= 0
+
+
+def _apply_batch(rng: random.Random, g, con, next_k: list[int]) -> None:
+    """One per-row batch: UNWIND ... CREATE of fresh keys, or UNWIND ...
+    MERGE of keys drawn from existing, new and repeated ones."""
+    if rng.random() < 0.5:
+        batch = [{"k": next_k[0] + i, "v": rng.randrange(100)}
+                 for i in range(rng.randint(1, 4))]
+        next_k[0] += len(batch)
+        g.query("UNWIND $rows AS r CREATE (:Item {k: r.k, v: r.v})",
+                {"rows": batch})
+        con.executemany("INSERT INTO items VALUES (?, ?)",
+                        [(r["k"], r["v"]) for r in batch])
+    else:
+        ks = [rng.randrange(next_k[0] + 3) for _ in range(rng.randint(1, 4))]
+        next_k[0] = max(next_k[0], max(ks) + 1)
+        g.query("UNWIND $ks AS k MERGE (i:Item {k: k}) ON CREATE SET i.v = 1",
+                {"ks": ks})
+        con.execute("INSERT INTO items SELECT k, 1 FROM "
+                    "(SELECT DISTINCT unnest(?::BIGINT[]) AS k) "
+                    "WHERE k NOT IN (SELECT k FROM items)", [ks])
+
+
+@pytest.mark.parametrize("seed", [5, 17])
+def test_per_row_batches_match_duckdb(spark, seed):
+    from redisgraph_spark import Graph
+    rng = random.Random(seed)
+    g = Graph(spark, {}, {})
+    con = duckdb.connect()
+    con.execute("CREATE TABLE items (k BIGINT, v BIGINT)")
+    next_k = [0]
+    for step in range(10):
+        _apply_batch(rng, g, con, next_k)
+        got = sorted(tuple(r) for r in g.query(
+            "MATCH (i:Item) RETURN i.k AS k, i.v AS v").collect())
+        want = sorted(map(tuple, con.execute(
+            "SELECT k, v FROM items").fetchall()))
+        assert got == want, f"seed {seed} diverged at step {step}"

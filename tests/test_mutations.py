@@ -35,6 +35,18 @@ def test_create_edge_between_matched(g):
     assert ("a", "b") in got and ("b", "a") in got
 
 
+def test_create_edge_between_matched_returns_edge(g):
+    # both endpoints bound by one connected MATCH: the comma form above
+    # plans a CartesianProduct that is too slow for the default run
+    got = rows(g.query(
+        "MATCH (a:L {name: 'a'})-[:R]->(b:L {name: 'b'}) "
+        "CREATE (b)-[r:R {w: 5}]->(a) RETURN r.w AS w"))
+    assert got == [(5,)]
+    got = rows(g.query(
+        "MATCH (x)-[r:R]->(y) RETURN x.name AS x, y.name AS y, r.w AS w"))
+    assert got == [("a", "b", None), ("b", "a", 5)]
+
+
 def test_set_property(g):
     g.query("MATCH (n:L {name: 'a'}) SET n.v = 99")
     got = dict(rows(g.query("MATCH (n:L) RETURN n.name AS n, n.v AS v")))
@@ -100,7 +112,7 @@ def test_merge_path_standalone(g):
         .collect()[0]["c"] == 1
 
 
-def test_merge_per_row(g, spark):
+def test_merge_keyed_rows(g, spark):
     # rows drive per-row merge; duplicate keys dedup (MergeCreate)
     g.query("UNWIND ['a', 'new1', 'new1', 'new2'] AS nm "
             "MERGE (n:L {name: nm})")
@@ -109,7 +121,7 @@ def test_merge_per_row(g, spark):
     assert names == ["a", "b", "new1", "new2"]
 
 
-def test_merge_per_row_on_create_match(g):
+def test_merge_keyed_rows_on_create_match(g):
     g.query("UNWIND ['a', 'fresh'] AS nm MERGE (n:L {name: nm}) "
             "ON CREATE SET n.src = 'created' ON MATCH SET n.src = 'matched'")
     got = dict(rows(g.query("MATCH (n:L) RETURN n.name AS n, n.src AS s")))
@@ -584,3 +596,77 @@ def test_roundtrip_result_unchanged(spark):
     out = g.query("MATCH (r:Region) RETURN count(*) AS n, "
                   "max(r.r_regionkey) AS mk").collect()
     assert (out[0]["n"], out[0]["mk"]) == (6, 991)
+
+
+# ------------------------------------------ one per-row creator for all
+@pytest.mark.parametrize("q, n", [
+    ("MATCH (c:L {name: 'a'}) CREATE (c)-[:R]->(x:A:B {k: 1})", 1),
+    ("UNWIND [1, 2] AS i MERGE (x:A:B {k: i})", 2),
+    ("MATCH (c:L {name: 'a'}) MERGE (c)-[:R]->(x:A:B {k: 7})", 1),
+    ("UNWIND [1, 2] AS i CREATE (x:A:B {k: i})", 2),
+], ids=["create-path", "merge-keyed", "merge-path", "create-node"])
+def test_per_row_multilabel_node_in_every_label(g, q, n):
+    g.query(q)
+    for label in ("A", "B"):
+        assert g.query(f"MATCH (x:{label}) RETURN count(*) AS c") \
+            .collect()[0]["c"] == n, label
+    got = rows(g.query("MATCH (x:A:B) RETURN labels(x) AS ls"))
+    assert got == [(["A", "B"],)] * n
+
+
+def test_create_path_binds_new_node(g):
+    got = rows(g.query(
+        "MATCH (c:L {name: 'a'}) CREATE (c)-[:R]->(x:A {k: 1}) "
+        "RETURN x.k AS k, labels(x) AS ls"))
+    assert got == [(1, ["A"])]
+
+
+def test_create_later_path_reuses_new_node(g):
+    # x is created once, by the first path; the second path reuses it
+    g.query("MATCH (c:L {name: 'a'}) "
+            "CREATE (c)-[:R2]->(x:A {k: 1}), (x)-[:R3]->(c)")
+    assert g.query("MATCH (x:A) RETURN count(*) AS c") \
+        .collect()[0]["c"] == 1
+    got = rows(g.query(
+        "MATCH (c:L)-[:R2]->(x:A)-[:R3]->(d:L) "
+        "RETURN c.name AS c, x.k AS k, d.name AS d"))
+    assert got == [("a", 1, "a")]
+    with pytest.raises(Exception, match="already bound"):
+        g.query("MATCH (c:L {name: 'a'}) "
+                "CREATE (c)-[:R2]->(y:A {k: 2}), (y:A)-[:R3]->(c)")
+
+
+@pytest.mark.parametrize("q", [
+    "UNWIND [1, 2] AS i MERGE (w:W {k: i})",
+    "UNWIND [1, 2] AS i MERGE (w:W {k: i})-[:R]->(:V)",
+], ids=["keyed", "path"])
+def test_per_row_merge_onto_string_key_column(spark, q):
+    # int keys merged onto a string-typed key column build the variant
+    # column, as UNWIND ... CREATE of the same rows does
+    from redisgraph_spark import Graph
+    g = Graph(spark, {}, {})
+    g.query("CREATE (:W {k: 'a'})")
+    g.query(q)
+    assert g.query("MATCH (w:W {k: 1}) RETURN count(*) AS c") \
+        .collect()[0]["c"] == 1
+    assert g.query("MATCH (w:W) RETURN count(*) AS c") \
+        .collect()[0]["c"] == 3
+
+
+@pytest.mark.parametrize("q", [
+    "CREATE (:Order {o_orderkey: -1, o_orderdate: date('1990-01-02')})",
+    "UNWIND [1] AS i "
+    "CREATE (:Order {o_orderkey: -i, o_orderdate: date('1990-01-02')})",
+], ids=["standalone", "per-row"])
+def test_create_date_into_native_date_column(spark, q):
+    # the native DATE column lifts to the temporal struct, as SET does
+    from redisgraph_spark import Graph
+    g = Graph.from_tpch(spark, SF_DIR)
+    n = g.node_tables["Order"].filter("o_orderdate < '1994-01-01'").count()
+    g.query(q)
+    assert g.query(
+        "MATCH (o:Order) WHERE o.o_orderdate < date('1994-01-01') "
+        "RETURN count(*) AS c").collect()[0]["c"] == n + 1
+    got = rows(g.query("MATCH (o:Order {o_orderkey: -1}) "
+                       "RETURN o.o_orderdate.year AS y"))
+    assert got == [(1990,)]
