@@ -1231,13 +1231,6 @@ def _offset_str(offset: int) -> str:
 
 # ------------------------------------------------------------- arithmetic
 
-def _resolve_zoned(days: int, nanos: int, zone: str | None,
-                   offset: int) -> KDateTime:
-    if zone is not None:
-        offset = zone_offset_for_local(zone, days, nanos)
-    return KDateTime(days, nanos, offset, zone)
-
-
 def add_duration(v, dur: KDuration, sign: int = 1):
     """temporal + duration (sign=-1 for subtraction).  Calendar part
     (months, days) applies to the LOCAL date; the nanos part is

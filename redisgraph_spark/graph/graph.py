@@ -987,26 +987,6 @@ class Graph:
         walk(plan, 0)
         return out
 
-    # ---------------------------------------------------------------- mutate
-    def with_nodes(self, label: str, df: DataFrame) -> "Graph":
-        """Return a new Graph with ``df`` appended to ``label``'s table."""
-        tables = dict(self.node_tables)
-        if label in tables:
-            tables[label] = tables[label].unionByName(
-                df, allowMissingColumns=True)
-        else:
-            tables[label] = df
-        return Graph(self.spark, tables, self.edge_tables, self.name)
-
-    def with_edges(self, rel: str, df: DataFrame) -> "Graph":
-        tables = dict(self.edge_tables)
-        if rel in tables:
-            tables[rel] = tables[rel].unionByName(
-                df, allowMissingColumns=True)
-        else:
-            tables[rel] = df
-        return Graph(self.spark, self.node_tables, tables, self.name)
-
     # ------------------------------------------------------ custom procs
     def register_procedure(self, name: str,
                            args: list[tuple[str, str]],

@@ -1631,7 +1631,10 @@ class ExprCompiler:
 
     @classmethod
     def _array_eq2(cls, l: Column, r: Column, elem_eq) -> Column:
-        """Ternary list equality with a custom element comparator."""
+        """Ternary list equality with a custom element comparator:
+        length mismatch or a definite element mismatch → false;
+        otherwise any null pair → null; else true (openCypher list
+        equality; reference SIArray compare)."""
         pair = F.zip_with(l, r, elem_eq)
         any_false = F.exists(pair, lambda b: ~F.coalesce(b, F.lit(True)))
         any_null = F.exists(pair, lambda b: b.isNull())
@@ -1660,21 +1663,6 @@ class ExprCompiler:
                   F.signum(F.size(l) - F.size(r)).cast("int")) \
             .when(first["eq"].isNull() | first["lt"].isNull(), nulli) \
             .when(first["lt"], F.lit(-1)).otherwise(F.lit(1))
-
-    @staticmethod
-    def _array_eq(l: Column, r: Column) -> Column:
-        """Ternary list equality: length mismatch or a definite element
-        mismatch → false; otherwise any null pair → null; else true
-        (openCypher list equality; reference SIArray compare)."""
-        pair = F.zip_with(l, r, lambda x, y: x == y)
-        any_false = F.exists(pair, lambda b: ~F.coalesce(b, F.lit(True)))
-        any_null = F.exists(pair, lambda b: b.isNull())
-        nullb = F.lit(None).cast("boolean")
-        return F.when(l.isNull() | r.isNull(), nullb) \
-                .when(F.size(l) != F.size(r), F.lit(False)) \
-                .when(any_false, F.lit(False)) \
-                .when(any_null, nullb) \
-                .otherwise(F.lit(True))
 
     def _lit_list_eq(self, la: A.ListLiteral, ra: A.ListLiteral) -> Column:
         """Structural equality of two list literals — item-by-item Kleene
@@ -1810,7 +1798,7 @@ class ExprCompiler:
             try:
                 eq = self._array_eq_typed(left, right, ldt, rdt)
             except Exception:
-                eq = self._array_eq(left, right)
+                eq = self._array_eq2(left, right, lambda x, y: x == y)
             return eq if op == "=" else \
                 F.when(eq.isNull(), nullb).otherwise(~eq)
         if lc == "array" and rc == "array" and op in ("<", "<=",

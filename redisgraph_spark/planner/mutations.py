@@ -500,14 +500,23 @@ def _set(planner, ctx, clause: A.SetClause) -> DataFrame | None:
     """SET n.prop = expr — rewrite the affected label tables: matched rows
     get the new value, others keep theirs (reference buffers then commits
     all-at-once: ``ops/op_update.c:66-100``). ``SET p = NULL`` removes the
-    property (``docs/cypher_support.md:66-68``)."""
+    property (``docs/cypher_support.md:66-68``).
+
+    Map and entity items expand to one ``n.key = value`` item per key.
+    Every item is validated before the first write; SET-label items
+    apply first. Each run of consecutive items on one variable
+    (``SET n += {…}``, ``SET n.a = …, n.b = …``) pins ONE update set,
+    one value column per key, and rewrites each candidate table once;
+    runs apply in clause order, so a later item wins on the same entity
+    and key. Every value is evaluated against the pre-update record."""
     g = planner.graph
     comp = planner.compiler(ctx)
     props_set = 0
+    labels = []
     expanded = []
     for item in clause.items:
         if isinstance(item, A.LabelItem):
-            _add_labels(planner, ctx, item)
+            labels.append(item)
             continue
         if isinstance(item.target, A.Variable) and \
                 isinstance(item.value, A.MapLiteral):
@@ -548,13 +557,11 @@ def _set(planner, ctx, clause: A.SetClause) -> DataFrame | None:
                     A.Property(A.Variable(src), k), "="))
         else:
             expanded.append(item)
-    pending_refresh: list[tuple[str, str, object]] = []
     for item in expanded:
         if not isinstance(item.target, A.Property) or \
                 not isinstance(item.target.subject, A.Variable):
             raise ValueError("SET supports n.prop = expr and n += {map}")
         var = item.target.subject.name
-        key = item.target.key
         if var not in ctx.vars:
             raise ValueError(f"'{var}' not defined")
         if isinstance(item.value, A.ListLiteral) and any(
@@ -564,68 +571,73 @@ def _set(planner, ctx, clause: A.SetClause) -> DataFrame | None:
             raise ValueError(
                 "Cannot set a list containing maps as a property "
                 "(InvalidPropertyType)")
-        info = ctx.vars[var]
-        pending_refresh.append((var, key, comp.compile(item.value)))
-        # updates keyed by entity id
-        upd_plan = ctx.df.select(
+    for item in labels:
+        _add_labels(planner, ctx, item)
+    refresh: dict[str, dict[str, object]] = {}   # var -> key -> value
+    for var, run in itertools.groupby(
+            expanded, key=lambda it: it.target.subject.name):
+        run = list(run)
+        vals = {it.target.key: comp.compile(it.value) for it in run}
+        refresh.setdefault(var, {}).update(vals)
+        ucols = {key: f"__u{i}" for i, key in enumerate(vals)}
+        # the update set keyed by entity id, pinned once: every
+        # candidate-table rewrite then joins it instead of re-running
+        # the whole match pipeline per consumer
+        upd, upd_cnt = _materialize_small(g.spark, ctx.df.select(
             F.col(f"{var}._id").alias("__uid"),
-            comp.compile(item.value).alias("__uval")) \
+            *[vals[key].alias(c) for key, c in ucols.items()])
             .filter(F.col("__uid").isNotNull())
-        if info.kind == "node":
-            tables = g.node_tables
-        else:
-            tables = g.edge_tables
-        upd = upd_plan.dropDuplicates(["__uid"])
-        # materialize the (small) update set once: the count below and
-        # every candidate-table rewrite join then reuse it instead of
-        # re-running the whole match pipeline per consumer
-        upd, upd_cnt = _materialize_small(g.spark, upd)
-        val_t = upd.schema["__uval"].dataType
+            .dropDuplicates(["__uid"]))
+        info = ctx.vars[var]
+        kind = "node" if info.kind == "node" else "edge"
+        tables = g.node_tables if kind == "node" else g.edge_tables
+        hit = F.col("__uid").isNotNull()
         for name, tbl in (_candidate_tables(g, info, tables)
                           if upd_cnt else []):
-            joined = tbl.join(
-                F.broadcast(upd), tbl["_id"] == upd["__uid"], "left")
-            if key in tbl.columns:
-                # heterogeneous-type SET: the append rule (SURVEY §7.3)
-                cur, uval = _conform(F.col(key), tbl.schema[key].dataType,
-                                     F.col("__uval"), val_t)
-                newcol = F.when(F.col("__uid").isNotNull(), uval) \
-                    .otherwise(cur)
-            else:
-                newcol = F.when(F.col("__uid").isNotNull(), F.col("__uval"))
-            out = joined.withColumn(key, newcol).drop("__uid", "__uval")
+            cols = {}
+            for key, c in ucols.items():
+                uval = F.col(c)
+                if key in tbl.columns:
+                    # heterogeneous-type SET: the append rule (SURVEY §7.3)
+                    cur, uval = _conform(F.col(key), tbl.schema[key].dataType,
+                                         uval, upd.schema[c].dataType)
+                    cols[key] = F.when(hit, uval).otherwise(cur)
+                else:
+                    cols[key] = F.when(hit, uval)
+            out = tbl.join(F.broadcast(upd), tbl["_id"] == upd["__uid"],
+                           "left").withColumns(cols) \
+                .drop("__uid", *ucols.values())
             # deterministic rewrite: swap in the lazy plan; _defer_pin
             # bounds lineage depth (VERDICT r6 #3 — a 5-query mutation
             # script schedules ~half the jobs this way)
-            kind = "node" if tables is g.node_tables else "edge"
             tables[name] = _defer_pin(g, kind, name, out)
-        props_set += upd_cnt
+        props_set += upd_cnt * len(run)
     # read-your-writes: later clauses (RETURN a.age after SET) must see
     # the update — rebuild the bound struct columns in the pipeline
     # (the reference streams records through Update with the entity
-    # already modified, op_update.c:66-100). Value expressions were
-    # compiled against the PRE-update record, matching the reference's
-    # buffer-then-commit evaluation order.
+    # already modified, op_update.c:66-100). One projection rebuilds
+    # every variable, so each value still reads the PRE-update record,
+    # matching the reference's buffer-then-commit evaluation order.
     tail = getattr(planner, "_tail_refs", None)
-    for var, key, val in pending_refresh:
+    structs = {}
+    for var, vals in refresh.items():
         if tail is not None and var not in tail:
             # nothing after this clause reads the variable — the
             # struct rebuild would be dead plan weight
             continue
-        dt = ctx.df.schema[var].dataType
-        names = [f.name for f in dt.fields]
-        cols = [(val if fn == key else F.col(var).getField(fn)).alias(fn)
+        names = [f.name for f in ctx.df.schema[var].dataType.fields]
+        cols = [vals.get(fn, F.col(var).getField(fn)).alias(fn)
                 for fn in names]
-        if key not in names:
-            cols.append(val.alias(key))
+        cols += [v.alias(k) for k, v in vals.items() if k not in names]
         # a null entity (failed OPTIONAL MATCH) is not updated — SET on
         # null is a no-op and the variable stays null
-        ctx.df = ctx.df.withColumn(
-            var, F.when(F.col(f"{var}._id").isNotNull(),
-                        F.struct(*cols)).otherwise(F.lit(None)))
+        structs[var] = F.when(F.col(f"{var}._id").isNotNull(),
+                              F.struct(*cols)).otherwise(F.lit(None))
         info = ctx.vars[var]
-        if key not in info.fields:
-            info.fields = tuple(list(info.fields) + [key])
+        info.fields = info.fields + tuple(k for k in vals
+                                          if k not in info.fields)
+    if structs:
+        ctx.df = ctx.df.withColumns(structs)
     planner.stats["properties_set"] = \
         planner.stats.get("properties_set", 0) + props_set
     planner.graph._scan_cache.clear()
@@ -737,10 +749,8 @@ def _remove_labels(planner, ctx, item: A.LabelItem) -> None:
         F.broadcast(still.dropDuplicates()), "_id", "left_anti")
     n_orph = orphans.count()
     if n_orph:
-        base = g.node_tables.get("")
-        g.node_tables[""] = (
-            base.unionByName(orphans, allowMissingColumns=True)
-            if base is not None else orphans).localCheckpoint(eager=True)
+        g.node_tables[""] = _union_into(
+            g.node_tables.get(""), orphans).localCheckpoint(eager=True)
     if removed:
         planner.stats["labels_removed"] = \
             planner.stats.get("labels_removed", 0) + removed
@@ -832,208 +842,182 @@ def _elem_kind(ctx, e) -> str | None:
     return None
 
 
-def _delete(planner, ctx, clause: A.DeleteClause) -> DataFrame | None:
-    """DETACH DELETE semantics: node deletion cascades to incident edges
-    (reference ``ops/op_delete.c``, ``Graph_BulkDelete``
-    ``src/graph/graph.h:172-181``) — expressed as anti-joins; deletion
-    preserves the rel-endpoint hint invariants (monotone removal)."""
-    g = planner.graph
-    nodes_deleted = 0
-    edges_deleted = 0
-    for e in clause.exprs:
-        if not isinstance(e, A.Variable):
-            # DELETE list[0] / map.nodes / nested extractions
-            # (openCypher Delete5): any expression evaluating to an
-            # entity works — bind it as a hidden column and classify
-            # the entity kind from its struct shape
-            from pyspark.sql import types as T
-            comp = planner.compiler(ctx)
-            col = comp.compile(e)
-            try:
-                dt = comp.dtype(col)
-            except Exception:
-                dt = None
-            if isinstance(dt, T.NullType):
-                continue                 # DELETE null is a no-op
-            if not isinstance(dt, T.StructType):
-                raise ValueError(
-                    "DELETE expects a node, relationship or path")
-            proved = _delete_kind(ctx, e)
-            if proved == "other":
-                # provably not an entity (a map literal carrying an
-                # _id key must not delete rows — round-7 advice)
-                raise ValueError(
-                    "DELETE expects a node, relationship or path")
-            if proved is not None:
-                kind = proved
-            else:
-                names = set(dt.fieldNames())
-                if {"nodes", "edges"} <= names:
-                    kind = "path"
-                elif "_src" in names:
-                    kind = "edge"
-                elif "_id" in names:
-                    kind = "node"
-                else:
-                    raise ValueError(
-                        "DELETE expects a node, relationship or path")
-            hidden = planner.sym("del")
-            ctx.df = ctx.df.withColumn(hidden, col)
-            ctx.vars[hidden] = VarInfo(kind)
-            e = A.Variable(hidden)
-        var = e.name
-        if var not in ctx.vars:
-            raise ValueError(f"'{var}' not defined")
-        info = ctx.vars[var]
-        if info.kind == "path":
-            # deleting a path deletes its relationships and nodes
-            # (cascade included); a null path contributes nothing
-            eids = ctx.df.select(
-                F.explode(F.col(f"{var}.edges")).alias("__e")) \
-                .select(F.col("__e._id").alias("__did")).dropDuplicates()
-            eids, n = _materialize_small(g.spark, eids)
-            if n:
-                for name, tbl in list(g.edge_tables.items()):
-                    # deterministic anti-join rewrite: lazy swap-in
-                    g.edge_tables[name] = _defer_pin(
-                        g, "edge", name, tbl.join(
-                            F.broadcast(eids),
-                            tbl["_id"] == eids["__did"], "left_anti"))
-                edges_deleted += n
-            nids = ctx.df.select(
-                F.explode(F.col(f"{var}.nodes")).alias("__n")) \
-                .select(F.col("__n._id").alias("__did")).dropDuplicates()
-            nids, n = _materialize_small(g.spark, nids)
-            if n:
-                for name, tbl in list(g.node_tables.items()):
-                    g.node_tables[name] = _defer_pin(
-                        g, "node", name, tbl.join(
-                            F.broadcast(nids),
-                            tbl["_id"] == nids["__did"], "left_anti"))
-                for name, tbl in list(g.edge_tables.items()):
-                    doomed = tbl.join(
-                        F.broadcast(nids),
-                        (tbl["_src"] == nids["__did"])
-                        | (tbl["_dst"] == nids["__did"]),
-                        "left_semi").count()
-                    if not doomed:
-                        continue
-                    kept = tbl.join(
-                        F.broadcast(nids),
-                        tbl["_src"] == nids["__did"], "left_anti")
-                    kept = kept.join(
-                        F.broadcast(nids),
-                        kept["_dst"] == nids["__did"], "left_anti")
-                    g.edge_tables[name] = _defer_pin(g, "edge", name,
-                                                     kept)
-                    edges_deleted += doomed
-                nodes_deleted += n
-            continue
-        if info.kind == "scalar":
-            comp = planner.compiler(ctx)
-            try:
-                from pyspark.sql import types as T
-                if isinstance(comp.dtype(F.col(var)), T.NullType):
-                    continue      # DELETE null is a no-op
-            except Exception:
-                pass
-            raise ValueError("DELETE expects a node, relationship or path")
-        ids_plan = ctx.df.select(
-            F.col(f"{var}._id").alias("__did")).dropDuplicates()
-        if info.kind == "edge":
-            ids, idc = _materialize_small(g.spark, ids_plan)
-            for name, tbl in list(g.edge_tables.items()):
-                # deterministic anti-join rewrites: lazy swap-in fuses
-                # the materialization into the next action that reads
-                # the table (the cascade probe or the script's next
-                # query) instead of scheduling a job per table
-                g.edge_tables[name] = _defer_pin(
-                    g, "edge", name, tbl.join(
-                        F.broadcast(ids), tbl["_id"] == ids["__did"],
-                        "left_anti"))
-            edges_deleted += idc
+def _delete_target(planner, ctx, e) -> tuple[str, str] | None:
+    """Type one DELETE target: ``(column, kind)`` with kind ``'node'``,
+    ``'edge'`` or ``'path'`` and the column bound in ``ctx.df``, or None
+    when the target is null (DELETE null is a no-op). Any expression
+    that evaluates to an entity works (DELETE list[0] / map.nodes /
+    nested extractions, openCypher Delete5): it is bound as a hidden
+    column, typed by `_delete_kind` or, when provenance is unknown, by
+    its struct shape."""
+    from pyspark.sql import types as T
+    bad = "DELETE expects a node, relationship or path"
+    if isinstance(e, A.Variable):
+        info = ctx.vars.get(e.name)
+        if info is None:
+            raise ValueError(f"'{e.name}' not defined")
+        if info.kind != "scalar":
+            return e.name, info.kind if info.kind in ("edge", "path") \
+                else "node"
+        try:
+            if isinstance(planner.compiler(ctx).dtype(F.col(e.name)),
+                          T.NullType):
+                return None
+        except Exception:
+            pass
+        raise ValueError(bad)
+    comp = planner.compiler(ctx)
+    col = comp.compile(e)
+    try:
+        dt = comp.dtype(col)
+    except Exception:
+        dt = None
+    if isinstance(dt, T.NullType):
+        return None
+    if not isinstance(dt, T.StructType):
+        raise ValueError(bad)
+    kind = _delete_kind(ctx, e)
+    if kind == "other":
+        # provably not an entity (a map literal carrying an _id key
+        # must not delete rows — round-7 advice)
+        raise ValueError(bad)
+    if kind is None:
+        names = set(dt.fieldNames())
+        if {"nodes", "edges"} <= names:
+            kind = "path"
+        elif "_src" in names:
+            kind = "edge"
+        elif "_id" in names:
+            kind = "node"
         else:
-            # cascade candidates: rel-endpoint hints prove most
-            # relations can't touch a label-bound variable at all
-            cand_labels = set(getattr(info, "labels", None) or ())
-            hints = g.rel_endpoints
-            cands = []
-            for name, tbl in list(g.edge_tables.items()):
-                if cand_labels and hints and not g._multilabel:
-                    h = hints.get(name)
-                    if h is not None and not ((h[0] | h[1]) & cand_labels):
-                        continue
-                cands.append((name, tbl))
-            # ONE job returns both the matched ids (capped) and every
-            # candidate table's incident-edge count: the id rows carry
-            # __t NULL, each probe count carries its table name. The
-            # probe branches recompute the match subtree inside the
-            # job (bounded by len(cands), usually 0-1 — a constant
-            # factor on data the probe join must scan anyway), which
-            # replaces the collect-then-probe TWO-job sequence.
-            ids = idc = None
-            from pyspark.sql import types as T
-            if cands and isinstance(ids_plan.schema["__did"].dataType,
-                                    (T.LongType, T.IntegerType)):
-                cap = 1024
-                parts = [ids_plan.limit(cap + 1).select(
-                    F.lit(None).cast("string").alias("__t"),
-                    F.col("__did").cast("long").alias("__v"))]
-                for name, tbl in cands:
-                    parts.append(
-                        tbl.join(ids_plan,
-                                 (tbl["_src"] == ids_plan["__did"])
-                                 | (tbl["_dst"] == ids_plan["__did"]),
-                                 "left_semi")
-                        .agg(F.count(F.lit(1)).alias("__v"))
-                        .select(F.lit(name).alias("__t"), F.col("__v")))
-                fused = parts[0]
-                for pdf in parts[1:]:
-                    fused = fused.unionByName(pdf)
-                rows = fused.collect()
-                id_vals = [r["__v"] for r in rows if r["__t"] is None]
-                doomed_by = {r["__t"]: r["__v"] for r in rows
-                             if r["__t"] is not None}
-                if len(id_vals) <= cap:
-                    from redisgraph_spark.session import inline_df
-                    ids = inline_df(g.spark, [(v,) for v in id_vals],
-                                    [("__did", "bigint")])
-                    idc = len(id_vals)
-            else:
-                doomed_by = None
-            if ids is None:
-                # non-integral ids or cap overflow: pin the id set the
-                # scale-safe way (the exact probe counts, if computed,
-                # are still valid)
-                ids, idc = _materialize_small(g.spark, ids_plan)
-                if doomed_by is None:
-                    doomed_by = {}
-                    for name, tbl in cands:
-                        doomed_by[name] = tbl.join(
-                            F.broadcast(ids),
-                            (tbl["_src"] == ids["__did"])
-                            | (tbl["_dst"] == ids["__did"]),
-                            "left_semi").count()
-            for name, tbl in _candidate_tables(g, info, g.node_tables):
-                g.node_tables[name] = _defer_pin(
-                    g, "node", name, tbl.join(
-                        F.broadcast(ids), tbl["_id"] == ids["__did"],
-                        "left_anti"))
-            for name, tbl in cands:
-                doomed = doomed_by.get(name, 0)
-                if not doomed:
-                    continue
-                kept = tbl.join(F.broadcast(ids),
-                                tbl["_src"] == ids["__did"], "left_anti")
-                kept = kept.join(F.broadcast(ids),
-                                 kept["_dst"] == ids["__did"], "left_anti")
-                edges_deleted += doomed
-                g.edge_tables[name] = _defer_pin(g, "edge", name, kept)
-            nodes_deleted += idc
+            raise ValueError(bad)
+    hidden = planner.sym("del")
+    ctx.df = ctx.df.withColumn(hidden, col)
+    ctx.vars[hidden] = VarInfo(kind)
+    return hidden, kind
+
+
+def _delete(planner, ctx, clause: A.DeleteClause) -> DataFrame | None:
+    """DETACH DELETE semantics: every target of the clause is deleted at
+    once, like the reference's one ``Graph_BulkDelete`` of all the
+    entities a clause names (``ops/op_delete.c``,
+    ``src/graph/graph.h:172-181``). Each target reduces to node ids and
+    edge ids (a path gives both); each set is deduped across targets
+    and pinned once, a deleted node cascades to its incident edges, and
+    each affected table is rewritten once by anti-joins. Deletion
+    preserves the rel-endpoint hint invariants (monotone removal)."""
+    from functools import reduce
+    from pyspark.sql import types as T
+    g = planner.graph
+    nodes, edges = [], []           # (id plan, VarInfo) per target
+    for e in clause.exprs:
+        bound = _delete_target(planner, ctx, e)
+        if bound is None:
+            continue
+        var, kind = bound
+        info = ctx.vars[var]
+        if kind == "path":
+            for field, out in (("nodes", nodes), ("edges", edges)):
+                out.append((ctx.df.select(F.explode(
+                    F.col(f"{var}.{field}._id")).alias("__did")), info))
+        else:
+            (nodes if kind == "node" else edges).append(
+                (ctx.df.select(F.col(f"{var}._id").alias("__did")), info))
+
+    def id_set(parts):
+        if not parts:
+            return None
+        return reduce(DataFrame.union, [p for p, _ in parts]) \
+            .filter(F.col("__did").isNotNull()).dropDuplicates()
+
+    nid_plan, eid_plan = id_set(nodes), id_set(edges)
+    # cascade candidates: rel-endpoint hints prove most relations can't
+    # touch a label-bound node at all
+    hints = None if g._multilabel else g.rel_endpoints
+
+    def may_touch(name, info):
+        labels = set(getattr(info, "labels", None) or ())
+        h = hints.get(name) if hints and labels else None
+        return h is None or bool((h[0] | h[1]) & labels)
+
+    cascade = {name: tbl for name, tbl in g.edge_tables.items()
+               if any(may_touch(name, info) for _, info in nodes)}
+
+    def incident(tbl, nids, eids):
+        """Edges of ``tbl`` touching a deleted node and not already
+        deleted by id."""
+        hit = tbl.join(nids, (tbl["_src"] == nids["__did"])
+                       | (tbl["_dst"] == nids["__did"]), "left_semi")
+        if eids is None:
+            return hit
+        return hit.join(eids, hit["_id"] == eids["__did"], "left_anti")
+
+    # ONE job returns both id sets (capped, when integral) and every
+    # cascade candidate's incident-edge count: each row carries its
+    # kind (node id, edge id or count) and, for a count, its table. The
+    # count branches recompute the match subtree inside the job
+    # (bounded by len(cascade), usually 0-1 — a constant factor on data
+    # the probe join must scan anyway), which replaces a
+    # collect-then-probe sequence of jobs.
+    plans = {k: p for k, p in (("n", nid_plan), ("e", eid_plan))
+             if p is not None}
+    integral = all(isinstance(p.schema["__did"].dataType,
+                              (T.LongType, T.IntegerType))
+                   for p in plans.values())
+    cap = 1024
+    parts = [p.limit(cap + 1).select(
+        F.lit(k).alias("__k"), F.lit(None).cast("string").alias("__t"),
+        F.col("__did").cast("long").alias("__v"))
+        for k, p in plans.items() if integral]
+    parts += [incident(tbl, nid_plan, eid_plan)
+              .agg(F.count(F.lit(1)).alias("__v"))
+              .select(F.lit("c").alias("__k"), F.lit(name).alias("__t"),
+                      F.col("__v"))
+              for name, tbl in cascade.items()]
+    rows = reduce(DataFrame.unionByName, parts).collect() if parts else []
+    doomed_by = {r["__t"]: r["__v"] for r in rows if r["__k"] == "c"}
+    from redisgraph_spark.session import inline_df
+    pinned, counts = {}, {"n": 0, "e": 0}
+    for k, p in plans.items():
+        vals = [r["__v"] for r in rows if r["__k"] == k]
+        if integral and len(vals) <= cap:
+            pinned[k] = inline_df(g.spark, [(v,) for v in vals],
+                                  [("__did", "bigint")])
+            counts[k] = len(vals)
+        else:
+            # non-integral ids or cap overflow: pin the id set the
+            # scale-safe way
+            pinned[k], counts[k] = _materialize_small(g.spark, p)
+    nids, eids = pinned.get("n"), pinned.get("e")
+    if counts["n"]:
+        node_tabs = dict(t for _, info in nodes
+                         for t in _candidate_tables(g, info, g.node_tables))
+        for name, tbl in node_tabs.items():
+            g.node_tables[name] = _defer_pin(
+                g, "node", name, tbl.join(
+                    F.broadcast(nids), tbl["_id"] == nids["__did"],
+                    "left_anti"))
+    edge_tabs = dict(t for _, info in edges
+                     for t in _candidate_tables(g, info, g.edge_tables)) \
+        if counts["e"] else {}
+    for name, tbl in list(g.edge_tables.items()):
+        kept = tbl
+        if name in edge_tabs:
+            kept = kept.join(F.broadcast(eids),
+                             kept["_id"] == eids["__did"], "left_anti")
+        if doomed_by.get(name):
+            for end in ("_src", "_dst"):
+                kept = kept.join(F.broadcast(nids),
+                                 kept[end] == nids["__did"], "left_anti")
+        if kept is not tbl:
+            # deterministic anti-join rewrite: the lazy swap-in fuses it
+            # into the next action that reads the table
+            g.edge_tables[name] = _defer_pin(g, "edge", name, kept)
     planner.stats["nodes_deleted"] = \
-        planner.stats.get("nodes_deleted", 0) + nodes_deleted
+        planner.stats.get("nodes_deleted", 0) + counts["n"]
     planner.stats["relationships_deleted"] = \
-        planner.stats.get("relationships_deleted", 0) + edges_deleted
+        planner.stats.get("relationships_deleted", 0) + counts["e"] \
+        + sum(doomed_by.values())
     planner.graph._scan_cache.clear()
     return None
 

@@ -616,12 +616,6 @@ class CypherPlanner:
         from redisgraph_spark.session import inline_df
         return inline_df(g.spark, [(cnt,)], [(alias, "long")])
 
-    def _stats_df(self) -> DataFrame:
-        from redisgraph_spark.session import inline_df
-        items = list(self.stats.items()) or [("noop", 0)]
-        return inline_df(self.graph.spark, items,
-                         [("stat", "string"), ("value", "long")])
-
     # ----------------------------------------------------------------- MATCH
     def _check_pattern_kinds(self, ctx: Ctx,
                              paths: list[A.PatternPath],

@@ -521,3 +521,34 @@ def test_inline_df_escaped_string_literals_conf(spark):
     finally:
         spark.conf.set("spark.sql.parser.escapedStringLiterals", old)
         spark._rg_escaped_literals = None
+
+
+@pytest.fixture(scope="module")
+def p3(spark):
+    from redisgraph_spark import Graph
+    return Graph(spark, {"P": spark.createDataFrame(
+        [(1, "a", 3, "2020-01-02"), (2, "b", None, "2021-02-03"),
+         (3, "c", 7, "2022-03-04")],
+        "_id long, name string, v long, ds string")}, {})
+
+
+@pytest.mark.parametrize("q, want", [
+    ("MATCH (n) WHERE n:P RETURN n.name AS n, 1 AS x",
+     [("a", 1), ("b", 1), ("c", 1)]),
+    ("MATCH (n:P) WHERE exists(n.v) RETURN n.name AS n, 1 AS x",
+     [("a", 1), ("c", 1)]),
+    ("MATCH (n:P) RETURN n.name AS n, properties(n).v AS x",
+     [("a", 3), ("b", None), ("c", 7)]),
+    ("MATCH (n:P) RETURN n.name AS n, [n.v, 1] < [4, 0] AS x",
+     [("a", True), ("b", None), ("c", False)]),
+    ("MATCH (n:P) RETURN n.name AS n, date(n.ds).month AS x",
+     [("a", 1), ("b", 2), ("c", 3)]),
+    ("MATCH (n:P) RETURN n.name AS n, timestamp() > 0 AS x",
+     [("a", True), ("b", True), ("c", True)]),
+], ids=["label-predicate", "exists", "properties", "list-order",
+        "date-of-string", "timestamp"])
+def test_expression_features(p3, q, want):
+    # label predicates, exists(), properties(), list ordering, date()
+    # parsing a string property and timestamp(): reached otherwise only
+    # by the openCypher TCK corpus
+    assert rows(p3.query(q)) == want

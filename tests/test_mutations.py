@@ -2,6 +2,8 @@
 (reference buffered-commit discipline, ops/op_create.c, op_update.c,
 op_delete.c, op_merge.c)."""
 
+import itertools
+
 import pytest
 
 from tests.conftest import SF_DIR, rows
@@ -670,3 +672,108 @@ def test_create_date_into_native_date_column(spark, q):
     got = rows(g.query("MATCH (o:Order {o_orderkey: -1}) "
                        "RETURN o.o_orderdate.year AS y"))
     assert got == [(1990,)]
+
+
+# ------------------------------ one key set per DELETE and per SET run
+def _six_nodes(spark):
+    """Six P nodes p1..p6 (v = 10 * i) and seven R edges."""
+    from redisgraph_spark import Graph
+    nodes = {"P": spark.createDataFrame(
+        [(i, f"p{i}", i * 10) for i in range(1, 7)], ["_id", "name", "v"])}
+    edges = {"R": spark.createDataFrame(
+        [(100, 1, 2), (101, 2, 3), (102, 3, 4), (103, 4, 5), (104, 5, 6),
+         (105, 1, 3), (106, 6, 1)], ["_id", "_src", "_dst"])}
+    return Graph(spark, nodes, edges)
+
+
+@pytest.fixture()
+def gp(spark):
+    return _six_nodes(spark)
+
+
+def _left(g):
+    return (g.query("MATCH (n) RETURN count(*) AS c").collect()[0]["c"],
+            g.query("MATCH ()-[r]->() RETURN count(*) AS c")
+            .collect()[0]["c"])
+
+
+@pytest.mark.parametrize("q, deleted, left", [
+    ("MATCH (a:P {name: 'p2'}) DETACH DELETE a, a", (1, 2), (5, 5)),
+    ("MATCH p = (a:P {name: 'p2'})-[:R]->(b:P) DETACH DELETE p, a",
+     (2, 4), (4, 3)),
+    ("OPTIONAL MATCH (a:Missing) DETACH DELETE a", (0, 0), (6, 7)),
+], ids=["same-node-twice", "path-and-its-node", "optional-null"])
+def test_delete_stats_count_each_entity_once(gp, q, deleted, left):
+    gp.query(q)
+    st = gp.last_stats
+    assert (st.get("nodes_deleted", 0),
+            st.get("relationships_deleted", 0)) == deleted
+    assert _left(gp) == left
+
+
+@pytest.mark.parametrize("first, second", [
+    ("'s'", "1"), ("'s'", "date('2020-01-01')"), ("1.5", "1"),
+], ids=["string-int", "string-date", "float-int"])
+def test_remove_last_label_conforms_orphan_column(spark, first, second):
+    # the orphaned node joins the unlabeled table through the one
+    # column-type rule: it reads as if both nodes were created there
+    from redisgraph_spark import Graph
+    g, want = Graph(spark, {}, {}), Graph(spark, {}, {})
+    g.query(f"CREATE ({{k: {first}}})")
+    g.query(f"CREATE (:A {{k: {second}}})")
+    g.query("MATCH (n:A) REMOVE n:A")
+    want.query(f"CREATE ({{k: {first}}})")
+    want.query(f"CREATE ({{k: {second}}})")
+    q = "MATCH (n) RETURN n.k AS k"
+    got = rows(g.query(q))
+    assert len(got) == 2 and got == rows(want.query(q))
+
+
+@pytest.mark.parametrize("q, returned, stored", [
+    ("MATCH (a:P {name: 'p1'})-[:R]->(b:P {name: 'p2'}) "
+     "SET a.v = b.v, b.v = a.v RETURN a.v AS x, b.v AS y",
+     (20, 10), [("p1", 20, None), ("p2", 10, None)]),
+    ("MATCH (a:P {name: 'p1'}) SET a.v = a.v + 1, a.w = a.v "
+     "RETURN a.v AS x, a.w AS y",
+     (11, 10), [("p1", 11, 10), ("p2", 20, None)]),
+], ids=["swap", "same-variable"])
+def test_set_values_read_pre_update_record(gp, q, returned, stored):
+    # every SET value reads the record as it was before the clause, in
+    # the returned row as in the stored table
+    assert rows(gp.query(q)) == [returned]
+    assert rows(gp.query("MATCH (n:P) WHERE n.name IN ['p1', 'p2'] "
+                         "RETURN n.name AS n, n.v AS v, n.w AS w")) == stored
+
+
+_TAGS = itertools.count()
+
+
+def _jobs(spark, g, q):
+    """Spark jobs one query runs, found by a job tag after the listener
+    bus drains (the way plan templates prove a plan ran no job)."""
+    sc = spark.sparkContext
+    tag = f"rg-test-jobs-{next(_TAGS)}"
+    sc.addJobTag(tag)
+    try:
+        g.query(q)
+    finally:
+        sc.removeJobTag(tag)
+    ctx = sc._jsc.sc()
+    ctx.listenerBus().waitUntilEmpty(30_000)
+    return len(ctx.statusTracker().getJobIdsForTag(tag))
+
+
+def test_one_pin_per_set_run_and_per_delete_clause(spark):
+    def fresh():
+        g = _six_nodes(spark)
+        g.query("MATCH (n) RETURN count(*) AS c").collect()
+        return g
+
+    one = "MATCH (n:P {name: 'p2'}) SET n.v = 1"
+    five = "MATCH (n:P {name: 'p2'}) SET n += {v: 1, a: 2, b: 3, c: 4, d: 5}"
+    assert _jobs(spark, fresh(), five) == _jobs(spark, fresh(), one)
+    match = "MATCH (a:P {name: 'p2'}), (b:P {name: 'p5'}) DETACH DELETE "
+    g = fresh()
+    assert _jobs(spark, g, match + "a, b") == \
+        _jobs(spark, fresh(), match + "a")
+    assert g.last_stats["nodes_deleted"] == 2
