@@ -58,15 +58,29 @@ class PlanCache(OrderedDict):
     DataFrame) and, beside it, the plan templates (graph/templates.py):
     (text, parameter shape, version, epoch) → PlanTemplate, or None for
     a shape that plans per request. Each is bounded by PLAN_CACHE_SIZE
-    on its own, so a template's rebinds never evict it."""
+    on its own, so a template's rebinds never evict it. ``held`` maps
+    each promoted template to the bytes of the broadcasts it holds,
+    least recently run first."""
 
     def __init__(self) -> None:
         super().__init__()
         self.templates: OrderedDict = OrderedDict()
+        self.held: OrderedDict = OrderedDict()
+        self.mu = threading.Lock()      # guards ``held``
+
+    def trim(self, size: int) -> None:
+        """Evict least recently used entries down to ``size`` in each
+        LRU; an evicted template lets go of its held broadcasts."""
+        while len(self) > size:
+            self.popitem(last=False)
+        while len(self.templates) > size:
+            _, old = self.templates.popitem(last=False)
+            if old is not None:
+                old.demote(self)
 
     def clear(self) -> None:
         super().clear()
-        self.templates.clear()
+        self.trim(0)
 
 
 class _RWLock:
@@ -282,7 +296,7 @@ class Graph:
         # _Graph_AcquireWriteLock around mutations, src/graph/graph.h:
         # 85-101): writes plan+commit exclusively, reads run
         # concurrently; the snapshot/restore undo window in
-        # _plan_with_timeout is therefore single-writer-atomic
+        # _with_timeout is therefore single-writer-atomic
         self._rw = _RWLock()
         self._cache_mu = threading.Lock()   # LRU bookkeeping only
         self._scan_cache: dict[tuple, DataFrame] = {}
@@ -628,16 +642,27 @@ class Graph:
         planned once per (query, parameter shape) into a plan template
         whose literals each request rebinds (graph/templates.py); a
         read whose plan depends on a parameter's value plans per
-        request. Any mutation bumps ``_version`` and invalidates both.
+        request. From a template's second rebind on, the request runs
+        the template's executed plan with its own literals: the
+        broadcasts that do not depend on a parameter are built once,
+        and the ones that do run here, inside ``query`` and under
+        TIMEOUT. The DataFrame returned then scans that run's RDD; it
+        composes like any other, and ``explain``/``profile`` show the
+        real plan. Any mutation bumps ``_version`` and invalidates both.
         """
         return self._query(cypher, params)[0]
 
-    def _query(self, cypher: str, params: Mapping[str, object] | None
-               ) -> tuple[DataFrame, str]:
+    def _query(self, cypher: str, params: Mapping[str, object] | None,
+               physical: bool = True) -> tuple[DataFrame, str]:
         """``query`` plus what the plan cache did: ``"hit"`` (the
         exact-value cache), ``"rebind"`` (a plan template) or
-        ``"plan"`` (the planner ran, maybe to build a template)."""
+        ``"plan"`` (the planner ran, maybe to build a template).
+        ``physical=False`` keeps the real plan in the DataFrame, for
+        ``explain`` and ``profile``: a rebind then binds the analyzed
+        plan, and the exact-value cache, which may hold a run of a
+        promoted template, is left alone."""
         import time as _time
+        from redisgraph_spark.graph.templates import param_shape
         from redisgraph_spark.planner.planner import CypherPlanner
         from redisgraph_spark.cypher.parser import parse
 
@@ -646,7 +671,8 @@ class Graph:
         params = {**inline, **(params or {})}
         key = (cypher, repr(sorted(params.items())),
                self._version, self._epoch)
-        cached = self._plan_cache.get(key)
+        exact = physical or param_shape(params) is None
+        cached = self._plan_cache.get(key) if exact else None
         if cached is not None:
             with self._cache_mu:
                 if key in self._plan_cache:
@@ -663,12 +689,16 @@ class Graph:
         # abort), so the whole plan runs under the write lock; reads
         # plan concurrently under the shared lock
         lock = self._rw.write() if is_write else self._rw.read()
+        run = None
         with lock:
             template, built = (None, False) if is_write else \
                 self._template(ast, cypher, params)
             if template is not None:
-                df, stats = template.bind(self.spark, params), \
-                    template.stats
+                stats = template.stats
+                if physical and not built:
+                    run = template.runner(self.spark, params,
+                                          self._plan_cache)
+                df = None if run else template.bind(self.spark, params)
             else:
                 planner = CypherPlanner(self, params)
                 df, stats = self._plan(planner, ast, cypher), planner.stats
@@ -680,11 +710,15 @@ class Graph:
             if is_write:
                 self._version += 1
                 self._invalidate_plans()
-        if not is_write:
+        if run is not None:
+            # the plan's key-dependent broadcast jobs run here, outside
+            # the read lock, over the tables it was planned on (as a
+            # returned DataFrame's own collect always has)
+            df = self._timed(run, cypher, undo=False)
+        if not is_write and exact:
             with self._cache_mu:
                 self._plan_cache[key] = df
-                if len(self._plan_cache) > self.PLAN_CACHE_SIZE:
-                    self._plan_cache.popitem(last=False)
+                self._plan_cache.trim(self.PLAN_CACHE_SIZE)
         self._log_query(cypher, _time.time() - t0, outcome)
         return df, outcome
 
@@ -699,11 +733,7 @@ class Graph:
         # traversal otherwise has no kill switch. Jobs the USER
         # later triggers on the returned (lazy) DataFrame are
         # outside this bound, like any Spark job.
-        timeout_ms = self.config_get("TIMEOUT")
-        if isinstance(timeout_ms, int) and timeout_ms > 0:
-            df = self._plan_with_timeout(planner, ast, cypher, timeout_ms)
-        else:
-            df = planner.plan(ast)
+        df = self._timed(lambda: planner.plan(ast), cypher)
         # RESULTSET_MAX_SIZE: truncate emitted rows when configured
         # ≥ 0 (reference enforces in ops/op_results.c:32-47)
         max_rows = self.config_get("RESULTSET_MAX_SIZE")
@@ -735,17 +765,27 @@ class Graph:
         if keep:
             with self._cache_mu:
                 templates[key] = template
-                if len(templates) > self.PLAN_CACHE_SIZE:
-                    templates.popitem(last=False)
+                self._plan_cache.trim(self.PLAN_CACHE_SIZE)
         return template, True
 
-    def _plan_with_timeout(self, planner, ast, cypher: str,
-                           timeout_ms: int):
-        """Run the planner under a cancellation deadline: a timer
-        cancels this query's Spark job group after ``timeout_ms``, so
-        any in-flight eager job (frontier hop, mutation rewrite)
-        aborts and planning raises a clean QueryTimeoutError — the
-        ``CommandCtx`` drain path of ``cmd_query.c:100-118``."""
+    def _timed(self, fn, cypher: str, undo: bool = True):
+        """``fn()`` under the TIMEOUT config (see ``_with_timeout``)."""
+        timeout_ms = self.config_get("TIMEOUT")
+        if isinstance(timeout_ms, int) and timeout_ms > 0:
+            return self._with_timeout(fn, cypher, timeout_ms, undo)
+        return fn()
+
+    def _with_timeout(self, fn, cypher: str, timeout_ms: int,
+                      undo: bool):
+        """Run ``fn`` (planning, or a promoted template's run) under a
+        cancellation deadline: a timer cancels this query's Spark job
+        group after ``timeout_ms``, so any in-flight eager job
+        (frontier hop, mutation rewrite, key-dependent broadcast)
+        aborts and ``fn`` raises a clean QueryTimeoutError — the
+        ``CommandCtx`` drain path of ``cmd_query.c:100-118``. ``undo``
+        rolls graph state back on a timeout; a run outside the graph
+        lock passes False, since it changes no state and a writer may
+        hold the lock."""
         import threading
         import time as _time
         sc = self.spark.sparkContext
@@ -761,17 +801,18 @@ class Graph:
         # abort is atomic under its single-writer lock) — mutations
         # replace dict entries during planning, so shallow copies of
         # the dicts are a complete undo log
-        snap = self._state_snapshot()
+        snap = self._state_snapshot() if undo else None
 
         def _restore() -> None:
-            self._state_restore(snap)
+            if snap is not None:
+                self._state_restore(snap)
 
         sc.setJobGroup(group, cypher[:100], interruptOnCancel=True)
         timer = threading.Timer(timeout_ms / 1000.0, _cancel)
         timer.start()
         deadline = _time.time() + timeout_ms / 1000.0
         try:
-            df = planner.plan(ast)
+            df = fn()
             if fired.is_set() or _time.time() > deadline:
                 _restore()
                 raise QueryTimeoutError(
@@ -854,7 +895,7 @@ class Graph:
         "RESULTSET_MAX_SIZE": -1,       # unlimited, as reference default
         # ms; 0 = unlimited (reference TIMEOUT_DEFAULT, config.h:14-18).
         # Bounds engine-side execution inside query() via job-group
-        # cancellation — see _plan_with_timeout.
+        # cancellation — see _with_timeout.
         "TIMEOUT": 0,
     }
 
@@ -871,9 +912,10 @@ class Graph:
         self._config[key] = value
         if key == "PLAN_CACHE_SIZE":
             self.PLAN_CACHE_SIZE = int(value)
-        # cached plans bake in config-dependent operators (row limit,
-        # hop cap) — drop them so the new value takes effect
-        self._invalidate_plans()
+        elif key != "TIMEOUT":
+            # cached plans bake in config-dependent operators (row
+            # limit, hop cap) — drop them so the new value takes effect
+            self._invalidate_plans()
 
     def explain(self, cypher: str,
                 params: Mapping[str, object] | None = None) -> str:
@@ -890,7 +932,7 @@ class Graph:
         is_write = is_write_ast(parse(stripped))
         snap = self._state_snapshot() if is_write else None
         try:
-            df = self.query(cypher, params)
+            df = self._query(cypher, params, physical=False)[0]
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
                 df.explain("formatted")
@@ -920,7 +962,7 @@ class Graph:
         ``"plan"``."""
         import time as _time
         t0 = _time.time()
-        built, outcome = self._query(cypher, params)
+        built, outcome = self._query(cypher, params, physical=False)
         planning_ms = (_time.time() - t0) * 1000.0
         # .select("*") forces a FRESH physical plan: SQLMetrics are
         # accumulators per plan instance, so profiling a plan-cached

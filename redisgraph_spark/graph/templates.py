@@ -1,12 +1,12 @@
 """Plan templates: plan a parameterised read once per parameter shape,
-then rebind its literals per request.
+rebind its literals per request, and run a reused shape's executed plan.
 
 The reference caches one execution plan per query text and binds
 ``$params`` each time the plan runs (``src/commands/execution_ctx.c:
 79-88``). Here, a read that misses the exact-value plan cache plans once
 with a sentinel in place of every int, float and string parameter. The
-analyzed Catalyst plan is kept as the template. Each request then swaps
-the sentinel literals for its own values on the JVM, in one
+analyzed Catalyst plan is kept as the template. A request then swaps the
+sentinel literals for its own values on the JVM, in one
 ``transformAllExpressionsWithSubqueries`` call, without running the
 Python planner.
 
@@ -17,12 +17,28 @@ A plan becomes a template only if planning
 - did not fail.
 Any other shape is remembered as one that plans per request, as if
 templates did not exist.
+
+The first rebind promotes the template (``_promote``): it keeps the
+executed ``SparkPlan`` of the sentinel plan too. Each later request swaps
+the sentinels in that plan, clones it (no code-generating node may serve
+two requests) and runs it, so Catalyst, physical planning and every
+broadcast whose subtree holds no sentinel are paid once per shape. Those
+key-independent broadcasts are built at promotion and shared by every
+request, as Pregelix keeps the static relation resident and streams only
+what changes. Their bytes count against one budget per plan cache,
+``spark.sql.autoBroadcastJoinThreshold``; past it the least recently run
+promoted template goes back to rebinding its analyzed plan. A template
+is promoted only if ``_promote``'s guard shows that the swap gives the
+plan the optimizer would build for the request's values; otherwise it
+stays analyzed-only.
 """
 
 from __future__ import annotations
 
 import dataclasses
 import itertools
+import json
+import threading
 import weakref
 from types import SimpleNamespace
 
@@ -37,18 +53,35 @@ from redisgraph_spark.planner.expressions import SentinelParams
 _DRAIN_MS = 2000
 _TAGS = itertools.count()
 _HANDLES: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+# promotion's second sentinel set starts this many indexes on
+_SECOND_SET = 0x100
+# where the guard lets a sentinel stand in the analyzed plan: an
+# operand of a comparison whose other operand is a column expression,
+# or of a null/NaN test (constant within a kind)
+_COMPARISONS = frozenset(
+    ["EqualTo", "EqualNullSafe", "LessThan", "LessThanOrEqual",
+     "GreaterThan", "GreaterThanOrEqual", "StartsWith", "EndsWith",
+     "Contains"])
+_NULL_TESTS = frozenset(["IsNull", "IsNotNull", "IsNaN"])
+# the numeric widenings the swap covers (see ``_forms``)
+_WIDER = {"integer": ("long", "double"), "long": ("double",)}
+# executed-plan nodes a per-request swap cannot reach or must not
+# share: folded inline VALUES, and exchanges reused across the plan
+_UNSWAPPABLE = frozenset(["LocalTableScan", "ReusedExchange"])
 
 
 def _kind(v) -> str | None:
     """Rebindable kind of a parameter value. Ints split at 32 bits
-    because ``F.lit`` types them IntegerType or LongType by size."""
+    because ``F.lit`` types them IntegerType or LongType by size. A NaN
+    is keyed by value: ``isnan`` of a float parameter then folds the
+    same way for every value of the kind."""
     t = type(v)
     if t is int:
         if -(1 << 31) <= v < (1 << 31):
             return "i32"
         return "i64" if -(1 << 63) <= v < (1 << 63) else None
     if t is float:
-        return "float"
+        return "float" if v == v else None
     return "str" if t is str else None
 
 
@@ -113,32 +146,276 @@ def _jvm(spark) -> SimpleNamespace:
         h = _HANDLES[jvm] = SimpleNamespace(
             literal=getattr(getattr(sql.catalyst.expressions, "Literal$"),
                             "MODULE$").apply,
+            parse=getattr(getattr(sql.catalyst.parser,
+                                  "CatalystSqlParser$"),
+                          "MODULE$").parseExpression,
             to_scala_map=jvm.org.apache.spark.api.python.PythonUtils
             .toScalaMap,
-            of_rows=sql.classic.Dataset.ofRows)
+            of_rows=sql.classic.Dataset.ofRows,
+            set_active=sql.classic.SparkSession.setActiveSession,
+            reused=sql.execution.exchange.ReusedExchangeExec)
     return h
+
+
+def _forms(h, kind: str, v) -> list:
+    """The literals type coercion makes of a parameter value in an
+    optimized plan: its own, and for an int also the bigint and the
+    double it widens to (``_WIDER``)."""
+    forms = [h.literal(v)]
+    if kind == "i32":
+        forms.append(h.parse(f"{v}L"))
+    if kind in ("i32", "i64"):
+        forms.append(h.literal(float(v)))
+    return forms
 
 
 class PlanTemplate:
     """An analyzed plan over sentinel literals, one per rebindable
-    parameter, and the planner's stats for the query."""
+    parameter, and the planner's stats for the query. ``physical`` is
+    None until the first rebind promotes it, then a ``_Physical``, or
+    False for a template that stays analyzed-only."""
 
     def __init__(self, spark, df: DataFrame, params: SentinelParams,
                  stats: dict) -> None:
         lit = _jvm(spark).literal
         self.plan = df._jdf.queryExecution().analyzed()
-        self.sentinels = {n: lit(params.literal(n))
-                          for n in params.rebindable}
+        self.values = {n: params.literal(n) for n in params.rebindable}
+        self.sentinels = {n: lit(v) for n, v in self.values.items()}
         self.stats = dict(stats)
+        self.physical: _Physical | bool | None = None
+        self._promoting = threading.Lock()
 
     def bind(self, spark, params: dict) -> DataFrame:
         """The template with each sentinel replaced by the parameter's
         value (a Scala Map is the PartialFunction the transform takes)."""
         h = _jvm(spark)
+        return DataFrame(h.of_rows(spark._jsparkSession,
+                                   self._bound(h, params)), spark)
+
+    def _bound(self, h, params: dict):
         swap = h.to_scala_map({s: h.literal(params[n])
                                for n, s in self.sentinels.items()})
-        plan = self.plan.transformAllExpressionsWithSubqueries(swap)
-        return DataFrame(h.of_rows(spark._jsparkSession, plan), spark)
+        return self.plan.transformAllExpressionsWithSubqueries(swap)
+
+    def runner(self, spark, params: dict, cache):
+        """This rebind on the promoted plan: a thunk that runs it and
+        returns its DataFrame, or None when the request rebinds the
+        analyzed plan instead. The first rebind promotes (one thread
+        does; the others meanwhile rebind the analyzed plan)."""
+        phys = self.physical
+        if phys is None and self._promoting.acquire(blocking=False):
+            try:
+                if self.physical is None:
+                    self.physical = _promote(spark, self) or False
+                    if self.physical:
+                        _hold(cache, self, spark)
+            finally:
+                self._promoting.release()
+            return None
+        if not phys:
+            return None
+        with cache.mu:
+            if self in cache.held:
+                cache.held.move_to_end(self)
+        return phys.runner(spark, params)
+
+    def demote(self, cache) -> None:
+        """Back to rebinding the analyzed plan; the held broadcasts are
+        released with the executed plan."""
+        self.physical = False
+        with cache.mu:
+            cache.held.pop(self, None)
+
+
+def _swap(h, forms: dict, kinds: dict, values: dict):
+    """Scala Map from each sentinel form in ``forms`` to the same form
+    of the parameter's value in ``values``."""
+    return h.to_scala_map({
+        s: v for n, fs in forms.items()
+        for s, v in zip(fs, _forms(h, kinds[n], values[n]))})
+
+
+class _Physical:
+    """A promoted template's executed plan. Each key-independent
+    broadcast is built and sits behind a ``ReusedExchangeExec``, which
+    neither the swap nor ``clone`` enters, so every request shares it."""
+
+    def __init__(self, plan, forms: dict, kinds: dict, schema,
+                 nbytes: int) -> None:
+        self.plan, self.forms, self.kinds = plan, forms, kinds
+        self.schema, self.nbytes = schema, nbytes
+
+    def instance(self, spark, params: dict):
+        """This request's own copy of the plan, with its literals."""
+        h = _jvm(spark)
+        # plan nodes capture the thread's active session when built
+        h.set_active(spark._jsparkSession)
+        return self.plan.transformAllExpressions(
+            _swap(h, self.forms, self.kinds, params)).clone()
+
+    def runner(self, spark, params: dict):
+        """Swap and clone now (under the caller's read lock); the thunk
+        runs the plan: its key-dependent broadcast jobs, then the wrap
+        of its RDD as a DataFrame."""
+        plan = self.instance(spark, params)
+        jss = spark._jsparkSession
+
+        def run() -> DataFrame:
+            return DataFrame(jss.internalCreateDataFrame(
+                plan.execute(), self.schema, False), spark)
+        return run
+
+
+def _trees(x):
+    """Every pre-order node list in a plan's JSON: the plan itself, each
+    expression, and each expression nested inside a node's fields."""
+    if isinstance(x, dict):
+        for v in x.values():
+            yield from _trees(v)
+    elif isinstance(x, list):
+        if x and all(isinstance(e, dict) and "num-children" in e
+                     for e in x):
+            yield x
+        for v in x:
+            yield from _trees(v)
+
+
+def _contexts_ok(plan_json: str, values: dict) -> bool:
+    """Guard 3: every sentinel in the analyzed plan, under numeric
+    widening casts, is an operand of a null/NaN test, or of a
+    comparison whose other operand is neither foldable nor a Cast
+    (``UnwrapCastInBinaryComparison`` rewrites a cast column by the
+    literal's value, and a foldable side folds with the sentinel)."""
+    strs = {v for v in values.values() if type(v) is str}
+    nums = {float(v) for v in values.values() if type(v) is not str}
+
+    def is_sentinel(node) -> bool:
+        v = node.get("value")
+        if v is None or not node["class"].endswith(".Literal"):
+            return False
+        if node.get("dataType") == "string":
+            return v in strs
+        try:
+            return float(v) in nums
+        except (TypeError, ValueError):
+            return False
+
+    for nodes in _trees(json.loads(plan_json)):
+        name = [n["class"].rsplit(".", 1)[-1] for n in nodes]
+        parent, kids, open_ = [None] * len(nodes), [[] for _ in nodes], []
+        for i, n in enumerate(nodes):
+            while open_ and open_[-1][1] == 0:
+                open_.pop()
+            if open_:
+                open_[-1][1] -= 1
+                parent[i] = open_[-1][0]
+                kids[parent[i]].append(i)
+            open_.append([i, n["num-children"]])
+
+        def foldable(i) -> bool:
+            return all(map(foldable, kids[i])) if kids[i] \
+                else name[i] == "Literal"
+
+        for i, n in enumerate(nodes):
+            if not is_sentinel(n):
+                continue
+            cur, typ, p = i, n.get("dataType"), parent[i]
+            while p is not None and name[p] == "Cast" and \
+                    nodes[p].get("dataType") in _WIDER.get(typ, ()):
+                cur, typ, p = p, nodes[p]["dataType"], parent[p]
+            if p is not None and name[p] in _NULL_TESTS:
+                continue
+            if p is None or name[p] not in _COMPARISONS:
+                return False
+            other = [k for k in kids[p] if k != cur]
+            if len(other) != 1 or name[other[0]] == "Cast" or \
+                    foldable(other[0]):
+                return False
+    return True
+
+
+def _walk(node, held: list, swap) -> bool:
+    """Collect into ``held`` the outermost broadcasts under ``node``
+    whose subtree the swap leaves unchanged; False when the subtree has
+    a node the swap cannot serve (``_UNSWAPPABLE``)."""
+    name = node.nodeName()
+    if name in _UNSWAPPABLE:
+        return False
+    if name == "BroadcastExchange" and \
+            node.transformAllExpressions(swap).fastEquals(node):
+        held.append(node)
+        return True
+    kids = node.children()
+    return all(_walk(kids.apply(i), held, swap)
+               for i in range(kids.size()))
+
+
+def _promote(spark, t: PlanTemplate) -> _Physical | None:
+    """The template's executed plan ready to run per request, with its
+    key-independent broadcasts built, or None when the guard fails.
+    The guard, besides ``_contexts_ok``: the plan is not adaptive
+    (above the adaptive gate nothing changes); a sentinel set A
+    (the template's) and a second set B both survive into their
+    executed plans; A's executed plan swapped to B ``sameResult``s
+    B's, so no literal was derived from a sentinel and none became a
+    plan field; and no node the swap cannot serve."""
+    h = _jvm(spark)
+    jss = spark._jsparkSession
+    h.set_active(jss)
+    kinds = {n: _kind(v) for n, v in t.values.items()}
+    second = {n: _sentinel(kinds[n], i + _SECOND_SET)
+              for i, n in enumerate(sorted(t.values))}
+    try:
+        if not _contexts_ok(t.plan.toJSON(), t.values):
+            return None
+        plan = h.of_rows(jss, t.plan).queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan" or \
+                not plan.subqueriesAll().isEmpty():
+            return None
+        forms = {n: _forms(h, kinds[n], v) for n, v in t.values.items()}
+        flat = [f for fs in forms.values() for f in fs]
+        if len(dict.fromkeys(flat)) != len(flat):
+            return None            # two sentinels share a widened form
+        for n in forms:            # every sentinel reaches the plan
+            if plan.transformAllExpressions(_swap(
+                    h, {n: forms[n]}, kinds, second)).fastEquals(plan):
+                return None
+        to_second = _swap(h, forms, kinds, second)
+        b_plan = h.of_rows(jss, t._bound(h, second)).queryExecution() \
+            .executedPlan()
+        if not plan.transformAllExpressions(to_second).sameResult(b_plan):
+            return None
+        held: list = []
+        if not _walk(plan, held, to_second):
+            return None
+        for b in held:             # built once, outside any TIMEOUT group
+            b.executeBroadcast()
+        return _Physical(
+            plan.transformDown(h.to_scala_map(
+                {b: h.reused(b.output(), b) for b in held})),
+            forms, kinds, t.plan.schema(),
+            sum(b.metrics().apply("dataSize").value() for b in held))
+    except Py4JJavaError:
+        return None
+
+
+def _hold(cache, t: PlanTemplate, spark) -> None:
+    """Count a newly promoted template's held broadcasts against the
+    cache's budget; past it, demote the least recently run ones (the
+    new one last: alone over budget, it is demoted too)."""
+    budget = max(0, spark._jsparkSession.sessionState().conf()
+                 .autoBroadcastJoinThreshold())
+    with cache.mu:
+        cache.held[t] = t.physical.nbytes
+        over = []
+        total = sum(cache.held.values())
+        for old, nbytes in list(cache.held.items()):
+            if total <= budget:
+                break
+            over.append(old)
+            total -= nbytes
+    for old in over:
+        old.demote(cache)
 
 
 def build(spark, ast, params: dict, plan) -> tuple[PlanTemplate | None,

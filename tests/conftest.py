@@ -35,6 +35,33 @@ def graph(spark):
     return Graph.from_tpch(spark, SF_DIR)
 
 
+@pytest.fixture(scope="session")
+def _cached_tpch(spark):
+    from redisgraph_spark import Graph
+    # warm, as a served graph is: a var-length plan reads the counts
+    # and the adjacency these build
+    return Graph.from_tpch(
+        spark, os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    ).warm_traversal().warm_statistics()
+
+
+@pytest.fixture()
+def cached_graph(spark, _cached_tpch):
+    """TPC-H sf0.01 beside SF_DIR: its fact tables pass the 512-row
+    inline bound of ``tpch_graph``, so they are cached scans, not VALUES
+    the optimizer folds. Plan templates promote only over the former,
+    and only with adaptive execution off, as under the adaptive gate; a
+    graph of unknown size earlier in the session may have ratcheted it
+    on, so the test runs with it off."""
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        yield _cached_tpch
+    finally:
+        spark.conf.set(key, before)
+
+
 @pytest.fixture()
 def social(spark):
     """The reference's social demo graph

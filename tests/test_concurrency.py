@@ -186,3 +186,88 @@ def test_timeout_in_template_build_stores_nothing(social):
                     if k[0] == q]
     finally:
         social.config_set("TIMEOUT", 0)
+
+
+def _node_ids(spark, plan, held=None) -> set:
+    """JVM identities of every node in an executed plan, following each
+    ReusedExchange to the exchange it reuses; ``held`` collects those
+    exchanges."""
+    ident = spark._jvm.java.lang.System.identityHashCode
+    out = set()
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        out.add(ident(node))
+        if node.nodeName() == "ReusedExchange":
+            if held is not None:
+                held.append(node.child())
+            stack.append(node.child())
+            continue
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def test_promoted_binds_share_only_held_broadcasts(spark, cached_graph):
+    """Two binds of one promoted template share JVM plan nodes only
+    inside the held broadcasts; every other node, each one that takes
+    part in code generation included, is the request's own."""
+    q = ("MATCH (c:Customer)-[:PLACED]->(o:Order {o_orderkey: $k})"
+         "-[l:CONTAINS]->(p:Part) RETURN p.p_partkey AS pk")
+    g = cached_graph
+    g._invalidate_plans()
+    for k in (1, 2):
+        g.query(q, {"k": k})
+    t = [t for key, t in g._plan_cache.templates.items()
+         if key[0] == q and key[3] == g._epoch][0]
+    held: list = []
+    a = _node_ids(spark, t.physical.instance(spark, {"k": 3}), held)
+    b = _node_ids(spark, t.physical.instance(spark, {"k": 4}))
+    assert held and all(h.nodeName() == "BroadcastExchange" for h in held)
+    inside = set().union(*(_node_ids(spark, h) for h in held))
+    assert a & b == inside
+
+
+def test_threads_race_first_promotion(cached_graph):
+    """Six threads rebind a fresh hop2 template at once: one promotes
+    it while the others rebind the analyzed plan, then all run the
+    promoted plan; every answer is the planner's."""
+    import sys
+
+    from conftest import rows
+    from redisgraph_spark.cypher.parser import parse
+    from redisgraph_spark.planner.planner import CypherPlanner
+    q = ("MATCH (c:Customer)-[:PLACED]->(o:Order {o_orderkey: $k})"
+         "-[l:CONTAINS]->(p:Part) "
+         "RETURN c.c_custkey AS ck, p.p_partkey AS pk")
+    g = cached_graph
+    g._invalidate_plans()
+    g.query(q, {"k": 1})                     # builds the template
+    keys = [[2 + t + 6 * i for i in range(3)] for t in range(6)]
+    want = {k: rows(CypherPlanner(g, {"k": k}).plan(parse(q)))
+            for ks in keys for k in ks}
+    got: dict = {}
+    errors: list[str] = []
+
+    def client(ks):
+        try:
+            for k in ks:
+                got[k] = rows(g.query(q, {"k": k}))
+        except Exception as ex:  # pragma: no cover
+            errors.append(repr(ex))
+
+    threads = [threading.Thread(target=client, args=(ks,)) for ks in keys]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[:3]
+    assert got == want and any(want.values())
+    assert [t.physical for key, t in g._plan_cache.templates.items()
+            if key[0] == q and key[3] == g._epoch][0]

@@ -5,10 +5,17 @@ parameter shape with sentinel literals, and each request rebinds them.
 Part 1: every rebound answer must equal a fresh plan of the same query
 with the same values, rows and schema. Part 2: a query whose plan
 depends on a parameter's value (or that contains a sentinel) must
-store no template and answer as before.
+store no template and answer as before. Part 3: the first rebind
+promotes a template, and later binds run its executed plan; each such
+answer must equal a fresh plan too, a shape the guard refuses must stay
+analysed-only, and the promoted run must compose, explain, profile and
+time out like the plan it stands for.
 """
 
+import math
+
 import pytest
+from pyspark.sql import functions as F
 
 from redisgraph_spark import Graph
 from redisgraph_spark.cypher.parser import parse
@@ -112,3 +119,188 @@ def test_fulltext_plans_per_request(spark):
     df, outcome = g._query(text, params)
     assert outcome == "plan" and _templates(g, text) == [None]
     assert _rows(df) == _rows(_fresh(g, text, params)) != []
+
+
+# ------------------------------------------------------------ promotion
+# per shape, one run of binds per parameter shape (32- and 64-bit ints
+# are two); the second bind of a run promotes, the rest run the plan
+INT_RUNS = ([1, 7, 5, -3, 987654], [1 << 40, -(1 << 40), (1 << 40) + 7])
+ORDER_RUNS = ([1, 7, 32, -3, 98765432], [1 << 40, -(1 << 40), 7 + (1 << 40)])
+VAR_LEN = ("MATCH (c:Customer {c_custkey: $k})-[*1..2]->(x) "
+           "RETURN labels(x)[0] AS lbl, count(*) AS cnt")
+PROMOTED = {
+    "node": [[{"k": k} for k in run] for run in INT_RUNS],
+    "hop1": [[{"k": k} for k in run] for run in INT_RUNS],
+    "hop2": [[{"k": k} for k in run] for run in ORDER_RUNS],
+    # its frontier broadcast depends on the key; the adjacency does not
+    "var_len": [[{"k": k} for k in INT_RUNS[0]]],
+    "exists": [
+        [{"seg": "BUILDING", "bal": 100.0},
+         {"seg": "MACHINERY", "bal": -500.5},
+         {"seg": "HOUSEHOLD", "bal": 2500.25},
+         {"seg": "NO SUCH SEGMENT", "bal": 0.0},
+         # isnan is constant over the float kind: inf binds like any
+         {"seg": "BUILDING", "bal": math.inf}],
+        [{"seg": "AUTOMOBILE", "bal": 0}, {"seg": "BUILDING", "bal": 500},
+         {"seg": "FURNITURE", "bal": -100}]],
+}
+EXISTS = TEMPLATED["exists"][0]
+REFUSED = [
+    # the other side of `>` is foldable: the optimizer folds it with
+    # the sentinel
+    ("MATCH (c:Customer) WHERE $k > 5 AND c.c_custkey = $k "
+     "RETURN c.c_name AS n", [{"k": k} for k in (3, 7, 4, 9)]),
+    ("MATCH (c:Customer) WHERE c.c_mktsegment = toUpper($seg) "
+     "RETURN count(*) AS n",
+     [{"seg": s} for s in ("building", "machinery", "household")]),
+    # Nation is inline VALUES: its scan folds at optimize time
+    ("MATCH (n:Nation {n_nationkey: $k}) RETURN n.n_name AS name",
+     [{"k": k} for k in (1, 2, 3)]),
+    # an int column compared with a float: the column side is a Cast
+    ("MATCH (p:Part) WHERE p.p_size > $f RETURN count(*) AS n",
+     [{"f": f} for f in (10.5, 20.5, 30.0)]),
+    # NaN is keyed by value, so the plan folds it
+    (EXISTS, [{"seg": s, "bal": math.nan}
+              for s in ("BUILDING", "MACHINERY", "HOUSEHOLD")]),
+]
+
+
+def _ran(df) -> bool:
+    """Whether ``df`` scans the RDD of a promoted template's run."""
+    return df._jdf.queryExecution().analyzed().nodeName() == "LogicalRDD"
+
+
+def _promoted(g, text, params):
+    """Bind ``text`` with two other values of ``params``' shape, which
+    builds and promotes its template; returns that template."""
+    for k in (1, 2):
+        g.query(text, {n: v + (str(k) if type(v) is str else k)
+                       for n, v in params.items()})
+    shape = param_shape(params)
+    t = [t for k, t in g._plan_cache.templates.items()
+         if k == (text, shape, g._version, g._epoch)][0]
+    assert t.physical, "not promoted"
+    return t
+
+
+@pytest.mark.parametrize("shape", sorted(PROMOTED))
+def test_promoted_binds_match_fresh_plan(cached_graph, shape):
+    g = cached_graph
+    text = VAR_LEN if shape == "var_len" else TEMPLATED[shape][0]
+    g._invalidate_plans()
+    answers = []
+    for run in PROMOTED[shape]:
+        for i, params in enumerate(run):
+            df, outcome = g._query(text, params)
+            assert outcome == ("plan" if i == 0 else "rebind"), params
+            assert _ran(df) == (i >= 2), params
+            ref = _fresh(g, text, params)
+            assert df.schema == ref.schema, params
+            assert _rows(df) == _rows(ref), params
+            answers.append(_rows(df))
+    got = _templates(g, text)
+    assert len(got) == len(PROMOTED[shape]) and all(t.physical for t in got)
+    assert any(answers)
+
+
+@pytest.mark.parametrize("text,runs", REFUSED)
+def test_refused_shapes_stay_analyzed(cached_graph, text, runs):
+    g = cached_graph
+    g._invalidate_plans()
+    for params in runs:
+        df, outcome = g._query(text, params)
+        assert not _ran(df)
+        ref = _fresh(g, text, params)
+        assert df.schema == ref.schema
+        assert _rows(df) == _rows(ref), params
+    got = _templates(g, text)
+    assert got and all(t.physical is False for t in got)
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, found by a job tag once the listener bus
+    drains."""
+    sc = spark.sparkContext
+    tag = f"rg-test-promoted-{id(fn)}"
+    sc.addJobTag(tag)
+    try:
+        fn()
+    finally:
+        sc.removeJobTag(tag)
+    ctx = sc._jsc.sc()
+    ctx.listenerBus().waitUntilEmpty(30_000)
+    return len(ctx.statusTracker().getJobIdsForTag(tag))
+
+
+@pytest.mark.parametrize("shape,params,jobs", [
+    # the filtered Customer side is broadcast per request; Order is held
+    ("hop1", {"k": 10}, 2),
+    # the distinct PLACED sources are held: only the count job is left
+    ("exists", {"seg": "BUILDING", "bal": 250.0}, 1)])
+def test_promoted_bind_job_count(spark, cached_graph, shape, params, jobs):
+    g, text = cached_graph, TEMPLATED[shape][0]
+    g._invalidate_plans()
+    _promoted(g, text, params)
+    assert _jobs(spark, lambda: g.query(text, params).collect()) == jobs
+
+
+def test_promoted_result_composes(cached_graph):
+    g, text = cached_graph, TEMPLATED["hop1"][0]
+    g._invalidate_plans()
+    t = _promoted(g, text, {"k": 4})
+    df = g.query(text, {"k": 4})
+    ref = t.bind(g.spark, {"k": 4})
+    assert _ran(df) and not _ran(ref)
+    assert df.count() == ref.count() > 0
+    big = F.col("tp") > 100000
+    assert _rows(df.filter(big)) == _rows(ref.filter(big))
+    orders = g.node_tables["Order"].select(
+        F.col("o_orderkey").alias("ok"), "o_orderstatus")
+    assert _rows(df.join(orders, "ok")) == _rows(ref.join(orders, "ok"))
+
+
+def test_explain_and_profile_of_promoted_shape(cached_graph):
+    g, text = cached_graph, TEMPLATED["hop1"][0]
+    g._invalidate_plans()
+    _promoted(g, text, {"k": 4})
+    assert _ran(g.query(text, {"k": 4}))
+    plan = g.explain(text, {"k": 4})
+    assert "BroadcastHashJoin" in plan and "InMemoryTableScan" in plan
+    assert "ExistingRDD" not in plan
+    for k in (4, 7):
+        want = g.query(text, {"k": k}).count()
+        prof = g.profile(text, {"k": k})
+        assert prof["rows"] == want > 0 and prof["plan_cache"] == "rebind"
+        joins = [o for o in prof["ops"] if o["op"] == "BroadcastHashJoin"]
+        assert joins and want in {o["rows"] for o in joins}
+        assert not any("ExistingRDD" in o["op"] for o in prof["ops"])
+
+
+def test_timeout_in_promoted_bind(cached_graph):
+    """A TIMEOUT during a promoted run (its key-dependent broadcast job
+    runs inside query) fails that query; the template keeps serving."""
+    from redisgraph_spark.graph.graph import QueryTimeoutError
+    g, text = cached_graph, TEMPLATED["hop1"][0]
+    g._invalidate_plans()
+    _promoted(g, text, {"k": 4})
+    g.config_set("TIMEOUT", 1)
+    try:
+        with pytest.raises(QueryTimeoutError):
+            g.query(text, {"k": 9})
+    finally:
+        g.config_set("TIMEOUT", 0)
+    df, outcome = g._query(text, {"k": 9})
+    assert outcome == "rebind" and _ran(df)
+    assert _rows(df) == _rows(_fresh(g, text, {"k": 9})) != []
+
+
+def test_lowering_plan_cache_size_shrinks_both_lrus(social):
+    for i in range(8):
+        social.query(f"MATCH (p:person) WHERE p.age > {i} "
+                     "AND p.name <> $n RETURN count(*) AS c", {"n": "x"})
+    cache = social._plan_cache
+    assert len(cache) == len(cache.templates) == 8
+    social.config_set("PLAN_CACHE_SIZE", 2)
+    social.query("MATCH (p:person {age: $a}) RETURN count(*) AS c",
+                 {"a": 30})
+    assert len(cache) <= 2 and len(cache.templates) <= 2
