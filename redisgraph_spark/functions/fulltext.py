@@ -19,8 +19,10 @@ default TF scoring shape; the reference's default has no IDF either).
 
 from __future__ import annotations
 
+import dataclasses
 import re
 from dataclasses import dataclass, field as dc_field
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -213,6 +215,43 @@ def parse_query(text: str):
     return _Parser(_lex(text)).parse_expr()
 
 
+class Skeleton(NamedTuple):
+    """A query parameter that plan templates key by its skeleton: the
+    parsed query with each word replaced by its index, and the names
+    of the string parameters that carry the words
+    (graph/templates.py)."""
+    shape: object
+    leaves: tuple
+
+
+def _map_words(node, fn):
+    """A copy of the AST ``node`` with every word ``w`` as ``fn(w)``."""
+    if isinstance(node, FtTerm):
+        return dataclasses.replace(node, word=fn(node.word))
+    if isinstance(node, FtPhrase):
+        return dataclasses.replace(node, words=[fn(w) for w in node.words])
+    if isinstance(node, (FtNot, FtOptional)):
+        return type(node)(_map_words(node.child, fn))
+    return type(node)([_map_words(c, fn) for c in node.children])
+
+
+def skeleton(text: str) -> tuple[object, list[str]]:
+    """``(shape, words)``: the parsed query with its words taken out,
+    each replaced by its index in ``words``. Every part of the compiled
+    plan but the word literals depends on the shape alone."""
+    words: list[str] = []
+
+    def take(w: str) -> int:
+        words.append(w)
+        return len(words) - 1
+    return _map_words(parse_query(text), take), words
+
+
+def fill(shape, words) -> object:
+    """The parsed query of ``shape`` with its words put back."""
+    return _map_words(shape, words.__getitem__)
+
+
 # ---------------------------------------------------------------------------
 # Compiler: AST -> DataFrame (_id, score)
 # ---------------------------------------------------------------------------
@@ -329,12 +368,12 @@ def _compile(index: DataFrame, node, id_col: str,
     raise ValueError(f"bad fulltext node {node!r}")
 
 
-def query_index(index: DataFrame, nodes: DataFrame, text: str,
+def query_index(index: DataFrame, nodes: DataFrame, query,
                 id_col: str = "_id") -> DataFrame:
-    """Parse `text` with the RediSearch grammar, match against the
+    """Match `query` (RediSearch text, or its parsed AST) against the
     index, return node rows + score descending
     (≈ db.idx.fulltext.queryNodes YIELD node, score)."""
-    ast = parse_query(text)
+    ast = parse_query(query) if isinstance(query, str) else query
     if isinstance(ast, FtAnd) and not ast.children:
         return nodes.limit(0).withColumn("score", F.lit(0.0))
     universe = nodes.select(id_col)
@@ -386,11 +425,24 @@ class FulltextCatalog:
         self._index[label] = build_index(nodes, list(props)) \
             .localCheckpoint(eager=True)
 
-    def query(self, label: str, text: str) -> DataFrame:
+    def refresh(self, before: dict) -> None:
+        """Rebuild the index of each label whose node table is no longer
+        the one in ``before`` (a write replaced it), as RedisGraph keeps
+        its RediSearch indexes current on node writes."""
+        for label, props in list(self.fields.items()):
+            if self.graph.node_tables.get(label) is not before.get(label):
+                self.create_replace(label, props)
+
+    def query(self, label: str, query) -> DataFrame:
+        """Node rows of ``label`` matching ``query`` with their score,
+        best first. ``query`` is the query text or its parsed AST
+        (``parse_query``, ``fill``); a plan template passes an AST
+        whose words are sentinels, so the plan's word literals are the
+        only part a request rebinds."""
         if label not in self._index:
             raise ValueError(f"No fulltext index on label {label}")
         return query_index(self._index[label],
-                           self.graph.node_tables[label], text)
+                           self.graph.node_tables[label], query)
 
     def query_many(self, label: str, terms: list[str]) -> DataFrame:
         """Vectorized batch query for SIMPLE single-token terms (the

@@ -597,12 +597,19 @@ def run_procedure(planner, clause: A.CallClause
         g.fulltext.drop(str(_lit(clause.args[0])))
         return inline_df(spark, [(True,)], [("ok", "boolean")]), ["ok"]
     if name == "db.idx.fulltext.querynodes":
+        # a parameter's query comes parsed from ``Params.fulltext``: a
+        # plan template's holds sentinel words, so its plan rebinds
+        # (graph/templates.py). A null query matches nothing ("" parses
+        # to the empty-match FtAnd) — str(None) would otherwise search
+        # the token 'none'
         label = str(_lit(clause.args[0]))
-        raw = _lit(clause.args[1])
-        # null query matches nothing ("" parses to the empty-match
-        # FtAnd) — str(None) would otherwise search the token 'none'
-        text = "" if raw is None else str(raw)
-        hits = g.fulltext.query(label, text)
+        arg = clause.args[1]
+        if isinstance(arg, A.Parameter):
+            query = planner.params.fulltext(arg.name)
+        else:
+            raw = _lit(arg)
+            query = "" if raw is None else str(raw)
+        hits = g.fulltext.query(label, query)
         node_cols = [c for c in hits.columns if c != "score"]
         out = hits.select(
             F.struct(*[F.col(c) for c in node_cols]).alias("node"),

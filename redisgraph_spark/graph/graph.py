@@ -662,7 +662,7 @@ class Graph:
         plan, and the exact-value cache, which may hold a run of a
         promoted template, is left alone."""
         import time as _time
-        from redisgraph_spark.graph.templates import param_shape
+        from redisgraph_spark.graph.templates import expand, param_shape
         from redisgraph_spark.planner.planner import CypherPlanner
         from redisgraph_spark.cypher.parser import parse
 
@@ -691,17 +691,20 @@ class Graph:
         lock = self._rw.write() if is_write else self._rw.read()
         run = None
         with lock:
+            # a template binds each fulltext query's words (expand)
+            bound = params if is_write else expand(ast, params)
             template, built = (None, False) if is_write else \
-                self._template(ast, cypher, params)
+                self._template(ast, cypher, bound)
             if template is not None:
                 stats = template.stats
                 if physical and not built:
-                    run = template.runner(self.spark, params,
+                    run = template.runner(self.spark, bound,
                                           self._plan_cache)
-                df = None if run else template.bind(self.spark, params)
+                df = None if run else template.bind(self.spark, bound)
             else:
                 planner = CypherPlanner(self, params)
-                df, stats = self._plan(planner, ast, cypher), planner.stats
+                df, stats = self._plan(planner, ast, cypher,
+                                       is_write), planner.stats
             outcome = "rebind" if template is not None and not built \
                 else "plan"
             # mutation statistics for the last executed query
@@ -722,9 +725,12 @@ class Graph:
         self._log_query(cypher, _time.time() - t0, outcome)
         return df, outcome
 
-    def _plan(self, planner, ast, cypher: str) -> DataFrame:
+    def _plan(self, planner, ast, cypher: str,
+              is_write: bool = False) -> DataFrame:
         """Run the planner under the TIMEOUT and RESULTSET_MAX_SIZE
-        configs."""
+        configs. After a write, the fulltext index of each label whose
+        node table it replaced is rebuilt inside the same TIMEOUT
+        bound, so a timed-out write restores the old index too."""
         # TIMEOUT (reference Config_TIMEOUT, src/configuration/
         # config.h:14-18; drain cmd_query.c:100-118): bound the
         # engine-side work that runs INSIDE query() — planning plus
@@ -733,7 +739,14 @@ class Graph:
         # traversal otherwise has no kill switch. Jobs the USER
         # later triggers on the returned (lazy) DataFrame are
         # outside this bound, like any Spark job.
-        df = self._timed(lambda: planner.plan(ast), cypher)
+        def write() -> DataFrame:
+            before = dict(self.node_tables)
+            df = planner.plan(ast)
+            if self._fulltext is not None:
+                self._fulltext.refresh(before)
+            return df
+        df = self._timed(write if is_write else lambda: planner.plan(ast),
+                         cypher)
         # RESULTSET_MAX_SIZE: truncate emitted rows when configured
         # ≥ 0 (reference enforces in ops/op_results.c:32-47)
         max_rows = self.config_get("RESULTSET_MAX_SIZE")

@@ -10,9 +10,15 @@ sentinel literals for its own values on the JVM, in one
 ``transformAllExpressionsWithSubqueries`` call, without running the
 Python planner.
 
+A fulltext query parameter is parsed in Python, so its value shapes the
+plan. ``expand`` splits it first: the query's RediSearch skeleton (the
+parsed query with its words taken out) is keyed by value, and each word
+becomes a string parameter, which the plan holds as a literal like any
+other.
+
 A plan becomes a template only if planning
 - read no sentinel's value: reads go through ``SentinelParams``, where
-  only the type accessor and the literal accessor are free;
+  only the type, literal and fulltext accessors are free;
 - ran no Spark job, since a job's answer could depend on a sentinel;
 - did not fail.
 Any other shape is remembered as one that plans per request, as if
@@ -40,11 +46,14 @@ import itertools
 import json
 import threading
 import weakref
+from collections import Counter
 from types import SimpleNamespace
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame
 
+from redisgraph_spark.cypher import ast as A
+from redisgraph_spark.functions.fulltext import Skeleton, skeleton
 from redisgraph_spark.graph.graph import QueryTimeoutError
 from redisgraph_spark.planner.expressions import SentinelParams
 
@@ -68,6 +77,7 @@ _WIDER = {"integer": ("long", "double"), "long": ("double",)}
 # executed-plan nodes a per-request swap cannot reach or must not
 # share: folded inline VALUES, and exchanges reused across the plan
 _UNSWAPPABLE = frozenset(["LocalTableScan", "ReusedExchange"])
+_FULLTEXT = "db.idx.fulltext.querynodes"
 
 
 def _kind(v) -> str | None:
@@ -107,6 +117,46 @@ def param_shape(params: dict) -> tuple | None:
         return None
     return tuple((n, kinds[n] or ("=", repr(params[n])))
                  for n in sorted(params))
+
+
+def _nodes(node):
+    """Every AST node under ``node``, pre-order."""
+    if dataclasses.is_dataclass(node):
+        yield node
+        node = [getattr(node, f.name) for f in dataclasses.fields(node)]
+    if isinstance(node, (list, tuple)):
+        for x in node:
+            yield from _nodes(x)
+
+
+def expand(ast, params: dict) -> dict:
+    """``params`` with each fulltext query parameter split in two: its
+    ``Skeleton``, keyed by value, and one string parameter per word,
+    which templates rebind like any other. A parameter expands only if
+    it is a string with a word in it and each of its uses is the query
+    argument of a ``queryNodes`` call over literals and parameters; no
+    implicit call may read parameters by name."""
+    if str not in map(type, params.values()):
+        return params
+    nodes = list(_nodes(ast))
+    if any(isinstance(n, A.CallClause) and n.implicit for n in nodes):
+        return params
+    uses = Counter(n.name for n in nodes if isinstance(n, A.Parameter))
+    queries = Counter(
+        n.args[1].name for n in nodes
+        if isinstance(n, A.CallClause) and n.proc == _FULLTEXT
+        and len(n.args) == 2 and isinstance(n.args[1], A.Parameter)
+        and all(isinstance(a, (A.Literal, A.Parameter)) for a in n.args))
+    out = dict(params)
+    for name, n in queries.items():
+        if n != uses[name] or type(params.get(name)) is not str:
+            continue
+        shape, words = skeleton(params[name])
+        leaves = tuple(f"{name}#{i}" for i in range(len(words)))
+        if words and not any(w in params for w in leaves):
+            out[name] = Skeleton(shape, leaves)
+            out.update(zip(leaves, words))
+    return out
 
 
 def _leaves(node):

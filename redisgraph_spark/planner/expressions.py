@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from redisgraph_spark.cypher import ast as A
+from redisgraph_spark.functions.fulltext import Skeleton, fill, parse_query
 
 _NUMERIC_INT = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
 
@@ -77,16 +78,27 @@ class ValueDependent(Exception):
 
 class Params(dict):
     """Query parameters as the planner sees them. ``params[name]`` and
-    ``params.get(name)`` read a value. The two reads a plan template
-    can rebind (graph/templates.py) have their own accessors:
-    ``type_of`` (the Python type alone) and ``literal`` (the value,
-    embedded as a Spark literal)."""
+    ``params.get(name)`` read a value. The reads a plan template can
+    rebind (graph/templates.py) have their own accessors: ``type_of``
+    (the Python type alone), ``literal`` (the value, embedded as a
+    Spark literal) and ``fulltext`` (a fulltext query, whose words
+    are embedded as Spark literals)."""
 
     def type_of(self, name: str) -> type:
         return type(dict.get(self, name))
 
     def literal(self, name: str):
         return dict.__getitem__(self, name)
+
+    def fulltext(self, name: str):
+        """The parsed RediSearch query the parameter holds (null: the
+        empty query). A template's parameter holds its ``Skeleton``,
+        filled with the literals of its word parameters, so no value
+        is read."""
+        v = self[name]
+        if isinstance(v, Skeleton):
+            return fill(v.shape, [self.literal(w) for w in v.leaves])
+        return parse_query("" if v is None else str(v))
 
 
 class SentinelParams(Params):

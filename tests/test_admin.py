@@ -5,6 +5,8 @@ import tempfile
 
 import pytest
 
+from conftest import SF_DIR
+
 
 def test_plan_cache_hits(social):
     q = "MATCH (p:person) RETURN count(*) AS c"
@@ -140,6 +142,63 @@ def test_fulltext_index(social):
         "YIELD node, score RETURN node.name AS n, score")
     got = [(r["n"], r["score"]) for r in hits.collect()]
     assert got == [("Roi", 1.0)]
+
+
+FT_KEYS = ("CALL db.idx.fulltext.queryNodes('Part', $q) YIELD node "
+           "RETURN node.p_partkey AS k")
+
+
+def _ft_keys(g, q: str) -> list:
+    return sorted(r["k"] for r in g.query(FT_KEYS, {"q": q}).collect())
+
+
+@pytest.fixture()
+def ft_tpch(spark):
+    """A TPC-H graph of its own, with a fulltext index on Part names,
+    and the key and first word of one part."""
+    from redisgraph_spark import Graph
+    g = Graph.from_tpch(spark, SF_DIR)
+    g.query("CALL db.idx.fulltext.createNodeIndex('Part', 'p_name')")
+    part = g.query("MATCH (p:Part) RETURN p.p_partkey AS k, "
+                   "p.p_name AS name ORDER BY k LIMIT 1").collect()[0]
+    return g, part["k"], part["name"].split()[0].lower()
+
+
+@pytest.mark.parametrize("write", [
+    "MATCH (p:Part {p_partkey: $k}) SET p.p_name = 'yakety'",
+    "MATCH (p:Part {p_partkey: $k}) REMOVE p:Part",
+    "MATCH (p:Part {p_partkey: $k}) DETACH DELETE p"])
+def test_fulltext_index_follows_node_writes(ft_tpch, write):
+    """A write that replaces an indexed label's node table rebuilds its
+    index, as RedisGraph keeps its RediSearch indexes current."""
+    g, k, word = ft_tpch
+    assert k in _ft_keys(g, word)
+    g.query(write, {"k": k})
+    assert k not in _ft_keys(g, word)
+    assert _ft_keys(g, "yakety") == ([k] if "yakety" in write else [])
+
+
+def test_fulltext_index_follows_create(ft_tpch):
+    g = ft_tpch[0]
+    assert _ft_keys(g, "zebra") == []
+    g.query("CREATE (:Part {p_partkey: 999999, p_name: 'zebra quux'})")
+    assert _ft_keys(g, "zebra") == _ft_keys(g, "zebra quux") == [999999]
+
+
+def test_fulltext_index_timed_out_write_keeps_old_index(ft_tpch):
+    """A TIMEOUT rolls the rebuilt index back with the tables."""
+    from redisgraph_spark.graph.graph import QueryTimeoutError
+    g, k, word = ft_tpch
+    index = g.fulltext._index["Part"]
+    g.config_set("TIMEOUT", 1)
+    try:
+        with pytest.raises(QueryTimeoutError):
+            g.query("MATCH (p:Part {p_partkey: $k}) "
+                    "SET p.p_name = 'yakety'", {"k": k})
+    finally:
+        g.config_set("TIMEOUT", 0)
+    assert g.fulltext._index["Part"] is index
+    assert k in _ft_keys(g, word) and _ft_keys(g, "yakety") == []
 
 
 def _ft_fixture(spark):

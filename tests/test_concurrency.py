@@ -271,3 +271,48 @@ def test_threads_race_first_promotion(cached_graph):
     assert got == want and any(want.values())
     assert [t.physical for key, t in g._plan_cache.templates.items()
             if key[0] == q and key[3] == g._epoch][0]
+
+
+def test_threads_race_first_fulltext_promotion(fulltext_graph):
+    """Four threads bind fresh words into one fulltext skeleton at
+    once: one promotes its template while the others rebind the
+    analyzed plan; every answer is the planner's."""
+    import sys
+
+    from conftest import rows
+    from redisgraph_spark.cypher.parser import parse
+    from redisgraph_spark.planner.planner import CypherPlanner
+    q = ("CALL db.idx.fulltext.queryNodes('Part', $q) YIELD node, score "
+         "RETURN node.p_partkey AS k, score")
+    g = fulltext_graph
+    g.query(q, {"q": "small widget"})        # builds the template
+    adjs = ["red", "hot", "large", "blue"]
+    nouns = ["plate", "ring", "rod"]
+    words = [[f"{a} {n}" for n in nouns] for a in adjs]
+    want = {w: rows(CypherPlanner(g, {"q": w}).plan(parse(q)))
+            for ws in words for w in ws}
+    got: dict = {}
+    errors: list[str] = []
+
+    def client(ws):
+        try:
+            for w in ws:
+                got[w] = rows(g.query(q, {"q": w}))
+        except Exception as ex:  # pragma: no cover
+            errors.append(repr(ex))
+
+    threads = [threading.Thread(target=client, args=(ws,)) for ws in words]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[:3]
+    assert got == want and sum(map(bool, want.values())) > 6
+    assert [t.physical for key, t in g._plan_cache.templates.items()
+            if key[0] == q and key[3] == g._epoch][0]

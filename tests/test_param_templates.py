@@ -9,7 +9,9 @@ store no template and answer as before. Part 3: the first rebind
 promotes a template, and later binds run its executed plan; each such
 answer must equal a fresh plan too, a shape the guard refuses must stay
 analysed-only, and the promoted run must compose, explain, profile and
-time out like the plan it stands for.
+time out like the plan it stands for. Part 4: a fulltext query
+parameter is keyed by its RediSearch skeleton and its words rebind;
+each bind must equal a fresh plan too.
 """
 
 import math
@@ -17,13 +19,11 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from redisgraph_spark import Graph
 from redisgraph_spark.cypher.parser import parse
+from redisgraph_spark.functions.fulltext import fill, parse_query, skeleton
 from redisgraph_spark.graph.templates import (PlanTemplate, _sentinel,
                                               param_shape)
 from redisgraph_spark.planner.planner import CypherPlanner
-
-from conftest import SF_DIR
 
 TEMPLATED = {
     "node": ("MATCH (c:Customer {c_custkey: $k}) "
@@ -65,8 +65,6 @@ VALUE_DEPENDENT = [
      f"WHERE c.c_custkey <> {_sentinel('i32', 0)} RETURN c.c_name AS n",
      {"k": 1}),
 ]
-FULLTEXT = ("CALL db.idx.fulltext.queryNodes('Part', $q) YIELD node "
-            "RETURN node.p_partkey AS k", {"q": "widget"})
 
 
 def _rows(df):
@@ -110,15 +108,6 @@ def test_value_dependent_plans_per_request(graph, text, params):
     ref = _fresh(graph, text, params)
     assert df.schema == ref.schema
     assert _rows(df) == _rows(ref)
-
-
-def test_fulltext_plans_per_request(spark):
-    g = Graph.from_tpch(spark, SF_DIR)   # the index is this instance's
-    g.query("CALL db.idx.fulltext.createNodeIndex('Part', 'p_name')")
-    text, params = FULLTEXT
-    df, outcome = g._query(text, params)
-    assert outcome == "plan" and _templates(g, text) == [None]
-    assert _rows(df) == _rows(_fresh(g, text, params)) != []
 
 
 # ------------------------------------------------------------ promotion
@@ -304,3 +293,133 @@ def test_lowering_plan_cache_size_shrinks_both_lrus(social):
     social.query("MATCH (p:person {age: $a}) RETURN count(*) AS c",
                  {"a": 30})
     assert len(cache) <= 2 and len(cache.templates) <= 2
+
+
+# ------------------------------------------------------------- fulltext
+# per grammar shape, queries of one skeleton with other words; Part
+# names are "adjective noun" pairs over a 16-word vocabulary
+FT_QUERY = ("CALL db.idx.fulltext.queryNodes('Part', $q) YIELD node, score "
+            "RETURN node.p_partkey AS k, score")
+FT_SHAPES = {
+    "term": ["widget", "gear", "bolt", "nosuchword"],
+    "and": ["small widget", "red plate", "hot ring", "old rod"],
+    "or": ["widget|gear", "red|blue", "rod|ring", "plate|nosuchword"],
+    "not": ["widget -small", "plate -red", "ring -hot", "rod -old"],
+    "phrase": ['"small widget"', '"red plate"', '"hot ring"',
+               '"widget small"'],
+    "prefix": ["wid*", "gea*", "pl*", "r*"],
+    "fuzzy": ["%widgit%", "%bolz%", "%gaer%", "%rong%"],
+    "optional": ["bolt ~red", "widget ~small", "ring ~hot", "rod ~old"],
+    "field": ["@p_name:widget", "@p_name:gear", "@p_name:bolt",
+              "@p_name:rod"],
+    "hyphen": ["small-widget", "red-plate", "hot-ring", "old-rod"],
+    "repeat": ["widget widget", "red red", "gear gear", "hot hot"],
+}
+# levenshtein wraps the fuzzy word: the guard keeps it analyzed-only
+FT_REFUSED = {"fuzzy"}
+FT_PER_REQUEST = [
+    # $q is used outside queryNodes too
+    ("CALL db.idx.fulltext.queryNodes('Part', $q) YIELD node "
+     "RETURN node.p_partkey AS k, $q AS q", {"q": "small widget"}),
+    ("CALL db.idx.fulltext.queryNodes('Part', $q) YIELD node "
+     "WHERE node.p_name <> $q RETURN node.p_partkey AS k",
+     {"q": "widget"}),
+    # no words: nothing to rebind
+    (FT_QUERY, {"q": ""}),
+    (FT_QUERY, {"q": "!! ,"}),
+    (FT_QUERY, {"q": None}),
+]
+
+
+@pytest.mark.parametrize("text", sorted(
+    {q for qs in FT_SHAPES.values() for q in qs}
+    | {"", "!! ,", "a|b c -(d e)", '@f:"x y" ~z* -%w%'}))
+def test_fill_of_skeleton_is_the_parse(text):
+    shape, words = skeleton(text)
+    assert fill(shape, words) == parse_query(text)
+
+
+@pytest.mark.parametrize("shape", sorted(FT_SHAPES))
+def test_fulltext_binds_match_fresh_plan(fulltext_graph, shape):
+    g, queries = fulltext_graph, FT_SHAPES[shape]
+    assert len({repr(skeleton(q)[0]) for q in queries}) == 1
+    answers = []
+    for i, q in enumerate(queries):
+        df, outcome = g._query(FT_QUERY, {"q": q})
+        assert outcome == ("plan" if i == 0 else "rebind"), q
+        assert _ran(df) == (i >= 2 and shape not in FT_REFUSED), q
+        ref = _fresh(g, FT_QUERY, {"q": q})
+        assert df.schema == ref.schema, q
+        assert _rows(df) == _rows(ref), q
+        answers.append(_rows(df))
+    got = _templates(g, FT_QUERY)
+    assert len(got) == 1 and isinstance(got[0], PlanTemplate)
+    assert got[0].physical is not (shape in FT_REFUSED)
+    assert any(answers)
+
+
+def test_fulltext_skeletons_key_templates(fulltext_graph):
+    g = fulltext_graph
+    for q in ("small widget", "red plate", "widget|gear", "red|blue"):
+        assert _rows(g.query(FT_QUERY, {"q": q})) == \
+            _rows(_fresh(g, FT_QUERY, {"q": q}))
+    got = _templates(g, FT_QUERY)
+    assert len(got) == 2 and all(isinstance(t, PlanTemplate) for t in got)
+
+
+def test_fulltext_plans_per_request(fulltext_graph):
+    """A query parameter used elsewhere too, or one without words,
+    stores no template and answers as a fresh plan does."""
+    g = fulltext_graph
+    for text, params in FT_PER_REQUEST:
+        df, outcome = g._query(text, params)
+        assert outcome == "plan", params
+        assert not any(isinstance(t, PlanTemplate)
+                       for t in _templates(g, text)), params
+        ref = _fresh(g, text, params)
+        assert df.schema == ref.schema, params
+        assert _rows(df) == _rows(ref), params
+        # the queries without words match nothing
+        assert bool(_rows(df)) == (text != FT_QUERY), params
+
+
+def test_fulltext_bind_job_count(spark, fulltext_graph):
+    """Promoted, an "adjective noun" query runs 3 jobs: the second
+    term's broadcast, the sort's range sample and the collect; the
+    Part broadcast is held."""
+    g = fulltext_graph
+    for q in ("small widget", "red plate"):
+        g.query(FT_QUERY, {"q": q})
+    assert _jobs(spark, lambda: g.query(
+        FT_QUERY, {"q": "hot ring"}).collect()) == 3
+
+
+def test_explain_and_profile_of_fulltext_template(fulltext_graph):
+    g = fulltext_graph
+    for q in ("small widget", "red plate"):
+        g.query(FT_QUERY, {"q": q})
+    assert _ran(g.query(FT_QUERY, {"q": "hot ring"}))
+    plan = g.explain(FT_QUERY, {"q": "hot ring"})
+    assert "BroadcastHashJoin" in plan and "HashAggregate" in plan
+    assert "hot" in plan and "rg-param" not in plan
+    want = g.query(FT_QUERY, {"q": "old rod"}).count()
+    prof = g.profile(FT_QUERY, {"q": "old rod"})
+    assert prof["rows"] == want > 0 and prof["plan_cache"] == "rebind"
+    ops = {o["op"] for o in prof["ops"]}
+    assert {"BroadcastHashJoin", "HashAggregate"} <= ops
+
+
+def test_timeout_in_fulltext_bind(fulltext_graph):
+    from redisgraph_spark.graph.graph import QueryTimeoutError
+    g = fulltext_graph
+    for q in ("small widget", "red plate"):
+        g.query(FT_QUERY, {"q": q})
+    g.config_set("TIMEOUT", 1)
+    try:
+        with pytest.raises(QueryTimeoutError):
+            g.query(FT_QUERY, {"q": "hot ring"})
+    finally:
+        g.config_set("TIMEOUT", 0)
+    df, outcome = g._query(FT_QUERY, {"q": "hot ring"})
+    assert outcome == "rebind" and _ran(df)
+    assert _rows(df) == _rows(_fresh(g, FT_QUERY, {"q": "hot ring"})) != []
