@@ -150,6 +150,15 @@ def is_write_ast(ast) -> bool:
         for part in ast.parts for c in part.clauses)
 
 
+def _replaced(before: tuple, after: tuple) -> bool:
+    """Whether any table dict in ``after`` differs from its snapshot in
+    ``before``: an entry added, dropped or swapped for another
+    DataFrame."""
+    return any(a.keys() != b.keys()
+               or any(a[k] is not v for k, v in b.items())
+               for b, a in zip(before, after))
+
+
 def _merge_schemas(tables: Mapping[str, DataFrame],
                    internal: set[str]) -> list[tuple[str, T.DataType]]:
     """Union of property columns across tables, first-seen order.
@@ -645,10 +654,16 @@ class Graph:
         request. From a template's second rebind on, the request runs
         the template's executed plan with its own literals: the
         broadcasts that do not depend on a parameter are built once,
-        and the ones that do run here, inside ``query`` and under
-        TIMEOUT. The DataFrame returned then scans that run's RDD; it
-        composes like any other, and ``explain``/``profile`` show the
-        real plan. Any mutation bumps ``_version`` and invalidates both.
+        and each join with a parameter on one side only broadcasts the
+        other side, so a lookup is one job at collect. A broadcast that
+        still depends on a parameter (its join has parameters on both
+        sides, as a fulltext AND's second term has, or its other side
+        does not fit the held budget) runs here, inside ``query`` and
+        under TIMEOUT. The DataFrame returned then scans that run's
+        RDD; it composes like any other, and ``explain``/``profile``
+        show the real plan. Any write invalidates both; one that
+        replaced a table also bumps ``_version``, which retires the
+        warm adjacency and counts.
         """
         return self._query(cypher, params)[0]
 
@@ -680,8 +695,8 @@ class Graph:
             self._log_query(cypher, _time.time() - t0, "hit")
             return cached, "hit"
         ast = parse(cypher)
-        # write CALLs (fulltext DDL) count as writes: they must bump the
-        # version so cached queryNodes plans on the old index invalidate
+        # write CALLs (fulltext DDL) count as writes: they must retire
+        # the cached queryNodes plans on the old index
         is_write = is_write_ast(ast)
         # N-readers/1-writer per graph (reference
         # _Graph_AcquireWriteLock, src/graph/graph.h:85-101): planning
@@ -691,6 +706,8 @@ class Graph:
         lock = self._rw.write() if is_write else self._rw.read()
         run = None
         with lock:
+            tables = is_write and (dict(self.node_tables),
+                                   dict(self.edge_tables))
             # a template binds each fulltext query's words (expand)
             bound = params if is_write else expand(ast, params)
             template, built = (None, False) if is_write else \
@@ -711,12 +728,16 @@ class Graph:
             # (≈ resultset_statistics.h:12-20, returned out-of-band)
             self.last_stats = dict(stats)
             if is_write:
-                self._version += 1
+                # the warm adjacency and the counts are keyed by
+                # _version: a write that replaced no table (fulltext
+                # DDL) keeps them and retires only the cached plans
+                if _replaced(tables, (self.node_tables, self.edge_tables)):
+                    self._version += 1
                 self._invalidate_plans()
         if run is not None:
-            # the plan's key-dependent broadcast jobs run here, outside
-            # the read lock, over the tables it was planned on (as a
-            # returned DataFrame's own collect always has)
+            # any key-dependent broadcast job the plan kept runs here,
+            # outside the read lock, over the tables it was planned on
+            # (as a returned DataFrame's own collect always has)
             df = self._timed(run, cypher, undo=False)
         if not is_write and exact:
             with self._cache_mu:

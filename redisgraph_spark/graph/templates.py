@@ -24,19 +24,26 @@ A plan becomes a template only if planning
 Any other shape is remembered as one that plans per request, as if
 templates did not exist.
 
-The first rebind promotes the template (``_promote``): it keeps the
+The first rebind promotes the template (``_promote``): it keeps an
 executed ``SparkPlan`` of the sentinel plan too. Each later request swaps
 the sentinels in that plan, clones it (no code-generating node may serve
-two requests) and runs it, so Catalyst, physical planning and every
-broadcast whose subtree holds no sentinel are paid once per shape. Those
-key-independent broadcasts are built at promotion and shared by every
-request, as Pregelix keeps the static relation resident and streams only
-what changes. Their bytes count against one budget per plan cache,
-``spark.sql.autoBroadcastJoinThreshold``; past it the least recently run
-promoted template goes back to rebinding its analyzed plan. A template
-is promoted only if ``_promote``'s guard shows that the swap gives the
-plan the optimizer would build for the request's values; otherwise it
-stays analyzed-only.
+two requests) and runs it, so Catalyst, physical planning, code
+generation and every broadcast whose subtree holds no sentinel are paid
+once per shape. Those key-independent broadcasts are built at promotion
+and shared by every request, as Pregelix keeps the static relation
+resident and streams only what changes. Promotion applies that rule to
+every join with sentinels on one side only: it plans the join to
+broadcast the other side and stream the keyed one (``_flipped``), so a
+lookup runs as one job. A request swaps each number in as
+``CAST('<value>' AS <type>)``: generated code reads that string from the
+plan's references, not from its source, so the classes compiled for one
+key serve every key. The held bytes count against one budget per plan
+cache, ``spark.sql.autoBroadcastJoinThreshold``: a flip is made only
+while the free sides fit in what is left of it, and past the budget the
+least recently run promoted template goes back to rebinding its analyzed
+plan. A template is promoted only if ``_promote``'s guard shows that the
+swap gives the plan the optimizer would build for the request's values;
+otherwise it stays analyzed-only.
 """
 
 from __future__ import annotations
@@ -44,6 +51,7 @@ from __future__ import annotations
 import dataclasses
 import itertools
 import json
+import math
 import threading
 import weakref
 from collections import Counter
@@ -74,6 +82,13 @@ _COMPARISONS = frozenset(
 _NULL_TESTS = frozenset(["IsNull", "IsNotNull", "IsNaN"])
 # the numeric widenings the swap covers (see ``_forms``)
 _WIDER = {"integer": ("long", "double"), "long": ("double",)}
+# per numeric kind, the SQL types of its forms, in ``_forms`` order
+_SQL_TYPES = {"i32": ("INT", "BIGINT", "DOUBLE"), "i64": ("BIGINT", "DOUBLE"),
+              "float": ("DOUBLE",)}
+# join types that may build (broadcast) their left / right child
+_BUILDS = (frozenset(["Inner", "Cross", "RightOuter"]),
+           frozenset(["Inner", "Cross", "LeftOuter", "LeftSemi", "LeftAnti",
+                      "ExistenceJoin"]))
 # executed-plan nodes a per-request swap cannot reach or must not
 # share: folded inline VALUES, and exchanges reused across the plan
 _UNSWAPPABLE = frozenset(["LocalTableScan", "ReusedExchange"])
@@ -186,6 +201,11 @@ def _sentinel_params(ast, params: dict) -> SentinelParams | None:
     return SentinelParams(values, names)
 
 
+def _module(package, name: str):
+    """A Scala object: the MODULE$ of class ``name`` in ``package``."""
+    return getattr(getattr(package, name), "MODULE$")
+
+
 def _jvm(spark) -> SimpleNamespace:
     """JVM entry points, resolved once per JVM: every py4j attribute
     lookup is a blocking round trip."""
@@ -193,29 +213,46 @@ def _jvm(spark) -> SimpleNamespace:
     h = _HANDLES.get(jvm)
     if h is None:
         sql = jvm.org.apache.spark.sql
+        logical = sql.catalyst.plans.logical
         h = _HANDLES[jvm] = SimpleNamespace(
-            literal=getattr(getattr(sql.catalyst.expressions, "Literal$"),
-                            "MODULE$").apply,
-            parse=getattr(getattr(sql.catalyst.parser,
-                                  "CatalystSqlParser$"),
-                          "MODULE$").parseExpression,
+            literal=_module(sql.catalyst.expressions, "Literal$").apply,
+            parse=_module(sql.catalyst.parser,
+                          "CatalystSqlParser$").parseExpression,
             to_scala_map=jvm.org.apache.spark.api.python.PythonUtils
             .toScalaMap,
             of_rows=sql.classic.Dataset.ofRows,
             set_active=sql.classic.SparkSession.setActiveSession,
-            reused=sql.execution.exchange.ReusedExchangeExec)
+            reused=sql.execution.exchange.ReusedExchangeExec,
+            join=logical.Join, join_hint=logical.JoinHint,
+            broadcast=jvm.scala.Some(logical.HintInfo(jvm.scala.Some(
+                _module(logical, "BROADCAST$")))),
+            no_hint=_module(jvm.scala, "None$"),
+            join_pattern=jvm.org.apache.spark.sql.catalyst.trees.TreePattern
+            .JOIN(),
+            physical=_module(sql.execution, "QueryExecution$")
+            .prepareExecutedPlan)
     return h
 
 
-def _forms(h, kind: str, v) -> list:
+def _forms(h, kind: str, v, cast: bool = False) -> list:
     """The literals type coercion makes of a parameter value in an
     optimized plan: its own, and for an int also the bigint and the
-    double it widens to (``_WIDER``)."""
-    forms = [h.literal(v)]
-    if kind == "i32":
-        forms.append(h.parse(f"{v}L"))
-    if kind in ("i32", "i64"):
-        forms.append(h.literal(float(v)))
+    double it widens to (``_WIDER``). With ``cast``, each finite
+    numeric form is ``CAST('<repr>' AS <type>)`` instead, the same
+    value: generated code reads a string literal from the plan's
+    references rather than from its source, so one compiled class
+    serves every value."""
+    if kind == "str":
+        return [h.literal(v)]
+    forms = []
+    for typ in _SQL_TYPES[kind]:
+        x = float(v) if typ == "DOUBLE" else v
+        if cast and x not in (math.inf, -math.inf):
+            forms.append(h.parse(f"CAST('{x!r}' AS {typ})"))
+        elif typ == "BIGINT" and kind == "i32":
+            forms.append(h.parse(f"{x}L"))
+        else:
+            forms.append(h.literal(x))
     return forms
 
 
@@ -256,7 +293,8 @@ class PlanTemplate:
         if phys is None and self._promoting.acquire(blocking=False):
             try:
                 if self.physical is None:
-                    self.physical = _promote(spark, self) or False
+                    self.physical = _promote(spark, self,
+                                             _room(cache, spark)) or False
                     if self.physical:
                         _hold(cache, self, spark)
             finally:
@@ -277,12 +315,13 @@ class PlanTemplate:
             cache.held.pop(self, None)
 
 
-def _swap(h, forms: dict, kinds: dict, values: dict):
+def _swap(h, forms: dict, kinds: dict, values: dict, cast: bool = False):
     """Scala Map from each sentinel form in ``forms`` to the same form
-    of the parameter's value in ``values``."""
+    of the parameter's value in ``values`` (``_forms``' cast form with
+    ``cast``)."""
     return h.to_scala_map({
         s: v for n, fs in forms.items()
-        for s, v in zip(fs, _forms(h, kinds[n], values[n]))})
+        for s, v in zip(fs, _forms(h, kinds[n], values[n], cast))})
 
 
 class _Physical:
@@ -301,7 +340,7 @@ class _Physical:
         # plan nodes capture the thread's active session when built
         h.set_active(spark._jsparkSession)
         return self.plan.transformAllExpressions(
-            _swap(h, self.forms, self.kinds, params)).clone()
+            _swap(h, self.forms, self.kinds, params, cast=True)).clone()
 
     def runner(self, spark, params: dict):
         """Swap and clone now (under the caller's read lock); the thunk
@@ -400,15 +439,64 @@ def _walk(node, held: list, swap) -> bool:
                for i in range(kids.size()))
 
 
-def _promote(spark, t: PlanTemplate) -> _Physical | None:
+def _side_bytes(h, jss, side, room: int) -> int:
+    """Bytes a broadcast of ``side`` may take: Catalyst's size, except
+    that Catalyst sizes a join as the product of its sides; a side with
+    a join in it that way over ``room`` is counted instead (one job) and
+    sized as Catalyst sizes a row (8 bytes plus each column's default
+    size)."""
+    size = int(side.stats().sizeInBytes())
+    if size <= room or not side.containsPattern(h.join_pattern):
+        return size
+    return h.of_rows(jss, side).count() * (8 + side.schema().defaultSize())
+
+
+def _flipped(h, jss, plan, swap, room: int | None):
+    """The optimized ``plan`` with each join that has sentinels (what
+    ``swap`` changes) on exactly one side hinted to broadcast its other,
+    key-free side and to stream the keyed one; a hint on the keyed side
+    is dropped. None when no join can be flipped so, or when the free
+    sides together may take more than ``room`` bytes (None: unsized),
+    so Spark's build sides stand."""
+    flips, total, todo = {}, 0, [plan]
+    while todo:
+        node = todo.pop()
+        kids = node.children()
+        kids = [kids.apply(i) for i in range(kids.size())]
+        if node.nodeName() == "Join":
+            keyed = [not k.transformAllExpressions(swap).fastEquals(k)
+                     for k in kids]
+            free = keyed.index(False) if sum(keyed) == 1 else None
+            if free is not None and \
+                    node.joinType().toString().split("(")[0] in _BUILDS[free]:
+                flips[node] = free
+                if room is not None and total <= room:
+                    total += _side_bytes(h, jss, kids[free], room - total)
+                kids = [kids[1 - free]]
+        todo.extend(kids)
+    if not flips or (room is not None and total > room):
+        return None
+    hints = (h.broadcast, h.no_hint)
+    return plan.transformDown(h.to_scala_map({
+        j: h.join(j.left(), j.right(), j.joinType(), j.condition(),
+                  h.join_hint(hints[free], hints[1 - free]))
+        for j, free in flips.items()}))
+
+
+def _promote(spark, t: PlanTemplate, room: int | None) -> _Physical | None:
     """The template's executed plan ready to run per request, with its
     key-independent broadcasts built, or None when the guard fails.
-    The guard, besides ``_contexts_ok``: the plan is not adaptive
-    (above the adaptive gate nothing changes); a sentinel set A
-    (the template's) and a second set B both survive into their
-    executed plans; A's executed plan swapped to B ``sameResult``s
-    B's, so no literal was derived from a sentinel and none became a
-    plan field; and no node the swap cannot serve."""
+    While the free sides fit in ``room`` bytes (None: keep Spark's
+    build sides), each join with sentinels on one side only broadcasts
+    the other (``_flipped``), so a request builds nothing and streams
+    its keyed side; held bytes past ``room`` once built undo that. The
+    guard, besides ``_contexts_ok``: the plan is not adaptive (above
+    the adaptive gate nothing changes); a sentinel set A (the
+    template's) and a second set B both survive into their executed
+    plans, each planned from its own optimized plan; A's executed plan
+    swapped to B ``sameResult``s B's, so no literal was derived from a
+    sentinel and none became a plan field; and no node the swap cannot
+    serve."""
     h = _jvm(spark)
     jss = spark._jsparkSession
     h.set_active(jss)
@@ -418,43 +506,71 @@ def _promote(spark, t: PlanTemplate) -> _Physical | None:
     try:
         if not _contexts_ok(t.plan.toJSON(), t.values):
             return None
-        plan = h.of_rows(jss, t.plan).queryExecution().executedPlan()
-        if plan.nodeName() == "AdaptiveSparkPlan" or \
-                not plan.subqueriesAll().isEmpty():
-            return None
         forms = {n: _forms(h, kinds[n], v) for n, v in t.values.items()}
         flat = [f for fs in forms.values() for f in fs]
         if len(dict.fromkeys(flat)) != len(flat):
             return None            # two sentinels share a widened form
+        to_second = _swap(h, forms, kinds, second)
+        qe = h.of_rows(jss, t.plan).queryExecution()
+        b_qe = h.of_rows(jss, t._bound(h, second)).queryExecution()
+        hinted = b_hinted = None
+        # an adaptive plan stays as Spark plans it
+        if room is not None and \
+                not jss.sessionState().conf().adaptiveExecutionEnabled():
+            hinted = _flipped(h, jss, qe.optimizedPlan(), to_second, room)
+        if hinted is not None:
+            to_first = _swap(h, {n: _forms(h, kinds[n], v)
+                                 for n, v in second.items()}, kinds, t.values)
+            b_hinted = _flipped(h, jss, b_qe.optimizedPlan(), to_first, None)
+        flip = b_hinted is not None
+        plan = h.physical(jss, hinted) if flip else qe.executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan" or \
+                not plan.subqueriesAll().isEmpty():
+            return None
+        b_plan = h.physical(jss, b_hinted) if flip else b_qe.executedPlan()
         for n in forms:            # every sentinel reaches the plan
             if plan.transformAllExpressions(_swap(
                     h, {n: forms[n]}, kinds, second)).fastEquals(plan):
                 return None
-        to_second = _swap(h, forms, kinds, second)
-        b_plan = h.of_rows(jss, t._bound(h, second)).queryExecution() \
-            .executedPlan()
         if not plan.transformAllExpressions(to_second).sameResult(b_plan):
             return None
         held: list = []
         if not _walk(plan, held, to_second):
             return None
-        for b in held:             # built once, outside any TIMEOUT group
+        # built once, outside any TIMEOUT group: preparing starts every
+        # build at once, then each is awaited
+        for b in held:
+            b.prepare()
+        for b in held:
             b.executeBroadcast()
+        nbytes = sum(b.metrics().apply("dataSize").value() for b in held)
+        if flip and nbytes > room:
+            return _promote(spark, t, None)
         return _Physical(
             plan.transformDown(h.to_scala_map(
                 {b: h.reused(b.output(), b) for b in held})),
-            forms, kinds, t.plan.schema(),
-            sum(b.metrics().apply("dataSize").value() for b in held))
+            forms, kinds, t.plan.schema(), nbytes)
     except Py4JJavaError:
         return None
+
+
+def _budget(spark) -> int:
+    """The held-bytes budget of one plan cache."""
+    return max(0, spark._jsparkSession.sessionState().conf()
+               .autoBroadcastJoinThreshold())
+
+
+def _room(cache, spark) -> int:
+    """What the cache's held-bytes budget has left."""
+    with cache.mu:
+        return _budget(spark) - sum(cache.held.values())
 
 
 def _hold(cache, t: PlanTemplate, spark) -> None:
     """Count a newly promoted template's held broadcasts against the
     cache's budget; past it, demote the least recently run ones (the
     new one last: alone over budget, it is demoted too)."""
-    budget = max(0, spark._jsparkSession.sessionState().conf()
-                 .autoBroadcastJoinThreshold())
+    budget = _budget(spark)
     with cache.mu:
         cache.held[t] = t.physical.nbytes
         over = []

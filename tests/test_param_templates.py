@@ -222,10 +222,12 @@ def _jobs(spark, fn) -> int:
 
 
 @pytest.mark.parametrize("shape,params,jobs", [
-    # the filtered Customer side is broadcast per request; Order is held
-    ("hop1", {"k": 10}, 2),
+    # PLACED and Order are held; the filtered Customer side streams
+    ("hop1", {"k": 10}, 1),
     # the distinct PLACED sources are held: only the count job is left
-    ("exists", {"seg": "BUILDING", "bal": 250.0}, 1)])
+    ("exists", {"seg": "BUILDING", "bal": 250.0}, 1),
+    # Customer-PLACED, CONTAINS and Part are held; the Order row streams
+    ("hop2", {"k": 32}, 1)])
 def test_promoted_bind_job_count(spark, cached_graph, shape, params, jobs):
     g, text = cached_graph, TEMPLATED[shape][0]
     g._invalidate_plans()
@@ -265,22 +267,156 @@ def test_explain_and_profile_of_promoted_shape(cached_graph):
         assert not any("ExistingRDD" in o["op"] for o in prof["ops"])
 
 
-def test_timeout_in_promoted_bind(cached_graph):
-    """A TIMEOUT during a promoted run (its key-dependent broadcast job
-    runs inside query) fails that query; the template keeps serving."""
+def test_timeout_in_promoted_bind(fulltext_graph):
+    """A TIMEOUT during a promoted run fails that query; the template
+    keeps serving. A lookup's promoted run starts no job inside query,
+    so this uses a fulltext OR, whose promoted run still starts a
+    key-dependent job there."""
     from redisgraph_spark.graph.graph import QueryTimeoutError
-    g, text = cached_graph, TEMPLATED["hop1"][0]
-    g._invalidate_plans()
-    _promoted(g, text, {"k": 4})
+    g = fulltext_graph
+    for q in ("widget|gear", "red|blue"):
+        g.query(FT_QUERY, {"q": q})
     g.config_set("TIMEOUT", 1)
     try:
         with pytest.raises(QueryTimeoutError):
-            g.query(text, {"k": 9})
+            g.query(FT_QUERY, {"q": "rod|ring"})
     finally:
         g.config_set("TIMEOUT", 0)
-    df, outcome = g._query(text, {"k": 9})
+    df, outcome = g._query(FT_QUERY, {"q": "rod|ring"})
     assert outcome == "rebind" and _ran(df)
-    assert _rows(df) == _rows(_fresh(g, text, {"k": 9})) != []
+    assert _rows(df) == _rows(_fresh(g, FT_QUERY, {"q": "rod|ring"})) != []
+
+
+def _compiles(spark) -> int:
+    """Classes Spark's code generator has compiled in this JVM."""
+    return spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME().getCount()
+
+
+FRESH = {
+    "node": [{"k": k} for k in (1, 2, 3, 11, 12, 13)],
+    "hop1": [{"k": k} for k in (1, 2, 3, 11, 12, 13)],
+    "hop2": [{"k": k} for k in (1, 2, 3, 33, 34, 35)],
+    "exists": [{"seg": s, "bal": b} for s, b in (
+        ("BUILDING", 1.5), ("MACHINERY", 2.5), ("HOUSEHOLD", 3.5),
+        ("AUTOMOBILE", 10.25), ("FURNITURE", -20.75), ("BUILDING", 99.0))],
+}
+
+
+@pytest.mark.parametrize("shape", sorted(FRESH))
+def test_promoted_binds_compile_nothing(spark, cached_graph, shape):
+    """A promoted bind swaps each number in as a cast of its string,
+    which generated code reads from the plan's references: every fresh
+    key's code is the code of the last one, so nothing compiles."""
+    g, text = cached_graph, TEMPLATED[shape][0]
+    g._invalidate_plans()
+    binds = FRESH[shape]
+    # plan, promote, and the promoted plan's first run
+    for params in binds[:3]:
+        g.query(text, params).collect()
+    before = _compiles(spark)
+    for params in binds[3:]:
+        df = g.query(text, params)
+        assert _ran(df), params
+        df.collect()
+    assert _compiles(spark) == before
+
+
+BAL = "MATCH (c:Customer) WHERE c.c_acctbal >= $b RETURN count(*) AS n"
+# per kind and form: query, parameter, two promoting values, the
+# boundary values bound on the promoted plan
+BOUNDARY = {
+    "i32": (TEMPLATED["node"][0], "k", [1, 2],
+            [-(1 << 31), (1 << 31) - 1, -7, 0]),
+    "i64": (TEMPLATED["node"][0], "k", [1 << 40, 1 << 41],
+            [1 << 31, -(1 << 31) - 1, (1 << 63) - 1, -(1 << 63)]),
+    "i32_double": (BAL, "b", [100, 200], [-(1 << 31), (1 << 31) - 1, -7, 0]),
+    "float": (BAL, "b", [1.5, 2.5],
+              [-0.0, 0.0, 1e-300, -1e-300, 5e-324, -500.25,
+               math.inf, -math.inf]),
+}
+
+
+@pytest.mark.parametrize("name", sorted(BOUNDARY))
+def test_promoted_boundary_values_match_fresh_plan(cached_graph, name):
+    g = cached_graph
+    text, n, promoting, values = BOUNDARY[name]
+    g._invalidate_plans()
+    for v in promoting:
+        g.query(text, {n: v})
+    for v in values:
+        df = g.query(text, {n: v})
+        assert _ran(df), v
+        ref = _fresh(g, text, {n: v})
+        assert df.schema == ref.schema, v
+        assert _rows(df) == _rows(ref), v
+
+
+def test_flip_past_budget_keeps_spark_build_sides(spark, cached_graph):
+    """Held bytes past what the budget has left undo the flip: Spark's
+    build sides stand (hop1 broadcasts its keyed Customer side per
+    request again) and the template stays promoted."""
+    from redisgraph_spark.graph import templates as TPL
+    g, text = cached_graph, TEMPLATED["hop1"][0]
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    g._plan_cache.clear()
+    t = _promoted(g, text, {"k": 4})
+    unflipped = TPL._promote(spark, t, None).nbytes
+    assert 0 < unflipped < t.physical.nbytes
+    g._plan_cache.clear()
+    spark.conf.set(key, str(unflipped))
+    try:
+        t = _promoted(g, text, {"k": 4})
+        assert t.physical.nbytes == unflipped
+        assert _jobs(spark, lambda: g.query(text, {"k": 10}).collect()) == 2
+        df = g.query(text, {"k": 9})
+        assert _ran(df) and t.physical
+        assert _rows(df) == _rows(_fresh(g, text, {"k": 9})) != []
+    finally:
+        spark.conf.set(key, before)
+        g._plan_cache.clear()
+
+
+def test_second_sentinel_set_is_planned_on_its_own(cached_graph,
+                                                   monkeypatch):
+    """The guard's B plan is flipped on B's own optimized plan, not
+    copied from A's: each plan the flip sees holds its own sentinels
+    only."""
+    from redisgraph_spark.graph import templates as TPL
+    g, text = cached_graph, TEMPLATED["hop1"][0]
+    g._invalidate_plans()
+    seen = []
+    real = TPL._flipped
+
+    def spy(h, jss, plan, swap, room):
+        out = real(h, jss, plan, swap, room)
+        seen.append((plan.toString(), out is not None))
+        return out
+    monkeypatch.setattr(TPL, "_flipped", spy)
+    _promoted(g, text, {"k": 4})
+    a, b = (str(_sentinel("i32", i)) for i in (0, TPL._SECOND_SET))
+    assert [(a in p, b in p, flipped) for p, flipped in seen] == [
+        (True, False, True), (False, True, True)]
+
+
+def test_fulltext_ddl_keeps_warm_state(spark, cached_graph):
+    """Creating or dropping a fulltext index replaces no table: the
+    graph's version, and with it the warm adjacency and counts, stay,
+    so a var-length shape still gets a template."""
+    g = cached_graph
+    version = g._version
+    g.query("CALL db.idx.fulltext.createNodeIndex('Customer', 'c_name')")
+    try:
+        assert g._version == version
+        assert ("e", None, version) in g._count_cache
+        assert _jobs(spark, g.edge_count) == 0
+        g.query(VAR_LEN, {"k": 1})
+        assert any(isinstance(t, PlanTemplate)
+                   for t in _templates(g, VAR_LEN))
+    finally:
+        g.query("CALL db.idx.fulltext.drop('Customer')")
+    assert g._version == version
 
 
 def test_lowering_plan_cache_size_shrinks_both_lrus(social):
