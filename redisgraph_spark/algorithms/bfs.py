@@ -24,32 +24,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from redisgraph_spark.cypher import ast as A
-
 # edge-count bound exists via visited-set monotonicity; this caps runaway
 # unlimited BFS in local tests only
 MAX_LEVELS = 64
 
 
-def bfs_call(planner, ctx, clause) -> tuple[DataFrame, list[str]]:
-    """Plan ``CALL algo.BFS`` against the current context; returns the new
-    context DataFrame (input records inner-joined with yields) and the
-    default yield column names."""
+def bfs_call(planner, args) -> DataFrame:
+    """``CALL algo.BFS`` over ``args``: the source nodes' ``__root``
+    ids (one per input record), the max level and the reltype.
+    Returns ``(__root, nodes, edges)``, one row per root that reaches
+    anything."""
     from redisgraph_spark.planner.planner import PlanError
 
-    if len(clause.args) != 3:
+    if len(args) != 3:
         raise PlanError("algo.BFS expects (source, max_level, reltype)")
-    src_e, depth_e, rel_e = clause.args
-    if not isinstance(src_e, A.Variable) or src_e.name not in ctx.vars \
-            or ctx.vars[src_e.name].kind != "node":
+    roots, depth, rel = args
+    if not isinstance(roots, DataFrame):
         raise PlanError("algo.BFS source must be a bound node variable")
-    depth = planner._const_int(depth_e) or 0
-    if isinstance(rel_e, A.Parameter):
-        rel = planner.params[rel_e.name]
-    elif isinstance(rel_e, A.Literal):
-        rel = rel_e.value
-    else:
-        raise PlanError("algo.BFS reltype must be a literal or parameter")
+    if depth is not None and (not isinstance(depth, int)
+                              or isinstance(depth, bool)):
+        raise PlanError("algo.BFS max_level must be an integer")
+    depth = depth or 0
     if rel is not None and not isinstance(rel, str):
         raise PlanError("algo.BFS reltype must be a string or NULL")
 
@@ -59,8 +54,7 @@ def bfs_call(planner, ctx, clause) -> tuple[DataFrame, list[str]]:
         F.col("_src").alias("__p"), F.col("_dst").alias("__c"),
         F.col("_id").alias("__e"))
 
-    roots = ctx.df.select(F.col(f"{src_e.name}._id").alias("__root")) \
-        .dropDuplicates().localCheckpoint(eager=True)
+    roots = roots.dropDuplicates().localCheckpoint(eager=True)
 
     # visited: (root, nid); tree: (root, nid, eid) — the discovery edge
     visited = roots.select("__root", F.col("__root").alias("__nid"))
@@ -115,12 +109,7 @@ def bfs_call(planner, ctx, clause) -> tuple[DataFrame, list[str]]:
     packed = enriched.groupBy("__root").agg(
         F.array_sort(F.collect_list(
             F.struct("__nid", "__node", "__edge"))).alias("__res"))
-    packed = packed.select(
+    return packed.select(
         "__root",
         F.transform("__res", lambda x: x["__node"]).alias("nodes"),
         F.transform("__res", lambda x: x["__edge"]).alias("edges"))
-
-    out = ctx.df.join(
-        packed, F.col(f"{src_e.name}._id") == packed["__root"], "inner") \
-        .drop("__root")
-    return out, ["nodes", "edges"]

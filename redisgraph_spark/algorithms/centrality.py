@@ -83,53 +83,6 @@ def closeness(edges: DataFrame, source_ids, max_hops: int = MAX_HOPS,
         .alias("harmonic"))
 
 
-def closeness_call(planner, ctx, clause) -> tuple[DataFrame, list[str]]:
-    """Correlated ``CALL algo.closeness(n[, reltype[, maxHops]])`` with
-    a bound node-variable source: the per-row sources feed ONE
-    (root, node)-keyed multi-source BFS, joined back on the source id
-    — no driver loop (same vectorized shape as algo.BFS/algo.SSSP;
-    reference ProcedureCall is per-record, op_procedure_call.c)."""
-    from pyspark.sql import functions as F
-
-    from redisgraph_spark.cypher import ast as A
-    from redisgraph_spark.planner.planner import PlanError
-
-    src_e = clause.args[0]
-
-    def _lit(e, what):
-        if isinstance(e, A.Literal):
-            return e.value
-        if isinstance(e, A.Parameter):
-            return planner.params[e.name]
-        raise PlanError(f"algo.closeness {what} must be a literal or "
-                        f"parameter")
-
-    rel = _lit(clause.args[1], "reltype") if len(clause.args) > 1 \
-        else None
-    hops = _lit(clause.args[2], "max hops") if len(clause.args) > 2 \
-        else MAX_HOPS
-    if rel is not None and not isinstance(rel, str):
-        raise PlanError("algo.closeness reltype must be a string")
-    if not isinstance(hops, int) or isinstance(hops, bool) or hops < 1:
-        raise PlanError("algo.closeness max hops must be a positive "
-                        "int")
-    g = planner.graph
-    roots = ctx.df.select(F.col(f"{src_e.name}._id").alias("__root"))
-    cl = closeness(g.edges([rel] if rel else None)
-                   .select("_src", "_dst"), roots, max_hops=hops)
-    nodes = g.nodes(None)
-    node_struct = F.struct(*[F.col(c) for c in nodes.columns])
-    enriched = cl.withColumnRenamed("node", "__cl_id") \
-        .join(nodes, F.col("__cl_id") == nodes["_id"]) \
-        .select(F.col("__cl_id"), node_struct.alias("node"),
-                "reached", "closeness", "harmonic")
-    out = ctx.df.join(
-        enriched,
-        F.col(f"{src_e.name}._id") == enriched["__cl_id"], "inner") \
-        .drop("__cl_id")
-    return out, ["node", "reached", "closeness", "harmonic"]
-
-
 def betweenness(edges: DataFrame, source_ids: list[int] | None = None,
                 max_hops: int = MAX_HOPS, directed: bool = False,
                 grid: float = 1e6) -> DataFrame:

@@ -13,8 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from redisgraph_spark.cypher import ast as A
-
 
 def pagerank(nodes: DataFrame, edges: DataFrame, iterations: int = 20,
              damping: float = 0.85, tol: float = 1e-9,
@@ -175,48 +173,3 @@ def _pagerank_personalized(nodes: DataFrame, edges: DataFrame,
         if stats["delta"] is not None and stats["delta"] < tol:
             break
     return ranks.select("_id", "score")
-
-
-def pagerank_proc(planner, args: list[A.Expr]):
-    """CALL algo.pageRank(label, relType) YIELD node, score — signature
-    parity with proc_pagerank.c. Additive extension: the label argument
-    also accepts a LIST of labels (the reference's single-label
-    submatrix generalized to a label-set-induced subgraph — cross-label
-    relations like Nation→Region are otherwise unrankable, every edge
-    leaving the single label's node set)."""
-    g = planner.graph
-
-    def _s(e):
-        if isinstance(e, A.Literal):
-            return e.value
-        if isinstance(e, A.ListLiteral):
-            return [_s(x) for x in e.items]
-        if isinstance(e, A.Parameter):
-            return planner.params[e.name]
-        raise ValueError("algo.pageRank args must be literals")
-
-    label = _s(args[0]) if args else None
-    rel = _s(args[1]) if len(args) > 1 else None
-    sources = _s(args[2]) if len(args) > 2 else None
-    if sources is not None:
-        if isinstance(sources, int):
-            sources = [sources]
-        if (not isinstance(sources, list) or not sources
-                or not all(isinstance(s, int) for s in sources)):
-            raise ValueError(
-                "algo.pageRank: the optional third argument is a "
-                "non-empty source-node id (or list of ids) selecting "
-                "personalized PageRank")
-    if isinstance(label, list):
-        nodes = g.nodes(label)
-    else:
-        nodes = g.nodes([label] if label else None)
-    edges = g.edges([rel] if rel else None)
-    pr = pagerank(nodes.select("_id"), edges.select("_src", "_dst"),
-                  restart_ids=sources)
-    node_struct = nodes.select(
-        F.struct(*[F.col(c) for c in nodes.columns]).alias("node"),
-        F.col("_id").alias("__prid"))
-    out = pr.join(node_struct, pr["_id"] == F.col("__prid"), "inner") \
-        .select("node", "score")
-    return out, ["node", "score"]

@@ -129,59 +129,3 @@ def sssp_multi(edges: DataFrame, roots: DataFrame,
             .unionByName(improved).localCheckpoint(eager=True)
         frontier = improved
     return dist
-
-
-def sssp_call(planner, ctx, clause) -> tuple[DataFrame, list[str]]:
-    """Correlated ``CALL algo.SSSP(n[, reltype[, weight[, maxHops]]])``
-    with a bound node-variable source: ONE keyed multi-source job, the
-    per-record fan-out joined back on the source id (no driver loop —
-    reference ProcedureCall is per-record, op_procedure_call.c)."""
-    from redisgraph_spark.cypher import ast as A
-    from redisgraph_spark.planner.planner import PlanError
-
-    if not clause.args:
-        raise PlanError("algo.SSSP requires a source")
-    src_e = clause.args[0]
-    if not isinstance(src_e, A.Variable) or src_e.name not in ctx.vars \
-            or ctx.vars[src_e.name].kind != "node":
-        raise PlanError("algo.SSSP source must be a bound node variable "
-                        "or an integer node id")
-
-    def _lit(e, what):
-        if isinstance(e, A.Literal):
-            return e.value
-        if isinstance(e, A.Parameter):
-            return planner.params[e.name]
-        raise PlanError(f"algo.SSSP {what} must be a literal or parameter")
-
-    rel = _lit(clause.args[1], "reltype") if len(clause.args) > 1 else None
-    weight = _lit(clause.args[2], "weight") if len(clause.args) > 2 \
-        else None
-    hops = _lit(clause.args[3], "max hops") if len(clause.args) > 3 \
-        else MAX_HOPS
-    if rel is not None and not isinstance(rel, str):
-        raise PlanError("algo.sssp reltype must be a string or NULL")
-    if weight is not None and not isinstance(weight, str):
-        raise PlanError("algo.sssp weight property must be a string or "
-                        "NULL")
-    if not isinstance(hops, int) or isinstance(hops, bool) or hops < 1:
-        raise PlanError("algo.sssp max hops must be a positive int")
-    g = planner.graph
-    edges = g.edges([rel] if rel else None)
-    if weight is not None and weight not in edges.columns:
-        raise PlanError(f"algo.sssp: no edge property {weight!r} on the "
-                        "selected relation(s)")
-    roots = ctx.df.select(F.col(f"{src_e.name}._id").alias("__root")) \
-        .filter(F.col("__root").isNotNull()) \
-        .dropDuplicates().localCheckpoint(eager=True)
-    dist = sssp_multi(edges, roots, weight, max_hops=hops)
-    nodes = g.nodes(None)
-    node_struct = F.struct(*[F.col(c) for c in nodes.columns])
-    enriched = dist.withColumnRenamed("node", "__ss_id") \
-        .join(nodes, F.col("__ss_id") == nodes["_id"]) \
-        .select("__root", node_struct.alias("node"), "distance", "hops")
-    out = ctx.df.join(
-        enriched,
-        F.col(f"{src_e.name}._id") == enriched["__root"], "inner") \
-        .drop("__root")
-    return out, ["node", "distance", "hops"]

@@ -81,49 +81,3 @@ def random_walks(edges: DataFrame, start_ids, length: int = 5,
     return allsteps.select(F.col("__walk").alias("walk"),
                            F.col("__step").alias("step"),
                            F.col("__node").alias("node"))
-
-
-def walks_call(planner, ctx, clause):
-    """Correlated ``CALL algo.randomWalk(n[, reltype[, length[,
-    seed]]])`` with a bound node-variable start: the per-row starts
-    feed ONE walk-keyed stepper (cost ∝ starts × length), joined back
-    on the start id — no driver loop."""
-    from redisgraph_spark.cypher import ast as A
-    from redisgraph_spark.planner.planner import PlanError
-
-    src_e = clause.args[0]
-
-    def _lit(e, what):
-        if isinstance(e, A.Literal):
-            return e.value
-        if isinstance(e, A.Parameter):
-            return planner.params[e.name]
-        raise PlanError(f"algo.randomWalk {what} must be a literal or "
-                        f"parameter")
-
-    rel = None
-    length, seed = 5, 7
-    ints = []
-    for a in clause.args[1:]:
-        v = _lit(a, "option")
-        if isinstance(v, str):
-            rel = v
-        elif isinstance(v, int) and not isinstance(v, bool):
-            ints.append(v)
-        elif v is not None:
-            raise PlanError("algo.randomWalk options are an optional "
-                            "reltype, walk length, and seed")
-    if ints:
-        length = ints[0]
-    if len(ints) > 1:
-        seed = ints[1]
-    if length < 1:
-        raise PlanError("algo.randomWalk length must be >= 1")
-    g = planner.graph
-    starts = ctx.df.select(F.col(f"{src_e.name}._id").alias("__walk"))
-    wk = random_walks(g.edges([rel] if rel else None)
-                      .select("_src", "_dst"), starts,
-                      length=length, seed=seed)
-    out = ctx.df.join(
-        wk, F.col(f"{src_e.name}._id") == wk["walk"], "inner")
-    return out, ["walk", "step", "node"]

@@ -1,48 +1,52 @@
 """CALL procedures — the reference's UDTF-shaped extension point.
 
-Registry parity with ``/root/reference/src/procedures/procedure.c:27-42``:
-``db.labels``, ``db.relationshipTypes``, ``db.propertyKeys``,
-``db.indexes``, ``dbms.procedures``, ``algo.BFS``, ``algo.pageRank``,
-fulltext create/drop/query.
+``PROCS`` is the one registry of built-in procedures, as the
+reference's ``src/procedures/procedure.c:27-42`` is: each name maps to
+its default yield columns, its mode, its handler and whether it takes
+a bound node source per input row. The catalog procedures
+(``db.labels``, ``db.relationshipTypes``, ``db.propertyKeys``,
+``db.indexes``, ``dbms.procedures``) answer from Graph metadata (no
+scan). The fulltext ones (``db.idx.fulltext.createNodeIndex``,
+``db.idx.fulltext.drop``, ``db.idx.fulltext.queryNodes``) use
+``functions/fulltext.py``. The ``algo.*`` ones (BFS, pageRank, wcc,
+triangleCount, labelPropagation, kCore, SSSP, HITS, closeness,
+betweenness, randomWalk, nodeSimilarity) run the DataFrame-iterative
+kernels of ``redisgraph_spark.algorithms``.
 
-Catalog procedures answer from Graph metadata (no scan). Algorithms are
-DataFrame-iterative (``redisgraph_spark.algorithms``).
+``run_procedure`` binds a call's arguments (``bind``) and runs the
+handler; a handler returns its DataFrame, each yielded node as the
+node struct (``_with_nodes``). ``Graph.register_procedure`` adds
+lookup-table procedures beside these (``_run_custom``).
 """
 
 from __future__ import annotations
 
+from typing import Callable, NamedTuple
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from redisgraph_spark.algorithms.bfs import bfs_call
+from redisgraph_spark.algorithms.centrality import (MAX_HOPS, betweenness,
+                                                    closeness,
+                                                    node_similarity)
+from redisgraph_spark.algorithms.components import (
+    k_core, label_propagation, triangle_count, weakly_connected_components,
+    weakly_connected_components_star)
+from redisgraph_spark.algorithms.hits import hits
+from redisgraph_spark.algorithms.pagerank import pagerank
+from redisgraph_spark.algorithms.sssp import MAX_HOPS as SSSP_MAX_HOPS
+from redisgraph_spark.algorithms.sssp import sssp, sssp_multi
+from redisgraph_spark.algorithms.walks import random_walks
 from redisgraph_spark.cypher import ast as A
+from redisgraph_spark.session import inline_df
 
-PROCS = {
-    "db.labels": ("label",),
-    "db.relationshiptypes": ("relationshipType",),
-    "db.propertykeys": ("propertyKey",),
-    "db.indexes": ("type", "label", "properties"),
-    "dbms.procedures": ("name", "mode"),
-    "algo.pagerank": ("node", "score"),
-    "algo.bfs": ("nodes", "edges"),
-    "algo.wcc": ("node", "component"),
-    "algo.trianglecount": ("triangles",),
-    "algo.labelpropagation": ("node", "label"),
-    "algo.kcore": ("node",),
-    "algo.sssp": ("node", "distance", "hops"),
-    "algo.hits": ("node", "hub", "authority"),
-    "algo.closeness": ("node", "reached", "closeness", "harmonic"),
-    "algo.betweenness": ("node", "score"),
-    "algo.randomwalk": ("walk", "step", "node"),
-    "algo.nodesimilarity": ("node1", "node2", "intersection", "jaccard"),
-    "db.idx.fulltext.querynodes": ("node", "score"),
-    "db.idx.fulltext.createnodeindex": ("ok",),
-    "db.idx.fulltext.drop": ("ok",),
-}
 
-# Procedures that mutate graph/catalog state at plan time — callers
-# (Graph.query version bump, Graph.explain rollback, GRAPH.RO_QUERY
-# rejection) all consult this one set.
-WRITE_PROCS = {"db.idx.fulltext.createnodeindex", "db.idx.fulltext.drop"}
+class Proc(NamedTuple):
+    yields: tuple[str, ...]      # default YIELD columns, in order
+    mode: str                    # WRITE: mutates catalog state at plan time
+    handler: Callable            # (planner, bound args) -> DataFrame
+    per_row: bool = False        # takes a bound node source per input row
 
 
 def _cypher_type_ok(t: str, v) -> bool:
@@ -87,11 +91,47 @@ def _out_sql_type(t: str, values) -> str:
     return "string"
 
 
+def bind(planner, proc: str, e: A.Expr):
+    """The value of a procedure argument: a literal, a parameter, a
+    list of these or a negated number. A parameter is read through
+    ``planner.params[name]``, so a plan template that reads it plans
+    per request."""
+    from redisgraph_spark.planner.planner import PlanError
+    if isinstance(e, A.Literal):
+        return e.value
+    if isinstance(e, A.Parameter):
+        if e.name not in planner.params:
+            raise PlanError(f"Missing parameter `{e.name}` for call to "
+                            f"{proc} (ParameterMissing)")
+        return planner.params[e.name]
+    if isinstance(e, A.ListLiteral):
+        return [bind(planner, proc, x) for x in e.items]
+    if isinstance(e, A.Unary) and e.op == "-" \
+            and isinstance(e.operand, A.Literal) \
+            and isinstance(e.operand.value, (int, float)):
+        return -e.operand.value
+    raise PlanError(f"Procedure {proc} arguments must be literals or "
+                    f"parameters")
+
+
+def _with_nodes(g, df: DataFrame, col: str,
+                nodes: DataFrame | None = None) -> DataFrame:
+    """``df`` with its node-id column ``col`` replaced by the node's
+    struct in ``nodes`` (default: every node, as the unified struct);
+    an id with no node drops its row."""
+    nodes = g.nodes() if nodes is None else nodes
+    packed = nodes.select(
+        F.col("_id").alias("__nid"),
+        F.struct(*[F.col(c) for c in nodes.columns]).alias("__node"))
+    return df.join(packed, F.col(col) == F.col("__nid")).select(
+        *[F.col("__node").alias(c) if c == col else F.col(c)
+          for c in df.columns])
+
+
 def _run_custom(planner, clause: A.CallClause, spec: dict
                 ) -> tuple[DataFrame, list[str]]:
     """Execute a Graph.register_procedure lookup-table procedure."""
     from redisgraph_spark.planner.planner import PlanError
-    from redisgraph_spark.session import inline_df
     g = planner.graph
     decl_args = spec["args"]
     if clause.implicit:
@@ -110,23 +150,7 @@ def _run_custom(planner, clause: A.CallClause, spec: dict
                 f"Procedure {spec['name']} expects {len(decl_args)} "
                 f"arguments, got {len(clause.args)} "
                 f"(InvalidNumberOfArguments)")
-        vals = []
-        for a in clause.args:
-            if isinstance(a, A.Literal):
-                vals.append(a.value)
-            elif isinstance(a, A.Parameter):
-                if a.name not in planner.params:
-                    raise PlanError(
-                        f"Missing parameter `{a.name}` for call to "
-                        f"{spec['name']} (ParameterMissing)")
-                vals.append(planner.params[a.name])
-            elif isinstance(a, A.Unary) and a.op == "-" \
-                    and isinstance(a.operand, A.Literal):
-                vals.append(-a.operand.value)
-            else:
-                raise PlanError(
-                    f"Procedure {spec['name']} arguments must be "
-                    f"constants here")
+        vals = [bind(planner, spec["name"], a) for a in clause.args]
     for (an, t), v in zip(decl_args, vals):
         if not _cypher_type_ok(t, v):
             raise PlanError(
@@ -147,472 +171,466 @@ def _run_custom(planner, clause: A.CallClause, spec: dict
         [n for n, _t in outs]
 
 
-def run_procedure(planner, clause: A.CallClause
+def run_procedure(planner, clause: A.CallClause,
+                  roots: DataFrame | None = None
                   ) -> tuple[DataFrame, list[str]]:
-    g = planner.graph
-    spark = g.spark
-    name = clause.proc
-
-    from redisgraph_spark.session import inline_df
-
-    custom = getattr(g, "_custom_procs", {}).get(name)
+    """The procedure's result and its default yield columns. For a
+    per-row procedure, ``roots`` (the ``__root`` ids of the bound
+    source node) stands in for the first argument, and the result
+    keeps ``__root`` to join back on."""
+    custom = planner.graph._custom_procs.get(clause.proc)
     if custom is not None:
         return _run_custom(planner, clause, custom)
+    proc = PROCS.get(clause.proc)
+    if proc is None:
+        raise ValueError(f"Unknown procedure {clause.proc}")
+    exprs = clause.args if roots is None else clause.args[1:]
+    args = [bind(planner, clause.proc, e) for e in exprs]
+    keep = []
+    if roots is not None:
+        args.insert(0, roots)
+        keep = ["__root"]
+    out = proc.handler(planner, args)
+    return out.select(*keep, *proc.yields), list(proc.yields)
 
-    if name == "db.labels":
-        rows = [(l,) for l in g.labels]
-        return inline_df(spark, rows, [("label", "string")]), ["label"]
-    if name == "db.relationshiptypes":
-        rows = [(r,) for r in g.relationship_types]
-        return inline_df(spark, rows, [("relationshipType", "string")]), \
-            ["relationshipType"]
-    if name == "db.propertykeys":
-        rows = [(k,) for k in g.property_keys()]
-        return inline_df(spark, rows, [("propertyKey", "string")]), \
-            ["propertyKey"]
-    if name == "db.indexes":
-        # explicitly created exact-match indexes (CREATE INDEX ON
-        # :L(p) → sorted-layout re-partition) + fulltext indexes; note
-        # every property column is *also* index-equivalent under parquet
-        # pushdown/data-skipping (reference: ops/op_index_scan.c →
-        # our §2 IndexScan mapping)
-        rows = [("exact-match", l, list(props))
-                for l, props in sorted(g.indexes.items()) if props]
-        if g._fulltext is not None:
-            ft: dict[str, list[str]] = {}
-            for (l, p) in g._fulltext.indexes:
-                ft.setdefault(l, []).append(p)
-            rows += [("fulltext", l, sorted(ps))
-                     for l, ps in sorted(ft.items())]
-        df = inline_df(spark, rows, [("type", "string"),
+
+# ---------------------------------------------------------- catalog
+
+def _labels(planner, args) -> DataFrame:
+    return inline_df(planner.graph.spark,
+                     [(l,) for l in planner.graph.labels],
+                     [("label", "string")])
+
+
+def _relationship_types(planner, args) -> DataFrame:
+    return inline_df(planner.graph.spark,
+                     [(r,) for r in planner.graph.relationship_types],
+                     [("relationshipType", "string")])
+
+
+def _property_keys(planner, args) -> DataFrame:
+    return inline_df(planner.graph.spark,
+                     [(k,) for k in planner.graph.property_keys()],
+                     [("propertyKey", "string")])
+
+
+def _indexes(planner, args) -> DataFrame:
+    # explicitly created exact-match indexes (CREATE INDEX ON
+    # :L(p) → sorted-layout re-partition) + fulltext indexes; note
+    # every property column is *also* index-equivalent under parquet
+    # pushdown/data-skipping (reference: ops/op_index_scan.c →
+    # our §2 IndexScan mapping)
+    g = planner.graph
+    rows = [("exact-match", l, list(props))
+            for l, props in sorted(g.indexes.items()) if props]
+    if g._fulltext is not None:
+        ft: dict[str, list[str]] = {}
+        for (l, p) in g._fulltext.indexes:
+            ft.setdefault(l, []).append(p)
+        rows += [("fulltext", l, sorted(ps))
+                 for l, ps in sorted(ft.items())]
+    return inline_df(g.spark, rows, [("type", "string"),
                                      ("label", "string"),
                                      ("properties", "array<string>")])
-        return df, ["type", "label", "properties"]
-    if name == "dbms.procedures":
-        rows = [(p, "WRITE" if p in WRITE_PROCS else "READ")
-                for p in sorted(PROCS)]
-        return inline_df(spark, rows, [("name", "string"),
-                                       ("mode", "string")]), \
-            ["name", "mode"]
-    if name == "algo.pagerank":
-        from redisgraph_spark.algorithms.pagerank import pagerank_proc
-        return pagerank_proc(planner, clause.args)
-    if name == "algo.wcc":
-        # optional literal arg 'star' picks the large-star/small-star
-        # contraction (O(log² n) rounds, diameter-independent — the
-        # 100 TB path); default is min-label propagation (one round
-        # per diameter hop, fastest on the low-diameter common case)
-        from redisgraph_spark.algorithms.components import (
-            weakly_connected_components, weakly_connected_components_star)
-        algo = weakly_connected_components
-        if clause.args:
-            mode = clause.args[0]
-            val = mode.value if isinstance(mode, A.Literal) else mode
-            if val == "star":
-                algo = weakly_connected_components_star
-            elif val is not None:
-                # a typo must not silently run the default algorithm
-                raise ValueError(
-                    f"algo.wcc: unknown variant {val!r} "
-                    "(expected 'star')")
-        comp = algo(
-            g.nodes().select("_id"), g.edges().select("_src", "_dst"))
-        # yield the full node struct like algo.pageRank / queryNodes —
-        # `YIELD node ... RETURN node.name` must work uniformly
-        nodes = g.nodes()
-        node_struct = F.struct(*[F.col(c) for c in nodes.columns])
-        out = comp.withColumnRenamed("node", "__wcc_id") \
-            .join(nodes, F.col("__wcc_id") == nodes["_id"]) \
-            .select(node_struct.alias("node"), "component")
-        return out, ["node", "component"]
-    if name == "algo.trianglecount":
-        from redisgraph_spark.algorithms.components import triangle_count
-        return triangle_count(g.edges().select("_src", "_dst")), \
-            ["triangles"]
-    if name == "algo.labelpropagation":
-        # additive (like algo.wcc): deterministic synchronous LPA.
-        # args: optional relation type (induces the subgraph of that
-        # relation's endpoints; default all edges), optional iteration
-        # count (default 3, fixed synchronous rounds)
-        from redisgraph_spark.algorithms.components import \
-            label_propagation
-        rel = None
-        iters = 3
-        for a in clause.args:
-            val = a.value if isinstance(a, A.Literal) else a
-            if isinstance(val, str):
-                rel = val
-            elif isinstance(val, int):
-                iters = val
-            else:
-                raise ValueError(
-                    "algo.labelPropagation: args are an optional "
-                    "relation-type string and an optional int "
-                    "iteration count")
-        edges = g.edges([rel] if rel else None).select("_src", "_dst")
-        if rel:
-            ids = edges.select(F.col("_src").alias("_id")).unionByName(
-                edges.select(F.col("_dst").alias("_id"))).distinct()
-        else:
-            ids = g.nodes().select("_id")
-        lab = label_propagation(ids, edges, iters=iters)
-        nodes = g.nodes()
-        node_struct = F.struct(*[F.col(c) for c in nodes.columns])
-        out = lab.withColumnRenamed("node", "__lpa_id") \
-            .join(nodes, F.col("__lpa_id") == nodes["_id"]) \
-            .select(node_struct.alias("node"), "label")
-        return out, ["node", "label"]
-    if name == "algo.kcore":
-        # additive (like algo.wcc): k-core membership by synchronous
-        # peeling. args: required int k, optional relation-type string
-        # (induces that relation's subgraph; default all edges),
-        # optional int round count (default: peel to fixpoint).
-        from redisgraph_spark.algorithms.components import k_core
-        k = None
-        rel = None
-        iters = None
-        for a in clause.args:
-            val = a.value if isinstance(a, A.Literal) else a
-            if isinstance(val, bool):
-                raise ValueError("algo.kCore: unexpected boolean arg")
-            if isinstance(val, str):
-                rel = val
-            elif isinstance(val, int):
-                if k is None:
-                    k = val
-                else:
-                    iters = val
-            else:
-                raise ValueError(
-                    "algo.kCore: args are an int k, an optional "
-                    "relation-type string and an optional int round count")
-        if k is None or k < 1:
-            raise ValueError("algo.kCore requires an integer k >= 1")
-        edges = g.edges([rel] if rel else None).select("_src", "_dst")
-        core = k_core(edges, k, iters=iters)
-        nodes = g.nodes()
-        node_struct = F.struct(*[F.col(c) for c in nodes.columns])
-        out = core.withColumnRenamed("node", "__kc_id") \
-            .join(nodes, F.col("__kc_id") == nodes["_id"]) \
-            .select(node_struct.alias("node"))
-        return out, ["node"]
-    if name == "algo.nodesimilarity":
-        # additive: neighbor-set Jaccard similarity (GDS nodeSimilarity
-        # analog). args: optional relation-type string, optional
-        # direction 'out'/'in', optional float threshold, optional int
-        # top-k. Exact semantics (no hub cap) through this surface.
-        from redisgraph_spark.algorithms.centrality import node_similarity
-        rel = None
-        direction = "out"
-        thr = 0.3
-        topk = 100
-        for a in clause.args:
-            if isinstance(a, A.Literal):
-                val = a.value
-            elif isinstance(a, A.Parameter):
-                val = planner.params[a.name]
-            else:
-                raise ValueError(
-                    "algo.nodeSimilarity args must be literals")
-            if isinstance(val, str):
-                if val in ("out", "in"):
-                    direction = val
-                else:
-                    rel = val
-            elif isinstance(val, bool):
-                raise ValueError(
-                    "algo.nodeSimilarity: unexpected boolean arg")
-            elif isinstance(val, int):
-                topk = val
-            elif isinstance(val, float):
-                thr = val
-            elif val is not None:
-                raise ValueError(
-                    "algo.nodeSimilarity: args are an optional relation "
-                    "type, direction 'out'/'in', float threshold and "
-                    "int top-k")
-        sim = node_similarity(
-            g.edges([rel] if rel else None).select("_src", "_dst"),
-            direction=direction, threshold=thr, top_k=topk,
-            max_neighbor_degree=None)
-        nodes = g.nodes()
-        packed = nodes.select(
-            F.col("_id").alias("__nid"),
-            F.struct(*[F.col(c) for c in nodes.columns]).alias("__ns"))
-        p1 = packed.withColumnRenamed("__ns", "node1") \
-            .withColumnRenamed("__nid", "__nid1")
-        p2 = packed.withColumnRenamed("__ns", "node2") \
-            .withColumnRenamed("__nid", "__nid2")
-        out = sim \
-            .join(p1, sim["node_a"] == p1["__nid1"]) \
-            .join(p2, sim["node_b"] == p2["__nid2"]) \
-            .select("node1", "node2", "intersection", "jaccard")
-        return out, ["node1", "node2", "intersection", "jaccard"]
-    if name == "algo.closeness":
-        # additive: k-bounded closeness/harmonic centrality for an
-        # explicit source set (all-nodes closeness is O(V·E) — never
-        # the right cluster job; a bounded candidate set is). args:
-        # required source-id list, optional relation-type string,
-        # optional int max hop count.
-        from redisgraph_spark.algorithms.centrality import (MAX_HOPS,
-                                                            closeness)
-        srcs = None
-        rel = None
-        hops = MAX_HOPS
-        for a in clause.args:
-            if isinstance(a, A.Literal):
-                val = a.value
-            elif isinstance(a, A.Parameter):
-                val = planner.params[a.name]
-            elif isinstance(a, A.ListLiteral):
-                val = [x.value if isinstance(x, A.Literal) else x
-                       for x in a.items]
-            else:
-                val = a
-            if isinstance(val, list):
-                srcs = val
-            elif isinstance(val, str):
-                rel = val
-            elif isinstance(val, int) and not isinstance(val, bool):
-                hops = val
-            elif val is not None:
-                raise ValueError(
-                    "algo.closeness: args are a source-id list, an "
-                    "optional relation-type string and an optional "
-                    "int max hop count")
-        if (not srcs or not isinstance(srcs, list)
-                or not all(isinstance(s, int) for s in srcs)):
-            raise ValueError(
-                "algo.closeness requires a non-empty source-node id "
-                "list")
-        if hops < 1:
-            raise ValueError("algo.closeness max hops must be >= 1")
-        cl = closeness(g.edges([rel] if rel else None)
-                       .select("_src", "_dst"), srcs, max_hops=hops)
-        nodes = g.nodes()
-        node_struct = F.struct(*[F.col(c) for c in nodes.columns])
-        out = cl.withColumnRenamed("node", "__cl_id") \
-            .join(nodes, F.col("__cl_id") == nodes["_id"]) \
-            .select(node_struct.alias("node"), "reached", "closeness",
-                    "harmonic")
-        return out, ["node", "reached", "closeness", "harmonic"]
-    if name == "algo.randomwalk":
-        # additive: deterministic seeded walks (node2vec/DeepWalk
-        # corpus generation). args: source-id list, optional relation
-        # type, optional int walk length, optional int seed.
-        from redisgraph_spark.algorithms.walks import random_walks
-        srcs = None
-        rel = None
-        ints: list[int] = []
-        for a in clause.args:
-            if isinstance(a, A.Literal):
-                val = a.value
-            elif isinstance(a, A.Parameter):
-                val = planner.params[a.name]
-            elif isinstance(a, A.ListLiteral):
-                val = [x.value if isinstance(x, A.Literal) else x
-                       for x in a.items]
-            else:
-                val = a
-            if isinstance(val, list):
-                srcs = val
-            elif isinstance(val, str):
-                rel = val
-            elif isinstance(val, int) and not isinstance(val, bool):
-                ints.append(val)
-            elif val is not None:
-                raise ValueError(
-                    "algo.randomWalk: args are a source-id list, an "
-                    "optional relation type, an optional int length "
-                    "and an optional int seed")
-        if (not srcs or not isinstance(srcs, list)
-                or not all(isinstance(s, int) and not isinstance(s, bool)
-                           for s in srcs)):
-            raise ValueError(
-                "algo.randomWalk requires a non-empty source-node id "
-                "list")
-        length = ints[0] if ints else 5
-        seed = ints[1] if len(ints) > 1 else 7
-        if length < 1:
-            raise ValueError("algo.randomWalk length must be >= 1")
-        walks = random_walks(
-            g.edges([rel] if rel else None).select("_src", "_dst"),
-            srcs, length=length, seed=seed)
-        nodes = g.nodes()
-        node_struct = F.struct(*[F.col(c) for c in nodes.columns])
-        out = walks.join(nodes, walks["node"] == nodes["_id"]) \
-            .select("walk", "step", node_struct.alias("node"))
-        return out, ["walk", "step", "node"]
-    if name == "algo.betweenness":
-        # additive: Brandes betweenness on a label-set-induced subgraph
-        # (exact when no source list is given — right for bounded
-        # subgraphs; k-source estimator otherwise, Brandes & Pich
-        # 2007). args: label | [labels], relType, optional source-id
-        # list, optional int max hops, optional bool directed
-        # (default false: classic undirected betweenness with halved
-        # pair counts).
-        from redisgraph_spark.algorithms.centrality import (MAX_HOPS,
-                                                            betweenness)
 
-        def _bv(e):
-            if isinstance(e, A.Literal):
-                return e.value
-            if isinstance(e, A.ListLiteral):
-                return [_bv(x) for x in e.items]
-            if isinstance(e, A.Parameter):
-                return planner.params[e.name]
-            raise ValueError("algo.betweenness args must be literals")
 
-        vals = [_bv(a) for a in clause.args]
-        label = vals[0] if vals else None
-        rel = vals[1] if len(vals) > 1 else None
-        srcs = None
-        hops = MAX_HOPS
-        directed = False
-        for v in vals[2:]:
-            if isinstance(v, bool):
-                directed = v
-            elif isinstance(v, list):
-                srcs = v
-            elif isinstance(v, int):
-                hops = v
-            elif v is not None:
-                raise ValueError(
-                    "algo.betweenness: optional args are a source-id "
-                    "list, an int max hop count and a directed flag")
-        if srcs is not None and (
-                not srcs or not all(isinstance(s, int)
-                                    and not isinstance(s, bool)
-                                    for s in srcs)):
+def _procedures(planner, args) -> DataFrame:
+    return inline_df(planner.graph.spark,
+                     [(n, p.mode) for n, p in sorted(PROCS.items())],
+                     [("name", "string"), ("mode", "string")])
+
+
+# --------------------------------------------------------- fulltext
+
+def _fulltext_create(planner, args) -> DataFrame:
+    planner.graph.fulltext.create(*[str(a) for a in args])
+    return inline_df(planner.graph.spark, [(True,)], [("ok", "boolean")])
+
+
+def _fulltext_drop(planner, args) -> DataFrame:
+    planner.graph.fulltext.drop(str(args[0]))
+    return inline_df(planner.graph.spark, [(True,)], [("ok", "boolean")])
+
+
+def _query_nodes(planner, args) -> DataFrame:
+    # ``Params.fulltext`` parses the query; a plan template's holds its
+    # skeleton with sentinel words, so its plan rebinds
+    # (graph/templates.py)
+    label, query = args[0], args[1]
+    hits_df = planner.graph.fulltext.query(
+        str(label), planner.params.fulltext(query))
+    node_cols = [c for c in hits_df.columns if c != "score"]
+    return hits_df.select(
+        F.struct(*[F.col(c) for c in node_cols]).alias("node"),
+        F.col("score"))
+
+
+# ------------------------------------------------------- algorithms
+
+def _edges(g, rel):
+    """``_src``/``_dst`` of relation ``rel`` (None: every edge)."""
+    return g.edges([rel] if rel else None).select("_src", "_dst")
+
+
+def _pagerank(planner, args) -> DataFrame:
+    """``algo.pageRank(label, relType[, sources])`` — signature parity
+    with proc_pagerank.c. Additive extension: the label argument also
+    accepts a LIST of labels (the reference's single-label submatrix
+    generalized to a label-set-induced subgraph — cross-label
+    relations like Nation→Region are otherwise unrankable, every edge
+    leaving the single label's node set); a source id or id list
+    selects personalized PageRank."""
+    g = planner.graph
+    label = args[0] if args else None
+    rel = args[1] if len(args) > 1 else None
+    sources = args[2] if len(args) > 2 else None
+    if sources is not None:
+        if isinstance(sources, int):
+            sources = [sources]
+        if (not isinstance(sources, list) or not sources
+                or not all(isinstance(s, int) for s in sources)):
             raise ValueError(
-                "algo.betweenness source list must be non-empty ints")
-        if hops < 1:
-            raise ValueError("algo.betweenness max hops must be >= 1")
-        if isinstance(label, list):
-            nodes = g.nodes(label)
+                "algo.pageRank: the optional third argument is a "
+                "non-empty source-node id (or list of ids) selecting "
+                "personalized PageRank")
+    if isinstance(label, list):
+        nodes = g.nodes(label)
+    else:
+        nodes = g.nodes([label] if label else None)
+    pr = pagerank(nodes.select("_id"), _edges(g, rel), restart_ids=sources)
+    return _with_nodes(g, pr.withColumnRenamed("_id", "node"), "node",
+                       nodes)
+
+
+def _wcc(planner, args) -> DataFrame:
+    # optional arg 'star' picks the large-star/small-star
+    # contraction (O(log² n) rounds, diameter-independent — the
+    # 100 TB path); default is min-label propagation (one round
+    # per diameter hop, fastest on the low-diameter common case)
+    g = planner.graph
+    algo = weakly_connected_components
+    variant = args[0] if args else None
+    if variant == "star":
+        algo = weakly_connected_components_star
+    elif variant is not None:
+        # a typo must not silently run the default algorithm
+        raise ValueError(
+            f"algo.wcc: unknown variant {variant!r} (expected 'star')")
+    comp = algo(g.nodes().select("_id"), _edges(g, None))
+    return _with_nodes(g, comp, "node")
+
+
+def _triangle_count(planner, args) -> DataFrame:
+    return triangle_count(_edges(planner.graph, None))
+
+
+def _label_propagation(planner, args) -> DataFrame:
+    # additive (like algo.wcc): deterministic synchronous LPA.
+    # args: optional relation type (induces the subgraph of that
+    # relation's endpoints; default all edges), optional iteration
+    # count (default 3, fixed synchronous rounds)
+    g = planner.graph
+    rel = None
+    iters = 3
+    for val in args:
+        if isinstance(val, str):
+            rel = val
+        elif isinstance(val, int):
+            iters = val
         else:
-            nodes = g.nodes([label] if label else None)
-        edges = g.edges([rel] if rel else None).select("_src", "_dst")
-        # label-induced subgraph: both endpoints inside the node set
-        ids = nodes.select("_id")
-        edges = edges.join(ids.withColumnRenamed("_id", "_src"),
-                           "_src", "left_semi") \
-                     .join(ids.withColumnRenamed("_id", "_dst"),
-                           "_dst", "left_semi")
-        bc = betweenness(edges, source_ids=srcs, max_hops=hops,
-                         directed=directed)
-        node_struct = F.struct(*[F.col(c) for c in nodes.columns])
-        out = nodes.join(bc.withColumnRenamed("node", "__bcid"),
-                         nodes["_id"] == F.col("__bcid"), "left") \
-            .select(node_struct.alias("node"),
-                    F.coalesce("score", F.lit(0.0)).alias("score"))
-        return out, ["node", "score"]
-    if name == "algo.hits":
-        # additive: Kleinberg hubs & authorities, fixed synchronous
-        # power-iteration rounds with grid-rounded normalization (the
-        # semdedup determinism pattern). args: optional relation-type
-        # string, optional int iteration count (default 3).
-        from redisgraph_spark.algorithms.hits import hits
-        rel = None
-        iters = 3
-        for a in clause.args:
-            val = a.value if isinstance(a, A.Literal) else a
-            if isinstance(val, str):
-                rel = val
-            elif isinstance(val, int) and not isinstance(val, bool):
+            raise ValueError(
+                "algo.labelPropagation: args are an optional "
+                "relation-type string and an optional int "
+                "iteration count")
+    edges = _edges(g, rel)
+    if rel:
+        ids = edges.select(F.col("_src").alias("_id")).unionByName(
+            edges.select(F.col("_dst").alias("_id"))).distinct()
+    else:
+        ids = g.nodes().select("_id")
+    return _with_nodes(g, label_propagation(ids, edges, iters=iters),
+                       "node")
+
+
+def _kcore(planner, args) -> DataFrame:
+    # additive (like algo.wcc): k-core membership by synchronous
+    # peeling. args: required int k, optional relation-type string
+    # (induces that relation's subgraph; default all edges),
+    # optional int round count (default: peel to fixpoint).
+    k = None
+    rel = None
+    iters = None
+    for val in args:
+        if isinstance(val, bool):
+            raise ValueError("algo.kCore: unexpected boolean arg")
+        if isinstance(val, str):
+            rel = val
+        elif isinstance(val, int):
+            if k is None:
+                k = val
+            else:
                 iters = val
-            else:
-                raise ValueError(
-                    "algo.HITS: args are an optional relation-type "
-                    "string and an optional int iteration count")
-        if iters < 1:
-            raise ValueError("algo.HITS iteration count must be >= 1")
-        sc = hits(g.edges([rel] if rel else None).select("_src", "_dst"),
-                  iters=iters)
-        nodes = g.nodes()
-        node_struct = F.struct(*[F.col(c) for c in nodes.columns])
-        out = sc.withColumnRenamed("node", "__h_id") \
-            .join(nodes, F.col("__h_id") == nodes["_id"]) \
-            .select(node_struct.alias("node"), "hub", "authority")
-        return out, ["node", "hub", "authority"]
-    if name == "algo.sssp":
-        # additive: bounded-hop weighted single-source shortest paths
-        # (Bellman-Ford frontier relaxation). args: source node id,
-        # optional relation-type string or NULL (default all edges),
-        # optional weight-property string or NULL (default weight 1.0),
-        # optional int max hop count.
-        from redisgraph_spark.algorithms.sssp import MAX_HOPS, sssp
-        args = []
-        for a in clause.args:
-            if isinstance(a, A.Literal):
-                args.append(a.value)
-            elif isinstance(a, A.Parameter):
-                args.append(planner.params[a.name])
-            else:
-                raise ValueError(
-                    "algo.sssp arguments must be literals or parameters "
-                    "(a bound source goes through id(n) per-record CALL)")
-        if not args or not isinstance(args[0], int):
-            raise ValueError("algo.sssp requires an integer source id")
-        source = args[0]
-        rel = args[1] if len(args) > 1 else None
-        weight = args[2] if len(args) > 2 else None
-        hops = args[3] if len(args) > 3 else MAX_HOPS
-        if rel is not None and not isinstance(rel, str):
-            raise ValueError("algo.sssp reltype must be a string or NULL")
-        if weight is not None and not isinstance(weight, str):
+        else:
             raise ValueError(
-                "algo.sssp weight property must be a string or NULL")
-        if not isinstance(hops, int) or hops < 1:
-            raise ValueError("algo.sssp max hops must be a positive int")
-        edges = g.edges([rel] if rel else None)
-        if weight is not None and weight not in edges.columns:
+                "algo.kCore: args are an int k, an optional "
+                "relation-type string and an optional int round count")
+    if k is None or k < 1:
+        raise ValueError("algo.kCore requires an integer k >= 1")
+    g = planner.graph
+    return _with_nodes(g, k_core(_edges(g, rel), k, iters=iters), "node")
+
+
+def _node_similarity(planner, args) -> DataFrame:
+    # additive: neighbor-set Jaccard similarity (GDS nodeSimilarity
+    # analog). args: optional relation-type string, optional
+    # direction 'out'/'in', optional float threshold, optional int
+    # top-k. Exact semantics (no hub cap) through this surface.
+    rel = None
+    direction = "out"
+    thr = 0.3
+    topk = 100
+    for val in args:
+        if isinstance(val, str):
+            if val in ("out", "in"):
+                direction = val
+            else:
+                rel = val
+        elif isinstance(val, bool):
             raise ValueError(
-                f"algo.sssp: no edge property {weight!r} on the "
-                "selected relation(s)")
+                "algo.nodeSimilarity: unexpected boolean arg")
+        elif isinstance(val, int):
+            topk = val
+        elif isinstance(val, float):
+            thr = val
+        elif val is not None:
+            raise ValueError(
+                "algo.nodeSimilarity: args are an optional relation "
+                "type, direction 'out'/'in', float threshold and "
+                "int top-k")
+    g = planner.graph
+    sim = node_similarity(_edges(g, rel), direction=direction,
+                          threshold=thr, top_k=topk,
+                          max_neighbor_degree=None)
+    pairs = _with_nodes(g, _with_nodes(g, sim, "node_a"), "node_b")
+    return pairs.withColumnRenamed("node_a", "node1") \
+        .withColumnRenamed("node_b", "node2")
+
+
+def _closeness(planner, args) -> DataFrame:
+    # additive: k-bounded closeness/harmonic centrality for an
+    # explicit source set (all-nodes closeness is O(V·E) — never
+    # the right cluster job; a bounded candidate set is). args:
+    # required source-id list (or the bound source node), optional
+    # relation-type string, optional int max hop count.
+    srcs = None
+    rel = None
+    hops = MAX_HOPS
+    for val in args:
+        if isinstance(val, (list, DataFrame)):
+            srcs = val
+        elif isinstance(val, str):
+            rel = val
+        elif isinstance(val, int) and not isinstance(val, bool):
+            hops = val
+        elif val is not None:
+            raise ValueError(
+                "algo.closeness: args are a source-id list, an "
+                "optional relation-type string and an optional "
+                "int max hop count")
+    if not isinstance(srcs, DataFrame) and (
+            not srcs or not all(isinstance(s, int) for s in srcs)):
+        raise ValueError(
+            "algo.closeness requires a non-empty source-node id list")
+    if hops < 1:
+        raise ValueError("algo.closeness max hops must be >= 1")
+    g = planner.graph
+    cl = closeness(_edges(g, rel), srcs, max_hops=hops)
+    if isinstance(srcs, DataFrame):
+        cl = cl.withColumn("__root", F.col("node"))
+    return _with_nodes(g, cl, "node")
+
+
+def _random_walk(planner, args) -> DataFrame:
+    # additive: deterministic seeded walks (node2vec/DeepWalk
+    # corpus generation). args: source-id list (or the bound start
+    # node), optional relation type, optional int walk length,
+    # optional int seed.
+    srcs = None
+    rel = None
+    ints: list[int] = []
+    for val in args:
+        if isinstance(val, (list, DataFrame)):
+            srcs = val
+        elif isinstance(val, str):
+            rel = val
+        elif isinstance(val, int) and not isinstance(val, bool):
+            ints.append(val)
+        elif val is not None:
+            raise ValueError(
+                "algo.randomWalk: args are a source-id list, an "
+                "optional relation type, an optional int length "
+                "and an optional int seed")
+    if not isinstance(srcs, DataFrame) and (
+            not srcs or not all(isinstance(s, int)
+                                and not isinstance(s, bool)
+                                for s in srcs)):
+        raise ValueError(
+            "algo.randomWalk requires a non-empty source-node id list")
+    length = ints[0] if ints else 5
+    seed = ints[1] if len(ints) > 1 else 7
+    if length < 1:
+        raise ValueError("algo.randomWalk length must be >= 1")
+    g = planner.graph
+    walks = random_walks(_edges(g, rel), srcs, length=length, seed=seed)
+    if isinstance(srcs, DataFrame):
+        walks = walks.withColumn("__root", F.col("walk"))
+    return _with_nodes(g, walks, "node")
+
+
+def _betweenness(planner, args) -> DataFrame:
+    # additive: Brandes betweenness on a label-set-induced subgraph
+    # (exact when no source list is given — right for bounded
+    # subgraphs; k-source estimator otherwise, Brandes & Pich
+    # 2007). args: label | [labels], relType, optional source-id
+    # list, optional int max hops, optional bool directed
+    # (default false: classic undirected betweenness with halved
+    # pair counts).
+    label = args[0] if args else None
+    rel = args[1] if len(args) > 1 else None
+    srcs = None
+    hops = MAX_HOPS
+    directed = False
+    for v in args[2:]:
+        if isinstance(v, bool):
+            directed = v
+        elif isinstance(v, list):
+            srcs = v
+        elif isinstance(v, int):
+            hops = v
+        elif v is not None:
+            raise ValueError(
+                "algo.betweenness: optional args are a source-id "
+                "list, an int max hop count and a directed flag")
+    if srcs is not None and (
+            not srcs or not all(isinstance(s, int)
+                                and not isinstance(s, bool)
+                                for s in srcs)):
+        raise ValueError(
+            "algo.betweenness source list must be non-empty ints")
+    if hops < 1:
+        raise ValueError("algo.betweenness max hops must be >= 1")
+    g = planner.graph
+    if isinstance(label, list):
+        nodes = g.nodes(label)
+    else:
+        nodes = g.nodes([label] if label else None)
+    # label-induced subgraph: both endpoints inside the node set
+    ids = nodes.select("_id")
+    edges = _edges(g, rel) \
+        .join(ids.withColumnRenamed("_id", "_src"), "_src", "left_semi") \
+        .join(ids.withColumnRenamed("_id", "_dst"), "_dst", "left_semi")
+    bc = betweenness(edges, source_ids=srcs, max_hops=hops,
+                     directed=directed)
+    # every node of the subgraph scores, 0 when no path crosses it
+    node_struct = F.struct(*[F.col(c) for c in nodes.columns])
+    return nodes.join(bc.withColumnRenamed("node", "__bcid"),
+                      nodes["_id"] == F.col("__bcid"), "left") \
+        .select(node_struct.alias("node"),
+                F.coalesce("score", F.lit(0.0)).alias("score"))
+
+
+def _hits(planner, args) -> DataFrame:
+    # additive: Kleinberg hubs & authorities, fixed synchronous
+    # power-iteration rounds with grid-rounded normalization (the
+    # semdedup determinism pattern). args: optional relation-type
+    # string, optional int iteration count (default 3).
+    rel = None
+    iters = 3
+    for val in args:
+        if isinstance(val, str):
+            rel = val
+        elif isinstance(val, int) and not isinstance(val, bool):
+            iters = val
+        else:
+            raise ValueError(
+                "algo.HITS: args are an optional relation-type "
+                "string and an optional int iteration count")
+    if iters < 1:
+        raise ValueError("algo.HITS iteration count must be >= 1")
+    g = planner.graph
+    return _with_nodes(g, hits(_edges(g, rel), iters=iters), "node")
+
+
+def _sssp(planner, args) -> DataFrame:
+    # additive: bounded-hop weighted shortest paths (Bellman-Ford
+    # frontier relaxation). args: source node id (or the bound source
+    # node), optional relation-type string or NULL (default all
+    # edges), optional weight-property string or NULL (default weight
+    # 1.0), optional int max hop count.
+    source = args[0] if args else None
+    rel = args[1] if len(args) > 1 else None
+    weight = args[2] if len(args) > 2 else None
+    hops = args[3] if len(args) > 3 else SSSP_MAX_HOPS
+    if not isinstance(source, (int, DataFrame)):
+        raise ValueError("algo.sssp requires an integer source id")
+    if rel is not None and not isinstance(rel, str):
+        raise ValueError("algo.sssp reltype must be a string or NULL")
+    if weight is not None and not isinstance(weight, str):
+        raise ValueError(
+            "algo.sssp weight property must be a string or NULL")
+    if not isinstance(hops, int) or isinstance(hops, bool) or hops < 1:
+        raise ValueError("algo.sssp max hops must be a positive int")
+    g = planner.graph
+    edges = g.edges([rel] if rel else None)
+    if weight is not None and weight not in edges.columns:
+        raise ValueError(
+            f"algo.sssp: no edge property {weight!r} on the "
+            "selected relation(s)")
+    if isinstance(source, DataFrame):
+        # per-row sources: ONE keyed multi-source Bellman-Ford
+        roots = source.filter(F.col("__root").isNotNull()) \
+            .dropDuplicates().localCheckpoint(eager=True)
+        dist = sssp_multi(edges, roots, weight, max_hops=hops)
+    else:
         dist = sssp(edges, source, weight, max_hops=hops)
-        nodes = g.nodes()
-        node_struct = F.struct(*[F.col(c) for c in nodes.columns])
-        out = dist.withColumnRenamed("node", "__ss_id") \
-            .join(nodes, F.col("__ss_id") == nodes["_id"]) \
-            .select(node_struct.alias("node"), "distance", "hops")
-        return out, ["node", "distance", "hops"]
-    if name == "algo.bfs":
-        # handled as a correlated call in CypherPlanner._clause_call
-        # (needs the bound source variable); reaching here means no ctx
-        raise ValueError("algo.BFS requires a bound source node variable")
+    return _with_nodes(g, dist, "node")
 
-    def _lit(e):
-        if isinstance(e, A.Literal):
-            return e.value
-        if isinstance(e, A.Parameter):
-            return planner.params[e.name]
-        raise ValueError("procedure arguments must be literals")
 
-    if name == "db.idx.fulltext.createnodeindex":
-        label = str(_lit(clause.args[0]))
-        g.fulltext.create(label, *[str(_lit(p)) for p in clause.args[1:]])
-        return inline_df(spark, [(True,)], [("ok", "boolean")]), ["ok"]
-    if name == "db.idx.fulltext.drop":
-        g.fulltext.drop(str(_lit(clause.args[0])))
-        return inline_df(spark, [(True,)], [("ok", "boolean")]), ["ok"]
-    if name == "db.idx.fulltext.querynodes":
-        # a parameter's query comes parsed from ``Params.fulltext``: a
-        # plan template's holds sentinel words, so its plan rebinds
-        # (graph/templates.py). A null query matches nothing ("" parses
-        # to the empty-match FtAnd) — str(None) would otherwise search
-        # the token 'none'
-        label = str(_lit(clause.args[0]))
-        arg = clause.args[1]
-        if isinstance(arg, A.Parameter):
-            query = planner.params.fulltext(arg.name)
-        else:
-            raw = _lit(arg)
-            query = "" if raw is None else str(raw)
-        hits = g.fulltext.query(label, query)
-        node_cols = [c for c in hits.columns if c != "score"]
-        out = hits.select(
-            F.struct(*[F.col(c) for c in node_cols]).alias("node"),
-            F.col("score"))
-        return out, ["node", "score"]
-    raise ValueError(f"Unknown procedure {name}")
+# name → (default yields, mode, handler, per-row node source). A
+# per-row procedure called with a bound node variable as its first
+# argument runs once for all input rows: the handler gets the rows'
+# source ids as a ``__root`` DataFrame and keys its result by them.
+PROCS = {
+    "db.labels": Proc(("label",), "READ", _labels),
+    "db.relationshiptypes": Proc(("relationshipType",), "READ",
+                                 _relationship_types),
+    "db.propertykeys": Proc(("propertyKey",), "READ", _property_keys),
+    "db.indexes": Proc(("type", "label", "properties"), "READ", _indexes),
+    "dbms.procedures": Proc(("name", "mode"), "READ", _procedures),
+    "algo.pagerank": Proc(("node", "score"), "READ", _pagerank),
+    "algo.bfs": Proc(("nodes", "edges"), "READ", bfs_call, True),
+    "algo.wcc": Proc(("node", "component"), "READ", _wcc),
+    "algo.trianglecount": Proc(("triangles",), "READ", _triangle_count),
+    "algo.labelpropagation": Proc(("node", "label"), "READ",
+                                  _label_propagation),
+    "algo.kcore": Proc(("node",), "READ", _kcore),
+    "algo.sssp": Proc(("node", "distance", "hops"), "READ", _sssp, True),
+    "algo.hits": Proc(("node", "hub", "authority"), "READ", _hits),
+    "algo.closeness": Proc(("node", "reached", "closeness", "harmonic"),
+                           "READ", _closeness, True),
+    "algo.betweenness": Proc(("node", "score"), "READ", _betweenness),
+    "algo.randomwalk": Proc(("walk", "step", "node"), "READ",
+                            _random_walk, True),
+    "algo.nodesimilarity": Proc(
+        ("node1", "node2", "intersection", "jaccard"), "READ",
+        _node_similarity),
+    "db.idx.fulltext.querynodes": Proc(("node", "score"), "READ",
+                                       _query_nodes),
+    "db.idx.fulltext.createnodeindex": Proc(("ok",), "WRITE",
+                                            _fulltext_create),
+    "db.idx.fulltext.drop": Proc(("ok",), "WRITE", _fulltext_drop),
+}
+
+# callers that must know a CALL writes (Graph.query's version bump,
+# Graph.explain's rollback, GRAPH.RO_QUERY's rejection) read this set
+WRITE_PROCS = frozenset(n for n, p in PROCS.items() if p.mode == "WRITE")

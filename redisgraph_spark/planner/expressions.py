@@ -90,12 +90,11 @@ class Params(dict):
     def literal(self, name: str):
         return dict.__getitem__(self, name)
 
-    def fulltext(self, name: str):
-        """The parsed RediSearch query the parameter holds (null: the
-        empty query). A template's parameter holds its ``Skeleton``,
-        filled with the literals of its word parameters, so no value
-        is read."""
-        v = self[name]
+    def fulltext(self, v):
+        """The parsed RediSearch query of a query argument's value
+        (null: the empty query). A template's parameter holds its
+        ``Skeleton``, filled with the literals of its word parameters,
+        so no word's value is read."""
         if isinstance(v, Skeleton):
             return fill(v.shape, [self.literal(w) for w in v.leaves])
         return parse_query("" if v is None else str(v))

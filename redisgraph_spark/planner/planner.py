@@ -1851,85 +1851,22 @@ class CypherPlanner:
     # ------------------------------------------------------------------ CALL
     def _clause_call(self, ctx: Ctx, clause: A.CallClause,
                      standalone: bool = True) -> None:
-        from redisgraph_spark.functions.procedures import run_procedure
-        if clause.proc == "algo.bfs":
-            # correlated procedure: consumes the bound source variable per
-            # input record (ProcedureCall `ops/op_procedure_call.c` runs
-            # per-record; our plan is one multi-source BFS join)
-            from redisgraph_spark.algorithms.bfs import bfs_call
-            proc_df, default_cols = bfs_call(self, ctx, clause)
-            sel = clause.yields or [(c, None) for c in default_cols]
-            for col_name, alias in sel:
-                if col_name not in default_cols:
-                    raise PlanError(
-                        f"Procedure {clause.proc} has no column {col_name}")
-                name = alias or col_name
-                if name != col_name:
-                    proc_df = proc_df.withColumnRenamed(col_name, name)
-                ctx.vars[name] = VarInfo("scalar")
-            drop = [c for c in default_cols
-                    if c not in {a or c for c, a in sel}]
-            ctx.df = proc_df.drop(*drop) if drop else proc_df
-            if clause.where is not None:
-                self._apply_where(ctx, clause.where)
-            return
-        if clause.proc == "algo.sssp" and ctx.df is not None \
-                and clause.args and isinstance(clause.args[0], A.Variable) \
-                and ctx.vars.get(clause.args[0].name) is not None \
-                and ctx.vars[clause.args[0].name].kind == "node":
-            # correlated SSSP: per-row sources become ONE keyed
-            # multi-source Bellman-Ford (never a driver loop — the
-            # same vectorized shape as algo.BFS above)
-            from redisgraph_spark.algorithms.sssp import sssp_call
-            proc_df, default_cols = sssp_call(self, ctx, clause)
-            sel = clause.yields or [(c, None) for c in default_cols]
-            for col_name, alias in sel:
-                if col_name not in default_cols:
-                    raise PlanError(
-                        f"Procedure {clause.proc} has no column "
-                        f"{col_name}")
-                name = alias or col_name
-                if name != col_name:
-                    proc_df = proc_df.withColumnRenamed(col_name, name)
-                ctx.vars[name] = VarInfo("scalar")
-            drop = [c for c in default_cols
-                    if c not in {a or c for c, a in sel}]
-            ctx.df = proc_df.drop(*drop) if drop else proc_df
-            if clause.where is not None:
-                self._apply_where(ctx, clause.where)
-            return
-        if clause.proc in ("algo.closeness", "algo.randomwalk") \
-                and ctx.df is not None and clause.args \
-                and isinstance(clause.args[0], A.Variable) \
-                and ctx.vars.get(clause.args[0].name) is not None \
-                and ctx.vars[clause.args[0].name].kind == "node":
-            # correlated closeness / randomWalk: per-row node sources
-            # feed ONE root-keyed multi-source job (the algo.BFS /
-            # algo.SSSP vectorized shape — never a driver loop)
-            if clause.proc == "algo.closeness":
-                from redisgraph_spark.algorithms.centrality import \
-                    closeness_call
-                proc_df, default_cols = closeness_call(self, ctx, clause)
-            else:
-                from redisgraph_spark.algorithms.walks import walks_call
-                proc_df, default_cols = walks_call(self, ctx, clause)
-            sel = clause.yields or [(c, None) for c in default_cols]
-            for col_name, alias in sel:
-                if col_name not in default_cols:
-                    raise PlanError(
-                        f"Procedure {clause.proc} has no column "
-                        f"{col_name}")
-                name = alias or col_name
-                if name != col_name:
-                    proc_df = proc_df.withColumnRenamed(col_name, name)
-                ctx.vars[name] = VarInfo("scalar")
-            drop = [c for c in default_cols
-                    if c not in {a or c for c, a in sel}]
-            ctx.df = proc_df.drop(*drop) if drop else proc_df
-            if clause.where is not None:
-                self._apply_where(ctx, clause.where)
-            return
-        if clause.proc == "algo.pagerank" and ctx.df is not None \
+        from redisgraph_spark.functions.procedures import (PROCS,
+                                                           run_procedure)
+        proc = PROCS.get(clause.proc)
+        src = clause.args[0] if clause.args else None
+        per_row = (proc is not None and proc.per_row and ctx.df is not None
+                   and isinstance(src, A.Variable)
+                   and getattr(ctx.vars.get(src.name), "kind", None)
+                   == "node")
+        if per_row:
+            # per-row node sources feed ONE root-keyed multi-source job
+            # (ProcedureCall `ops/op_procedure_call.c` runs per record;
+            # never a driver loop here), joined back on the source id
+            src_id = F.col(f"{src.name}._id")
+            proc_df, default_cols = run_procedure(
+                self, clause, ctx.df.select(src_id.alias("__root")))
+        elif clause.proc == "algo.pagerank" and ctx.df is not None \
                 and clause.args and any(
                     not isinstance(a, (A.Literal, A.Parameter,
                                        A.ListLiteral))
@@ -1945,7 +1882,7 @@ class CypherPlanner:
                 "personalized run over the set, or use algo.SSSP / "
                 "algo.BFS / algo.closeness for per-source reachability "
                 "(those vectorize as one keyed multi-source job)")
-        if ctx.df is not None and clause.args and any(
+        elif ctx.df is not None and clause.args and any(
                 not isinstance(a, (A.Literal, A.Parameter))
                 for a in clause.args):
             # generic correlated CALL (reference ops/op_procedure_call.c
@@ -1955,50 +1892,47 @@ class CypherPlanner:
             # per-record semantics without a per-row driver loop
             self._correlated_call(ctx, clause)
             return
-        custom = getattr(self.graph, "_custom_procs", {}) \
-            .get(clause.proc)
-        if custom is not None:
-            for a in clause.args:
-                if _has_agg(a):
+        else:
+            custom = self.graph._custom_procs.get(clause.proc)
+            if custom is not None:
+                for a in clause.args:
+                    if _has_agg(a):
+                        raise PlanError(
+                            f"Invalid use of aggregating function in "
+                            f"procedure argument (InvalidAggregation)")
+                if not standalone and custom["outputs"] and \
+                        not clause.yields:
                     raise PlanError(
-                        f"Invalid use of aggregating function in "
-                        f"procedure argument (InvalidAggregation)")
-            if not standalone and custom["outputs"] and \
-                    not clause.yields:
+                        f"In-query call to {clause.proc} requires YIELD "
+                        f"(explicit output binding)")
+            proc_df, default_cols = run_procedure(self, clause)
+            if not default_cols:
+                # yields-nothing procedure: in-query is a pass-through,
+                # standalone returns the empty result
+                if ctx.df is None and standalone:
+                    ctx.df = proc_df     # zero rows: the empty result
+                    ctx.vars.clear()
+                return
+        sel = clause.yields or [(c, None) for c in default_cols]
+        for col_name, alias in sel:
+            if col_name not in default_cols:
                 raise PlanError(
-                    f"In-query call to {clause.proc} requires YIELD "
-                    f"(explicit output binding)")
-            for col_name, alias in clause.yields or []:
-                bound = alias or col_name
-                if bound in ctx.vars:
-                    raise PlanError(
-                        f"Variable `{bound}` already declared "
-                        f"(VariableAlreadyBound)")
-        proc_df, default_cols = run_procedure(self, clause)
-        if custom is not None and not default_cols:
-            # yields-nothing procedure: in-query is a pass-through,
-            # standalone returns the empty result
-            if ctx.df is None and standalone:
-                ctx.df = proc_df     # zero rows: the empty result
-                ctx.vars.clear()
-            return
-        if clause.yields:
-            sel = []
-            for col_name, alias in clause.yields:
-                if col_name not in proc_df.columns:
-                    raise PlanError(
-                        f"Procedure {clause.proc} has no column {col_name}")
-                sel.append(F.col(col_name).alias(alias or col_name))
-            proc_df = proc_df.select(sel)
-            out_names = [alias or c for c, alias in clause.yields]
+                    f"Procedure {clause.proc} has no column {col_name}")
+            if (alias or col_name) in ctx.vars:
+                raise PlanError(
+                    f"Variable `{alias or col_name}` already declared "
+                    f"(VariableAlreadyBound)")
+        cols = [F.col(c).alias(alias or c) for c, alias in sel]
+        if per_row:
+            out = proc_df.select("__root", *cols)
+            ctx.df = ctx.df.join(out, src_id == out["__root"]) \
+                .drop("__root")
+        elif ctx.df is None:
+            ctx.df = proc_df.select(cols)
         else:
-            out_names = default_cols
-        if ctx.df is None:
-            ctx.df = proc_df
-        else:
-            ctx.df = ctx.df.crossJoin(proc_df)
-        for n in out_names:
-            ctx.vars[n] = VarInfo("scalar")
+            ctx.df = ctx.df.crossJoin(proc_df.select(cols))
+        for col_name, alias in sel:
+            ctx.vars[alias or col_name] = VarInfo("scalar")
         if clause.where is not None:
             self._apply_where(ctx, clause.where)
 

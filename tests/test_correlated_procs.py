@@ -1,6 +1,7 @@
-"""Correlated CALL vectorization (VERDICT r8 #2) and custom
+"""Correlated CALL vectorization (VERDICT r8 #2), custom
 table-valued procedures (Graph.register_procedure, the reference's
-Proc_Register analog — src/procedures/procedure.h).
+Proc_Register analog — src/procedures/procedure.h) and the built-in
+procedure registry (functions/procedures.py PROCS).
 
 The per-row-source procedures must run as ONE keyed multi-source job
 (algo.BFS/algo.SSSP precedent), never the driver distinct-tuple loop;
@@ -141,3 +142,91 @@ def test_custom_proc_float_coercion(proc_graph):
         [(42.0, "close enough")])
     rows = proc_graph.query("CALL test.num(42)").collect()
     assert [r.out for r in rows] == ["close enough"]
+
+
+# --------------------------------------------------- built-in registry
+
+@pytest.fixture(scope="module")
+def named_graph(spark):
+    g = Graph(spark, {}, {})
+    g.query("CREATE (a:P {k:1, name:'red bolt'}), (b:P {k:2, name:'nut'}), "
+            "(c:P {k:3, name:'red nut'}), "
+            "(a)-[:R]->(b), (b)-[:R]->(c), (c)-[:R]->(a)")
+    return g
+
+
+def test_registry_lists_every_procedure(named_graph):
+    from redisgraph_spark.functions.procedures import PROCS
+    rows = named_graph.query("CALL dbms.procedures()").collect()
+    assert {(r.name, r.mode) for r in rows} == \
+        {(n, p.mode) for n, p in PROCS.items()}
+    assert len(rows) == len(PROCS) == 20
+
+
+def test_registry_default_yields(named_graph):
+    """Each built-in's result columns, called without YIELD, are the
+    registry's default yields (one round or hop each: the R cycle
+    keeps pageRank's power iteration short)."""
+    from redisgraph_spark.functions.procedures import PROCS
+    a = named_graph.query("MATCH (n:P {k: 1}) RETURN id(n) AS i") \
+        .collect()[0].i
+    calls = {
+        "algo.bfs": "MATCH (n:P) CALL algo.BFS(n, 1, 'R')",
+        "algo.sssp": "CALL algo.SSSP($a, 'R', null, 1)",
+        "algo.closeness": "CALL algo.closeness([$a], 'R', 1)",
+        "algo.randomwalk": "CALL algo.randomWalk([$a], 'R', 1)",
+        "algo.kcore": "CALL algo.kCore(1, 1)",
+        "algo.hits": "CALL algo.HITS(1)",
+        "algo.labelpropagation": "CALL algo.labelPropagation(1)",
+        "algo.pagerank": "CALL algo.pageRank('P', 'R')",
+        "algo.betweenness": "CALL algo.betweenness('P', 'R')",
+        "db.idx.fulltext.createnodeindex":
+            "CALL db.idx.fulltext.createNodeIndex('P', 'name')",
+        "db.idx.fulltext.querynodes":
+            "CALL db.idx.fulltext.queryNodes('P', 'red')",
+        "db.idx.fulltext.drop": "CALL db.idx.fulltext.drop('P')",
+    }
+    order = [n for n in calls if n.startswith("db.idx")]
+    for name in [n for n in PROCS if n not in order] + order:
+        df = named_graph.query(calls.get(name, f"CALL {name}()"),
+                               {"a": a})
+        cols = df.columns[1:] if name == "algo.bfs" else df.columns
+        assert tuple(cols) == PROCS[name].yields, name
+
+
+def test_correlated_randomwalk_yields_node_struct(named_graph):
+    corr = named_graph.query(
+        "MATCH (n:P {k: 1}) CALL algo.randomWalk(n, 2) "
+        "YIELD walk, step, node RETURN step, node, node.k AS k")
+    a = named_graph.query("MATCH (n:P {k: 1}) RETURN id(n) AS i") \
+        .collect()[0].i
+    alone = named_graph.query(
+        "CALL algo.randomWalk([$a], null, 2) YIELD walk, step, node "
+        "RETURN step, node, node.k AS k", {"a": a})
+    assert corr.schema == alone.schema
+    assert sorted(map(tuple, corr.collect())) == \
+        sorted(map(tuple, alone.collect()))
+
+
+@pytest.mark.parametrize("literal,param,params", [
+    ("algo.kCore(1)", "algo.kCore($k)", {"k": 1}),
+    ("algo.HITS('R', 1)", "algo.HITS($r, 1)", {"r": "R"}),
+    ("algo.labelPropagation('R', 1)", "algo.labelPropagation($r, 1)",
+     {"r": "R"}),
+    ("algo.wcc('star')", "algo.wcc($m)", {"m": "star"}),
+])
+def test_param_args_match_literals(named_graph, literal, param, params):
+    def rows(call, p):
+        return sorted(map(tuple, named_graph.query(
+            f"CALL {call}", p).collect()))
+    assert rows(param, params) == rows(literal, {})
+
+
+@pytest.mark.parametrize("q", [
+    "WITH 'x' AS label CALL db.labels() YIELD label RETURN label",
+    "MATCH (n:P) WITH n AS node CALL algo.pageRank('P', 'R') "
+    "YIELD node, score RETURN node, score",
+])
+def test_yield_of_bound_name_refused(named_graph, q):
+    with pytest.raises(Exception, match="VariableAlreadyBound"):
+        named_graph.query(q)
