@@ -12,21 +12,79 @@ step :163-230). Per input record: BFS from the bound source node over
 Records whose source reaches nothing emit no row (step returns NULL when
 ``n == 0``), i.e. the CALL behaves as an inner join.
 
-Spark shape: breadth-synchronous frontier joins keyed by BFS root, so one
-CALL with many input records is ONE distributed multi-source BFS — each
-hop is a single equi-join + anti-join against the visited set, with
-``localCheckpoint`` cutting lineage. The per-node parent edge is the
-min-edge-id discovery (deterministic under Spark's unordered execution).
+Spark shape: ``levels`` below is the one root-keyed, first-reach BFS
+loop of the engine; algo.BFS, closeness, betweenness' forward pass and
+shortestPath/allShortestPaths all run on it. One CALL with many input
+records is ONE distributed multi-source BFS: each level is a single
+equi-join of the frontier with the edges, an anti-join against the
+(root, node) keys already reached, and a per-(root, node) combine,
+with ``localCheckpoint`` cutting lineage. algo.BFS's per-node parent
+edge is the min-edge-id discovery (deterministic under Spark's
+unordered execution).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Sequence
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # edge-count bound exists via visited-set monotonicity; this caps runaway
 # unlimited BFS in local tests only
 MAX_LEVELS = 64
+
+
+def root_frame(spark, ids) -> DataFrame:
+    """One ``__root`` row per distinct non-null source: ``ids`` is a
+    list of node ids or a DataFrame whose first column holds them (a
+    correlated CALL's per-row sources stay distributed)."""
+    if isinstance(ids, DataFrame):
+        roots = ids.select(F.col(ids.columns[0]).cast("long")
+                           .alias("__root")) \
+            .filter(F.col("__root").isNotNull())
+    else:
+        roots = spark.createDataFrame([(int(i),) for i in ids],
+                                      "__root long")
+    return roots.dropDuplicates().localCheckpoint(eager=True)
+
+
+def levels(start: DataFrame, edges: DataFrame, max_hops: int,
+           carry: Sequence[Column] = (),
+           combine: Sequence[Column] | None = None
+           ) -> tuple[list[DataFrame], bool]:
+    """Advance every root of ``start`` (``__root``, ``__nid``, carried
+    columns: depth 0, a select over a ``root_frame``, as every level
+    reads it) one level per round over ``edges`` (``__u``, ``__v``,
+    ...), keeping each (root, node)'s first reach only.
+
+    A level joins the frontier to the edges on ``__nid = __u``, selects
+    ``__root``, ``__v`` as ``__nid`` and the ``carry`` columns (over
+    the joined frontier and edge row), drops the (root, node) keys
+    already reached, and then aggregates each (root, node)'s rows with
+    ``combine`` or, when it is None, keeps the distinct rows. Returns
+    (levels, capped): ``levels[d]`` is depth ``d``'s frame (``levels[0]``
+    is ``start``), and ``capped`` says that ``max_hops`` levels ran
+    with a live frontier."""
+    found = [start]
+    frontier = start
+    for _ in range(max_hops):
+        # the reached keys: the union of the levels, each a checkpoint
+        # or a select over one, so it needs no checkpoint of its own
+        reached = reduce(DataFrame.unionByName,
+                         [lvl.select("__root", "__nid") for lvl in found])
+        nxt = frontier.join(edges, frontier["__nid"] == edges["__u"]) \
+            .select("__root", F.col("__v").alias("__nid"), *carry) \
+            .join(reached, ["__root", "__nid"], "left_anti")
+        nxt = nxt.dropDuplicates() if combine is None \
+            else nxt.groupBy("__root", "__nid").agg(*combine)
+        nxt = nxt.localCheckpoint(eager=True)
+        if not nxt.take(1):
+            return found, False
+        found.append(nxt)
+        frontier = nxt
+    return found, True
 
 
 def bfs_call(planner, args) -> DataFrame:
@@ -51,52 +109,32 @@ def bfs_call(planner, args) -> DataFrame:
     g = planner.graph
     edges_flat = g.edges([rel] if rel is not None else None)
     edges = edges_flat.select(
-        F.col("_src").alias("__p"), F.col("_dst").alias("__c"),
-        F.col("_id").alias("__e"))
-
-    roots = roots.dropDuplicates().localCheckpoint(eager=True)
-
-    # visited: (root, nid); tree: (root, nid, eid) — the discovery edge
-    visited = roots.select("__root", F.col("__root").alias("__nid"))
-    frontier = visited
-    tree: DataFrame | None = None
-    max_levels = depth if depth > 0 else MAX_LEVELS
-    for _ in range(max_levels):
-        nxt = frontier.join(
-            edges, frontier["__nid"] == edges["__p"], "inner") \
-            .select("__root", F.col("__c").alias("__nid"), "__e")
-        nxt = nxt.join(visited, ["__root", "__nid"], "left_anti")
-        # one discovery edge per (root, node): min edge id
-        nxt = nxt.groupBy("__root", "__nid").agg(F.min("__e").alias("__e"))
-        nxt = nxt.localCheckpoint(eager=True)
-        if not nxt.take(1):
-            break
-        tree = nxt if tree is None else tree.unionByName(nxt)
-        visited = visited.unionByName(nxt.select("__root", "__nid")) \
-            .localCheckpoint(eager=True)
-        frontier = nxt.select("__root", "__nid")
-    else:
-        if depth <= 0:
-            # "unlimited" BFS (reference proc_bfs.c) hit the safety cap
-            # with a live frontier — say so instead of silently
-            # truncating the reachable set
-            import warnings
-            warnings.warn(
-                f"algo.BFS(depth=0) stopped at {MAX_LEVELS} levels "
-                "with a live frontier; deeper nodes are not reported",
-                RuntimeWarning, stacklevel=2)
+        F.col("_src").alias("__u"), F.col("_dst").alias("__v"),
+        F.col("_id").alias("__eid"))
+    roots = root_frame(g.spark, roots)
+    # each level's (root, node) keeps its min-id discovery edge
+    found, capped = levels(
+        roots.select("__root", F.col("__root").alias("__nid")), edges,
+        depth if depth > 0 else MAX_LEVELS,
+        carry=[F.col("__eid").alias("__e")],
+        combine=[F.min("__e").alias("__e")])
+    if capped and depth <= 0:
+        # "unlimited" BFS (reference proc_bfs.c) hit the safety cap
+        # with a live frontier — say so instead of silently
+        # truncating the reachable set
+        import warnings
+        warnings.warn(
+            f"algo.BFS(depth=0) stopped at {MAX_LEVELS} levels "
+            "with a live frontier; deeper nodes are not reported",
+            RuntimeWarning, stacklevel=2)
+    # nothing reachable from any source: the empty tree keeps the
+    # inner-join semantics (zero output rows)
+    tree = reduce(DataFrame.unionByName, found[1:],
+                  found[0].withColumn("__e", F.col("__root")).limit(0))
 
     node_flat = g.nodes(None)
     node_struct = F.struct(*[F.col(c) for c in node_flat.columns])
     edge_struct = F.struct(*[F.col(c) for c in edges_flat.columns])
-
-    if tree is None:
-        # nothing reachable from any source: empty tree with the right
-        # schema keeps the inner-join semantics (zero output rows) and
-        # the yield column types identical to the populated case
-        tree = roots.limit(0).select(
-            "__root", F.col("__root").alias("__nid"),
-            F.col("__root").alias("__e"))
 
     enriched = tree \
         .join(node_flat.select(F.col("_id").alias("__nid"),

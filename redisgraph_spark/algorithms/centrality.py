@@ -13,17 +13,21 @@ Definitions over nodes reached within ``max_hops`` directed hops
 well-defined on disconnected graphs — Boldi & Vigna 2014). Sources
 reaching nothing report 0 for both.
 
-Scale shape: the BFS frontier is keyed by (root, node) — one
-equi-join + one anti-join against the visited set per hop, all
-roots advanced together (the same one-join-per-level shape as
-``algorithms/bfs.py``); the final centrality is one root-keyed
+Scale shape: closeness and betweenness' forward pass run on
+``bfs.levels``, the engine's one root-keyed first-reach BFS loop: one
+equi-join + one anti-join against the reached keys per hop, all roots
+advanced together; the final centrality is one root-keyed
 aggregation. Nothing driver-side.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from redisgraph_spark.algorithms.bfs import levels, root_frame
 
 MAX_HOPS = 16
 
@@ -35,36 +39,17 @@ def closeness(edges: DataFrame, source_ids, max_hops: int = MAX_HOPS,
     stay distributed, never collected).  Returns one row per source:
     ``(node, reached, closeness, harmonic)`` — reached/centralities
     over nodes at directed distance 1..max_hops, grid-rounded."""
-    spark = edges.sparkSession
     e = edges.select(F.col("_src").alias("__u"),
                      F.col("_dst").alias("__v")).distinct() \
         .localCheckpoint(eager=True)
-    if isinstance(source_ids, DataFrame):
-        roots = source_ids.select(
-            F.col(source_ids.columns[0]).cast("long").alias("__root")) \
-            .filter(F.col("__root").isNotNull()) \
-            .dropDuplicates().localCheckpoint(eager=True)
-    else:
-        roots = spark.createDataFrame(
-            [(int(i),) for i in source_ids],
-            "__root long").dropDuplicates() \
-            .localCheckpoint(eager=True)
-    visited = roots.select("__root", F.col("__root").alias("__nid"),
-                           F.lit(0).alias("__d"))
-    frontier = visited
-    for depth in range(1, max_hops + 1):
-        nxt = frontier.join(e, frontier["__nid"] == e["__u"]) \
-            .select("__root", F.col("__v").alias("__nid"),
-                    F.lit(depth).alias("__d")) \
-            .dropDuplicates(["__root", "__nid"]) \
-            .join(visited.select("__root", "__nid"),
-                  ["__root", "__nid"], "left_anti") \
-            .localCheckpoint(eager=True)
-        if not nxt.take(1):
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    stats = visited.filter(F.col("__d") > 0).groupBy("__root").agg(
+    roots = root_frame(edges.sparkSession, source_ids)
+    found, _ = levels(
+        roots.select("__root", F.col("__root").alias("__nid")), e,
+        max_hops)
+    dist = reduce(DataFrame.unionByName,
+                  [lvl.withColumn("__d", F.lit(d))
+                   for d, lvl in enumerate(found)])
+    stats = dist.filter(F.col("__d") > 0).groupBy("__root").agg(
         F.count(F.lit(1)).alias("reached"),
         F.sum("__d").alias("__sumd"),
         F.sum(F.try_divide(F.lit(1.0), F.col("__d"))).alias("__harm"))
@@ -109,7 +94,6 @@ def betweenness(edges: DataFrame, source_ids: list[int] | None = None,
     Returns ``(node, score)`` for every non-root-only node reached,
     grid-rounded for cross-engine determinism.
     """
-    spark = edges.sparkSession
     e = edges.select(F.col("_src").alias("__u"),
                      F.col("_dst").alias("__v"))
     if not directed:
@@ -117,43 +101,22 @@ def betweenness(edges: DataFrame, source_ids: list[int] | None = None,
                                    F.col("__u").alias("__v")))
     e = e.filter(F.col("__u") != F.col("__v")).distinct() \
         .localCheckpoint(eager=True)
-    if source_ids is None:
-        roots = e.select(F.col("__u").alias("__root")) \
-            .unionByName(e.select(F.col("__v").alias("__root"))) \
-            .dropDuplicates()
-    else:
-        roots = spark.createDataFrame(
-            [(int(i),) for i in source_ids], "__root long") \
-            .dropDuplicates()
-    roots = roots.localCheckpoint(eager=True)
-    visited = roots.select(
-        "__root", F.col("__root").alias("__nid"),
-        F.lit(0).alias("__d"), F.lit(1.0).alias("__sigma")) \
-        .localCheckpoint(eager=True)
-    frontier = visited
-    deepest = 0
-    for depth in range(1, max_hops + 1):
-        nxt = frontier.join(e, frontier["__nid"] == e["__u"]) \
-            .select("__root", F.col("__v").alias("__nid"), "__sigma") \
-            .join(visited.select("__root", "__nid"),
-                  ["__root", "__nid"], "left_anti") \
-            .groupBy("__root", "__nid") \
-            .agg(F.sum("__sigma").alias("__sigma")) \
-            .select("__root", "__nid", F.lit(depth).alias("__d"),
-                    "__sigma") \
-            .localCheckpoint(eager=True)
-        if not nxt.take(1):
-            break
-        deepest = depth
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
+    roots = root_frame(
+        edges.sparkSession, source_ids if source_ids is not None
+        else e.select("__u").union(e.select("__v")))
+    # σ, the shortest-path count, sums over each node's predecessors
+    found, _ = levels(
+        roots.select("__root", F.col("__root").alias("__nid"),
+                     F.lit(1.0).alias("__sigma")), e, max_hops,
+        carry=[F.col("__sigma")],
+        combine=[F.sum("__sigma").alias("__sigma")])
     # backward dependency accumulation (nothing to do with depth-0-only
     # BFS trees: no intermediates exist)
     contributions = []
-    delta_below = visited.filter(F.col("__d") == deepest).select(
-        "__root", "__nid", "__sigma", F.lit(0.0).alias("__delta"))
+    deepest = len(found) - 1
+    delta_below = found[deepest].withColumn("__delta", F.lit(0.0))
     for d in range(deepest - 1, 0, -1):
-        cur = visited.filter(F.col("__d") == d)
+        cur = found[d]
         down = cur.select(F.col("__root").alias("__r"),
                           F.col("__nid").alias("__a"),
                           F.col("__sigma").alias("__sa")) \
@@ -176,9 +139,7 @@ def betweenness(edges: DataFrame, source_ids: list[int] | None = None,
     if not contributions:
         return roots.select(F.col("__root").alias("node")).limit(0) \
             .select("node", F.lit(0.0).alias("score"))
-    allc = contributions[0]
-    for c in contributions[1:]:
-        allc = allc.unionByName(c)
+    allc = reduce(DataFrame.unionByName, contributions)
     half = 2.0 if not directed else 1.0
     return allc.groupBy(F.col("__nid").alias("node")).agg(
         (F.round(F.sum("__delta") / half * grid) / grid).alias("score"))

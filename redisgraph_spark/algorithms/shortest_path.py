@@ -2,19 +2,25 @@
 
 Reference: ``shortestpath`` runs a push/pull BFS
 (``/root/reference/src/arithmetic/path_funcs/path_funcs.c:119-179`` via
-``src/algorithms/LAGraph_bfs_pushpull.c``). Spark-native version: per-hop
-equi-join BFS with per-(origin, node) deduplication keeping the
-lexicographically-smallest edge-id path — deterministic, and the frontier
-stays *sets of nodes*, not paths, so it scales like distributed BFS.
+``src/algorithms/LAGraph_bfs_pushpull.c``), the kernel algo.BFS runs
+too. Spark-native version: ``bfs.levels``, the engine's one root-keyed
+first-reach BFS loop (algo.BFS and the centralities run on it), keyed
+by origin and carrying the path's edge and node ids. shortestPath keeps
+the lexicographically-smallest edge-id path per (origin, node) —
+deterministic, and the frontier stays *sets of nodes*, not paths, so it
+scales like distributed BFS; allShortestPaths keeps every distinct one.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from redisgraph_spark.algorithms.bfs import levels, root_frame
 from redisgraph_spark.cypher import ast as A
-from redisgraph_spark.algorithms import traversal as TRAV
 from redisgraph_spark.planner.expressions import VarInfo
 
 MAX_BFS_HOPS = 32
@@ -50,7 +56,8 @@ def compile_shortest_path(planner, ctx, path: A.PatternPath) -> None:
             oriented = oriented.filter(F.col(k) == comp.compile(v))
         else:
             oriented = oriented.filter(F.lit(False))
-    e = oriented.select(F.col(from_c), F.col(to_c).alias("__sp_next"),
+    e = oriented.select(F.col(from_c).alias("__u"),
+                        F.col(to_c).alias("__v"),
                         F.col("_id").alias("__sp_eid"))
 
     # BFS state is (origin id, current node, path ids) over DISTINCT
@@ -59,69 +66,33 @@ def compile_shortest_path(planner, ctx, path: A.PatternPath) -> None:
     # a bound destination varying per row) cost one BFS, and the frontier
     # size is bounded by |reachable nodes|, not |input rows| — the shape
     # that survives a 100× scale-up.
-    frontier = ctx.df.select(
-        F.col(f"{src}._id").alias("__sp_origin")).dropDuplicates().select(
-        F.col("__sp_origin"),
-        F.col("__sp_origin").alias("__sp_cur"),
-        F.array().cast("array<long>").alias("__sp_eids"),
-        F.array(F.col("__sp_origin")).alias("__sp_nids"),
-    )
-    results = []
-    if rel.min_hops == 0:
-        results.append(frontier)
-    seen = frontier.select(F.col("__sp_origin").alias("__so"),
-                           F.col("__sp_cur").alias("__sc")).dropDuplicates()
-    hop = 0
-    while hop < max_hops:
-        hop += 1
-        nxt = frontier.join(e, frontier["__sp_cur"] == e[from_c], "inner") \
-            .select(F.col("__sp_origin"),
-                    F.col("__sp_next").alias("__sp_cur"),
-                    F.array_append(F.col("__sp_eids"),
-                                   F.col("__sp_eid")).alias("__sp_eids"),
-                    F.array_append(F.col("__sp_nids"),
-                                   F.col("__sp_next")).alias("__sp_nids"))
-        # BFS pruning: drop nodes already reached from this origin at a
-        # smaller hop count (first reach = shortest)
-        nxt = nxt.join(
-            seen,
-            (nxt["__sp_origin"] == seen["__so"])
-            & (nxt["__sp_cur"] == seen["__sc"]),
-            "left_anti")
-        if path.shortest == "all":
-            # allShortestPaths: keep every distinct first-reach path
-            nxt = nxt.dropDuplicates(["__sp_origin", "__sp_cur",
-                                      "__sp_eids"])
-        else:
-            # one deterministic shortest path per (origin, node)
-            nxt = nxt.groupBy("__sp_origin", "__sp_cur") \
-                .agg(F.min(F.struct("__sp_eids", "__sp_nids"))
-                     .alias("__m")) \
-                .select("__sp_origin", "__sp_cur", F.col("__m.__sp_eids"),
-                        F.col("__m.__sp_nids"))
-        nxt = nxt.localCheckpoint(eager=True)
-        if nxt.isEmpty():
-            break
-        frontier = nxt
-        if hop >= rel.min_hops:
-            results.append(nxt)
-        seen = seen.unionByName(
-            nxt.select(F.col("__sp_origin").alias("__so"),
-                       F.col("__sp_cur").alias("__sc"))).dropDuplicates() \
-            .localCheckpoint(eager=True)
-    else:
-        if unbounded:
-            import warnings
-            warnings.warn(
-                f"unbounded shortestPath() stopped at {MAX_BFS_HOPS} "
-                "hops with a live frontier; longer shortest paths are "
-                "not found", RuntimeWarning, stacklevel=2)
-
-    if not results:
-        results = [frontier.limit(0)]
-    paths = results[0]
-    for r in results[1:]:
-        paths = paths.unionByName(r)
+    origins = root_frame(planner.graph.spark,
+                         ctx.df.select(F.col(f"{src}._id")))
+    # first reach = shortest; shortestPath keeps one deterministic path
+    # per (origin, node), allShortestPaths every distinct one
+    best = F.min(F.struct("__sp_eids", "__sp_nids"))
+    found, capped = levels(
+        origins.select(
+            "__root", F.col("__root").alias("__nid"),
+            F.array().cast("array<long>").alias("__sp_eids"),
+            F.array(F.col("__root")).alias("__sp_nids")),
+        e, max_hops,
+        carry=[F.array_append("__sp_eids", F.col("__sp_eid"))
+               .alias("__sp_eids"),
+               F.array_append("__sp_nids", F.col("__v"))
+               .alias("__sp_nids")],
+        combine=None if path.shortest == "all" else [
+            best["__sp_eids"].alias("__sp_eids"),
+            best["__sp_nids"].alias("__sp_nids")])
+    if capped and unbounded:
+        import warnings
+        warnings.warn(
+            f"unbounded shortestPath() stopped at {MAX_BFS_HOPS} "
+            "hops with a live frontier; longer shortest paths are "
+            "not found", RuntimeWarning, stacklevel=2)
+    paths = reduce(DataFrame.unionByName, found[rel.min_hops:],
+                   found[0].limit(0)).withColumnsRenamed(
+        {"__root": "__sp_origin", "__nid": "__sp_cur"})
 
     # re-attach the input rows by origin id
     out = ctx.df.join(

@@ -1,4 +1,4 @@
-"""Single-source weighted shortest paths (bounded-hop Bellman-Ford).
+"""Weighted shortest paths (bounded-hop Bellman-Ford), root-keyed.
 
 Additive scope like algo.wcc — the reference registry ships only
 BFS/pageRank (``/root/reference/src/procedures/procedure.c:27-42``);
@@ -20,6 +20,12 @@ AQE reuses exchanges) + one min-aggregate keyed by destination. State
 is one (node, dist) row per reached node; the frontier-only join means
 converged regions drop out of later rounds. No driver-side loops over
 rows; convergence early-exit is a 1-row ``take(1)`` probe.
+
+``sssp_multi`` holds the one relaxation loop, keyed by ``__root``;
+``sssp`` runs it over a one-row root frame. A node's distance can still
+improve after its first reach, so this loop is not the first-reach BFS
+loop ``bfs.levels`` that algo.BFS, closeness, betweenness and
+shortestPath share.
 """
 
 from __future__ import annotations
@@ -38,46 +44,11 @@ def sssp(edges: DataFrame, source_id: int, weight_col: str | None,
     source included at distance 0.0 — where ``distance`` is the minimum
     total weight and ``hops`` the edge count of that minimal path
     (min hops among equal-weight paths: deterministic tie-break).
+    ``sssp_multi`` over a one-row root frame.
     """
-    w = (F.coalesce(F.col(weight_col).cast("double"), F.lit(1.0))
-         if weight_col else F.lit(1.0))
-    # materialize the slim (src, dst, w) projection once — every
-    # relaxation round joins it, and without the checkpoint each round
-    # would re-scan the source parquet + re-union the relation tables
-    e = edges.select(F.col("_src").alias("__u"),
-                     F.col("_dst").alias("__v"),
-                     w.alias("__w")) \
-        .localCheckpoint(eager=True)
-    spark = edges.sparkSession
-    dist = spark.createDataFrame(
-        [(int(source_id), 0.0, 0)], "node long, distance double, hops int") \
-        .localCheckpoint(eager=True)
-    frontier = dist
-    for _ in range(max_hops):
-        cand = frontier.join(e, frontier["node"] == e["__u"]) \
-            .select(F.col("__v").alias("node"),
-                    (F.col("distance") + F.col("__w")).alias("distance"),
-                    (F.col("hops") + 1).alias("hops")) \
-            .groupBy("node").agg(
-                F.min(F.struct("distance", "hops")).alias("__b")) \
-            .select("node", F.col("__b.distance").alias("distance"),
-                    F.col("__b.hops").alias("hops"))
-        improved = cand.join(
-            dist.select(F.col("node"), F.col("distance").alias("__od"),
-                        F.col("hops").alias("__oh")),
-            "node", "left") \
-            .filter(F.col("__od").isNull()
-                    | (F.col("distance") < F.col("__od"))
-                    | ((F.col("distance") == F.col("__od"))
-                       & (F.col("hops") < F.col("__oh")))) \
-            .select("node", "distance", "hops") \
-            .localCheckpoint(eager=True)
-        if not improved.take(1):
-            break
-        dist = dist.join(improved.select("node"), "node", "left_anti") \
-            .unionByName(improved).localCheckpoint(eager=True)
-        frontier = improved
-    return dist
+    roots = edges.sparkSession.createDataFrame([(int(source_id),)],
+                                               "__root long")
+    return sssp_multi(edges, roots, weight_col, max_hops).drop("__root")
 
 
 def sssp_multi(edges: DataFrame, roots: DataFrame,
@@ -87,11 +58,14 @@ def sssp_multi(edges: DataFrame, roots: DataFrame,
     ``__root`` — the vectorized shape for correlated
     ``CALL algo.SSSP(n, …)`` fan-outs (round-7 advice #6: per-row
     sources must never become a driver-side loop; same design as
-    ``bfs.bfs_call``'s multi-source frontier). ``roots``: one
+    ``bfs.levels``' root-keyed frontier). ``roots``: one
     ``__root`` column. Returns ``(__root, node, distance, hops)`` —
     each source included at distance 0."""
     w = (F.coalesce(F.col(weight_col).cast("double"), F.lit(1.0))
          if weight_col else F.lit(1.0))
+    # materialize the slim (src, dst, w) projection once — every
+    # relaxation round joins it, and without the checkpoint each round
+    # would re-scan the source parquet + re-union the relation tables
     e = edges.select(F.col("_src").alias("__u"),
                      F.col("_dst").alias("__v"),
                      w.alias("__w")) \

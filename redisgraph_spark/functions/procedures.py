@@ -15,8 +15,9 @@ kernels of ``redisgraph_spark.algorithms``.
 
 ``run_procedure`` binds a call's arguments (``bind``) and runs the
 handler; a handler returns its DataFrame, each yielded node as the
-node struct (``_with_nodes``). ``Graph.register_procedure`` adds
-lookup-table procedures beside these (``_run_custom``).
+node struct (``_with_nodes``), and ``yields_of`` names its default
+yield columns. ``Graph.register_procedure`` adds lookup-table
+procedures beside these (``_run_custom``).
 """
 
 from __future__ import annotations
@@ -26,7 +27,7 @@ from typing import Callable, NamedTuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from redisgraph_spark.algorithms.bfs import bfs_call
+from redisgraph_spark.algorithms.bfs import bfs_call, root_frame
 from redisgraph_spark.algorithms.centrality import (MAX_HOPS, betweenness,
                                                     closeness,
                                                     node_similarity)
@@ -128,8 +129,7 @@ def _with_nodes(g, df: DataFrame, col: str,
           for c in df.columns])
 
 
-def _run_custom(planner, clause: A.CallClause, spec: dict
-                ) -> tuple[DataFrame, list[str]]:
+def _run_custom(planner, clause: A.CallClause, spec: dict) -> DataFrame:
     """Execute a Graph.register_procedure lookup-table procedure."""
     from redisgraph_spark.planner.planner import PlanError
     g = planner.graph
@@ -164,18 +164,26 @@ def _run_custom(planner, clause: A.CallClause, spec: dict
     if not outs:
         # yields-nothing procedure: standalone → empty result;
         # in-query → pass-through (planner drops the unit column)
-        return inline_df(g.spark, [], [("__unit", "string")]), []
+        return inline_df(g.spark, [], [("__unit", "string")])
     schema = [(n, _out_sql_type(t, [r[i] for r in matched]))
               for i, (n, t) in enumerate(outs)]
-    return inline_df(g.spark, [tuple(r) for r in matched], schema), \
-        [n for n, _t in outs]
+    return inline_df(g.spark, [tuple(r) for r in matched], schema)
+
+
+def yields_of(graph, name: str) -> list[str]:
+    """The default yield columns of procedure ``name``."""
+    custom = graph._custom_procs.get(name)
+    if custom is not None:
+        return [n for n, _t in custom["outputs"]]
+    if name not in PROCS:
+        raise ValueError(f"Unknown procedure {name}")
+    return list(PROCS[name].yields)
 
 
 def run_procedure(planner, clause: A.CallClause,
-                  roots: DataFrame | None = None
-                  ) -> tuple[DataFrame, list[str]]:
-    """The procedure's result and its default yield columns. For a
-    per-row procedure, ``roots`` (the ``__root`` ids of the bound
+                  roots: DataFrame | None = None) -> DataFrame:
+    """The procedure's result: its default yield columns, in order.
+    For a per-row procedure, ``roots`` (the ``__root`` ids of the bound
     source node) stands in for the first argument, and the result
     keeps ``__root`` to join back on."""
     custom = planner.graph._custom_procs.get(clause.proc)
@@ -191,7 +199,7 @@ def run_procedure(planner, clause: A.CallClause,
         args.insert(0, roots)
         keep = ["__root"]
     out = proc.handler(planner, args)
-    return out.select(*keep, *proc.yields), list(proc.yields)
+    return out.select(*keep, *proc.yields)
 
 
 # ---------------------------------------------------------- catalog
@@ -588,9 +596,8 @@ def _sssp(planner, args) -> DataFrame:
             "selected relation(s)")
     if isinstance(source, DataFrame):
         # per-row sources: ONE keyed multi-source Bellman-Ford
-        roots = source.filter(F.col("__root").isNotNull()) \
-            .dropDuplicates().localCheckpoint(eager=True)
-        dist = sssp_multi(edges, roots, weight, max_hops=hops)
+        dist = sssp_multi(edges, root_frame(g.spark, source), weight,
+                          max_hops=hops)
     else:
         dist = sssp(edges, source, weight, max_hops=hops)
     return _with_nodes(g, dist, "node")

@@ -738,7 +738,7 @@ class Graph:
             # any key-dependent broadcast job the plan kept runs here,
             # outside the read lock, over the tables it was planned on
             # (as a returned DataFrame's own collect always has)
-            df = self._timed(run, cypher, undo=False)
+            df = self._timed(run, undo=False)
         if not is_write and exact:
             with self._cache_mu:
                 self._plan_cache[key] = df
@@ -766,8 +766,7 @@ class Graph:
             if self._fulltext is not None:
                 self._fulltext.refresh(before)
             return df
-        df = self._timed(write if is_write else lambda: planner.plan(ast),
-                         cypher)
+        df = self._timed(write if is_write else lambda: planner.plan(ast))
         # RESULTSET_MAX_SIZE: truncate emitted rows when configured
         # ≥ 0 (reference enforces in ops/op_results.c:32-47)
         max_rows = self.config_get("RESULTSET_MAX_SIZE")
@@ -802,33 +801,30 @@ class Graph:
                 self._plan_cache.trim(self.PLAN_CACHE_SIZE)
         return template, True
 
-    def _timed(self, fn, cypher: str, undo: bool = True):
+    def _timed(self, fn, undo: bool = True):
         """``fn()`` under the TIMEOUT config (see ``_with_timeout``)."""
         timeout_ms = self.config_get("TIMEOUT")
         if isinstance(timeout_ms, int) and timeout_ms > 0:
-            return self._with_timeout(fn, cypher, timeout_ms, undo)
+            return self._with_timeout(fn, timeout_ms, undo)
         return fn()
 
-    def _with_timeout(self, fn, cypher: str, timeout_ms: int,
-                      undo: bool):
+    def _with_timeout(self, fn, timeout_ms: int, undo: bool):
         """Run ``fn`` (planning, or a promoted template's run) under a
-        cancellation deadline: a timer cancels this query's Spark job
-        group after ``timeout_ms``, so any in-flight eager job
-        (frontier hop, mutation rewrite, key-dependent broadcast)
-        aborts and ``fn`` raises a clean QueryTimeoutError — the
-        ``CommandCtx`` drain path of ``cmd_query.c:100-118``. ``undo``
-        rolls graph state back on a timeout; a run outside the graph
-        lock passes False, since it changes no state and a writer may
-        hold the lock."""
+        cancellation deadline: a timer cancels this query's Spark jobs
+        (a per-query job tag, which leaves the caller's job group and
+        local properties as they were) after ``timeout_ms``, so any
+        in-flight eager job (frontier hop, mutation rewrite,
+        key-dependent broadcast) aborts and ``fn`` raises a clean
+        QueryTimeoutError — the ``CommandCtx`` drain path of
+        ``cmd_query.c:100-118``. ``undo`` rolls graph state back on a
+        timeout; a run outside the graph lock passes False, since it
+        changes no state and a writer may hold the lock."""
         import threading
         import time as _time
-        sc = self.spark.sparkContext
-        group = f"rg-q-{id(self)}-{self._version}-{_time.time_ns()}"
-        fired = threading.Event()
 
-        def _cancel():
-            fired.set()
-            sc.cancelJobGroup(group)
+        from redisgraph_spark.session import job_tag
+        sc = self.spark.sparkContext
+        fired = threading.Event()
 
         # snapshot mutable graph state so an aborted mutation leaves
         # the graph exactly as it was (the reference's whole-query
@@ -841,28 +837,36 @@ class Graph:
             if snap is not None:
                 self._state_restore(snap)
 
-        sc.setJobGroup(group, cypher[:100], interruptOnCancel=True)
-        timer = threading.Timer(timeout_ms / 1000.0, _cancel)
-        timer.start()
-        deadline = _time.time() + timeout_ms / 1000.0
-        try:
-            df = fn()
-            if fired.is_set() or _time.time() > deadline:
-                _restore()
-                raise QueryTimeoutError(
-                    f"Query timed out (TIMEOUT={timeout_ms}ms)")
-            return df
-        except QueryTimeoutError:
-            raise
-        except Exception as exc:
-            if fired.is_set():
-                _restore()
-                raise QueryTimeoutError(
-                    f"Query timed out (TIMEOUT={timeout_ms}ms)") from exc
-            raise
-        finally:
-            timer.cancel()
-            sc.setJobGroup("", "")
+        interrupt = sc.getLocalProperty("spark.job.interruptOnCancel")
+        sc.setInterruptOnCancel(True)
+        with job_tag(self.spark, "rg-query") as tag:
+            def _cancel():
+                fired.set()
+                sc.cancelJobsWithTag(tag)
+
+            timer = threading.Timer(timeout_ms / 1000.0, _cancel)
+            timer.start()
+            deadline = _time.time() + timeout_ms / 1000.0
+            try:
+                df = fn()
+                if fired.is_set() or _time.time() > deadline:
+                    _restore()
+                    raise QueryTimeoutError(
+                        f"Query timed out (TIMEOUT={timeout_ms}ms)")
+                return df
+            except QueryTimeoutError:
+                raise
+            except Exception as exc:
+                if fired.is_set():
+                    _restore()
+                    raise QueryTimeoutError(
+                        f"Query timed out (TIMEOUT={timeout_ms}ms)"
+                    ) from exc
+                raise
+            finally:
+                timer.cancel()
+                sc.setLocalProperty("spark.job.interruptOnCancel",
+                                    interrupt)
 
     def _invalidate_plans(self) -> None:
         """Invalidate this instance's cached plans without touching the

@@ -49,7 +49,6 @@ otherwise it stays analyzed-only.
 from __future__ import annotations
 
 import dataclasses
-import itertools
 import json
 import math
 import threading
@@ -64,11 +63,11 @@ from redisgraph_spark.cypher import ast as A
 from redisgraph_spark.functions.fulltext import Skeleton, skeleton
 from redisgraph_spark.graph.graph import QueryTimeoutError
 from redisgraph_spark.planner.expressions import SentinelParams
+from redisgraph_spark.session import job_tag
 
 # how long a template build waits for the listener bus to drain before
 # it gives up proving that planning ran no Spark job
 _DRAIN_MS = 2000
-_TAGS = itertools.count()
 _HANDLES: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 # promotion's second sentinel set starts this many indexes on
 _SECOND_SET = 0x100
@@ -593,19 +592,15 @@ def build(spark, ast, params: dict, plan) -> tuple[PlanTemplate | None,
     sp = _sentinel_params(ast, params)
     if sp is None:
         return None, True
-    sc = spark.sparkContext
-    tag = f"rg-template-{next(_TAGS)}"
-    sc.addJobTag(tag)
     try:
-        df, stats = plan(sp)
+        with job_tag(spark, "rg-template") as tag:
+            df, stats = plan(sp)
     except Exception as exc:
         return None, sp.value_read or not isinstance(exc,
                                                      QueryTimeoutError)
-    finally:
-        sc.removeJobTag(tag)
     if sp.value_read:
         return None, True
-    ctx = sc._jsc.sc()
+    ctx = spark.sparkContext._jsc.sc()
     try:
         # job events reach the status store through the listener bus
         ctx.listenerBus().waitUntilEmpty(_DRAIN_MS)

@@ -1852,19 +1852,29 @@ class CypherPlanner:
     def _clause_call(self, ctx: Ctx, clause: A.CallClause,
                      standalone: bool = True) -> None:
         from redisgraph_spark.functions.procedures import (PROCS,
-                                                           run_procedure)
+                                                           run_procedure,
+                                                           yields_of)
         proc = PROCS.get(clause.proc)
+        default_cols = yields_of(self.graph, clause.proc)
         src = clause.args[0] if clause.args else None
         per_row = (proc is not None and proc.per_row and ctx.df is not None
                    and isinstance(src, A.Variable)
                    and getattr(ctx.vars.get(src.name), "kind", None)
                    == "node")
+        # generic correlated CALL (reference ops/op_procedure_call.c
+        # runs the procedure per input record): evaluate the distinct
+        # argument tuples, run the procedure once per tuple, union the
+        # results keyed by tuple, equi-join back to the input rows —
+        # per-record semantics without a per-row driver loop
+        correlated = (not per_row and ctx.df is not None and any(
+            not isinstance(a, (A.Literal, A.Parameter))
+            for a in clause.args))
         if per_row:
             # per-row node sources feed ONE root-keyed multi-source job
             # (ProcedureCall `ops/op_procedure_call.c` runs per record;
             # never a driver loop here), joined back on the source id
             src_id = F.col(f"{src.name}._id")
-            proc_df, default_cols = run_procedure(
+            proc_df = run_procedure(
                 self, clause, ctx.df.select(src_id.alias("__root")))
         elif clause.proc == "algo.pagerank" and ctx.df is not None \
                 and clause.args and any(
@@ -1882,17 +1892,7 @@ class CypherPlanner:
                 "personalized run over the set, or use algo.SSSP / "
                 "algo.BFS / algo.closeness for per-source reachability "
                 "(those vectorize as one keyed multi-source job)")
-        elif ctx.df is not None and clause.args and any(
-                not isinstance(a, (A.Literal, A.Parameter))
-                for a in clause.args):
-            # generic correlated CALL (reference ops/op_procedure_call.c
-            # runs the procedure per input record): evaluate the distinct
-            # argument tuples, run the procedure once per tuple, union the
-            # results keyed by tuple, equi-join back to the input rows —
-            # per-record semantics without a per-row driver loop
-            self._correlated_call(ctx, clause)
-            return
-        else:
+        elif not correlated:
             custom = self.graph._custom_procs.get(clause.proc)
             if custom is not None:
                 for a in clause.args:
@@ -1905,7 +1905,7 @@ class CypherPlanner:
                     raise PlanError(
                         f"In-query call to {clause.proc} requires YIELD "
                         f"(explicit output binding)")
-            proc_df, default_cols = run_procedure(self, clause)
+            proc_df = run_procedure(self, clause)
             if not default_cols:
                 # yields-nothing procedure: in-query is a pass-through,
                 # standalone returns the empty result
@@ -1927,6 +1927,8 @@ class CypherPlanner:
             out = proc_df.select("__root", *cols)
             ctx.df = ctx.df.join(out, src_id == out["__root"]) \
                 .drop("__root")
+        elif correlated:
+            ctx.df = self._correlated_call(ctx, clause, sel)
         elif ctx.df is None:
             ctx.df = proc_df.select(cols)
         else:
@@ -1936,16 +1938,20 @@ class CypherPlanner:
         if clause.where is not None:
             self._apply_where(ctx, clause.where)
 
-    def _correlated_call(self, ctx: Ctx, clause: A.CallClause) -> None:
+    def _correlated_call(self, ctx: Ctx, clause: A.CallClause,
+                         sel: list[tuple[str, str | None]]) -> DataFrame:
         """CALL proc(expr-over-bound-vars): fan out over the DISTINCT
-        argument tuples (each tuple's procedure result computed once),
-        attach the tuple as join keys, equi-join back to the input.
+        argument tuples (each tuple's procedure result computed once,
+        projected to the ``sel`` yields), attach the tuple as join keys,
+        equi-join back to the input and return the joined rows.
         Cardinality note: the driver-side loop is over distinct argument
         combinations — typically a handful for catalog/fulltext/algo
         procedures — never over input rows."""
         from redisgraph_spark.functions.procedures import run_procedure
         comp = self.compiler(ctx)
         keys = [f"_parg{i}" for i in range(len(clause.args))]
+        rkeys = [f"__r{k}" for k in keys]
+        cols = [F.col(c).alias(alias or c) for c, alias in sel]
         keyed = ctx.df
         for i, arg in enumerate(clause.args):
             keyed = keyed.withColumn(keys[i], comp.compile(arg))
@@ -1962,10 +1968,10 @@ class CypherPlanner:
         union_df = None
         chunk_df = None
         chunk_n = 0
-        default_cols: list[str] = []
         vec = self._vectorized_fulltext_call(clause, keys, tuples)
         if vec is not None:
-            union_df, default_cols = vec
+            union_df = vec.select(*cols, *[F.col(k).alias(rk)
+                                           for k, rk in zip(keys, rkeys)])
             tuples = []
         for tup in tuples:
             for v in tup:
@@ -1978,11 +1984,10 @@ class CypherPlanner:
                 proc=clause.proc,
                 args=[A.Literal(v) for v in tup],
                 yields=None, where=None)
-            proc_df, default_cols = run_procedure(self, lit_clause)
-            for k, v in zip(keys, tup):
-                lit = F.lit(v) if v is not None \
-                    else F.lit(None).cast(key_types[k])
-                proc_df = proc_df.withColumn(k, lit)
+            proc_df = run_procedure(self, lit_clause).select(
+                *cols, *[(F.lit(v) if v is not None
+                          else F.lit(None).cast(key_types[k])).alias(rk)
+                         for k, rk, v in zip(keys, rkeys, tup)])
             chunk_df = proc_df if chunk_df is None \
                 else chunk_df.unionByName(proc_df)
             chunk_n += 1
@@ -1998,41 +2003,19 @@ class CypherPlanner:
         if chunk_df is not None:
             union_df = chunk_df if union_df is None \
                 else union_df.unionByName(chunk_df)
-        sel = clause.yields or [(c, None) for c in default_cols]
-        out_names = []
-        for col_name, alias in sel:
-            if col_name not in default_cols:
-                raise PlanError(
-                    f"Procedure {clause.proc} has no column {col_name}")
-            name = alias or col_name
-            if union_df is not None and name != col_name:
-                union_df = union_df.withColumnRenamed(col_name, name)
-            out_names.append(name)
         if union_df is None:
             # no input rows: empty result with the yielded columns
-            ctx.df = ctx.df.limit(0)
-            for n in out_names:
-                ctx.df = ctx.df.withColumn(n, F.lit(None))
-        else:
-            drop = [c for c in default_cols if c not in set(out_names)]
-            if drop:
-                union_df = union_df.drop(*drop)
-            # NULL-SAFE equi-join: a row whose CALL argument evaluates
-            # to null must still match its (null-keyed) procedure
-            # result — a plain equi-join would silently drop it
-            rkeys = [f"__r{k}" for k in keys]
-            for k, rk in zip(keys, rkeys):
-                union_df = union_df.withColumnRenamed(k, rk)
-            cond = None
-            for k, rk in zip(keys, rkeys):
-                c = keyed[k].eqNullSafe(union_df[rk])
-                cond = c if cond is None else cond & c
-            ctx.df = keyed.join(F.broadcast(union_df), cond) \
-                .drop(*keys).drop(*rkeys)
-        for n in out_names:
-            ctx.vars[n] = VarInfo("scalar")
-        if clause.where is not None:
-            self._apply_where(ctx, clause.where)
+            return ctx.df.limit(0).select(
+                "*", *[F.lit(None).alias(alias or c) for c, alias in sel])
+        # NULL-SAFE equi-join: a row whose CALL argument evaluates
+        # to null must still match its (null-keyed) procedure
+        # result — a plain equi-join would silently drop it
+        cond = None
+        for k, rk in zip(keys, rkeys):
+            c = keyed[k].eqNullSafe(union_df[rk])
+            cond = c if cond is None else cond & c
+        return keyed.join(F.broadcast(union_df), cond) \
+            .drop(*keys).drop(*rkeys)
 
     def _vectorized_fulltext_call(self, clause: A.CallClause,
                                   keys: list[str], tuples: list[tuple]):
@@ -2044,8 +2027,8 @@ class CypherPlanner:
         is a bare single token (lowered ``[a-z0-9]+``), where batch
         scoring is provably identical to per-term FtTerm compilation;
         anything fancier (phrases, prefix, fuzzy, OR/NOT) falls back
-        to the generic per-tuple loop. Returns (union_df,
-        default_cols) or None."""
+        to the generic per-tuple loop. Returns the keyed ``node``,
+        ``score`` rows or None."""
         import re as _re
         if clause.proc.lower() != "db.idx.fulltext.querynodes" \
                 or len(keys) != 2 or len(tuples) < 2:
@@ -2073,7 +2056,7 @@ class CypherPlanner:
             F.col("score"), F.col("__ft_term")) \
             .withColumn(keys[0], F.lit(label)) \
             .withColumnRenamed("__ft_term", keys[1])
-        return out, ["node", "score"]
+        return out
 
     # ----------------------------------------------------------- WITH/RETURN
     def _clause_with(self, ctx: Ctx, clause: A.WithClause) -> None:

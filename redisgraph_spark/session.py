@@ -7,9 +7,29 @@ on local[N] test runs.
 
 from __future__ import annotations
 
+import itertools
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+_JOB_TAGS = itertools.count()
+
+
+@contextmanager
+def job_tag(spark: SparkSession, prefix: str):
+    """Tag the Spark jobs this thread starts inside the block with a
+    fresh tag, and yield the tag: ``cancelJobsWithTag`` cancels them
+    and ``statusTracker().getJobIdsForTag`` lists them. A tag adds to
+    the caller's job group, local properties and tags; it replaces
+    none of them."""
+    sc = spark.sparkContext
+    tag = f"{prefix}-{next(_JOB_TAGS)}"
+    sc.addJobTag(tag)
+    try:
+        yield tag
+    finally:
+        sc.removeJobTag(tag)
 
 
 def inline_df(spark: SparkSession, rows: list[tuple],

@@ -114,6 +114,30 @@ def test_query_timeout(social):
         .collect()[0]["n"] == 10
 
 
+def test_query_timeout_keeps_callers_job_group(social):
+    """A query under TIMEOUT cancels by its own job tag: the caller's
+    job group, its other local properties and its tags survive."""
+    sc = social.spark.sparkContext
+    sc.setJobGroup("caller-group", "caller", interruptOnCancel=False)
+    sc.addJobTag("caller-tag")
+    social.config_set("TIMEOUT", 60000)
+    try:
+        assert social.query(
+            "MATCH (p:person)-[*1..3]->(q) RETURN count(*) AS n") \
+            .collect()[0]["n"] > 0
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+        assert sc.getLocalProperty("spark.job.interruptOnCancel") \
+            == "false"
+        assert set(sc.getJobTags()) == {"caller-tag"}
+    finally:
+        social.config_set("TIMEOUT", 0)
+        sc.removeJobTag("caller-tag")
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+
+
 def test_query_timeout_mutation_atomic(social):
     """A TIMEOUT firing mid-mutation must leave the graph exactly as
     it was (whole-query abort, like the reference's single-writer

@@ -251,3 +251,109 @@ def test_random_walks_match_python_replay(spark, seed):
             cur = out[h % len(out)]
             exp.append(cur)
         assert [got[s][t] for t in sorted(got[s])] == exp, (s, got[s], exp)
+
+
+def _multigraph(spark, seed: int, n: int = 12, m: int = 30):
+    """A seeded random multigraph as a Graph of ``N`` nodes (``k`` =
+    node id) and ``R`` edges, parallel edges and self-loops included,
+    with edge ids shuffled so that id order is not insertion order.
+    Returns (graph, [(eid, src, dst)])."""
+    from redisgraph_spark import Graph
+    rng = random.Random(seed)
+    ends = [(rng.randrange(1, n + 1), rng.randrange(1, n + 1))
+            for _ in range(m)]
+    eids = rng.sample(range(1000, 2000), m)
+    edges = [(e, a, b) for e, (a, b) in zip(eids, ends)]
+    g = Graph(spark,
+              {"N": spark.createDataFrame(
+                  [(i, i) for i in range(1, n + 1)], ["_id", "k"])},
+              {"R": spark.createDataFrame(edges, ["_id", "_src", "_dst"])})
+    return g, edges
+
+
+def _shortest_paths(edges, src: int, max_hops: int) -> dict:
+    """{dst: set of edge-id tuples}: every shortest path of 1..max_hops
+    edges from ``src``, by a pure-Python level-synchronous BFS."""
+    from collections import defaultdict
+    out = defaultdict(list)
+    for e, a, b in edges:
+        out[a].append((b, e))
+    paths = {src: {()}}
+    frontier = {src}
+    for _ in range(max_hops):
+        nxt = defaultdict(set)
+        for u in frontier:
+            for v, e in out[u]:
+                if v not in paths:
+                    nxt[v] |= {p + (e,) for p in paths[u]}
+        if not nxt:
+            break
+        paths.update(nxt)
+        frontier = set(nxt)
+    return {v: ps for v, ps in paths.items() if v != src}
+
+
+@pytest.mark.parametrize("seed,fn,hops", [
+    (6, "shortestPath", 3), (6, "allShortestPaths", None),
+    pytest.param(21, "shortestPath", None, marks=pytest.mark.slow),
+    pytest.param(21, "allShortestPaths", 3, marks=pytest.mark.slow)])
+def test_shortest_paths_match_bfs_reference(spark, seed, fn, hops):
+    """shortestPath yields, per reachable pair, one path of the BFS
+    distance: the lexicographically smallest by edge ids.
+    allShortestPaths yields every path of that length."""
+    g, edges = _multigraph(spark, seed)
+    sources = [1, 2, 3]
+    bound = "*" if hops is None else f"*..{hops}"
+    got: dict = {}
+    for r in g.query(
+            f"MATCH (a:N) WHERE a.k IN $s "
+            f"MATCH p = {fn}((a)-[:R{bound}]->(b:N)) "
+            f"RETURN a.k AS a, b.k AS b, "
+            f"[r IN relationships(p) | id(r)] AS eids, "
+            f"[x IN nodes(p) | x.k] AS nids", {"s": sources}).collect():
+        got.setdefault((r["a"], r["b"]), set()).add(tuple(r["eids"]))
+        ends = {e: (a, b) for e, a, b in edges}
+        walk = [r["a"]] + [ends[e][1] for e in r["eids"]]
+        assert r["nids"] == walk
+        assert all(ends[e][0] == u for e, u in zip(r["eids"], walk))
+
+    exp = {}
+    for s in sources:
+        for v, ps in _shortest_paths(edges, s, hops or 32).items():
+            exp[(s, v)] = ps if fn == "allShortestPaths" else {min(ps)}
+    assert got == exp
+
+
+@pytest.mark.parametrize("seed,level", [
+    (8, 0), (8, 2), pytest.param(27, 0, marks=pytest.mark.slow)])
+def test_bfs_tree_matches_python_reference(spark, seed, level):
+    """algo.BFS yields, per source that reaches anything, the nodes
+    within ``level`` hops (0: unlimited) in id order, each with the
+    smallest-id edge that reaches it from the level before."""
+    g, edges = _multigraph(spark, seed)
+    sources = [1, 2, 3, 4]
+    got = {r["a"]: (r["ns"], r["es"]) for r in g.query(
+        "MATCH (a:N) WHERE a.k IN $s "
+        "CALL algo.BFS(a, $lvl, 'R') YIELD nodes, edges "
+        "RETURN a.k AS a, [x IN nodes | x.k] AS ns, "
+        "[e IN edges | id(e)] AS es",
+        {"s": sources, "lvl": level}).collect()}
+
+    exp = {}
+    for s in sources:
+        dist = {s: 0}
+        parent = {}
+        frontier = [s]
+        while frontier and (level == 0 or dist[frontier[0]] < level):
+            d = dist[frontier[0]] + 1
+            for e, a, b in edges:
+                if a in frontier and (b not in dist or dist[b] == d):
+                    if b not in dist:
+                        dist[b] = d
+                    if b != s:
+                        parent[b] = min(parent.get(b, e), e)
+            frontier = [v for v in dist if dist[v] == d]
+        if parent:
+            ns = sorted(parent)
+            exp[s] = (ns, [parent[v] for v in ns])
+    assert got == exp

@@ -226,7 +226,19 @@ def test_param_args_match_literals(named_graph, literal, param, params):
     "WITH 'x' AS label CALL db.labels() YIELD label RETURN label",
     "MATCH (n:P) WITH n AS node CALL algo.pageRank('P', 'R') "
     "YIELD node, score RETURN node, score",
+    "UNWIND ['red', 'nut'] AS node "
+    "CALL db.idx.fulltext.queryNodes('P', node) YIELD node RETURN node",
 ])
 def test_yield_of_bound_name_refused(named_graph, q):
     with pytest.raises(Exception, match="VariableAlreadyBound"):
         named_graph.query(q)
+
+
+def test_correlated_call_over_no_rows_yields_empty_columns(named_graph):
+    """A correlated CALL over zero input rows runs no procedure and
+    yields its (aliased) columns with no rows."""
+    df = named_graph.query(
+        "UNWIND [] AS t CALL db.idx.fulltext.queryNodes('P', t) "
+        "YIELD node AS n, score RETURN n, score")
+    assert df.columns == ["n", "score"]
+    assert df.collect() == []
