@@ -39,7 +39,9 @@ def weakly_connected_components(node_ids: DataFrame,
                            F.col("_id").alias("comp")) \
         .localCheckpoint(eager=True)
     prev_sum = None
-    for _ in range(max_iter):
+    # max_iter rounds that may change labels, and one that confirms the
+    # fixpoint of a graph whose diameter is exactly max_iter
+    for _ in range(max_iter + 1):
         nbr = sym.join(comp, sym["b"] == comp["node"]) \
             .groupBy("a").agg(F.min("comp").alias("ncomp"))
         comp = comp.join(nbr, comp["node"] == nbr["a"], "left") \

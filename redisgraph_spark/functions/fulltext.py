@@ -10,16 +10,23 @@ prefix, ``%term%`` fuzzy) and compiles it to joins over the index.
 
 Index layout: ``(field, token, _id, tf, positions)`` — one row per
 (field, token, node). At 100 TB this table is hash-partitioned by
-token so a query touches only its terms' partitions; phrase matching
-is an equi-join on (_id, field) between the phrase's term rows plus an
+token so a query touches only its terms' partitions. A conjunction's
+plain terms are one aggregate over the index rows that match any of
+them, keeping the ids every term matched (RediSearch walks an AND's
+posting lists once the same way); phrase matching is an equi-join on
+(_id, field) between the phrase's term rows plus an
 ``array_intersect`` over shifted position arrays — no re-scan of the
 raw text. Scoring: Σ term frequency over matched terms (RediSearch's
 default TF scoring shape; the reference's default has no IDF either).
+Below the adaptive gate a graph's hits sort in one partition, with no
+range-sample job; above it they sort with a global ``orderBy``.
 """
 
 from __future__ import annotations
 
 import dataclasses
+import functools
+import operator
 import re
 from dataclasses import dataclass, field as dc_field
 from typing import NamedTuple
@@ -256,7 +263,7 @@ def fill(shape, words) -> object:
 # Compiler: AST -> DataFrame (_id, score)
 # ---------------------------------------------------------------------------
 
-def _term_df(index: DataFrame, t: FtTerm, id_col: str) -> DataFrame:
+def _term_cond(t: FtTerm):
     if t.fuzzy:
         cond = F.levenshtein(F.col("token"), F.lit(t.word)) <= 1
     elif t.prefix:
@@ -265,8 +272,29 @@ def _term_df(index: DataFrame, t: FtTerm, id_col: str) -> DataFrame:
         cond = F.col("token") == t.word
     if t.field is not None:
         cond = cond & (F.col("field") == t.field)
-    return index.filter(cond).groupBy(id_col) \
-        .agg(F.sum("tf").cast("double").alias("score"))
+    return cond
+
+
+def _terms_df(index: DataFrame, terms: list[FtTerm],
+              id_col: str) -> DataFrame:
+    """The ids that match every one of ``terms``, scored Σ tf over them
+    (a repeated term counts once per repeat): one aggregate over the
+    index rows that match any term. Each row's per-term match flags
+    are projected beneath the aggregate, so the word literals stay out
+    of its functions and a plan template's two sentinel sets plan the
+    same aggregate (graph/templates.py)."""
+    conds = [_term_cond(t) for t in terms]
+    flags = [f"_c{i}" for i in range(len(terms))]
+    rows = index.filter(functools.reduce(operator.or_, conds)) \
+        .select(id_col, "tf", *[c.cast("int").alias(f)
+                                for c, f in zip(conds, flags)])
+    weight = functools.reduce(operator.add, map(F.col, flags))
+    return rows.groupBy(id_col) \
+        .agg(F.sum(weight * F.col("tf")).cast("double").alias("score"),
+             *[F.max(f).alias(f) for f in flags]) \
+        .filter(functools.reduce(operator.and_,
+                                 [F.col(f) >= 1 for f in flags])) \
+        .select(id_col, "score")
 
 
 def _phrase_df(index: DataFrame, p: FtPhrase, id_col: str) -> DataFrame:
@@ -303,7 +331,7 @@ def _compile(index: DataFrame, node, id_col: str,
     """Returns (_id, score). `universe` = all candidate ids (needed for
     pure-negative branches)."""
     if isinstance(node, FtTerm):
-        return _term_df(index, node, id_col)
+        return _terms_df(index, [node], id_col)
     if isinstance(node, FtPhrase):
         return _phrase_df(index, node, id_col)
     if isinstance(node, FtOr):
@@ -346,8 +374,13 @@ def _compile(index: DataFrame, node, id_col: str,
         elif not pos:
             out = universe.select(id_col, F.lit(0.0).alias("score"))
         else:
-            out = _compile(index, pos[0], id_col, universe)
-            for c in pos[1:]:
+            # the plain terms are one aggregate; each other conjunct
+            # (phrase, OR, nested AND) joins it on the id
+            terms = [c for c in pos if isinstance(c, FtTerm)]
+            rest = [c for c in pos if not isinstance(c, FtTerm)]
+            out = _terms_df(index, terms, id_col) if terms \
+                else _compile(index, rest.pop(0), id_col, universe)
+            for c in rest:
                 nxt = _compile(index, c, id_col, universe) \
                     .withColumnRenamed("score", "_s2")
                 out = out.join(nxt, id_col) \
@@ -368,17 +401,23 @@ def _compile(index: DataFrame, node, id_col: str,
     raise ValueError(f"bad fulltext node {node!r}")
 
 
+def _hits(index: DataFrame, nodes: DataFrame, query,
+          id_col: str) -> DataFrame:
+    """Node rows matching ``query`` (text or parsed AST) + score, in no
+    order."""
+    ast = parse_query(query) if isinstance(query, str) else query
+    if isinstance(ast, FtAnd) and not ast.children:
+        return nodes.limit(0).withColumn("score", F.lit(0.0))
+    matched = _compile(index, ast, id_col, nodes.select(id_col))
+    return nodes.join(matched, id_col)
+
+
 def query_index(index: DataFrame, nodes: DataFrame, query,
                 id_col: str = "_id") -> DataFrame:
     """Match `query` (RediSearch text, or its parsed AST) against the
     index, return node rows + score descending
     (≈ db.idx.fulltext.queryNodes YIELD node, score)."""
-    ast = parse_query(query) if isinstance(query, str) else query
-    if isinstance(ast, FtAnd) and not ast.children:
-        return nodes.limit(0).withColumn("score", F.lit(0.0))
-    universe = nodes.select(id_col)
-    matched = _compile(index, ast, id_col, universe)
-    return nodes.join(matched, id_col) \
+    return _hits(index, nodes, query, id_col) \
         .orderBy(F.col("score").desc(), F.col(id_col).asc())
 
 
@@ -441,8 +480,13 @@ class FulltextCatalog:
         only part a request rebinds."""
         if label not in self._index:
             raise ValueError(f"No fulltext index on label {label}")
-        return query_index(self._index[label],
-                           self.graph.node_tables[label], query)
+        index, nodes = self._index[label], self.graph.node_tables[label]
+        if not self.graph._small_input:
+            return query_index(index, nodes, query)
+        # below the adaptive gate the hits are few: one partition sorts
+        # them, with no range-sample job
+        return _hits(index, nodes, query, "_id").coalesce(1) \
+            .sortWithinPartitions(F.col("score").desc(), F.col("_id").asc())
 
     def query_many(self, label: str, terms: list[str]) -> DataFrame:
         """Vectorized batch query for SIMPLE single-token terms (the

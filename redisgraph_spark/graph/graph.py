@@ -657,9 +657,8 @@ class Graph:
         and each join with a parameter on one side only broadcasts the
         other side, so a lookup is one job at collect. A broadcast that
         still depends on a parameter (its join has parameters on both
-        sides, as a fulltext AND's second term has, or its other side
-        does not fit the held budget) runs here, inside ``query`` and
-        under TIMEOUT. The DataFrame returned then scans that run's
+        sides, or its other side does not fit the held budget) runs
+        here, inside ``query`` and under TIMEOUT. The DataFrame returned then scans that run's
         RDD; it composes like any other, and ``explain``/``profile``
         show the real plan. Any write invalidates both; one that
         replaced a table also bumps ``_version``, which retires the

@@ -91,6 +91,9 @@ _BUILDS = (frozenset(["Inner", "Cross", "RightOuter"]),
 # executed-plan nodes a per-request swap cannot reach or must not
 # share: folded inline VALUES, and exchanges reused across the plan
 _UNSWAPPABLE = frozenset(["LocalTableScan", "ReusedExchange"])
+# optimized logical nodes that output at most their children's rows
+_NO_MORE_ROWS = frozenset(["Project", "Filter", "Aggregate", "Sort",
+                           "Repartition", "RepartitionByExpression", "Union"])
 _FULLTEXT = "db.idx.fulltext.querynodes"
 
 
@@ -226,10 +229,9 @@ def _jvm(spark) -> SimpleNamespace:
             broadcast=jvm.scala.Some(logical.HintInfo(jvm.scala.Some(
                 _module(logical, "BROADCAST$")))),
             no_hint=_module(jvm.scala, "None$"),
-            join_pattern=jvm.org.apache.spark.sql.catalyst.trees.TreePattern
-            .JOIN(),
             physical=_module(sql.execution, "QueryExecution$")
-            .prepareExecutedPlan)
+            .prepareExecutedPlan,
+            fixed_length=sql.catalyst.expressions.UnsafeRow.isFixedLength)
     return h
 
 
@@ -438,16 +440,38 @@ def _walk(node, held: list, swap) -> bool:
                for i in range(kids.size()))
 
 
-def _side_bytes(h, jss, side, room: int) -> int:
-    """Bytes a broadcast of ``side`` may take: Catalyst's size, except
-    that Catalyst sizes a join as the product of its sides; a side with
-    a join in it that way over ``room`` is counted instead (one job) and
-    sized as Catalyst sizes a row (8 bytes plus each column's default
-    size)."""
-    size = int(side.stats().sizeInBytes())
-    if size <= room or not side.containsPattern(h.join_pattern):
-        return size
-    return h.of_rows(jss, side).count() * (8 + side.schema().defaultSize())
+def _side_rows(h, jss, side) -> int:
+    """Rows of ``side``: at most what Catalyst counts of it or, through
+    ``_NO_MORE_ROWS`` nodes, of what it reads (a materialized cached
+    table has a row count); else counted (one job)."""
+    def bound(node):
+        rows = node.stats().rowCount()
+        if rows.isDefined():
+            return int(str(rows.get()))
+        if node.nodeName() not in _NO_MORE_ROWS:
+            return None
+        kids = node.children()
+        kids = [bound(kids.apply(i)) for i in range(kids.size())]
+        return None if None in kids else sum(kids)
+    rows = bound(side)
+    return h.of_rows(jss, side).count() if rows is None else rows
+
+
+def _side_bytes(h, jss, side) -> int:
+    """Bytes a broadcast of ``side`` holds as a hash relation on a long
+    key: each row an UnsafeRow (null bits, 8 bytes a field, variable
+    -length data) behind an 8-byte header, in a page that starts at
+    1 MiB and doubles, and 8 bytes a row of key array. Catalyst's
+    ``sizeInBytes`` will not do: for a cached table it is the compressed
+    columnar size, 3-4x under what the broadcast holds."""
+    rows = _side_rows(h, jss, side)
+    width = 16 + sum(
+        8 if h.fixed_length(f.dataType()) else 8 + f.dataType().defaultSize()
+        for f in side.schema().fields())
+    page = 1 << 20
+    while page < rows * width:
+        page *= 2
+    return page + 8 * rows
 
 
 def _flipped(h, jss, plan, swap, room: int | None):
@@ -470,7 +494,7 @@ def _flipped(h, jss, plan, swap, room: int | None):
                     node.joinType().toString().split("(")[0] in _BUILDS[free]:
                 flips[node] = free
                 if room is not None and total <= room:
-                    total += _side_bytes(h, jss, kids[free], room - total)
+                    total += _side_bytes(h, jss, kids[free])
                 kids = [kids[1 - free]]
         todo.extend(kids)
     if not flips or (room is not None and total > room):

@@ -48,3 +48,43 @@ def test_gate_open_contract():
     assert proc.returncode == 0, \
         f"gate-open contract failed:\n{tail}\n{proc.stderr[-2000:]}"
     assert ", 0 fail" in proc.stdout, tail
+
+
+FT_SCRIPT = """
+import json, sys
+from redisgraph_spark import Graph, get_spark
+spark = get_spark("redisgraph-spark-gate-open-ft")
+spark.sparkContext.setLogLevel("ERROR")
+g = Graph.from_tpch(spark, sys.argv[1])
+g.query("CALL db.idx.fulltext.createNodeIndex('Part', 'p_name')")
+print(json.dumps({"small": g._small_input,
+                  "plan": g.explain(sys.argv[2]),
+                  "rows": [list(r) for r in g.query(sys.argv[2]).collect()]}))
+"""
+
+
+def test_gate_open_fulltext_keeps_global_sort(graph):
+    """Above the adaptive gate a fulltext query still sorts with a
+    global ``orderBy`` (a range-partitioned exchange); below it the
+    hits sort in one partition. Both give the same rows in the same
+    order."""
+    import json
+
+    from redisgraph_spark import Graph
+    from conftest import SF_DIR
+    text = ("CALL db.idx.fulltext.queryNodes('Part', 'widget|small') "
+            "YIELD node, score RETURN node.p_partkey AS k, score")
+    proc = subprocess.run(
+        [sys.executable, "-c", FT_SCRIPT, SF_DIR, text],
+        capture_output=True, text=True, timeout=600, cwd=REPO,
+        env={**os.environ, "SPARK_GRAFT_ADAPTIVE_MIN_BYTES": "0"})
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    above = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert above["small"] is False
+    assert "rangepartitioning" in above["plan"]
+    g = Graph.from_tpch(graph.spark, SF_DIR)
+    g.query("CALL db.idx.fulltext.createNodeIndex('Part', 'p_name')")
+    assert g._small_input
+    assert "rangepartitioning" not in g.explain(text)
+    rows = [list(r) for r in g.query(text).collect()]
+    assert rows == above["rows"] and len({s for _, s in rows}) > 1

@@ -15,12 +15,16 @@ each bind must equal a fresh plan too.
 """
 
 import math
+import random
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
 from redisgraph_spark.cypher.parser import parse
-from redisgraph_spark.functions.fulltext import fill, parse_query, skeleton
+from redisgraph_spark.functions.fulltext import (FtAnd, FtNot, FtOptional,
+                                                FtOr, FtPhrase, FtTerm,
+                                                fill, parse_query, skeleton)
 from redisgraph_spark.graph.templates import (PlanTemplate, _sentinel,
                                               param_shape)
 from redisgraph_spark.planner.planner import CypherPlanner
@@ -267,24 +271,25 @@ def test_explain_and_profile_of_promoted_shape(cached_graph):
         assert not any("ExistingRDD" in o["op"] for o in prof["ops"])
 
 
-def test_timeout_in_promoted_bind(fulltext_graph):
+def test_timeout_in_promoted_bind(spark, fulltext_graph):
     """A TIMEOUT during a promoted run fails that query; the template
     keeps serving. A lookup's promoted run starts no job inside query,
-    so this uses a fulltext OR, whose promoted run still starts a
-    key-dependent job there."""
+    so this uses a fulltext NOT, whose promoted run still builds its
+    key-dependent anti-join side there."""
     from redisgraph_spark.graph.graph import QueryTimeoutError
     g = fulltext_graph
-    for q in ("widget|gear", "red|blue"):
+    for q in ("widget -small", "plate -red"):
         g.query(FT_QUERY, {"q": q})
+    assert _jobs(spark, lambda: g.query(FT_QUERY, {"q": "ring -hot"})) >= 1
     g.config_set("TIMEOUT", 1)
     try:
         with pytest.raises(QueryTimeoutError):
-            g.query(FT_QUERY, {"q": "rod|ring"})
+            g.query(FT_QUERY, {"q": "rod -old"})
     finally:
         g.config_set("TIMEOUT", 0)
-    df, outcome = g._query(FT_QUERY, {"q": "rod|ring"})
+    df, outcome = g._query(FT_QUERY, {"q": "rod -old"})
     assert outcome == "rebind" and _ran(df)
-    assert _rows(df) == _rows(_fresh(g, FT_QUERY, {"q": "rod|ring"})) != []
+    assert _rows(df) == _rows(_fresh(g, FT_QUERY, {"q": "rod -old"})) != []
 
 
 def _compiles(spark) -> int:
@@ -376,6 +381,26 @@ def test_flip_past_budget_keeps_spark_build_sides(spark, cached_graph):
     finally:
         spark.conf.set(key, before)
         g._plan_cache.clear()
+
+
+def test_free_sides_sized_as_held(cached_graph, monkeypatch):
+    """Promotion sizes each free side in what its broadcast holds (rows
+    × row and hash overhead), not by a cached table's compressed
+    bytes, 3-4x under: the estimates of hop2's flipped sides are within
+    a factor of two of the broadcasts built."""
+    from redisgraph_spark.graph import templates as TPL
+    g, text = cached_graph, TEMPLATED["hop2"][0]
+    g._invalidate_plans()
+    sizes = []
+    real = TPL._side_bytes
+
+    def spy(*args):
+        sizes.append(real(*args))
+        return sizes[-1]
+    monkeypatch.setattr(TPL, "_side_bytes", spy)
+    held = _promoted(g, text, {"k": 32}).physical.nbytes
+    assert len(sizes) == 3
+    assert held / 2 <= sum(sizes) <= held * 2
 
 
 def test_second_sentinel_set_is_planned_on_its_own(cached_graph,
@@ -520,14 +545,15 @@ def test_fulltext_plans_per_request(fulltext_graph):
 
 
 def test_fulltext_bind_job_count(spark, fulltext_graph):
-    """Promoted, an "adjective noun" query runs 3 jobs: the second
-    term's broadcast, the sort's range sample and the collect; the
-    Part broadcast is held."""
+    """Promoted, an "adjective noun" query runs 1 job, at collect: its
+    terms are one aggregate, the Part broadcast is held and the hits
+    sort in one partition, with no range sample."""
     g = fulltext_graph
     for q in ("small widget", "red plate"):
         g.query(FT_QUERY, {"q": q})
+    assert _jobs(spark, lambda: g.query(FT_QUERY, {"q": "hot ring"})) == 0
     assert _jobs(spark, lambda: g.query(
-        FT_QUERY, {"q": "hot ring"}).collect()) == 3
+        FT_QUERY, {"q": "old rod"}).collect()) == 1
 
 
 def test_explain_and_profile_of_fulltext_template(fulltext_graph):
@@ -545,17 +571,202 @@ def test_explain_and_profile_of_fulltext_template(fulltext_graph):
     assert {"BroadcastHashJoin", "HashAggregate"} <= ops
 
 
-def test_timeout_in_fulltext_bind(fulltext_graph):
+def test_timeout_in_fulltext_bind(spark, fulltext_graph):
+    """As ``test_timeout_in_promoted_bind``, over a phrase: both sides
+    of its position join hold a word, so its promoted run builds a
+    broadcast inside query."""
     from redisgraph_spark.graph.graph import QueryTimeoutError
     g = fulltext_graph
-    for q in ("small widget", "red plate"):
+    for q in ('"small widget"', '"red plate"'):
         g.query(FT_QUERY, {"q": q})
+    assert _jobs(spark, lambda: g.query(FT_QUERY, {"q": '"old rod"'})) >= 1
     g.config_set("TIMEOUT", 1)
     try:
         with pytest.raises(QueryTimeoutError):
-            g.query(FT_QUERY, {"q": "hot ring"})
+            g.query(FT_QUERY, {"q": '"hot ring"'})
     finally:
         g.config_set("TIMEOUT", 0)
-    df, outcome = g._query(FT_QUERY, {"q": "hot ring"})
+    df, outcome = g._query(FT_QUERY, {"q": '"hot ring"'})
     assert outcome == "rebind" and _ran(df)
-    assert _rows(df) == _rows(_fresh(g, FT_QUERY, {"q": "hot ring"})) != []
+    assert _rows(df) == _rows(_fresh(g, FT_QUERY, {"q": '"hot ring"'})) != []
+
+
+# ------------------------------------------------ fulltext differential
+# seeded random two-field documents scored by a pure-Python reading of
+# the grammar: Σ tf over the matched terms, a phrase scores its
+# occurrences (adjacent positions), NOT scores 0, best first and ties
+# by id; each case's queries share one skeleton, so through a template
+# the first plans, the second promotes and the rest run promoted
+FT_VOCAB = ["red", "redo", "blue", "small", "widget", "wide", "gear",
+            "bolt"]
+FT_FIELDS = ("title", "body")
+FT_CASES = {
+    "term": "{a}",
+    "and": "{a} {b}",
+    "and3": "{a} {b} {c}",
+    "repeat": "{a} {a}",
+    "field": "@title:{a} {b}",
+    "field_or": "@body:({a}|{b})",
+    "prefix": "{p}* {b}",
+    "or": "{a}|{b}",
+    "or_and": "{a}|{b} {c}",
+    "not": "{a} -{b}",
+    "not_only": "-{a}",
+    "phrase": '"{a} {b}"',
+    "field_phrase": '@title:"{a} {b}"',
+    "optional": "{a} ~{b}",
+    "optional_only": "~{a}",
+    "punct": "{a} !! {b} :)",
+}
+
+
+def _ft_docs(seed: int, n: int = 60) -> list[tuple]:
+    rng = random.Random(seed)
+
+    def text():
+        if rng.random() < 0.1:
+            return None
+        words = [w.upper() if rng.random() < 0.2 else w
+                 for w in rng.choices(FT_VOCAB, k=rng.randint(0, 6))]
+        return rng.choice([" ", ", ", "-", " !! "]).join(words)
+    return [(i, text(), text()) for i in rng.sample(range(1000), n)]
+
+
+def _ft_reference(docs: list[tuple], node) -> list[tuple]:
+    """``(_id, score)`` of the docs ``node`` (a parsed query) matches,
+    best first."""
+    post: dict = {}          # (field, token) -> {_id: [positions]}
+    for i, *texts in docs:
+        for f, text in zip(FT_FIELDS, texts):
+            toks = re.split(r"[^a-z0-9]+", (text or "").lower())
+            for pos, tok in enumerate(toks):
+                if tok:
+                    post.setdefault((f, tok), {}).setdefault(i, []) \
+                        .append(pos)
+    universe = {d[0] for d in docs}
+
+    def add(out, i, s):
+        out[i] = out.get(i, 0) + s
+
+    def term(t):
+        out = {}
+        for (f, tok), ids in post.items():
+            if t.field in (None, f) and (
+                    tok.startswith(t.word) if t.prefix else tok == t.word):
+                for i, ps in ids.items():
+                    add(out, i, len(ps))
+        return out
+
+    def phrase(p):
+        out = {}
+        for f in FT_FIELDS:
+            if p.field not in (None, f):
+                continue
+            for i in universe:
+                hits = set(post.get((f, p.words[0]), {}).get(i, []))
+                for k, w in enumerate(p.words[1:], start=1):
+                    hits &= {x - k for x in
+                             post.get((f, w), {}).get(i, [])}
+                if hits:
+                    add(out, i, len(hits))
+        return out
+
+    def ev(n):
+        if isinstance(n, FtTerm):
+            return term(n)
+        if isinstance(n, FtPhrase):
+            return phrase(n)
+        if isinstance(n, FtOr):
+            out = {}
+            for c in n.children:
+                for i, s in ev(c).items():
+                    add(out, i, s)
+            return out
+        if isinstance(n, FtNot):
+            return {i: 0 for i in universe - set(ev(n.child))}
+        if isinstance(n, FtOptional):
+            return ev(n.child)
+        kids = [c for c in n.children
+                if not (isinstance(c, FtAnd) and not c.children)]
+        if not kids:
+            return {}
+        pos = [c for c in kids if not isinstance(c, (FtNot, FtOptional))]
+        opt = [c.child for c in kids if isinstance(c, FtOptional)]
+        if pos:
+            out = ev(pos[0])
+            for c in pos[1:]:
+                s = ev(c)
+                out = {i: v + s[i] for i, v in out.items() if i in s}
+        elif opt:
+            out, opt = ev(FtOr(opt)), []
+        else:
+            out = dict.fromkeys(universe, 0)
+        for o in opt:
+            for i, s in ev(o).items():
+                if i in out:
+                    add(out, i, s)
+        for c in kids:
+            if isinstance(c, FtNot):
+                for i in ev(c.child):
+                    out.pop(i, None)
+        return out
+    got = ev(parse_query(node) if isinstance(node, str) else node)
+    return sorted(((i, float(s)) for i, s in got.items()),
+                  key=lambda r: (-r[1], r[0]))
+
+
+def _ft_queries(case: str, seed: int, n: int = 4) -> list[str]:
+    """``n`` distinct queries of ``case`` (a repeat would hit the
+    exact-value cache)."""
+    rng = random.Random(f"{case}-{seed}")
+    out: dict = {}
+    while len(out) < n:
+        a, b, c = (rng.choice(FT_VOCAB + ["nosuch"]) for _ in range(3))
+        p = rng.choice(FT_VOCAB)[:rng.randint(1, 3)]
+        out[FT_CASES[case].format(a=a, b=b, c=c, p=p)] = None
+    return list(out)
+
+
+@pytest.fixture(scope="module")
+def ft_docs(spark):
+    """Seeded random documents as a cached node table, and their
+    index."""
+    from redisgraph_spark.functions.fulltext import build_index
+    docs = _ft_docs(7)
+    df = spark.createDataFrame(
+        docs, "_id long, title string, body string").persist()
+    return docs, df, build_index(df, list(FT_FIELDS)).localCheckpoint()
+
+
+@pytest.mark.parametrize("case", sorted(FT_CASES))
+def test_fulltext_matches_python_reference(spark, cached_graph, ft_docs,
+                                           case):
+    """Through ``query_index`` and through a promoted template, each
+    query matches the reference: ids, scores and their order."""
+    from redisgraph_spark import Graph
+    from redisgraph_spark.functions.fulltext import query_index
+    docs, df, index = ft_docs
+    queries = _ft_queries(case, 7)
+    assert len({repr(skeleton(q)[0]) for q in queries}) == 1
+    for q in queries:
+        got = query_index(index, df, q).select("_id", "score").collect()
+        assert [tuple(r) for r in got] == _ft_reference(docs, q), q
+    # a small graph of known size: adaptive execution stays off
+    g = Graph(spark, {"Doc": df}, {}, input_bytes=1)
+    g.query("CALL db.idx.fulltext.createNodeIndex('Doc', 'title', 'body')")
+    text = ("CALL db.idx.fulltext.queryNodes('Doc', $q) YIELD node, score "
+            "RETURN node._id AS id, score")
+    for i, q in enumerate(queries):
+        df_q, outcome = g._query(text, {"q": q})
+        assert outcome == ("plan" if i == 0 else "rebind"), q
+        assert _ran(df_q) == (i >= 2), q
+        got = [tuple(r) for r in df_q.collect()]
+        assert got == _ft_reference(docs, q), q
+
+
+@pytest.mark.parametrize("text", ["", "!! ,", "()"])
+def test_fulltext_without_words_matches_nothing(ft_docs, text):
+    from redisgraph_spark.functions.fulltext import query_index
+    docs, df, index = ft_docs
+    assert _ft_reference(docs, text) == []
+    assert query_index(index, df, text).collect() == []

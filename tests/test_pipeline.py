@@ -518,6 +518,28 @@ def test_dedup_clusters_star_solver_equivalence(spark):
     assert got[69] == 69                         # singleton
 
 
+@pytest.mark.parametrize("hops,warns", [(6, False), (7, True)])
+def test_wcc_chain_of_max_iter_hops_converges_quietly(spark, hops, warns):
+    """A chain whose diameter equals ``max_iter`` converges on the last
+    propagating round: one component and no warning. One hop more
+    still warns that the components may be split."""
+    import warnings
+
+    from redisgraph_spark.algorithms.components import \
+        weakly_connected_components
+    nodes = spark.createDataFrame([(i,) for i in range(hops + 1)], ["_id"])
+    edges = spark.createDataFrame([(i, i + 1) for i in range(hops)],
+                                  ["_src", "_dst"])
+    with warnings.catch_warnings(record=True) as seen:
+        warnings.simplefilter("always")
+        comp = dict(tuple(r) for r in weakly_connected_components(
+            nodes, edges, max_iter=6).collect())
+    assert any(issubclass(w.category, RuntimeWarning)
+               for w in seen) == warns
+    if not warns:
+        assert set(comp.values()) == {0} and len(comp) == hops + 1
+
+
 def test_multimodal_corrupt_payloads_degrade_to_stub(spark):
     """Null/corrupt media payloads must not abort the job: decode
     errors fall back to the deterministic stub row; frame sampling
