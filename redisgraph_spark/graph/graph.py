@@ -310,8 +310,9 @@ class Graph:
         self._cache_mu = threading.Lock()   # LRU bookkeeping only
         self._scan_cache: dict[tuple, DataFrame] = {}
         # chained-rewrite depth per (kind, name) — mutations swap in
-        # un-checkpointed lazy rewrites and pin every 4th to bound
-        # lineage growth (planner/mutations.py:_defer_pin)
+        # un-checkpointed lazy rewrites (a small key set's literal
+        # filter or projection, a large one's join) and pin every 4th
+        # to bound lineage growth (planner/mutations.py:_defer_pin)
         self._rewrite_depth: dict[tuple[str, str], int] = {}
         # flips on the first SET n:Label — a node id may then live in
         # several label tables, so unified scans dedup by id and carry a

@@ -15,6 +15,7 @@ Mutation statistics mirror ``src/resultset/resultset_statistics.h:12-20``.
 from __future__ import annotations
 
 import itertools
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -46,30 +47,119 @@ def _alloc_block() -> int:
     return _BLOCK_BASE + next(_block_counter) * _BLOCK_STRIDE
 
 
-from redisgraph_spark.session import INLINE_TYPES as _INLINE_TYPES
+# the most rows of a keyed SET or DELETE set held as literals
+# (`_KeySet`); a larger set is pinned on the executors
+_KEY_CAP = 1024
 
 
-def _materialize_small(spark, df: DataFrame, cap: int = 1024
-                       ) -> tuple[DataFrame, int]:
-    """Pin a keyed update/delete set, returning (pinned_df, row_count).
+def _bounded_collect(df: DataFrame, n: int) -> list:
+    """At most ``n`` rows of ``df`` in one Spark job. ``limit(n).collect()``
+    and ``take``/``isEmpty`` go through ``executeTake``, which scans one
+    partition first and the rest in later jobs; coalescing the limit to
+    one partition gathers every partition's share in the same job."""
+    return df.limit(n).coalesce(1).collect()
 
-    Typical SET/DELETE key sets are tiny (the matched entities); pulling
-    them to the driver as a ONE-task literal plan replaces the
-    checkpoint job + count job with a single limit-collect, and every
-    downstream rewrite joins against a broadcast literal. Sets larger
-    than `cap` (or with non-atomic columns) keep the scale-safe
-    localCheckpoint path — nothing is ever collected unbounded."""
-    if all(f.dataType.simpleString() in _INLINE_TYPES
-           for f in df.schema.fields):
-        rows = df.limit(cap + 1).collect()
-        if len(rows) <= cap:
-            from redisgraph_spark.session import inline_df
-            schema = [(f.name, f.dataType.simpleString())
-                      for f in df.schema.fields]
-            return inline_df(spark, [tuple(r) for r in rows],
-                             schema), len(rows)
-    ck = df.localCheckpoint(eager=True)
-    return ck, ck.count()
+
+class _KeySet:
+    """A keyed SET or DELETE set, pinned once for every table it
+    rewrites. Its first column is the key (an entity id), deduped;
+    further columns are values (a SET's new property values).
+
+    A set of at most ``_KEY_CAP`` rows whose cells render as SQL
+    literals is held as those literals: a rewrite tests ``key IN (…)``
+    and looks values up in a map literal, a Filter or Project in the
+    table's own scan stage that runs no broadcast job when the table is
+    read. Any other set is pinned by ``localCheckpoint`` and a rewrite
+    joins its broadcast (the cluster-scale form)."""
+
+    def __init__(self, plan: DataFrame, rows: list | None):
+        """``rows``: the plan's collected rows, or None; None or more
+        than ``_KEY_CAP`` rows pin the plan on the executors."""
+        from redisgraph_spark.session import _escaped_literals, sql_cells
+        self.key = plan.columns[0]
+        self.types = {f.name: f.dataType for f in plan.schema.fields}
+        self.lits, self.df = None, None
+        if rows is not None and len(rows) <= _KEY_CAP:
+            first: dict = {}
+            for r in rows:
+                first.setdefault(r[0], r)
+            self.lits = sql_cells(
+                list(first.values()),
+                [t.simpleString() for t in self.types.values()],
+                _escaped_literals(plan.sparkSession))
+        if self.lits is not None:
+            self.n = len(self.lits)
+        else:
+            self.df = plan.dropDuplicates([self.key]) \
+                .localCheckpoint(eager=True)
+            self.n = self.df.count()
+
+    def _member(self, *cols: str):
+        """Whether any of ``cols`` holds a key: false, never null, so a
+        Filter keeps the rows an anti join keeps."""
+        if not self.lits:
+            return F.lit(False)
+        keys = ", ".join(r[0] for r in self.lits)
+        return F.expr(" OR ".join(
+            f"coalesce(`{c}` IN ({keys}), false)" for c in cols))
+
+    def drop_from(self, tbl: DataFrame, *cols: str) -> DataFrame:
+        """``tbl`` without the rows whose ``cols`` hold a key."""
+        if self.lits is not None:
+            return tbl.filter(~self._member(*cols))
+        for c in cols:
+            tbl = tbl.join(F.broadcast(self.df),
+                           tbl[c] == self.df[self.key], "left_anti")
+        return tbl
+
+    def keep_in(self, tbl: DataFrame, *cols: str) -> DataFrame:
+        """The rows of ``tbl`` whose ``cols`` hold a key; on the scale
+        path one equi semi join per column, each row once."""
+        if self.lits is not None:
+            return tbl.filter(self._member(*cols))
+        parts, rest = [], tbl
+        for c in cols:
+            # a row an earlier column matched is left out of later ones
+            k = F.broadcast(self.df.select(F.col(self.key).alias(c)))
+            parts.append(rest.join(k, c, "left_semi"))
+            rest = rest.join(k, c, "left_anti")
+        return reduce(DataFrame.unionByName, parts)
+
+    def update(self, tbl: DataFrame, cols) -> DataFrame:
+        """``tbl`` with ``cols(hit, value)`` set: ``hit`` is whether a
+        row's ``_id`` is a key and ``value(name)`` that key's value in
+        column ``name``."""
+        if self.lits is not None:
+            at = {c: i for i, c in enumerate(self.types) if i}
+
+            def value(c):
+                pairs = ", ".join(f"{r[0]}, {r[at[c]]}" for r in self.lits)
+                return F.expr(f"try_element_at(map({pairs}), `_id`)")
+            return tbl.withColumns(cols(self._member("_id"), value))
+        out = tbl.join(F.broadcast(self.df),
+                       tbl["_id"] == self.df[self.key], "left")
+        return out.withColumns(cols(F.col(self.key).isNotNull(), F.col)) \
+            .drop(*self.types)
+
+
+def _key_sets(plans: dict[str, DataFrame]) -> dict[str, _KeySet]:
+    """Pin each keyed plan (its first column non-null) as a `_KeySet`.
+    Every plan whose types render as literals collects up to
+    ``_KEY_CAP + 1`` rows, all in ONE job (plans of one schema share a
+    union); a plan over the cap is pinned on the executors."""
+    from redisgraph_spark.session import LITERAL_TYPES
+    small = {k: p for k, p in plans.items()
+             if all(f.dataType.simpleString() in LITERAL_TYPES
+                    for f in p.schema.fields)}
+    rows: dict[str, list] = {k: [] for k in small}
+    same = len({p.schema.simpleString() for p in small.values()}) == 1
+    for batch in ([small] if same else [{k: p} for k, p in small.items()]):
+        tagged = [p.limit(_KEY_CAP + 1).select(F.lit(k).alias("__k"), "*")
+                  for k, p in batch.items()]
+        # each branch is bounded already; one partition makes it 1 job
+        for r in reduce(DataFrame.union, tagged).coalesce(1).collect():
+            rows[r[0]].append(r[1:])
+    return {k: _KeySet(p, rows.get(k)) for k, p in plans.items()}
 
 
 def _defer_pin(g, kind: str, name: str, df: DataFrame) -> DataFrame:
@@ -78,12 +168,13 @@ def _defer_pin(g, kind: str, name: str, df: DataFrame) -> DataFrame:
     Even a lazy ``localCheckpoint`` forces full physical planning
     (DataFrame->RDD) at mutation time — ~0.2s of pure Catalyst analysis
     per rewritten table on a warm session.  The rewrite plan itself is
-    deterministic (a join of the previous pinned table with an inline
-    literal key set), so it is safe to store the plain lazy plan and let
-    the next action that reads the table fuse the rewrite into its own
-    job.  To bound lineage growth under long mutation scripts, every
-    4th chained rewrite of the same table gets a (lazy) checkpoint,
-    which resets the chain."""
+    deterministic (the previous pinned table under a `_KeySet`'s
+    literal filter or projection, or joined with its pinned set), so it
+    is safe to store the plain lazy plan and let the next action that
+    reads the table fuse the rewrite into its own job.  To bound
+    lineage growth under long mutation scripts, every 4th chained
+    rewrite of the same table gets a (lazy) checkpoint, which resets
+    the chain."""
     key = (kind, name)
     depth = g._rewrite_depth.get(key, 0) + 1
     if depth >= 4:
@@ -581,37 +672,36 @@ def _set(planner, ctx, clause: A.SetClause) -> DataFrame | None:
         refresh.setdefault(var, {}).update(vals)
         ucols = {key: f"__u{i}" for i, key in enumerate(vals)}
         # the update set keyed by entity id, pinned once: every
-        # candidate-table rewrite then joins it instead of re-running
+        # candidate-table rewrite then reads it instead of re-running
         # the whole match pipeline per consumer
-        upd, upd_cnt = _materialize_small(g.spark, ctx.df.select(
+        upd = _key_sets({"u": ctx.df.select(
             F.col(f"{var}._id").alias("__uid"),
             *[vals[key].alias(c) for key, c in ucols.items()])
-            .filter(F.col("__uid").isNotNull())
-            .dropDuplicates(["__uid"]))
+            .filter(F.col("__uid").isNotNull())})["u"]
         info = ctx.vars[var]
         kind = "node" if info.kind == "node" else "edge"
         tables = g.node_tables if kind == "node" else g.edge_tables
-        hit = F.col("__uid").isNotNull()
         for name, tbl in (_candidate_tables(g, info, tables)
-                          if upd_cnt else []):
-            cols = {}
-            for key, c in ucols.items():
-                uval = F.col(c)
-                if key in tbl.columns:
-                    # heterogeneous-type SET: the append rule (SURVEY §7.3)
-                    cur, uval = _conform(F.col(key), tbl.schema[key].dataType,
-                                         uval, upd.schema[c].dataType)
-                    cols[key] = F.when(hit, uval).otherwise(cur)
-                else:
-                    cols[key] = F.when(hit, uval)
-            out = tbl.join(F.broadcast(upd), tbl["_id"] == upd["__uid"],
-                           "left").withColumns(cols) \
-                .drop("__uid", *ucols.values())
+                          if upd.n else []):
+            def cols(hit, value, tbl=tbl):
+                out = {}
+                for key, c in ucols.items():
+                    uval = value(c)
+                    if key in tbl.columns:
+                        # heterogeneous-type SET: the append rule
+                        # (SURVEY §7.3)
+                        cur, uval = _conform(
+                            F.col(key), tbl.schema[key].dataType,
+                            uval, upd.types[c])
+                        out[key] = F.when(hit, uval).otherwise(cur)
+                    else:
+                        out[key] = F.when(hit, uval)
+                return out
             # deterministic rewrite: swap in the lazy plan; _defer_pin
             # bounds lineage depth (VERDICT r6 #3 — a 5-query mutation
             # script schedules ~half the jobs this way)
-            tables[name] = _defer_pin(g, kind, name, out)
-        props_set += upd_cnt * len(run)
+            tables[name] = _defer_pin(g, kind, name, upd.update(tbl, cols))
+        props_set += upd.n * len(run)
     # read-your-writes: later clauses (RETURN a.age after SET) must see
     # the update — rebuild the bound struct columns in the pipeline
     # (the reference streams records through Update with the entity
@@ -903,11 +993,10 @@ def _delete(planner, ctx, clause: A.DeleteClause) -> DataFrame | None:
     entities a clause names (``ops/op_delete.c``,
     ``src/graph/graph.h:172-181``). Each target reduces to node ids and
     edge ids (a path gives both); each set is deduped across targets
-    and pinned once, a deleted node cascades to its incident edges, and
-    each affected table is rewritten once by anti-joins. Deletion
-    preserves the rel-endpoint hint invariants (monotone removal)."""
-    from functools import reduce
-    from pyspark.sql import types as T
+    and pinned once as a `_KeySet` (one job pins both), a deleted node
+    cascades to its incident edges (one job counts them), and each
+    affected table is rewritten once. Deletion preserves the
+    rel-endpoint hint invariants (monotone removal)."""
     g = planner.graph
     nodes, edges = [], []           # (id plan, VarInfo) per target
     for e in clause.exprs:
@@ -923,14 +1012,12 @@ def _delete(planner, ctx, clause: A.DeleteClause) -> DataFrame | None:
         else:
             (nodes if kind == "node" else edges).append(
                 (ctx.df.select(F.col(f"{var}._id").alias("__did")), info))
-
-    def id_set(parts):
-        if not parts:
-            return None
-        return reduce(DataFrame.union, [p for p, _ in parts]) \
-            .filter(F.col("__did").isNotNull()).dropDuplicates()
-
-    nid_plan, eid_plan = id_set(nodes), id_set(edges)
+    plans = {k: reduce(DataFrame.union, [p for p, _ in parts])
+             .filter(F.col("__did").isNotNull())
+             for k, parts in (("n", nodes), ("e", edges)) if parts}
+    keys = _key_sets(plans)
+    nids, eids = keys.get("n"), keys.get("e")
+    counts = {"n": 0, "e": 0, **{k: ks.n for k, ks in keys.items()}}
     # cascade candidates: rel-endpoint hints prove most relations can't
     # touch a label-bound node at all
     hints = None if g._multilabel else g.rel_endpoints
@@ -941,77 +1028,29 @@ def _delete(planner, ctx, clause: A.DeleteClause) -> DataFrame | None:
         return h is None or bool((h[0] | h[1]) & labels)
 
     cascade = {name: tbl for name, tbl in g.edge_tables.items()
-               if any(may_touch(name, info) for _, info in nodes)}
-
-    def incident(tbl, nids, eids):
-        """Edges of ``tbl`` touching a deleted node and not already
-        deleted by id."""
-        hit = tbl.join(nids, (tbl["_src"] == nids["__did"])
-                       | (tbl["_dst"] == nids["__did"]), "left_semi")
-        if eids is None:
-            return hit
-        return hit.join(eids, hit["_id"] == eids["__did"], "left_anti")
-
-    # ONE job returns both id sets (capped, when integral) and every
-    # cascade candidate's incident-edge count: each row carries its
-    # kind (node id, edge id or count) and, for a count, its table. The
-    # count branches recompute the match subtree inside the job
-    # (bounded by len(cascade), usually 0-1 — a constant factor on data
-    # the probe join must scan anyway), which replaces a
-    # collect-then-probe sequence of jobs.
-    plans = {k: p for k, p in (("n", nid_plan), ("e", eid_plan))
-             if p is not None}
-    integral = all(isinstance(p.schema["__did"].dataType,
-                              (T.LongType, T.IntegerType))
-                   for p in plans.values())
-    cap = 1024
-    parts = [p.limit(cap + 1).select(
-        F.lit(k).alias("__k"), F.lit(None).cast("string").alias("__t"),
-        F.col("__did").cast("long").alias("__v"))
-        for k, p in plans.items() if integral]
-    parts += [incident(tbl, nid_plan, eid_plan)
-              .agg(F.count(F.lit(1)).alias("__v"))
-              .select(F.lit("c").alias("__k"), F.lit(name).alias("__t"),
-                      F.col("__v"))
-              for name, tbl in cascade.items()]
-    rows = reduce(DataFrame.unionByName, parts).collect() if parts else []
-    doomed_by = {r["__t"]: r["__v"] for r in rows if r["__k"] == "c"}
-    from redisgraph_spark.session import inline_df
-    pinned, counts = {}, {"n": 0, "e": 0}
-    for k, p in plans.items():
-        vals = [r["__v"] for r in rows if r["__k"] == k]
-        if integral and len(vals) <= cap:
-            pinned[k] = inline_df(g.spark, [(v,) for v in vals],
-                                  [("__did", "bigint")])
-            counts[k] = len(vals)
-        else:
-            # non-integral ids or cap overflow: pin the id set the
-            # scale-safe way
-            pinned[k], counts[k] = _materialize_small(g.spark, p)
-    nids, eids = pinned.get("n"), pinned.get("e")
+               if any(may_touch(name, info) for _, info in nodes)} \
+        if counts["n"] else {}
+    probe = _cascade_probe(cascade, nids, eids)
+    doomed_by = {r["__t"]: r["__v"] for r in probe.collect()} \
+        if probe is not None else {}
     if counts["n"]:
         node_tabs = dict(t for _, info in nodes
                          for t in _candidate_tables(g, info, g.node_tables))
         for name, tbl in node_tabs.items():
             g.node_tables[name] = _defer_pin(
-                g, "node", name, tbl.join(
-                    F.broadcast(nids), tbl["_id"] == nids["__did"],
-                    "left_anti"))
+                g, "node", name, nids.drop_from(tbl, "_id"))
     edge_tabs = dict(t for _, info in edges
                      for t in _candidate_tables(g, info, g.edge_tables)) \
         if counts["e"] else {}
     for name, tbl in list(g.edge_tables.items()):
         kept = tbl
         if name in edge_tabs:
-            kept = kept.join(F.broadcast(eids),
-                             kept["_id"] == eids["__did"], "left_anti")
+            kept = eids.drop_from(kept, "_id")
         if doomed_by.get(name):
-            for end in ("_src", "_dst"):
-                kept = kept.join(F.broadcast(nids),
-                                 kept[end] == nids["__did"], "left_anti")
+            kept = nids.drop_from(kept, "_src", "_dst")
         if kept is not tbl:
-            # deterministic anti-join rewrite: the lazy swap-in fuses it
-            # into the next action that reads the table
+            # deterministic rewrite: the lazy swap-in fuses it into the
+            # next action that reads the table
             g.edge_tables[name] = _defer_pin(g, "edge", name, kept)
     planner.stats["nodes_deleted"] = \
         planner.stats.get("nodes_deleted", 0) + counts["n"]
@@ -1020,6 +1059,23 @@ def _delete(planner, ctx, clause: A.DeleteClause) -> DataFrame | None:
         + sum(doomed_by.values())
     planner.graph._scan_cache.clear()
     return None
+
+
+def _cascade_probe(cascade: dict, nids: _KeySet | None,
+                   eids: _KeySet | None) -> DataFrame | None:
+    """One plan counting, per table of ``cascade``, the edges that touch
+    a deleted node and are not deleted by id: rows ``(__t, __v)``,
+    collected in one job. The incident test is a literal ``IN`` filter
+    or equi semi joins, never a join on an OR condition (that plans a
+    nested-loop join broadcasting every piece of the edge table)."""
+    parts = []
+    for name, tbl in cascade.items():
+        hit = nids.keep_in(tbl, "_src", "_dst")
+        if eids is not None:
+            hit = eids.drop_from(hit, "_id")
+        parts.append(hit.agg(F.count(F.lit(1)).alias("__v"))
+                     .select(F.lit(name).alias("__t"), "__v"))
+    return reduce(DataFrame.union, parts) if parts else None
 
 
 # ------------------------------------------------------------------ MERGE
@@ -1073,7 +1129,7 @@ def _merge(planner, ctx, clause: A.MergeClause) -> DataFrame | None:
     if ctx.df is None:
         probe = Ctx()
         planner._compile_path(probe, clause.path, [])
-        exists = not probe.df.isEmpty()
+        exists = bool(_bounded_collect(probe.df.select(F.lit(1)), 1))
         if exists:
             planner._compile_path(ctx, clause.path, [])
             if clause.on_match:
@@ -1115,7 +1171,7 @@ def _merge_path_per_row(planner, ctx, clause: A.MergeClause) -> None:
         .localCheckpoint(eager=True)
     unmatched = base.join(matched_rows, row, "left_anti") \
         .localCheckpoint(eager=True)
-    had_unmatched = bool(unmatched.take(1))
+    had_unmatched = bool(_bounded_collect(unmatched, 1))
     if had_unmatched:
         _create_path_rows(planner, Ctx(df=unmatched, vars=dict(ctx.vars)),
                           clause.path)
@@ -1131,10 +1187,10 @@ def _merge_path_per_row(planner, ctx, clause: A.MergeClause) -> None:
     if clause.on_create and had_unmatched:
         sub = Ctx(df=bind.df.join(matched_rows, row, "left_anti"),
                   vars=dict(bind.vars))
-        if sub.df.take(1):
+        if _bounded_collect(sub.df, 1):
             _set(planner, sub, A.SetClause(clause.on_create))
             did_set = True
-    if clause.on_match and bool(matched_rows.take(1)):
+    if clause.on_match and _bounded_collect(matched_rows, 1):
         sub = Ctx(df=bind.df.join(matched_rows, row, "left_semi"),
                   vars=dict(bind.vars))
         _set(planner, sub, A.SetClause(clause.on_match))

@@ -65,9 +65,8 @@ def inline_df(spark: SparkSession, rows: list[tuple],
             .select("__r.*"))
 
 
-# column types the VALUES-literal renderer handles; shared by the
-# mutation key-set pinning (_materialize_small) and the tpch build-time
-# inliner
+# column types `inline_df` builds a one-task plan for (the tpch
+# build-time inliner)
 INLINE_TYPES = {"bigint", "int", "smallint", "tinyint", "double",
                 "float", "string", "boolean", "date", "timestamp"}
 
@@ -108,55 +107,75 @@ def _cell_lit(v, t: str):
     return F.lit(v).cast(t)
 
 
+def _sql_literal(v, escaped_literals: bool) -> str | None:
+    """One plain-scalar value as an SQL literal; None when it needs
+    more than literal rendering."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, float):
+        if v != v:
+            return "CAST('NaN' AS DOUBLE)"
+        if v in (float("inf"), float("-inf")):
+            return f"CAST('{v}' AS DOUBLE)"
+        return repr(v)
+    if isinstance(v, str):
+        if "\x00" in v:
+            return None              # NUL breaks the SQL literal
+        if escaped_literals:
+            # NO escape sequence exists under this conf (backslash
+            # AND quote-doubling are both literal) — pick the quote
+            # style the data doesn't use; both kinds present →
+            # Column-builder fallback
+            if "'" not in v:
+                return "'" + v + "'"
+            if '"' not in v:
+                return '"' + v + '"'
+            return None
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return None
+
+
+# column types whose values render as SQL literals (`sql_cells`); a
+# `void` column is a bare NULL (a SET to null)
+LITERAL_TYPES = {"boolean", "int", "integer", "bigint", "long", "double",
+                 "float", "string", "void"}
+
+
+def sql_cells(rows: list[tuple], types: list[str],
+              escaped_literals: bool = False) -> list[list[str]] | None:
+    """Each cell of ``rows`` as a typed SQL literal ``CAST(v AS t)``,
+    ``types`` holding one SQL type per column; None when a type or a
+    value needs more than literal rendering."""
+    if not all(t.lower() in LITERAL_TYPES for t in types):
+        return None
+    out = []
+    for row in rows:
+        cells = []
+        for v, t in zip(row, types):
+            r = _sql_literal(v, escaped_literals)
+            if r is None:
+                return None
+            cells.append(f"CAST({r} AS {t})")
+        out.append(cells)
+    return out
+
+
 def _values_sql(rows: list[tuple],
                 schema: list[tuple[str, str]],
                 escaped_literals: bool = False) -> str | None:
     """Render ``SELECT ... FROM VALUES`` for plain-scalar rows; None
     when a value needs more than literal rendering (caller falls back
     to the Column builder)."""
-    def render(v) -> str | None:
-        if v is None:
-            return "NULL"
-        if isinstance(v, bool):
-            return "TRUE" if v else "FALSE"
-        if isinstance(v, int):
-            return str(v)
-        if isinstance(v, float):
-            if v != v:
-                return "CAST('NaN' AS DOUBLE)"
-            if v in (float("inf"), float("-inf")):
-                return f"CAST('{v}' AS DOUBLE)"
-            return repr(v)
-        if isinstance(v, str):
-            if "\x00" in v:
-                return None          # NUL breaks the SQL literal
-            if escaped_literals:
-                # NO escape sequence exists under this conf (backslash
-                # AND quote-doubling are both literal) — pick the quote
-                # style the data doesn't use; both kinds present →
-                # Column-builder fallback
-                if "'" not in v:
-                    return "'" + v + "'"
-                if '"' not in v:
-                    return '"' + v + '"'
-                return None
-            return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    cells = sql_cells(rows, [t for _, t in schema], escaped_literals)
+    if cells is None:
         return None
-    simple = {"boolean", "int", "integer", "bigint", "long", "double",
-              "float", "string"}
-    if not all(t.lower() in simple for _, t in schema):
-        return None
-    out = []
-    for row in rows:
-        cells = []
-        for v, (n, t) in zip(row, schema):
-            r = render(v)
-            if r is None:
-                return None
-            cells.append(f"CAST({r} AS {t})")
-        out.append("(" + ", ".join(cells) + ")")
+    out = ", ".join("(" + ", ".join(c) + ")" for c in cells)
     cols = ", ".join(f"`{n}`" for n, _ in schema)
-    return f"SELECT * FROM VALUES {', '.join(out)} AS __v({cols})"
+    return f"SELECT * FROM VALUES {out} AS __v({cols})"
 
 
 TEMPORAL_DDL = ("struct<_tt:tinyint,_days:bigint,_nanos:bigint,"

@@ -138,23 +138,36 @@ def test_query_timeout_keeps_callers_job_group(social):
             sc.setLocalProperty(key, None)
 
 
-def test_query_timeout_mutation_atomic(social):
-    """A TIMEOUT firing mid-mutation must leave the graph exactly as
-    it was (whole-query abort, like the reference's single-writer
-    commit discipline)."""
-    import pytest as _pytest
+def _table_rows(g) -> dict:
+    return {(kind, name): sorted(tuple(r) for r in df.collect())
+            for kind, tables in (("node", g.node_tables),
+                                 ("edge", g.edge_tables))
+            for name, df in tables.items()}
 
+
+@pytest.mark.parametrize("write", [
+    "MATCH (p:person) SET p.zzz = 1",
+    "MATCH (p:person {name: 'Roi'}) SET p.age = 99",
+    "MERGE (p:person {name: 'Roi'}) ON MATCH SET p.age = 99",
+    "MATCH (p:person {name: 'Roi'}) DETACH DELETE p",
+], ids=["whole-table-set", "keyed-set", "merge-on-match",
+        "keyed-detach-delete"])
+def test_query_timeout_mutation_atomic(social, write):
+    """A TIMEOUT firing mid-mutation must leave every node and edge
+    table exactly as it was (whole-query abort, like the reference's
+    single-writer commit discipline), for each kind of keyed write.
+    `Graph._with_timeout` raises once the deadline has passed whether
+    or not it cancelled a job, so this shows the rollback, not that a
+    running job is cancelled."""
     from redisgraph_spark.graph.graph import QueryTimeoutError
+    before = _table_rows(social)
     social.config_set("TIMEOUT", 1)
     try:
-        with _pytest.raises(QueryTimeoutError):
-            social.query("MATCH (p:person) SET p.zzz = 1")
+        with pytest.raises(QueryTimeoutError):
+            social.query(write)
     finally:
         social.config_set("TIMEOUT", 0)
-    got = social.query(
-        "MATCH (p:person) RETURN count(*) AS n, count(p.zzz) AS z") \
-        .collect()[0]
-    assert (got["n"], got["z"]) == (10, 0)
+    assert _table_rows(social) == before
 
 
 def test_fulltext_index(social):

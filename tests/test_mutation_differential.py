@@ -6,14 +6,18 @@ must match after every script.
 Complements the TCK (fixed scenarios) with op INTERACTIONS: long
 rewrite chains exercise the deferred-pin lineage bound
 (planner/mutations.py::_defer_pin pins every 4th chained rewrite),
-read-your-writes across statements, the fused DELETE probe, and the
-MERGE match-else-create paths, none of which a single-statement test
-can stress. The graph scripts add an edge table: DETACH DELETE by
-predicate, edge and path deletes, clauses whose targets overlap
-(``DELETE r, a``, adjacent ``DETACH DELETE a, b``), ``SET n += {…}``
-and a swap ``SET a.v = b.v, b.v = a.v``, mirrored with the cascade
-written out in SQL; node table, edge table and the deleted / set
-counts must match after every clause.
+read-your-writes across statements, the DELETE key-set and cascade
+probes, and the MERGE match-else-create paths, none of which a
+single-statement test can stress. The graph scripts add an edge table:
+DETACH DELETE by predicate, edge and path deletes, clauses whose
+targets overlap (``DELETE r, a``, adjacent ``DETACH DELETE a, b``),
+``SET n += {…}`` and a swap ``SET a.v = b.v, b.v = a.v``, mirrored with
+the cascade written out in SQL; node table, edge table and the deleted
+/ set counts must match after every clause.
+
+Every script runs twice: with key sets held as literals (the default
+cap) and with the cap at 0, where every set is pinned and rewrites
+join it (the cluster-scale form).
 """
 
 import random
@@ -228,3 +232,26 @@ def test_graph_deletes_and_set_runs_match_duckdb(spark, seed):
         want = sorted(map(tuple, con.execute(
             "SELECT e, s, d, w FROM edges").fetchall()))
         assert got == want, f"seed {seed} edges diverged at step {step}"
+
+
+@pytest.fixture()
+def join_path(monkeypatch):
+    """Key-set cap 0: every SET and DELETE set takes the scale path."""
+    from redisgraph_spark.planner import mutations
+    monkeypatch.setattr(mutations, "_KEY_CAP", 0)
+
+
+@pytest.mark.parametrize("seed", [11, 33])
+def test_mutation_scripts_match_duckdb_on_join_path(spark, join_path, seed):
+    test_mutation_scripts_match_duckdb(spark, seed)
+
+
+@pytest.mark.parametrize("seed", [5, 17])
+def test_per_row_batches_match_duckdb_on_join_path(spark, join_path, seed):
+    test_per_row_batches_match_duckdb(spark, seed)
+
+
+@pytest.mark.parametrize("seed", [3, 8])
+def test_graph_deletes_and_set_runs_match_duckdb_on_join_path(
+        spark, join_path, seed):
+    test_graph_deletes_and_set_runs_match_duckdb(spark, seed)

@@ -748,14 +748,17 @@ def test_set_values_read_pre_update_record(gp, q, returned, stored):
 _TAGS = itertools.count()
 
 
-def _jobs(spark, g, q):
-    """Spark jobs one query runs, found by a job tag after the listener
-    bus drains (the way plan templates prove a plan ran no job)."""
+def _jobs(spark, g, q, collect=False):
+    """Spark jobs one query runs (and, with ``collect``, its collect),
+    found by a job tag after the listener bus drains (the way plan
+    templates prove a plan ran no job)."""
     sc = spark.sparkContext
     tag = f"rg-test-jobs-{next(_TAGS)}"
     sc.addJobTag(tag)
     try:
-        g.query(q)
+        res = g.query(q)
+        if collect:
+            res.collect()
     finally:
         sc.removeJobTag(tag)
     ctx = sc._jsc.sc()
@@ -777,3 +780,62 @@ def test_one_pin_per_set_run_and_per_delete_clause(spark):
     assert _jobs(spark, g, match + "a, b") == \
         _jobs(spark, fresh(), match + "a")
     assert g.last_stats["nodes_deleted"] == 2
+
+
+@pytest.fixture()
+def gp_serial(spark):
+    """``_six_nodes``, read once, with adaptive execution off as under
+    the adaptive gate: with it on, each query stage is a job of its own
+    (and a graph built by createDataFrame turns it on for the session)."""
+    g = _six_nodes(spark)
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        g.query("MATCH (n) RETURN count(*) AS c").collect()
+        yield g
+    finally:
+        spark.conf.set(key, before)
+
+
+@pytest.mark.parametrize("q, most, stat", [
+    ("MATCH (n:P {name: 'p2'}) SET n.v = 1", 1, ("properties_set", 1)),
+    ("MERGE (n:P {name: 'p2'}) ON MATCH SET n.v = 1", 2,
+     ("properties_set", 1)),
+    ("MATCH (n:P {name: 'p2'}) DETACH DELETE n", 2,
+     ("relationships_deleted", 2)),
+], ids=["set", "merge-on-match", "detach-delete"])
+def test_keyed_write_job_counts(spark, gp_serial, q, most, stat):
+    # a keyed write runs its key-set collect, plus a MERGE's existence
+    # probe or a DETACH DELETE's cascade count, and no broadcast job
+    assert _jobs(spark, gp_serial, q) <= most
+    assert gp_serial.last_stats[stat[0]] == stat[1]
+
+
+def test_keyed_read_after_set_runs_no_more_jobs(spark, gp_serial):
+    # the rewritten table reads as a projection in its scan's stage
+    read = "MATCH (n:P {name: 'p2'}) RETURN n.v AS v"
+    before = _jobs(spark, gp_serial, read, collect=True)
+    gp_serial.query("MATCH (n:P {name: 'p2'}) SET n.v = 1")
+    assert _jobs(spark, gp_serial, read, collect=True) <= before
+    assert rows(gp_serial.query(read)) == [(1,)]
+
+
+@pytest.mark.parametrize("cap", [0, 1024], ids=["join-path", "literal-path"])
+def test_cascade_probe_plans_no_nested_loop_join(gp, monkeypatch, cap):
+    # the incident-edge count is an equi join on the scale path (cap 0)
+    # and a literal filter below the cap, never a join on an OR
+    from redisgraph_spark.planner import mutations
+    monkeypatch.setattr(mutations, "_KEY_CAP", cap)
+    probes, real = [], mutations._cascade_probe
+
+    def spy(*args):
+        probes.append(real(*args))
+        return probes[-1]
+    monkeypatch.setattr(mutations, "_cascade_probe", spy)
+    gp.query("MATCH (n:P {name: 'p2'}) DETACH DELETE n")
+    assert gp.last_stats["relationships_deleted"] == 2
+    assert _left(gp) == (5, 5)
+    plan = probes[0]._jdf.queryExecution().executedPlan().toString()
+    assert "NestedLoopJoin" not in plan
+    assert ("Join" in plan) == (cap == 0)
