@@ -652,7 +652,7 @@ class Graph:
         planned once per (query, parameter shape) into a plan template
         whose literals each request rebinds (graph/templates.py); a
         read whose plan depends on a parameter's value plans per
-        request. From a template's second rebind on, the request runs
+        request. From a template's first rebind on, the request runs
         the template's executed plan with its own literals: the
         broadcasts that do not depend on a parameter are built once,
         and each join with a parameter on one side only broadcasts the

@@ -25,21 +25,22 @@ Any other shape is remembered as one that plans per request, as if
 templates did not exist.
 
 The first rebind promotes the template (``_promote``): it keeps an
-executed ``SparkPlan`` of the sentinel plan too. Each later request swaps
-the sentinels in that plan, clones it (no code-generating node may serve
-two requests) and runs it, so Catalyst, physical planning, code
-generation and every broadcast whose subtree holds no sentinel are paid
-once per shape. Those key-independent broadcasts are built at promotion
-and shared by every request, as Pregelix keeps the static relation
-resident and streams only what changes. Promotion applies that rule to
-every join with sentinels on one side only: it plans the join to
+executed ``SparkPlan`` of the sentinel plan too. That request and each
+later one swap the sentinels in that plan, clone it (no code-generating
+node may serve two requests) and run it, so Catalyst, physical planning,
+code generation and every broadcast whose subtree holds no sentinel are
+paid once per shape. Those key-independent broadcasts are built at
+promotion and shared by every request, as Pregelix keeps the static
+relation resident and streams only what changes. Promotion applies that
+rule to every join with sentinels on one side only: it plans the join to
 broadcast the other side and stream the keyed one (``_flipped``), so a
 lookup runs as one job. A request swaps each number in as
 ``CAST('<value>' AS <type>)``: generated code reads that string from the
 plan's references, not from its source, so the classes compiled for one
 key serve every key. The held bytes count against one budget per plan
 cache, ``spark.sql.autoBroadcastJoinThreshold``: a flip is made only
-while the free sides fit in what is left of it, and past the budget the
+while the free sides, sized as the hash relations Spark builds of them
+(``_sides_fit``), fit in what is left of it, and past the budget the
 least recently run promoted template goes back to rebinding its analyzed
 plan. A template is promoted only if ``_promote``'s guard shows that the
 swap gives the plan the optimizer would build for the request's values;
@@ -231,7 +232,16 @@ def _jvm(spark) -> SimpleNamespace:
             no_hint=_module(jvm.scala, "None$"),
             physical=_module(sql.execution, "QueryExecution$")
             .prepareExecutedPlan,
-            fixed_length=sql.catalyst.expressions.UnsafeRow.isFixedLength)
+            fixed_length=sql.catalyst.expressions.UnsafeRow.isFixedLength,
+            equi_keys=_module(sql.catalyst.planning,
+                              "ExtractEquiJoinKeys$").unapply,
+            hash_keys=_module(sql.execution.joins, "HashJoin$")
+            .rewriteKeyExpr,
+            column=_module(sql.classic, "ExpressionUtils$").column,
+            fn=sql.functions,
+            to_seq=jvm.org.apache.spark.api.python.PythonUtils.toSeq,
+            page_bytes=jvm.org.apache.spark.SparkEnv.get().memoryManager()
+            .pageSizeBytes())
     return h
 
 
@@ -260,8 +270,9 @@ def _forms(h, kind: str, v, cast: bool = False) -> list:
 class PlanTemplate:
     """An analyzed plan over sentinel literals, one per rebindable
     parameter, and the planner's stats for the query. ``physical`` is
-    None until the first rebind promotes it, then a ``_Physical``, or
-    False for a template that stays analyzed-only."""
+    None until the first rebind promotes it, then a ``_Physical`` (which
+    that rebind already runs), or False for a template that stays
+    analyzed-only."""
 
     def __init__(self, spark, df: DataFrame, params: SentinelParams,
                  stats: dict) -> None:
@@ -289,7 +300,10 @@ class PlanTemplate:
         """This rebind on the promoted plan: a thunk that runs it and
         returns its DataFrame, or None when the request rebinds the
         analyzed plan instead. The first rebind promotes (one thread
-        does; the others meanwhile rebind the analyzed plan)."""
+        does; the others meanwhile rebind the analyzed plan) and runs
+        the plan it promoted, unless the held budget demoted it at
+        once: the shape's optimizing, planning and code generation are
+        paid once, not once more for that request's analyzed plan."""
         phys = self.physical
         if phys is None and self._promoting.acquire(blocking=False):
             try:
@@ -298,9 +312,9 @@ class PlanTemplate:
                                              _room(cache, spark)) or False
                     if self.physical:
                         _hold(cache, self, spark)
+                phys = self.physical
             finally:
                 self._promoting.release()
-            return None
         if not phys:
             return None
         with cache.mu:
@@ -440,38 +454,122 @@ def _walk(node, held: list, swap) -> bool:
                for i in range(kids.size()))
 
 
-def _side_rows(h, jss, side) -> int:
-    """Rows of ``side``: at most what Catalyst counts of it or, through
+def _row_bytes(h, types) -> int:
+    """Bytes of an UnsafeRow of ``types``: null bits, 8 bytes a field,
+    and each variable-length value at its default size, word-aligned."""
+    types = list(types)
+    return 8 * ((len(types) + 63) // 64) + sum(
+        8 if h.fixed_length(t) else 8 + -(-t.defaultSize() // 8) * 8
+        for t in types)
+
+
+def _pow2(n: int) -> int:
+    """The least power of two >= n (1 for n <= 1)."""
+    return 1 << max(0, n - 1).bit_length()
+
+
+def _side_rows(side) -> int | None:
+    """Rows of ``side`` at most: what Catalyst counts of it or, through
     ``_NO_MORE_ROWS`` nodes, of what it reads (a materialized cached
-    table has a row count); else counted (one job)."""
-    def bound(node):
-        rows = node.stats().rowCount()
-        if rows.isDefined():
-            return int(str(rows.get()))
-        if node.nodeName() not in _NO_MORE_ROWS:
-            return None
-        kids = node.children()
-        kids = [bound(kids.apply(i)) for i in range(kids.size())]
-        return None if None in kids else sum(kids)
-    rows = bound(side)
-    return h.of_rows(jss, side).count() if rows is None else rows
+    table has a row count); None when Catalyst does not count them."""
+    rows = side.stats().rowCount()
+    if rows.isDefined():
+        return int(str(rows.get()))
+    if side.nodeName() not in _NO_MORE_ROWS:
+        return None
+    kids = side.children()
+    kids = [_side_rows(kids.apply(i)) for i in range(kids.size())]
+    return None if None in kids else sum(kids)
 
 
-def _side_bytes(h, jss, side) -> int:
-    """Bytes a broadcast of ``side`` holds as a hash relation on a long
-    key: each row an UnsafeRow (null bits, 8 bytes a field, variable
-    -length data) behind an 8-byte header, in a page that starts at
-    1 MiB and doubles, and 8 bytes a row of key array. Catalyst's
-    ``sizeInBytes`` will not do: for a cached table it is the compressed
-    columnar size, 3-4x under what the broadcast holds."""
-    rows = _side_rows(h, jss, side)
-    width = 16 + sum(
-        8 if h.fixed_length(f.dataType()) else 8 + f.dataType().defaultSize()
-        for f in side.schema().fields())
-    page = 1 << 20
-    while page < rows * width:
-        page *= 2
-    return page + 8 * rows
+def _side_keys(h, join, free: int) -> tuple:
+    """The ``free`` side of ``join``, the keys its hash relation is
+    built on (``HashJoin.rewriteKeyExpr``) and whether they pack into
+    one long."""
+    eq = h.equi_keys(join).get()
+    keys = h.hash_keys((eq._2(), eq._3())[free])
+    keys = [keys.apply(i) for i in range(keys.size())]
+    return ((join.left(), join.right())[free], keys,
+            len(keys) == 1 and keys[0].dataType().typeName() == "long")
+
+
+def _relation_bytes(h, side, keys: list, packed: bool, rows: int,
+                    distinct: int, span: int | None = None) -> int:
+    """Bytes of the hash relation Spark builds of ``side``
+    (``HashedRelation.apply``) from its rows, distinct keys and, for a
+    packed key, the keys' range (``span``, max - min; None: unknown). A
+    key that packs into one long makes a ``LongToUnsafeRowMap``: rows,
+    each an UnsafeRow and a next pointer, in a page that starts at
+    1 MiB and doubles, and a key array of 2 slots a row rounded up to a
+    power of two, doubled while the keys fill over a quarter of it, or
+    one slot per key value when the keys' range is narrower (dense).
+    Any other key makes a ``BytesToBytesMap``: key and value rows in
+    pages of the memory manager's page size, and 2 slots per
+    power-of-two capacity from 1.5 a row, doubled while the keys fill
+    half of it."""
+    row = _row_bytes(h, (f.dataType() for f in side.schema().fields()))
+    if packed:
+        slots = 2 * _pow2(rows)
+        while distinct * 4 > slots:
+            slots *= 2
+        if distinct and span is None:      # either array, the larger
+            slots = max(slots, 1024)
+        elif distinct and span < max(slots, 1024):
+            slots = span + 1
+        page = 1 << 20
+        while page < rows * (row + 8):
+            page *= 2
+        return page + 8 * slots
+    slots = max(_pow2(int(rows * 1.5 + 1)), 64)
+    while distinct >= slots // 2:
+        slots *= 2
+    record = 16 + _row_bytes(h, (k.dataType() for k in keys)) + row
+    per_page = max(1, (h.page_bytes - 4) // record)
+    return -(-rows // per_page) * h.page_bytes + 16 * slots
+
+
+def _sides_bytes(h, jss, sides: list) -> list[int]:
+    """Bytes a broadcast of each ``(join, free)`` side holds
+    (``_relation_bytes``), all sides' rows, distinct keys and key
+    ranges counted in one aggregate job. Catalyst's ``sizeInBytes``
+    will not do: for a cached table it is the compressed columnar size,
+    3-4x under what the broadcast holds."""
+    fn, null = h.fn, h.fn.lit(None).cast("bigint")
+    shapes, aggs = [_side_keys(h, j, free) for j, free in sides], None
+    for side, keys, packed in shapes:
+        cols = [h.column(k) for k in keys]
+        agg = h.of_rows(jss, side).agg(fn.count(fn.lit(1)), h.to_seq([
+            fn.count_distinct(cols[0], h.to_seq(cols[1:])),
+            fn.min(cols[0]) if packed else null,
+            fn.max(cols[0]) if packed else null]))
+        aggs = agg if aggs is None else aggs.union(agg)
+    # a union's partitions, and so its rows, keep the order of its inputs
+    return [_relation_bytes(h, side, keys, packed, r.getLong(0),
+                            r.getLong(1),
+                            None if r.isNullAt(2)
+                            else r.getLong(3) - r.getLong(2))
+            for (side, keys, packed), r in zip(shapes,
+                                               aggs.collectAsList())]
+
+
+def _sides_fit(h, jss, sides: list, room: int) -> bool:
+    """Whether broadcasts of the ``(join, free)`` sides fit in ``room``
+    bytes. A side whose rows Catalyst counts is taken at the most a
+    hash relation of those rows holds (every key distinct, the larger
+    key array), with no job; the others are sized by ``_sides_bytes``
+    (one job). Past ``room``, the counted sides are sized so too (one
+    more job)."""
+    shapes = [_side_keys(h, j, free) for j, free in sides]
+    rows = [_side_rows(side) for side, _, _ in shapes]
+    most = sum(_relation_bytes(h, *shape, n, n)
+               for shape, n in zip(shapes, rows) if n is not None)
+    counted = [s for s, n in zip(sides, rows) if n is not None]
+    uncounted = [s for s, n in zip(sides, rows) if n is None]
+    held = sum(_sides_bytes(h, jss, uncounted)) if uncounted else 0
+    if held + most <= room:
+        return True
+    return bool(counted) and \
+        held + sum(_sides_bytes(h, jss, counted)) <= room
 
 
 def _flipped(h, jss, plan, swap, room: int | None):
@@ -481,7 +579,7 @@ def _flipped(h, jss, plan, swap, room: int | None):
     is dropped. None when no join can be flipped so, or when the free
     sides together may take more than ``room`` bytes (None: unsized),
     so Spark's build sides stand."""
-    flips, total, todo = {}, 0, [plan]
+    flips, todo = {}, [plan]
     while todo:
         node = todo.pop()
         kids = node.children()
@@ -493,11 +591,10 @@ def _flipped(h, jss, plan, swap, room: int | None):
             if free is not None and \
                     node.joinType().toString().split("(")[0] in _BUILDS[free]:
                 flips[node] = free
-                if room is not None and total <= room:
-                    total += _side_bytes(h, jss, kids[free])
                 kids = [kids[1 - free]]
         todo.extend(kids)
-    if not flips or (room is not None and total > room):
+    if not flips or (room is not None and
+                     not _sides_fit(h, jss, list(flips.items()), room)):
         return None
     hints = (h.broadcast, h.no_hint)
     return plan.transformDown(h.to_scala_map({

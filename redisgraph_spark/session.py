@@ -14,6 +14,8 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 
 _JOB_TAGS = itertools.count()
+# generated classes Spark keeps compiled per JVM; see ``get_spark``
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 @contextmanager
@@ -421,6 +423,23 @@ def get_spark(app_name: str = "redisgraph-spark",
     - ``autoBroadcastJoinThreshold`` generous: graph traversals against
       small label tables (Region/Nation-sized dims) become broadcast
       hash joins — no shuffle of the big side.
+    - A class cache that holds the engine's working set: each plan
+      shape's generated code compiles once per JVM, as the reference
+      compiles a query's plan once and reuses it from its plan cache
+      (``execution_ctx.c:79-88``). Spark keeps the Janino-compiled
+      classes of every plan in one LRU of
+      ``spark.sql.codegen.cache.maxEntries``, 100 by default. One cycle
+      of batch entries (traversals, algorithms, pipeline operators)
+      needs about 180 classes, so at 100 every entry recompiled 7-29
+      classes (~5 ms each) on every run. At ``CODEGEN_CACHE_ENTRIES``
+      (1000) a repeated shape compiles nothing, and a batch cycle
+      interleaved with writes reached 0 compiles at 500 and at 2000
+      alike, with the same JVM Metaspace.
+
+    Two settings are static, read once when the JVM starts or first
+    generates code, so they apply only to a session this function
+    creates; an active session is returned as it was built: the driver
+    heap (``spark.driver.memory``) and the class cache size.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
@@ -470,6 +489,8 @@ def get_spark(app_name: str = "redisgraph-spark",
         # GC-driven 3-4x tail latencies on long sessions)
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )

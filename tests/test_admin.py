@@ -138,6 +138,60 @@ def test_query_timeout_keeps_callers_job_group(social):
             sc.setLocalProperty(key, None)
 
 
+def test_query_timeout_cancels_running_job(spark, monkeypatch):
+    """TIMEOUT cancels the job a query is running, not only the check
+    after it returns: a keyed SET whose one job inside query, its key
+    set's probe, reads a table that sleeps a second a row for 30 s,
+    raises once its deadline passes, and that job, tagged with the
+    query's tag, ends FAILED."""
+    import threading
+    import time
+    from contextlib import contextmanager
+
+    from redisgraph_spark import Graph, session
+    from redisgraph_spark.graph.graph import QueryTimeoutError
+    tags, real = [], session.job_tag
+
+    @contextmanager
+    def recorded(spark_, prefix):
+        with real(spark_, prefix) as tag:
+            if prefix == "rg-query":
+                tags.append(tag)
+            yield tag
+    monkeypatch.setattr(session, "job_tag", recorded)
+    slow = spark.range(0, 30, 1, 1).selectExpr(
+        "id + coalesce(length(java_method('java.lang.Thread', 'sleep', "
+        "1000L)), 0) AS _id", "id AS k")
+    g = Graph(spark, {"Slow": slow}, {}, name="slow", input_bytes=1)
+    g.config_set("TIMEOUT", 5000)
+    out = {}
+
+    def run():
+        t0 = time.time()
+        try:
+            g.query("MATCH (s:Slow {k: 1}) SET s.v = 2")
+        except Exception as exc:
+            out["error"] = exc
+        out["seconds"] = time.time() - t0
+    worker = threading.Thread(target=run)
+    worker.start()
+    ctx, started = spark.sparkContext._jsc.sc(), []
+    while not started and worker.is_alive():
+        started = [j for t in tags for j in
+                   ctx.statusTracker().getJobIdsForTag(t)
+                   if str(ctx.statusTracker().getJobInfo(j).get()
+                          .status()) == "RUNNING"]
+        time.sleep(0.05)
+    worker.join(60)
+    assert not worker.is_alive()
+    assert started, "the query's job was not seen running"
+    assert isinstance(out.get("error"), QueryTimeoutError)
+    assert out["seconds"] < 15
+    ctx.listenerBus().waitUntilEmpty(30_000)
+    assert [str(ctx.statusTracker().getJobInfo(j).get().status())
+            for j in started] == ["FAILED"]
+
+
 def _table_rows(g) -> dict:
     return {(kind, name): sorted(tuple(r) for r in df.collect())
             for kind, tables in (("node", g.node_tables),
